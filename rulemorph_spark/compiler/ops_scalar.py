@@ -779,8 +779,8 @@ def java_regex_invalid(pattern: str) -> bool:
     pattern must surface the reference's ExprError ("regex pattern is
     invalid", transform.rs:43) instead of letting Spark's raw
     INVALID_PARAMETER_VALUE escape the error envelope."""
-    from pyspark.sql import SparkSession
-    spark = SparkSession.getActiveSession()
+    from . import sqlfn
+    spark = sqlfn.session()
     if spark is None:
         return False
     try:

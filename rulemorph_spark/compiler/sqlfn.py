@@ -16,10 +16,18 @@ Restrictions (probed in tests/test_sqlfn.py):
   fall back to the inline Column builder;
 - temporary functions are SESSION-scoped — the registry caches per
   (session id, body hash) and re-registers on new sessions.
+
+The session is the one a ``bound``/``deferred`` scope sets for its
+thread (a rule compile binds its source DataFrame's session), else the
+thread's active session.  Binding matters off the main thread: only
+``createDataFrame`` and friends set the active session, so a compile
+over a ``spark.sql``/``spark.read`` source on a fresh thread would see
+no session and silently take the inline path.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import threading
 import weakref
@@ -39,7 +47,7 @@ class _State:
     goes away instead of leaking one entry per session."""
 
     __slots__ = ("registered", "disabled", "probed", "deferred",
-                 "pending", "__weakref__")
+                 "pending", "failed", "__weakref__")
 
     def __init__(self) -> None:
         self.registered: set[str] = set()
@@ -49,14 +57,40 @@ class _State:
         # ``deferred()``: only the thread inside a scope defers —
         # concurrent ensure_fn callers on other threads keep the
         # synchronous register-then-call contract) and the in-flight
-        # CREATE futures, keyed by function name
+        # CREATEs, keyed by function name: (future, the threads whose
+        # deferring scopes were handed the name)
         self.deferred: dict[int, int] = {}
-        self.pending: dict = {}
+        self.pending: dict[str, tuple] = {}
+        # (thread, name) → exception of a CREATE that failed while
+        # another thread waited on it: that thread retired the future,
+        # so each scope handed the name raises from here instead
+        self.failed: dict[tuple[int, str], Exception] = {}
 
 
 _sessions: "weakref.WeakKeyDictionary[SparkSession, _State]" = \
     weakref.WeakKeyDictionary()
 _lock = threading.Lock()
+# the session ``bound`` set for its thread (see session())
+_bound = threading.local()
+
+
+def session() -> SparkSession | None:
+    """The session this thread compiles against: the one set by the
+    innermost enclosing ``bound`` (or ``deferred``) scope, else the
+    active session."""
+    spark = getattr(_bound, "spark", None)
+    return spark if spark is not None else SparkSession.getActiveSession()
+
+
+@contextlib.contextmanager
+def bound(spark: SparkSession):
+    """Bind ``spark`` as this thread's compile session for the scope."""
+    outer = getattr(_bound, "spark", None)
+    _bound.spark = spark
+    try:
+        yield
+    finally:
+        _bound.spark = outer
 
 
 def _state(spark: SparkSession) -> _State:
@@ -118,13 +152,18 @@ class deferred:
     still propagates loudly from ``compile()`` like the synchronous
     form (the round-8 ``silent slow path`` lesson).  Outside a scope,
     ``ensure_fn`` stays fully synchronous — direct callers and tests
-    keep the register-then-call-immediately contract."""
+    keep the register-then-call-immediately contract.
+
+    The scope also binds its session for the thread (``session()``),
+    so a compile never reads the thread's ambient active session."""
 
     def __init__(self, spark: SparkSession | None):
         self._spark = spark
+        self._bind = bound(spark) if spark is not None else None
 
     def __enter__(self):
         if self._spark is not None:
+            self._bind.__enter__()
             st = _state(self._spark)
             tid = threading.get_ident()
             with _lock:
@@ -133,6 +172,7 @@ class deferred:
 
     def __exit__(self, *exc):
         if self._spark is not None:
+            self._bind.__exit__(None, None, None)
             st = _state(self._spark)
             tid = threading.get_ident()
             with _lock:
@@ -141,10 +181,10 @@ class deferred:
                     st.deferred[tid] = depth
                 else:
                     st.deferred.pop(tid, None)
-            # drain FULLY on both paths (each failed CREATE is popped,
-            # so this terminates): a scope with several malformed
-            # bodies must not leave failed futures behind to poison a
-            # later, unrelated flush.  On the clean path the FIRST
+            # drain FULLY on both paths (each failure raises once and is
+            # retired, so this terminates): a scope with several
+            # malformed bodies must not leave failures behind to poison
+            # a later, unrelated flush.  On the clean path the FIRST
             # failure re-raises after the drain; on the exception path
             # nothing is raised so the original exception propagates.
             first: Exception | None = None
@@ -160,12 +200,36 @@ class deferred:
         return False
 
 
+def _settle(st: _State, name: str, entry: tuple) -> None:
+    """Wait for one in-flight CREATE and retire it.  A failure is
+    popped (one bad body raises once per scope, loudly, without
+    poisoning later flushes) and raised here; it is also recorded in
+    ``failed`` for every OTHER scope that was handed the name, so
+    their flushes raise too instead of exiting clean."""
+    fut, owners = entry
+    try:
+        fut.result()
+    except Exception as e:
+        me = threading.get_ident()
+        with _lock:
+            if st.pending.get(name) is entry:
+                del st.pending[name]
+                for tid in owners - {me}:
+                    st.failed[(tid, name)] = e
+        raise
+    with _lock:
+        st.registered.add(name)
+        if st.pending.get(name) is entry:
+            del st.pending[name]
+
+
 def flush(spark: SparkSession | None = None) -> None:
     """Wait for all in-flight CREATEs of this session; re-raises the
-    first failure (a malformed generated body is a compiler bug — it
-    must never silently disable the fast path)."""
+    first failure, including that of a CREATE this thread was handed
+    and another thread saw fail first (a malformed generated body is a
+    compiler bug — it must never silently disable the fast path)."""
     if spark is None:
-        spark = SparkSession.getActiveSession()
+        spark = session()
     if spark is None:
         return
     st = _state(spark)
@@ -173,20 +237,16 @@ def flush(spark: SparkSession | None = None) -> None:
         with _lock:
             items = list(st.pending.items())
         if not items:
+            break
+        for name, entry in items:
+            _settle(st, name, entry)
+    tid = threading.get_ident()
+    with _lock:
+        key = next((k for k in st.failed if k[0] == tid), None)
+        if key is None:
             return
-        for name, fut in items:
-            try:
-                fut.result()
-            except Exception:
-                # pop the failed CREATE so one bad body raises HERE
-                # (loudly, like the synchronous form) without
-                # poisoning every later flush of the session
-                with _lock:
-                    st.pending.pop(name, None)
-                raise
-            with _lock:
-                st.registered.add(name)
-                st.pending.pop(name, None)
+        exc = st.failed.pop(key)
+    raise exc
 
 
 def quote(s: str) -> str:
@@ -197,7 +257,7 @@ def quote(s: str) -> str:
 
 
 def available() -> bool:
-    spark = SparkSession.getActiveSession()
+    spark = session()
     return spark is not None and not _state(spark).disabled
 
 
@@ -227,7 +287,7 @@ def ensure_fn(params: str, returns: str, body: str, tag: str) -> str | None:
     silently disable the fast path (round-8 lesson: a bad float
     literal did exactly that and every test quietly took the inline
     path)."""
-    spark = SparkSession.getActiveSession()
+    spark = session()
     if spark is None:
         return None
     st = _state(spark)
@@ -244,45 +304,38 @@ def ensure_fn(params: str, returns: str, body: str, tag: str) -> str | None:
             f"({params}) RETURNS {returns} RETURN {body}")
     tid = threading.get_ident()
     with _lock:
+        if name in st.registered:
+            return name
         in_scope = st.deferred.get(tid, 0) > 0
-        fut = st.pending.get(name)
-        if fut is not None and in_scope:
-            return name
-    if fut is not None:
-        # a deferring thread already submitted this CREATE; a
-        # synchronous caller must be able to call it IMMEDIATELY, so
-        # wait for that future here (failure pops + raises in flush's
-        # style: loudly, without poisoning later flushes)
-        try:
-            fut.result()
-        except Exception:
-            with _lock:
-                st.pending.pop(name, None)
-            raise
-        with _lock:
-            st.registered.add(name)
-            st.pending.pop(name, None)
-        return name
-    with _lock:
-        if name in st.registered or (in_scope and name in st.pending):
-            return name
+        entry = st.pending.get(name)
         if in_scope:
-            # deferred scope: submit and return the hash-derived name;
-            # a body referencing a still-pending function waits for
-            # exactly those futures (FIFO pool ⇒ deps already picked
-            # up ⇒ no starvation).  flush() barriers sit before every
-            # analysis point (Builder) and on scope exit.
-            deps = [f for n, f in st.pending.items() if n in body]
+            # deferred scope: submit (or join an in-flight CREATE) and
+            # return the hash-derived name; a body referencing a
+            # still-pending function waits for exactly those futures
+            # (FIFO pool ⇒ deps already picked up ⇒ no starvation).
+            # flush() barriers sit before every analysis point
+            # (Builder) and on scope exit.
+            if entry is not None:
+                entry[1].add(tid)
+                return name
+            deps = [f for n, (f, _) in st.pending.items() if n in body]
 
             def _task(deps=deps, stmt=stmt):
                 for f in deps:
                     f.result()
                 spark.sql(stmt)
 
-            st.pending[name] = _executor().submit(_task)
+            st.pending[name] = (_executor().submit(_task), {tid})
             return name
+    if entry is not None:
+        # a deferring thread already submitted this CREATE; a
+        # synchronous caller must be able to call it IMMEDIATELY, so
+        # wait for that future here rather than issue a duplicate
+        _settle(st, name, entry)
+        return name
     spark.sql(stmt)
-    st.registered.add(name)
+    with _lock:
+        st.registered.add(name)
     return name
 
 

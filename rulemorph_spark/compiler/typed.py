@@ -3239,7 +3239,8 @@ class TypedRuleCompiler:
             self._df = self._df.select("*",
                                        probe.alias("__terr_anchor__"))
             anchor = F.col("__terr_anchor__")
-        with fold_anchor(anchor):
+        from . import sqlfn
+        with fold_anchor(anchor), sqlfn.bound(df.sparkSession):
             out_tree, keep = self._flow(self.rule, input_tree=None,
                                         gate=None, base_dir=self.base_dir)
             outputs = [self._out_col(v, name)

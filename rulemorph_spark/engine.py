@@ -423,8 +423,11 @@ def _apply_wrap(records: list, wrap, rule: RuleFile, spark: SparkSession,
     """finalize.wrap: object template — objects nest, every other node is
     a v2 expr evaluated with both @input and @out bound to the whole
     output array; missing → null (``transform.rs:707-749``)."""
-    arr_json = json.dumps(records)
-    df = spark.range(1).select(F.parse_json(F.lit(arr_json)).alias("__arr__"))
+    # a driver-local 1-row relation: the select below folds into a
+    # LocalTableScan and its collect launches no Spark job
+    df = spark.sql("SELECT parse_json(:arr) AS __arr__ "
+                   "FROM VALUES (0) AS t(__w__)",
+                   args={"arr": json.dumps(records)})
 
     # compile every leaf, run ONE select/collect for the whole template
     # (a per-leaf collect would launch one Spark job per leaf)
@@ -445,8 +448,10 @@ def _apply_wrap(records: list, wrap, rule: RuleFile, spark: SparkSession,
             return {k: walk(v, f"{path}.{k}") for k, v in node.items()}
         return compile_leaf(node, path)
 
+    from .compiler import sqlfn
     try:
-        skeleton = walk(wrap, "finalize.wrap")
+        with sqlfn.bound(spark):
+            skeleton = walk(wrap, "finalize.wrap")
         values = []
         if leaves:
             row = df.select(*[c for _, c in leaves]).collect()[0]

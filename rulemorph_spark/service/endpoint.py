@@ -17,8 +17,12 @@ Mirrors ``crates/rulemorph_endpoint/src/endpoint_engine.rs``:
 - ``reply``: status expr (100-599), fixed headers, body expr
   (missing → null), auto content-type (``:1089-1139``)
 
-This layer is driver-side (per-request, single record); rule execution
-reuses the Spark-compiled plans via ``transform_record``.
+This layer is driver-side (per-request, single record).  Every rule a
+request runs (steps, ``input`` mappings, conditions, reply expressions)
+goes through ``transform_record``, which compiles it again for that
+request and evaluates it on a driver-local 1-row relation: no plan is
+cached, and no Spark job runs unless the rule needs a Python-UDF bridge
+op or a ``finalize.filter`` over ``@item.index``.
 """
 
 from __future__ import annotations

@@ -1,7 +1,14 @@
 """Single-record rule application for the service layers.
 
-Endpoint/MCP requests transform ONE record at a time; each distinct rule
-compiles once (plan cache) and re-applies to 1-row DataFrames.
+Endpoint/MCP requests transform ONE record at a time.  Each call
+compiles its rule again (there is no plan cache) over a driver-local
+1-row relation: the record enters as an inline ``VALUES`` table, so
+the plan's leaf is a ``LocalRelation`` and the optimizer's
+``ConvertToLocalRelation`` folds the whole Project/Filter rule plan
+into a ``LocalTableScan`` evaluated on the driver — ``collect()``
+launches no Spark job.  A job still runs when the plan holds a
+Python-UDF bridge op (it cannot be evaluated on the driver) or a
+``finalize.filter`` over ``@item.index`` (it re-indexes through an RDD).
 """
 
 from __future__ import annotations
@@ -13,8 +20,11 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import apply_finalize, _apply_wrap
-from ..errors import TransformEngineError, extract_engine_error
+from ..errors import extract_engine_error
 from ..model import RuleFile, parse_rule_file
+
+_RECORD_SQL = ("SELECT __idx__, parse_json(__raw__) AS __record__ "
+               "FROM VALUES (0L, :raw) AS t(__idx__, __raw__)")
 
 
 def transform_record(spark: SparkSession, rule: RuleFile | str,
@@ -27,9 +37,7 @@ def transform_record(spark: SparkSession, rule: RuleFile | str,
         rule = parse_rule_file(rule)
     from ..compiler.rule import Builder, RuleCompiler
 
-    df = spark.createDataFrame([(0, json.dumps(record))],
-                               "__idx__ long, __raw__ string") \
-        .select("__idx__", F.parse_json("__raw__").alias("__record__"))
+    df = spark.sql(_RECORD_SQL, args={"raw": json.dumps(record)})
     builder = Builder(df)
     compiled = RuleCompiler(rule, context=context,
                             base_dir=base_dir).compile(

@@ -58,6 +58,7 @@ SMOKE_FILES = {
     "test_endpoint_inline.py",
     "test_entry_contract.py",
     "test_expr_fastpath.py",
+    "test_service_record.py",
 }
 
 

@@ -30,7 +30,12 @@ def pytest_collection_modifyitems(config, items):
 
     - ``--full`` is passed, or ``SPARK_GRAFT_FULL_TESTS=1`` is set;
     - explicit test files / node ids are given (developer runs and
-      ``scripts/run_tests_sharded.py`` name files directly).
+      ``scripts/run_tests_sharded.py`` name files directly);
+    - ``-m`` or ``-k`` is given: pytest's own selection then applies
+      to the whole suite, never silently narrowed to smoke tests.
+
+    When the gate engages it says so on the terminal (see
+    ``pytest_report_collectionfinish``).
     """
     if config.getoption("--full"):
         return
@@ -40,11 +45,20 @@ def pytest_collection_modifyitems(config, items):
     if any(a.rstrip("/").endswith(".py") or "::" in a
            for a in config.args):
         return  # explicit selection: run exactly what was asked
+    if config.getoption("markexpr") or config.getoption("keyword"):
+        return
     selected = [it for it in items if it.get_closest_marker("smoke")]
     deselected = [it for it in items if not it.get_closest_marker("smoke")]
     if selected and deselected:
         config.hook.pytest_deselected(items=deselected)
         items[:] = selected
+        config._rm_smoke_deselected = len(deselected)
+
+
+def pytest_report_collectionfinish(config, start_path, items):
+    n = getattr(config, "_rm_smoke_deselected", None)
+    if n is not None:
+        return f"smoke tier: {n} deselected; pass --full for the whole suite"
 
 
 @pytest.fixture(scope="session")

@@ -311,3 +311,161 @@ def test_deferred_failure_does_not_poison_later_flushes(spark):
     row = spark.range(1).select(
         sqlfn.call(ok, F.lit(2).cast("long")).alias("x")).collect()[0]
     assert row["x"] == 6
+
+
+def _on_fresh_thread(fn):
+    """Run ``fn`` on a new ``threading.Thread`` — like a
+    ThreadingHTTPServer request thread — and return what it returned
+    or raised."""
+    import threading
+    out: dict = {}
+
+    def body():
+        try:
+            out["value"] = fn()
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            out["exc"] = e
+
+    t = threading.Thread(target=body)
+    t.start()
+    t.join(timeout=600)
+    assert not t.is_alive()
+    if "exc" in out:
+        raise out["exc"]
+    return out["value"]
+
+
+def _compile_over_sql_source(spark, rule_text, record):
+    """Compile ``rule_text`` over a ``spark.sql``-built source: unlike
+    ``createDataFrame``, it does not make its session the thread's
+    active one.  → (the plan as handed to the analyzer, the DataFrame)."""
+    import pyspark.sql.functions as F
+    from rulemorph_spark.compiler.rule import Builder, RuleCompiler
+    from rulemorph_spark.model import parse_rule_file
+
+    df = spark.sql("SELECT 0L AS __idx__, parse_json(:raw) AS __record__",
+                   args={"raw": json.dumps(record)})
+    builder = Builder(df)
+    compiled = RuleCompiler(parse_rule_file(rule_text)).compile(
+        builder, F.col("__record__"))
+    out = builder.df.select(compiled.out_json().alias("__json__"))
+    return out._jdf.queryExecution().logical().toString(), out
+
+
+def test_compile_binds_its_session_off_the_main_thread(spark):
+    """A compile on a thread with no active session still takes the
+    SQL-function path: it uses its source's session, not the thread's
+    ambient one (which a fresh thread does not have)."""
+    import os
+    from pyspark.sql import SparkSession
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "perfbench", "fixtures",
+        "f5_extended.yaml")
+    rule = open(path).read()
+    record = {"text": "abc-1", "regex_text": "a1b2", "csv": "a,b",
+              "pad": "7", "num_a": 1.5, "num_b": "2.5", "num_c": 3,
+              "base_value": 255, "date_simple": "2020-01-02 03:04:05",
+              "date_tz": "2020-01-02T03:04:05+09:00",
+              "unix_s": "2020-01-02T03:04:05Z",
+              "unix_ms": "2020-01-02T03:04:05.123Z"}
+
+    def run():
+        ambient = SparkSession.getActiveSession()
+        plan, _ = _compile_over_sql_source(spark, rule, record)
+        return ambient, plan
+
+    ambient, plan = _on_fresh_thread(run)
+    assert ambient is None  # the premise: no ambient session here
+    assert "_rm_" in plan
+
+
+def test_invalid_java_regex_is_caught_off_the_main_thread(spark):
+    """The compile-time check for a pattern Java's regex rejects (here a
+    Python-style named group) runs against the compile's own session on
+    any thread: the error is the engine's ExprError at the pattern's
+    path, never Spark's raw regex failure."""
+    from rulemorph_spark.errors import extract_engine_error
+
+    rule = """
+version: 2
+input: {format: json}
+mappings:
+  - target: m
+    expr: ["@input.s", {"~=": ["lit:(?P<n>a)"]}]
+"""
+
+    def run():
+        _, df = _compile_over_sql_source(spark, rule, {"s": "abc"})
+        return df.collect()
+
+    with pytest.raises(Exception) as ei:
+        _on_fresh_thread(run)
+    err = extract_engine_error(ei.value)
+    assert err is not None, ei.value
+    assert (err.kind, err.message, err.path) == (
+        "ExprError", "regex pattern is invalid",
+        "mappings[0].expr[1].args[0]")
+
+
+def test_waiter_on_failed_deferred_create_does_not_hide_it(spark):
+    """A synchronous ensure_fn on another thread that waits on a
+    deferring scope's CREATE and sees it fail raises in its own thread
+    AND leaves the failure for the scope, whose exit still raises."""
+    body, tag = "injected_missing_fn(v", "twaitbad"
+    with pytest.raises(Exception, match="injected_missing_fn"):
+        with sqlfn.deferred(spark):
+            name = sqlfn.ensure_fn("v BIGINT", "BIGINT", body, tag)
+            assert name in sqlfn._state(spark).pending
+
+            def waiter():
+                with sqlfn.bound(spark), pytest.raises(
+                        Exception, match="injected_missing_fn"):
+                    sqlfn.ensure_fn("v BIGINT", "BIGINT", body, tag)
+                return True
+
+            assert _on_fresh_thread(waiter)
+    st = sqlfn._state(spark)
+    assert st.pending == {} and st.failed == {}
+    sqlfn.flush(spark)  # retired: no poisoned leftovers
+
+
+def test_failed_create_raises_in_every_thread_under_contention(spark):
+    """Stress: more threads than cores race on one failing body, half
+    inside deferring scopes and half synchronous.  Every one of them
+    must raise — a scope that joined another's in-flight CREATE must
+    not exit clean because a different thread retired the failure."""
+    import sys
+    import threading
+    body, tag = "stress_missing_fn(v", "tstress"
+    n = 8
+    barrier = threading.Barrier(n)
+    raised = [False] * n
+
+    def worker(i):
+        barrier.wait(timeout=60)
+        try:
+            if i % 2:
+                with sqlfn.deferred(spark):
+                    sqlfn.ensure_fn("v BIGINT", "BIGINT", body, tag)
+            else:
+                with sqlfn.bound(spark):
+                    sqlfn.ensure_fn("v BIGINT", "BIGINT", body, tag)
+        except Exception as e:  # noqa: BLE001 — the expected failure
+            raised[i] = "stress_missing_fn" in str(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,))
+                   for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert all(raised), raised
+    st = sqlfn._state(spark)
+    assert st.pending == {} and st.failed == {}
