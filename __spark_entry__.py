@@ -582,13 +582,6 @@ def q_ann_topk(spark, sf_dir):
     # filters — read them un-spread so they don't pay the round-robin
     # Exchange meant for the corpus side (guide §2.4)
     tiny = _t(spark, sf_dir, "embeddings")
-    # r10 note: the static cosine unroll (dedup.cosine_similarity's
-    # dim param, measured 2.05× for scoring over MATERIALIZED pair
-    # tables) is deliberately NOT engaged here — alternated
-    # fresh-process A/Bs at sf1 (60k pairs) and sf10 (600k pairs)
-    # measured the composite three-leg query 15-100% SLOWER with it
-    # (the isolated-projection win does not transfer to these
-    # broadcast-crossjoin streams; see OPTIMIZATION_r10.md).
     bf = (brute_force_scored(e, tiny.filter(F.col("vec_id") < 3),
                              "vec_id", "embedding")
           .select(F.lit("brute").alias("method"), "query_id", "neighbor",
@@ -900,8 +893,6 @@ def q_embedding_cluster_dedup(spark, sf_dir):
     form of the round-1 sign-of-first-4-dims bucket (VERDICT #4)."""
     from rulemorph_spark.llm.dedup import dedup_embedding_cosine
     e = _t(spark, sf_dir, "embeddings")
-    # no dim: see q_ann_topk's r10 note — the unroll is for
-    # materialized-pair scoring shapes, not these candidate streams
     return dedup_embedding_cosine(e, "vec_id", "embedding",
                                   threshold=0.2, nbits=12, bands=2)
 

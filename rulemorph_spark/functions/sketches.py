@@ -152,21 +152,27 @@ def _pack_bits(h1, h2, num_bits: int, num_hashes: int) -> bytes:
 
 
 def _unpack_payload(bloom_bits: bytes, num_bits: int) -> bytes:
-    """Validate the scheme tag and return the packed bit payload.
+    """Validate the scheme tag and length; return the packed bit payload.
 
     Raises on untagged or foreign-scheme blobs: probing bits built
     under a different hashing scheme yields silent FALSE NEGATIVES —
-    the one failure mode a Bloom prefilter must never have."""
+    the one failure mode a Bloom prefilter must never have.  A tagged
+    blob probed with another ``num_bits`` than it was built with is a
+    separate error: the blob is fine, the caller's signature is not."""
+    if not bloom_bits or bloom_bits[0] != _SCHEME_KM2:
+        raise ValueError(
+            f"bloom blob is untagged or carries a foreign scheme tag "
+            f"(byte 0 is {bloom_bits[:1].hex() or 'missing'}, expected "
+            f"{_SCHEME_KM2:02x} = xxhash64 double hashing).  Filters "
+            f"persisted by an older scheme must be rebuilt — probing "
+            f"them would produce false negatives.")
     payload_len = (num_bits + 7) // 8
-    if (len(bloom_bits) == payload_len + 1
-            and bloom_bits[0] == _SCHEME_KM2):
-        return bloom_bits[1:]
-    raise ValueError(
-        f"bloom blob is not scheme {_SCHEME_KM2} (xxhash64 double "
-        f"hashing) for num_bits={num_bits}: got {len(bloom_bits)} "
-        f"bytes, expected {payload_len + 1} with tag byte "
-        f"{_SCHEME_KM2}.  Filters persisted by an older scheme must "
-        f"be rebuilt — probing them would produce false negatives.")
+    if len(bloom_bits) != payload_len + 1:
+        raise ValueError(
+            f"bloom blob length does not match num_bits={num_bits}: got "
+            f"{len(bloom_bits)} bytes, expected {payload_len + 1}.  Probe "
+            f"with the num_bits the filter was built with.")
+    return bloom_bits[1:]
 
 
 def bloom_build(df: DataFrame, key_col: str, num_bits: int,
@@ -181,13 +187,16 @@ def bloom_build(df: DataFrame, key_col: str, num_bits: int,
     Driver-memory bound (r10): the pair collect is bounded by the
     DISTINCT KEY COUNT, which an explicit small ``num_bits`` over a
     huge key set does not cap — so the collect is probed with a
-    ``limit(num_bits + 1)`` first, and past that the build falls back
-    to collecting the distinct PROBE POSITIONS instead (≤ ``num_bits``
+    ``limit(cap + 1)`` first, and past that the build falls back to
+    collecting the distinct PROBE POSITIONS instead (≤ ``num_bits``
     rows by construction, the old per-position bound).  Identical
-    bits either way."""
+    bits either way.  ``cap`` is ``num_bits`` clamped to what Spark's
+    ``limit`` (a Java int) accepts; a probe that hits the clamp takes
+    the position path, never a build from a truncated key set."""
     pairs = _pairs_df(df, key_col)
-    rows = pairs.limit(num_bits + 1).collect()
-    if len(rows) <= num_bits:
+    cap = min(num_bits, 2**31 - 2)
+    rows = pairs.limit(cap + 1).collect()
+    if len(rows) <= cap:
         h1 = np.array([r["h1"] for r in rows], dtype=np.int64)
         h2 = np.array([r["h2"] for r in rows], dtype=np.int64)
         return _pack_bits(h1, h2, num_bits, num_hashes)

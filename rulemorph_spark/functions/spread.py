@@ -17,10 +17,9 @@ no exchange is added.  This is the scale-adaptive form the
 optimization guide asks for (§2: derive partitioning from input size,
 not from a constant tuned for one deployment).
 
-The threshold is configurable via ``SPARK_GRAFT_SPREAD_MAX_MB``
-(default 64; ``0`` disables spreading entirely).  64 MB round-robin
-exchanges cost milliseconds on any hardware, while the serial-scan
-penalty they remove grows with per-row compute.
+The threshold is ``_MAX_BYTES`` (64 MiB): 64 MiB round-robin exchanges
+cost milliseconds on any hardware, while the serial-scan penalty they
+remove grows with per-row compute.
 """
 
 from __future__ import annotations
@@ -29,16 +28,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-_ENV = "SPARK_GRAFT_SPREAD_MAX_MB"
-_DEFAULT_MB = 64.0
-
-
-def _max_bytes() -> int:
-    try:
-        mb = float(os.environ.get(_ENV, _DEFAULT_MB))
-    except ValueError:
-        mb = _DEFAULT_MB
-    return int(mb * 1024 * 1024)
+_MAX_BYTES = 64 * 1024 * 1024
 
 
 def scan_bytes(df: DataFrame) -> int | None:
@@ -78,9 +68,7 @@ def spread_small_scan(df: DataFrame, max_bytes: int | None = None
     where per-row work is trivial — the added exchange only pays for
     itself when it unlocks parallel compute.
     """
-    limit = _max_bytes() if max_bytes is None else max_bytes
-    if limit <= 0:
-        return df
+    limit = _MAX_BYTES if max_bytes is None else max_bytes
     total = scan_bytes(df)
     if total is None or total > limit:
         return df

@@ -32,26 +32,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def l2_sq(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Squared Euclidean distance between two float arrays.
-
-    ``dim`` (r10, guide §4.1): HOFs are CodegenFallback — for vectors
-    of exactly this known length the fold statically unrolls into flat
-    element_at arithmetic with the SAME operation order (seeded left
-    fold), so values are bit-identical; other lengths take the HOF
-    path via a per-row size guard (see ``dedup.cosine_similarity``)."""
-    hof = F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    from .dedup import _usable_dim
-    d = _usable_dim(dim)
-    if d is None:
-        return hof
-    acc: Column = F.lit(0.0)
-    for i in range(1, d + 1):
-        x, y = F.element_at(a, i), F.element_at(b, i)
-        acc = acc + (x - y) * (x - y)
-    return F.when((F.size(a) == F.lit(d)) & (F.size(b) == F.lit(d)),
-                  acc).otherwise(hof)
+def l2_sq(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance between two float arrays."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+                       F.lit(0.0), lambda acc, v: acc + v)
 
 
 def seed_centroids(df: DataFrame, id_col: str, vec_col: str,
@@ -79,27 +63,12 @@ def _cents_1row(centroids: DataFrame) -> DataFrame:
             F.col("cvec").alias("cvec")))).alias("__cents__"))
 
 
-_CENTS_LIT_ENV = "SPARK_GRAFT_CENTROID_LIT_MAX_ELEMS"
-_CENTS_LIT_DEFAULT = 8192
-
-
-def _cents_lit_max() -> int:
-    import os
-    try:
-        return int(os.environ.get(_CENTS_LIT_ENV, _CENTS_LIT_DEFAULT))
-    except ValueError:
-        return _CENTS_LIT_DEFAULT
+# total centroid elements past which the table keeps the broadcast join
+_CENTS_LIT_MAX_ELEMS = 8192
 
 
 def cents_inline(centroids: DataFrame, centroid_id: str = "cell",
                  centroid_vec: str = "cvec") -> Column | None:
-    meta = cents_inline_meta(centroids, centroid_id, centroid_vec)
-    return None if meta is None else meta[0]
-
-
-def cents_inline_meta(centroids: DataFrame, centroid_id: str = "cell",
-                      centroid_vec: str = "cvec"
-                      ) -> tuple[Column, int | None] | None:
     """The cell-sorted centroid struct array as ONE typed plan literal
     (a single ``F.expr`` — one py4j call), or None when the caller must
     fall back to the broadcast-join form (``_cents_1row``).
@@ -118,19 +87,11 @@ def cents_inline_meta(centroids: DataFrame, centroid_id: str = "cell",
 
     Scale guard: literal only when the plan is local (``isLocal`` —
     deciding must never run a cluster job) AND the total element count
-    is ≤ ``SPARK_GRAFT_CENTROID_LIT_MAX_ELEMS`` (default 8192; 0
-    disables).  A 50k-cluster SemDeDup-scale table keeps the broadcast
-    join — a multi-megabyte literal would bloat the plan (the r8
-    plan-budget lesson) — and non-finite / NULL components also fall
-    back rather than round-tripping through SQL text.
-
-    ``cents_inline_meta`` additionally returns the centroids' uniform
-    vector dimension (or None when ragged) so consumers can statically
-    unroll the per-centroid distance math (r10, see
-    ``dedup.cosine_similarity``)."""
-    max_elems = _cents_lit_max()
-    if max_elems <= 0:
-        return None
+    is ≤ ``_CENTS_LIT_MAX_ELEMS`` (8192).  A 50k-cluster SemDeDup-scale
+    table keeps the broadcast join — a multi-megabyte literal would
+    bloat the plan (the r8 plan-budget lesson) — and non-finite / NULL
+    components also fall back rather than round-tripping through SQL
+    text."""
     id_type = centroids.schema[centroid_id].dataType.simpleString()
     if id_type not in ("int", "bigint", "smallint", "tinyint"):
         return None  # python sort must replay array_sort's order
@@ -158,7 +119,7 @@ def cents_inline_meta(centroids: DataFrame, centroid_id: str = "cell",
         if r["cell"] is None or r["cvec"] is None:
             return None
         total += len(r["cvec"])
-        if total > max_elems:
+        if total > _CENTS_LIT_MAX_ELEMS:
             return None
         for x in r["cvec"]:
             if x is None or not math.isfinite(x):
@@ -170,9 +131,7 @@ def cents_inline_meta(centroids: DataFrame, centroid_id: str = "cell",
                      f"'cvec',array({vals}))")
     sql = (f"CAST(array({','.join(parts)}) AS "
            f"array<struct<cell:{id_type},cvec:array<{elem_sql}>>>)")
-    dims = {len(r["cvec"]) for r in rows}
-    dim = dims.pop() if len(dims) == 1 else None
-    return F.expr(sql), dim
+    return F.expr(sql)
 
 
 def _best_cell(vec: Column) -> Column:
@@ -182,11 +141,7 @@ def _best_cell(vec: Column) -> Column:
     (struct(round(d,9), cell)), now a narrow per-row expression with no
     k-way row blowup and no exchange.  ``cvec`` rides along for free
     (never compared: cell ids are unique, so the (d, cell) prefix always
-    decides).  The distance stays the HOF form on purpose: inside a
-    ``transform`` lambda everything is interpreted without
-    common-subexpression sharing, and an unrolled distance measured 3×
-    SLOWER there (r10 rejection — the unroll pays only in top-level
-    projections, see ``l2_sq``/``dedup.cosine_similarity``)."""
+    decides)."""
     return F.array_min(F.transform(
         F.col("__cents__"),
         lambda c: F.struct(

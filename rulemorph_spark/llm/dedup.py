@@ -283,8 +283,7 @@ def _simhash_sql(t: str, bits: int) -> str:
 
 def dedup_embedding_cosine(df: DataFrame, id_col: str, vec_col: str,
                            threshold: float = 0.95, nbits: int = 12,
-                           bands: int = 2,
-                           dim: int | None = None) -> DataFrame:
+                           bands: int = 2) -> DataFrame:
     """Near-dup pairs by embedding cosine via banded random-hyperplane
     LSH: each vector gets an ``nbits``-bit sign signature under
     pseudo-random hyperplanes (``similarity.lsh_signature`` — bit-exact
@@ -305,7 +304,7 @@ def dedup_embedding_cosine(df: DataFrame, id_col: str, vec_col: str,
     if nbits % bands:
         raise ValueError("nbits must be divisible by bands")
     r = nbits // bands
-    sig = lsh_signature(vec_col, nbits, dim)
+    sig = lsh_signature(vec_col, nbits)
     keyed = df.select(F.col(id_col), sig.alias("__sig__"))
     band_arr = F.array(*[
         F.struct(F.lit(b).cast("int").alias("band"),
@@ -327,111 +326,17 @@ def dedup_embedding_cosine(df: DataFrame, id_col: str, vec_col: str,
     vb = df.select(F.col(id_col).alias("id_b"),
                    F.col(vec_col).alias("__vb__"))
     pair = cand.join(va, "id_a").join(vb, "id_b")
-    cos = cosine_similarity("__va__", "__vb__", dim)
+    cos = cosine_similarity("__va__", "__vb__")
     return (pair.select("id_a", "id_b",
                         F.round(cos, 6).alias("cosine"))
             .filter(F.col("cosine") >= threshold))
 
 
-# --- distance-math unrolling (r10, guide §4.1 built-ins vs HOFs) ---
-#
-# Spark higher-order functions (zip_with/aggregate/transform) are
-# CodegenFallback: every cosine/l2 evaluated per row runs the lambda
-# interpreter, which dominates the compute-bound ANN / dedup paths at
-# scale.  When the caller KNOWS the vector dimension (the embedding
-# table's data contract, or the dimension of a driver-resident
-# centroid literal), the fold can be statically unrolled into flat
-# element_at arithmetic — the SAME operation sequence in the SAME
-# order (seeded `0.0 + t₁` left fold, per-element casts), so results
-# are bit-identical.  A per-row `size(v) = d` CASE guard routes rows
-# of any OTHER length through the original HOF expression, so the
-# result is identical for arbitrary data, not just contract-conforming
-# data (differentially pinned in tests/test_expr_fastpath.py).
-# Measured 107 s → 64 s for 4M 64-dim cosine pairs at local[32].
-
-_UNROLL_MAX_DIM_ENV = "SPARK_GRAFT_UNROLL_MAX_DIM"
-_UNROLL_MAX_DIM_DEFAULT = 128
-
-
-def _unroll_max_dim() -> int:
-    import os
-    try:
-        return int(os.environ.get(_UNROLL_MAX_DIM_ENV,
-                                  _UNROLL_MAX_DIM_DEFAULT))
-    except ValueError:
-        return _UNROLL_MAX_DIM_DEFAULT
-
-
-def _usable_dim(dim: int | None) -> int | None:
-    """The dimension to unroll with, or None: non-positive and
-    plan-bloating dimensions (> SPARK_GRAFT_UNROLL_MAX_DIM, default
-    128 — a 128-dim cosine is ~55 kB of flat SQL) keep the HOF form."""
-    if dim is None or dim <= 0 or dim > _unroll_max_dim():
-        return None
-    return dim
-
-
-_UNROLL_MIN_MB_ENV = "SPARK_GRAFT_UNROLL_MIN_MB"
-_UNROLL_MIN_MB_DEFAULT = 64.0
-
-
-def unroll_dim_for(df, dim: int | None) -> int | None:
-    """Scale-adaptive unroll gate (the ``spread_small_scan`` pattern,
-    guide §2: derive the decision from input size, not a constant):
-    return ``dim`` when ``df``'s scan is big enough that the unrolled
-    distance math pays for its fixed per-plan cost, else None (keep
-    the HOF form).
-
-    WHEN TO USE (r10, measured): the unroll wins for cosine/L2 over
-    **materialized pair tables** — scoring/reranking a stored
-    (vector, vector) candidate table — where it measured 2.05× at 1M
-    64-dim pairs (23.8 → 11.5 s, codegen context) and 1.67-2.3× at 4M
-    pairs.  It does NOT transfer to the broadcast-crossJoin candidate
-    streams of the composite ANN queries: alternated fresh-process
-    A/Bs measured q_ann_topk 15-100% SLOWER with the unroll at BOTH
-    sf1 (~60k pairs) and sf10 (~600k pairs), and the isolated
-    crossJoin leg a wash — which is why the declared queries do not
-    engage it (see OPTIMIZATION_r10.md §1 for the full series).
-    Threshold via ``SPARK_GRAFT_UNROLL_MIN_MB`` (default 64 MB; ``0``
-    = always unroll).  Unknown scan size (non-file source)
-    conservatively keeps the HOF form."""
-    import os
-    if _usable_dim(dim) is None:
-        return None
-    try:
-        mb = float(os.environ.get(_UNROLL_MIN_MB_ENV,
-                                  _UNROLL_MIN_MB_DEFAULT))
-    except ValueError:
-        mb = _UNROLL_MIN_MB_DEFAULT
-    if mb <= 0:
-        return dim
-    from ..functions.spread import scan_bytes
-    total = scan_bytes(df)
-    if total is None or total <= mb * 1024 * 1024:
-        return None
-    return dim
-
-
-def _fold_sql(terms: list[str]) -> str:
-    """((0.0 + t₁) + t₂) + … — textual twin of the HOF left fold
-    including the double-zero seed term (`0.0 + t₁` differs from bare
-    `t₁` only for an IEEE -0.0 first term, so the seed is kept)."""
-    acc = "cast(0.0 as double)"
-    for t in terms:
-        acc = f"({acc} + {t})"
-    return acc
-
-
-def cosine_similarity(a: Column | str, b: Column | str,
-                      dim: int | None = None) -> Column:
-    """cosine over two float arrays — zip_with + aggregate, JVM-side.
-
-    ``dim``: statically unroll for vectors of exactly this length
-    (bit-identical; other lengths take the HOF path per row — see the
-    unrolling note above)."""
+def cosine_similarity(a: Column | str, b: Column | str) -> Column:
+    """cosine over two float arrays — zip_with + aggregate, JVM-side."""
     sa, sb = _ref(a), _ref(b)
     if sa is not None and sb is not None:
-        return F.expr(_cosine_sql(sa, sb, dim))
+        return F.expr(_cosine_sql(sa, sb))
     if sa is not None:
         a = F.col(a)
     if sb is not None:
@@ -444,30 +349,11 @@ def cosine_similarity(a: Column | str, b: Column | str,
     nb = F.sqrt(F.aggregate(
         b, F.lit(0.0),
         lambda acc, x: acc + x.cast("double") * x.cast("double")))
-    hof = F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(
+    return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(
         dot / (na * nb))
-    d = _usable_dim(dim)
-    if d is None:
-        return hof
-    xs = [F.element_at(a, i).cast("double") for i in range(1, d + 1)]
-    ys = [F.element_at(b, i).cast("double") for i in range(1, d + 1)]
-
-    def fold(terms):
-        acc: Column = F.lit(0.0)
-        for t in terms:
-            acc = acc + t
-        return acc
-
-    udot = fold([x * y for x, y in zip(xs, ys)])
-    una = F.sqrt(fold([x * x for x in xs]))
-    unb = F.sqrt(fold([y * y for y in ys]))
-    core = F.when((una == 0) | (unb == 0), F.lit(0.0)).otherwise(
-        udot / (una * unb))
-    return F.when((F.size(a) == F.lit(d)) & (F.size(b) == F.lit(d)),
-                  core).otherwise(hof)
 
 
-def _cosine_sql(a: str, b: str, dim: int | None = None) -> str:
+def _cosine_sql(a: str, b: str) -> str:
     """SQL text twin of :func:`cosine_similarity`."""
     def sq_norm(v: str) -> str:
         return (f"sqrt(aggregate({v}, cast(0.0 as double), "
@@ -478,22 +364,9 @@ def _cosine_sql(a: str, b: str, dim: int | None = None) -> str:
            f"cast(x as double) * cast(y as double)), "
            f"cast(0.0 as double), (acc, x) -> acc + x)")
     na, nb = sq_norm(a), sq_norm(b)
-    hof = (f"CASE WHEN ({na} = 0) OR ({nb} = 0) "
-           f"THEN cast(0.0 as double) "
-           f"ELSE {dot} / ({na} * {nb}) END")
-    d = _usable_dim(dim)
-    if d is None:
-        return hof
-    xs = [f"cast(element_at({a}, {i}) as double)" for i in range(1, d + 1)]
-    ys = [f"cast(element_at({b}, {i}) as double)" for i in range(1, d + 1)]
-    udot = _fold_sql([f"({x} * {y})" for x, y in zip(xs, ys)])
-    una = "sqrt(" + _fold_sql([f"({x} * {x})" for x in xs]) + ")"
-    unb = "sqrt(" + _fold_sql([f"({y} * {y})" for y in ys]) + ")"
-    core = (f"CASE WHEN ({una} = 0) OR ({unb} = 0) "
+    return (f"CASE WHEN ({na} = 0) OR ({nb} = 0) "
             f"THEN cast(0.0 as double) "
-            f"ELSE {udot} / ({una} * {unb}) END")
-    return (f"CASE WHEN (size({a}) = {d}) AND (size({b}) = {d}) "
-            f"THEN {core} ELSE {hof} END")
+            f"ELSE {dot} / ({na} * {nb}) END")
 
 
 def connected_components(edges: DataFrame, src: str = "src",

@@ -57,7 +57,7 @@ def gopher_quality_flags(df: DataFrame, text_col: str = "text",
     round-robined across the session's cores here, inside the
     operator — every caller gets it, not just the bench.
     ``spread_small_scan`` is an exact no-op above its size threshold
-    (``SPARK_GRAFT_SPREAD_MAX_MB``, default 64), so production plans
+    (``spread._MAX_BYTES``, 64 MiB), so production plans
     at scale are unchanged.
     """
     from ..functions.spread import spread_small_scan

@@ -161,37 +161,3 @@ def semdedup(df: DataFrame, id_col: str = "doc_id",
 
     return rows.groupBy("cell", "shard").applyInPandas(run, out_schema)
 
-
-def semdedup_reference(ids, vecs, cells, centroid_by_cell, eps: float,
-                       keep: str = "centroid_far"):
-    """Pure-NumPy reference for tests: same greedy, same ordering, run
-    per cluster on the driver.  Returns {id: (keep, max_sim)}."""
-    thr = 1.0 - eps
-    out = {}
-    by_cell: dict[int, list[int]] = {}
-    for i, c in enumerate(cells):
-        by_cell.setdefault(c, []).append(i)
-    for c, idxs in by_cell.items():
-        x = np.array([np.asarray(vecs[i], dtype=np.float64)
-                      for i in idxs])
-        norms = np.linalg.norm(x, axis=1)
-        norms[norms == 0.0] = 1.0
-        xn = x / norms[:, None]
-        if keep == "centroid_far":
-            cv = np.asarray(centroid_by_cell[c], dtype=np.float64)
-            cn = np.linalg.norm(cv)
-            csim = xn @ (cv / cn) if cn > 0 else np.zeros(len(idxs))
-            order = sorted(range(len(idxs)),
-                           key=lambda j: (round(csim[j], 9),
-                                          ids[idxs[j]]))
-        else:
-            order = sorted(range(len(idxs)),
-                           key=lambda j: ids[idxs[j]])
-        kept: list[int] = []
-        for j in order:
-            s = float((xn[kept] @ xn[j]).max()) if kept else 0.0
-            ok = s < thr
-            out[ids[idxs[j]]] = (ok, round(s, 9))
-            if ok:
-                kept.append(j)
-    return out

@@ -24,36 +24,29 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .dedup import cosine_similarity
 
 
 def brute_force_scored(corpus: DataFrame, queries: DataFrame, id_col: str,
-                       vec_col: str, query_id: str = "query_id",
-                       dim: int | None = None) -> DataFrame:
+                       vec_col: str, query_id: str = "query_id"
+                       ) -> DataFrame:
     """Exact cosine of every (corpus row, query) pair — the un-ranked
     half of :func:`brute_force_topk`, exposed so composite callers can
     rank several strategies' candidates under ONE shared window
-    (r9, guide §2.4: one exchange instead of one per strategy).
-
-    ``dim`` (r10): the embedding table's known fixed dimension —
-    statically unrolls the per-pair cosine (bit-identical; rows of any
-    other length take the HOF path per row, see
-    ``dedup.cosine_similarity``)."""
+    (r9, guide §2.4: one exchange instead of one per strategy)."""
     q = queries.select(F.col(id_col).alias(query_id),
                        F.col(vec_col).alias("__qv__"))
     joined = corpus.crossJoin(F.broadcast(q)) \
         .filter(F.col(id_col) != F.col(query_id))
-    cos = F.round(cosine_similarity(vec_col, "__qv__", dim), 6)
+    cos = F.round(cosine_similarity(vec_col, "__qv__"), 6)
     return joined.select(F.col(query_id), F.col(id_col).alias("neighbor"),
                          cos.alias("cosine"))
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
                      vec_col: str, k: int = 5,
-                     query_id: str = "query_id",
-                     dim: int | None = None) -> DataFrame:
+                     query_id: str = "query_id") -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
     Output: (query_id, neighbor id, rounded cosine, rank).  Cosine is
@@ -61,7 +54,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     engines.
     """
     scored = brute_force_scored(corpus, queries, id_col, vec_col,
-                                query_id, dim)
+                                query_id)
     w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
                                              F.col("neighbor").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -82,23 +75,18 @@ def _cents_1row(centroids: DataFrame, centroid_id: str,
 
 def _with_cents(df: DataFrame, centroids: DataFrame,
                 centroid_id: str = "cell",
-                centroid_vec: str = "cvec"
-                ) -> tuple[DataFrame, int | None]:
+                centroid_vec: str = "cvec") -> DataFrame:
     """``df`` plus the ``__cents__`` array: a typed plan literal when
     the centroid table is driver-local and small — no broadcast
     exchange, no driver broadcast-build job per consuming branch — else
     the one-row broadcast join (r9, guide §5.2; values identical, see
-    ``clustering.cents_inline``).  Also returns the centroids' uniform
-    dimension when driver-known (r10 — unlocks the static distance
-    unroll), else None."""
-    from .clustering import cents_inline_meta
-    meta = cents_inline_meta(centroids, centroid_id, centroid_vec)
-    if meta is not None:
-        lit, dim = meta
-        return df.withColumn("__cents__", lit), dim
+    ``clustering.cents_inline``)."""
+    from .clustering import cents_inline
+    lit = cents_inline(centroids, centroid_id, centroid_vec)
+    if lit is not None:
+        return df.withColumn("__cents__", lit)
     return df.crossJoin(
-        F.broadcast(_cents_1row(centroids, centroid_id,
-                                centroid_vec))), None
+        F.broadcast(_cents_1row(centroids, centroid_id, centroid_vec)))
 
 
 def _norm0(c: Column) -> Column:
@@ -115,11 +103,9 @@ def _nearest_cell(vec_col: str, cell_type) -> Column:
     (round(cos,6) DESC, cell ASC), now a narrow expression with no
     k-way row blowup and no exchange (r9, guide §2.4).
 
-    The per-centroid cosine deliberately stays the HOF form: this
-    expression lives INSIDE a ``transform`` lambda, where everything
-    is interpreted without common-subexpression sharing — a statically
-    unrolled cosine here measured 3× SLOWER (r10 rejection; the unroll
-    only pays in top-level projections, see ``dedup.cosine_similarity``)."""
+    The per-centroid cosine is the Column form: this expression lives
+    INSIDE a ``transform`` lambda, where the SQL-text twin cannot bind
+    the lambda variable."""
     best = F.array_max(F.transform(
         F.col("__cents__"),
         lambda c: F.struct(
@@ -154,7 +140,7 @@ def ivf_assign(corpus: DataFrame, centroids: DataFrame, id_col: str,
     corpus×k rows carrying the full vectors).  Same assignment
     bit-for-bit (`tests/test_similarity.py` equivalence pin)."""
     cell_type = centroids.schema[centroid_id].dataType
-    base, _ = _with_cents(corpus, centroids, centroid_id, centroid_vec)
+    base = _with_cents(corpus, centroids, centroid_id, centroid_vec)
     return (base
             .select(id_col, vec_col,
                     _nearest_cell(vec_col, cell_type).alias(centroid_id))
@@ -177,15 +163,14 @@ def ivf_write_index(corpus: DataFrame, centroids: DataFrame, path: str,
 
 def ivf_topk_indexed(spark, index_path: str, queries: DataFrame,
                      centroids: DataFrame, id_col: str, vec_col: str,
-                     k: int = 5, nprobe: int = 2,
-                     dim: int | None = None) -> DataFrame:
+                     k: int = 5, nprobe: int = 2) -> DataFrame:
     """IVF search against a materialized index (``ivf_write_index``).
 
     Collects the probe cells (tiny: queries × nprobe) and pushes them
     into the scan as a partition filter, so only the probed cells'
     files are read.
     """
-    qbase, _ = _with_cents(
+    qbase = _with_cents(
         queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("__qv__")),
         centroids)
@@ -196,7 +181,7 @@ def ivf_topk_indexed(spark, index_path: str, queries: DataFrame,
     index = spark.read.parquet(index_path).filter(F.col("cell").isin(cells))
     cand = index.join(F.broadcast(probe), "cell") \
         .filter(F.col(id_col) != F.col("query_id"))
-    cos = F.round(cosine_similarity(vec_col, "__qv__", dim), 6)
+    cos = F.round(cosine_similarity(vec_col, "__qv__"), 6)
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
                                                F.col("neighbor").asc())
     return (cand.select("query_id", F.col(id_col).alias("neighbor"),
@@ -220,8 +205,7 @@ def _hyperplane_sign(h: Column, idx: Column) -> Column:
         .cast("long")
 
 
-def lsh_signature(vec_col: Column, nbits: int = 6,
-                  dim: int | None = None) -> Column:
+def lsh_signature(vec_col: Column | str, nbits: int = 6) -> Column:
     """``nbits``-bit random-hyperplane signature of a float vector.
 
     Bit ``h`` is the sign of the dot product with hyperplane ``h``.
@@ -235,13 +219,6 @@ def lsh_signature(vec_col: Column, nbits: int = 6,
     The earlier one-pass form allocated an nbits-wide product array
     per ELEMENT plus a zip_with accumulator — measured 22% slower in
     the interpreted HOF evaluator, bit-identical output.
-
-    ``dim`` is accepted for signature-compatibility with the cosine
-    operators but IGNORED: a statically-unrolled signature was
-    prototyped in r10 and measured 3.5× SLOWER at sf0.1 (the unrolled
-    form re-quantizes every component once per bit — nbits×d floor/cast
-    chains — where the HOF binds the quantized array once; see
-    OPTIMIZATION_r10.md "measured rejections").
     """
     from .dedup import _ref
     v = _ref(vec_col)
@@ -289,12 +266,9 @@ def _lsh_signature_sql(v: str, nbits: int) -> str:
     return f"element_at(transform(array({q}), qq -> {build}), 1)"
 
 
-
-
 def lsh_scored(corpus: DataFrame, queries: DataFrame, id_col: str,
                vec_col: str, nbits: int = 6,
-               multiprobe: bool = True,
-               dim: int | None = None) -> DataFrame:
+               multiprobe: bool = True) -> DataFrame:
     """LSH candidates with exact cosine within signature buckets,
     un-ranked (see :func:`brute_force_scored`).
 
@@ -310,7 +284,7 @@ def lsh_scored(corpus: DataFrame, queries: DataFrame, id_col: str,
     """
     # one unbound expression reused for both sides — Column trees are
     # immutable, and building the signature once halves the py4j cost
-    sig = lsh_signature(vec_col, nbits, dim)
+    sig = lsh_signature(vec_col, nbits)
     keyed = corpus.select(F.col(id_col), F.col(vec_col),
                           sig.alias("__bucket__"))
     q = queries.select(F.col(id_col).alias("query_id"),
@@ -332,19 +306,18 @@ def lsh_scored(corpus: DataFrame, queries: DataFrame, id_col: str,
                          F.col("__qsig__").alias("__bucket__"))
     cand = keyed.join(F.broadcast(probe), "__bucket__") \
         .filter(F.col(id_col) != F.col("query_id"))
-    cos = F.round(cosine_similarity(vec_col, "__qv__", dim), 6)
+    cos = F.round(cosine_similarity(vec_col, "__qv__"), 6)
     return cand.select("query_id", F.col(id_col).alias("neighbor"),
                        cos.alias("cosine"))
 
 
 def lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
              vec_col: str, k: int = 5, nbits: int = 6,
-             multiprobe: bool = True,
-             dim: int | None = None) -> DataFrame:
+             multiprobe: bool = True) -> DataFrame:
     """LSH approximate top-k: :func:`lsh_scored` candidates ranked by
     (cosine DESC, neighbor ASC) per query."""
     scored = lsh_scored(corpus, queries, id_col, vec_col, nbits,
-                        multiprobe, dim)
+                        multiprobe)
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
                                                F.col("neighbor").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -352,8 +325,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
 
 
 def ivf_scored(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
-               id_col: str, vec_col: str, nprobe: int = 2,
-               dim: int | None = None) -> DataFrame:
+               id_col: str, vec_col: str, nprobe: int = 2) -> DataFrame:
     """IVF candidates with exact cosines, un-ranked (see
     :func:`brute_force_scored` for why this is exposed).
 
@@ -366,11 +338,11 @@ def ivf_scored(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
     unknown).  Now: zero corpus exchange before the candidate join, and
     the (queries × nprobe)-row probe side is broadcast."""
     cell_type = centroids.schema["cell"].dataType
-    cbase, _ = _with_cents(corpus, centroids)
+    cbase = _with_cents(corpus, centroids)
     assigned = (cbase
                 .select(id_col, vec_col,
                         _nearest_cell(vec_col, cell_type).alias("cell")))
-    qbase, _ = _with_cents(
+    qbase = _with_cents(
         queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("__qv__")),
         centroids)
@@ -379,112 +351,23 @@ def ivf_scored(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
                          .alias("cell"))
     cand = assigned.join(F.broadcast(probe), "cell") \
         .filter(F.col(id_col) != F.col("query_id"))
-    cos = F.round(cosine_similarity(vec_col, "__qv__", dim), 6)
+    cos = F.round(cosine_similarity(vec_col, "__qv__"), 6)
     return cand.select("query_id", F.col(id_col).alias("neighbor"),
                        cos.alias("cosine"))
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
              id_col: str, vec_col: str, k: int = 5,
-             nprobe: int = 2, dim: int | None = None) -> DataFrame:
+             nprobe: int = 2) -> DataFrame:
     """IVF search: probe the ``nprobe`` nearest cells per query.
 
     At scale, corpus-by-cell is a bucketed/partitioned table, so each
     query touches ~nprobe/ncells of the data instead of all of it.
     """
     scored = ivf_scored(corpus, queries, centroids, id_col, vec_col,
-                        nprobe, dim)
+                        nprobe)
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
                                                F.col("neighbor").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
-
-def brute_force_topk_np(corpus: DataFrame, queries: DataFrame,
-                        id_col: str, vec_col: str, k: int = 5,
-                        query_id: str = "query_id") -> DataFrame:
-    """Vectorized twin of ``brute_force_topk``: the query matrix is
-    collected to the driver (queries are small by construction) and
-    each corpus partition scores against it with one NumPy matmul
-    inside Arrow-batched ``mapInPandas`` — the "Python wins" case,
-    where a BLAS kernel beats per-element JVM expression evaluation.
-
-    Each batch emits only its local top-k per query (sorted by
-    (-cosine, neighbor) so cross-partition ties resolve identically),
-    so the shuffle into the global rank window carries
-    O(k × partitions × queries) rows, not the full cross product.
-
-    Measured on 50k random 64-dim vectors × 8 queries (local[32]): 2×
-    the JVM expression path, widening with the query-batch size since
-    the matmul amortizes where the crossJoin pays per pair.
-
-    Rounding parity: Spark's ``F.round`` is HALF_UP on the shortest
-    decimal representation, which ``np.round`` (half-even on the
-    binary value) does NOT reproduce at 6th-decimal boundaries — so
-    the BLAS pass only pre-selects a margin superset and the survivors
-    are re-rounded with the exact Decimal(repr) HALF_UP rule.  The
-    remaining divergence window is summation-order ULP noise landing
-    exactly on a rounding boundary, which the parity test never
-    observes on real data.
-    """
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select(F.col(id_col).alias("qid"),
-                            F.col(vec_col).alias("qv")).collect()
-    qids = np.array([r.qid for r in q_rows], dtype=np.int64)
-    qmat = np.array([r.qv for r in q_rows], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = np.inf  # zero query vector → cosine 0
-
-    out_schema = T.StructType([
-        T.StructField(query_id, T.LongType()),
-        T.StructField("neighbor", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-    six = Decimal("0.000001")
-
-    def round6(x: float) -> float:
-        return float(Decimal(repr(float(x))).quantize(
-            six, rounding=ROUND_HALF_UP))
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue  # empty Arrow batch: np.linalg.norm would
-                # raise on the 1-D empty array before any guard below
-            ids = pdf["__id__"].to_numpy(dtype=np.int64)
-            emat = np.array(list(pdf["__vec__"]), dtype=np.float64)
-            enorm = np.linalg.norm(emat, axis=1)
-            enorm[enorm == 0] = np.inf
-            cos = (emat @ qmat.T) / np.outer(enorm, qnorm)
-            parts = []
-            for j, qid in enumerate(qids):
-                mask = ids != qid
-                cand_ids, cand_cos = ids[mask], cos[mask, j]
-                if len(cand_ids) > k:
-                    # margin superset: anything whose ROUNDED cosine
-                    # could reach the rounded top-k is within 2e-6 of
-                    # the kth unrounded value
-                    kth = np.partition(cand_cos, -k)[-k]
-                    keep = cand_cos >= kth - 2e-6
-                    cand_ids, cand_cos = cand_ids[keep], cand_cos[keep]
-                rounded = np.array([round6(c) for c in cand_cos])
-                order = np.lexsort((cand_ids, -rounded))[:k]
-                parts.append(pd.DataFrame({
-                    query_id: qid,
-                    "neighbor": cand_ids[order],
-                    "cosine": rounded[order]}))
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    scored = (corpus.select(F.col(id_col).alias("__id__"),
-                            F.col(vec_col).alias("__vec__"))
-              .mapInPandas(score, out_schema))
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col("neighbor").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
 

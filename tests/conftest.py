@@ -1,4 +1,5 @@
 import os
+import re
 
 import pytest
 
@@ -55,10 +56,33 @@ def pytest_collection_modifyitems(config, items):
         config._rm_smoke_deselected = len(deselected)
 
 
+# A suite depends on the reference checkout when its source names a
+# path inside it ("<root>/reference/crates/..."); such suites skip or
+# parametrize to nothing when the checkout is absent.
+_REFERENCE_PATH = re.compile(r'"(/[^"]*?/reference)/crates/')
+
+
+def pytest_collectstart(collector):
+    if not isinstance(collector, pytest.Module):
+        return
+    m = _REFERENCE_PATH.search(collector.path.read_text(encoding="utf-8"))
+    if m and not os.path.isdir(m.group(1)):
+        if not hasattr(collector.config, "_rm_reference_absent"):
+            collector.config._rm_reference_absent = set()
+        collector.config._rm_reference_absent.add(collector.path)
+
+
 def pytest_report_collectionfinish(config, start_path, items):
+    lines = []
     n = getattr(config, "_rm_smoke_deselected", None)
     if n is not None:
-        return f"smoke tier: {n} deselected; pass --full for the whole suite"
+        lines.append(
+            f"smoke tier: {n} deselected; pass --full for the whole suite")
+    absent = getattr(config, "_rm_reference_absent", ())
+    if absent:
+        lines.append(f"reference checkout absent: {len(absent)} suites "
+                     f"ran no reference cases")
+    return lines
 
 
 @pytest.fixture(scope="session")

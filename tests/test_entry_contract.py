@@ -42,6 +42,26 @@ def test_registry_fits_driver_window():
     assert len(entry_mod.queries()) <= 50
 
 
+def test_only_engine_reads_the_environment():
+    """Deployment settings (cores, UI, driver memory, DataFrame
+    debugging) are read once, in ``engine.py``; any other environment
+    read is a hidden tuning option."""
+    import ast
+    import pathlib
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "rulemorph_spark"
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.relative_to(pkg).as_posix() == "engine.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            named = (node.attr if isinstance(node, ast.Attribute)
+                     else node.id if isinstance(node, ast.Name)
+                     else None)
+            if named in ("environ", "environb", "getenv"):
+                sites.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert sites == []
+
+
 def test_agg_cents_equivalence(spark):
     """r9: the cents-based q_agg_pricing_summary must be bit-identical
     to the original decimal(18,2)-sum formulation on every SF the

@@ -68,88 +68,6 @@ def test_lsh_signature_twin(spark):
                  lsh_signature(F.col("embedding"), 12))
 
 
-def _edge_vectors(spark, d=64):
-    """Real embeddings + adversarial rows: NULLs, empty, wrong-length,
-    all-zero, and -0.0-laden vectors — every row the size guard and
-    the IEEE seed term have to get right."""
-    e = (spark.read.parquet(f"{SF}/embeddings.parquet")
-         .select(F.col("embedding").alias("v")))
-    extra = spark.createDataFrame(
-        [([0.0] * d,), ([-0.0] * d,), (None,), ([],),
-         ([1.5] * (d - 1),), ([0.25] * (d + 1),),
-         ([-0.0] * (d - 1) + [2.0],), ([1e-300] * d,)],
-        "v array<double>")
-    return (e.select(F.col("v").cast("array<double>").alias("v"))
-            .unionByName(extra))
-
-
-def test_cosine_unrolled_twin(spark):
-    """r10: the statically-unrolled cosine (known dim) must be
-    bit-identical to the HOF form on every row — including size
-    mismatches, NULLs, zero and -0.0 vectors — on BOTH the SQL-text
-    and the Column construction paths."""
-    d = 64
-    vs = _edge_vectors(spark, d)
-    pairs = (vs.alias("a").crossJoin(vs.alias("b").limit(12))
-             .select(F.col("a.v").alias("va"), F.col("b.v").alias("vb")))
-    _assert_twin(pairs, cosine_similarity("va", "vb", dim=d),
-                 cosine_similarity("va", "vb"))
-    _assert_twin(pairs,
-                 cosine_similarity(F.col("va"), F.col("vb"), dim=d),
-                 cosine_similarity(F.col("va"), F.col("vb")))
-    # float32 inputs follow the same per-element cast chain
-    e32 = spark.read.parquet(f"{SF}/embeddings.parquet")
-    p32 = (e32.alias("a").crossJoin(e32.alias("b").limit(3))
-           .select(F.col("a.embedding").alias("va"),
-                   F.col("b.embedding").alias("vb")))
-    _assert_twin(p32, cosine_similarity("va", "vb", dim=d),
-                 cosine_similarity("va", "vb"))
-
-
-def test_l2_unrolled_twin(spark):
-    from rulemorph_spark.llm.clustering import l2_sq
-    d = 64
-    vs = _edge_vectors(spark, d)
-    pairs = (vs.alias("a").crossJoin(vs.alias("b").limit(12))
-             .select(F.col("a.v").alias("va"), F.col("b.v").alias("vb")))
-    _assert_twin(pairs, l2_sq(F.col("va"), F.col("vb"), dim=d),
-                 l2_sq(F.col("va"), F.col("vb")))
-
-
-def test_lsh_signature_dim_is_ignored(spark):
-    """r10: an unrolled LSH signature was prototyped and REJECTED
-    (3.5× slower — it re-quantizes every component once per bit); the
-    ``dim`` parameter is accepted for API symmetry but must leave the
-    expression identical to the HOF form."""
-    d = 64
-    vs = _edge_vectors(spark, d)
-    for nbits in (6, 12):
-        _assert_twin(vs, lsh_signature("v", nbits, dim=d),
-                     lsh_signature("v", nbits))
-
-
-def test_unroll_dim_gate(spark, monkeypatch):
-    """Dimensions past SPARK_GRAFT_UNROLL_MAX_DIM keep the HOF form
-    (plan-size guard), non-positive dims are ignored, and the
-    scale-adaptive gate (unroll_dim_for) only fires above the input
-    size threshold — the spread_small_scan pattern."""
-    from rulemorph_spark.llm.dedup import _usable_dim, unroll_dim_for
-    assert _usable_dim(64) == 64
-    assert _usable_dim(None) is None
-    assert _usable_dim(0) is None
-    assert _usable_dim(-3) is None
-    assert _usable_dim(10_000) is None
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    monkeypatch.setenv("SPARK_GRAFT_UNROLL_MIN_MB", "64")
-    assert unroll_dim_for(e, 64) is None  # tiny local scan: HOF form
-    # non-file sources (size unknowable) conservatively keep the HOF
-    local = spark.createDataFrame([([1.0] * 4,)], "v array<double>")
-    assert unroll_dim_for(local, 4) is None
-    monkeypatch.setenv("SPARK_GRAFT_UNROLL_MIN_MB", "0")
-    assert unroll_dim_for(e, 64) == 64    # 0 = always unroll
-    assert unroll_dim_for(e, None) is None
-
-
 def test_ref_quotes_weird_names(spark):
     df = spark.createDataFrame([("a b c d e",)], ["weird name"])
     got = df.select(shingles("weird name", 3).alias("g")).collect()

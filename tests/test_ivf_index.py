@@ -77,14 +77,3 @@ def test_lsh_multiprobe_widens_exact_bucket(spark):
     b = [r.s for r in e.select(sig).collect()]
     assert a == b and all(0 <= s < 64 for s in a)
 
-
-def test_numpy_brute_force_matches_jvm(spark):
-    from rulemorph_spark.llm.similarity import (brute_force_topk,
-                                                brute_force_topk_np)
-
-    e, _, queries = _setup(spark)
-    jvm = sorted(map(tuple, brute_force_topk(
-        e, queries, "vec_id", "embedding", k=4).collect()))
-    np_ = sorted(map(tuple, brute_force_topk_np(
-        e, queries, "vec_id", "embedding", k=4).collect()))
-    assert np_ == jvm and len(np_) == 3 * 4

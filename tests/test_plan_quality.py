@@ -14,6 +14,7 @@ import re
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
+from rulemorph_spark.functions import spread
 
 SF = "/root/testdata/sf0.001"
 
@@ -124,7 +125,7 @@ def test_text_metrics_is_shuffle_free(spark, monkeypatch):
     assert _exchanges(plan) <= 1
     assert "hashpartitioning" not in plan  # spread is round-robin only
     assert plan.count("FileScan parquet") == 1
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MAX_MB", "0")
+    monkeypatch.setattr(spread, "_MAX_BYTES", 0)
     plan = _plan(E.queries()["q_text_metrics"](spark, SF))
     assert _exchanges(plan) == 0
     assert plan.count("FileScan parquet") == 1
@@ -221,7 +222,7 @@ def test_doc_signatures_is_shuffle_free_single_scan(spark, monkeypatch):
     assert _exchanges(plan) <= 1
     assert "hashpartitioning" not in plan
     assert plan.count("FileScan parquet") == 1
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MAX_MB", "0")
+    monkeypatch.setattr(spread, "_MAX_BYTES", 0)
     plan = _plan(E.queries()["q_doc_signatures"](spark, SF))
     assert _exchanges(plan) == 0
     assert plan.count("FileScan parquet") == 1
@@ -334,11 +335,11 @@ def test_gopher_flags_are_shuffle_free(spark, monkeypatch):
     node is the round-robin spread exchange."""
     from rulemorph_spark.llm.filters import gopher_quality_flags
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MAX_MB", "0")
+    monkeypatch.setattr(spread, "_MAX_BYTES", 0)
     plan = _plan(gopher_quality_flags(docs))
     assert _exchanges(plan) == 0
     assert plan.count("FileScan parquet") == 1
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MAX_MB", "64")
+    monkeypatch.setattr(spread, "_MAX_BYTES", 64 * 1024 * 1024)
     plan_tiny = _plan(gopher_quality_flags(docs))
     assert _exchanges(plan_tiny) == 0  # still no keyed shuffle
     assert "RoundRobinPartitioning" in plan_tiny

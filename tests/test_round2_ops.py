@@ -233,6 +233,7 @@ def test_cents_inline_literal_matches_broadcast(spark, monkeypatch):
     to the broadcast-join path — including a float32 cvec (the literal
     is CAST to the table's exact element type) — and every guarded case
     must fall back to the broadcast form (return None)."""
+    from rulemorph_spark.llm import clustering
     from rulemorph_spark.llm.clustering import (
         _best_cell, _cents_1row, cents_inline, kmeans_train)
     emb = _t(spark, "embeddings")
@@ -262,13 +263,11 @@ def test_cents_inline_literal_matches_broadcast(spark, monkeypatch):
     assert [(s["cell"], s["cvec"]) for s in got] == \
         [(r["cell"], r["cvec"]) for r in want]
 
-    # guarded fallbacks: non-local w/o stash, oversized, disabled, NaN
+    # guarded fallbacks: non-local w/o stash, oversized, NaN
     assert cents_inline(trained.filter(F.col("cell") >= 0)) is None
-    monkeypatch.setenv("SPARK_GRAFT_CENTROID_LIT_MAX_ELEMS", "3")
+    monkeypatch.setattr(clustering, "_CENTS_LIT_MAX_ELEMS", 3)
     assert cents_inline(trained) is None
-    monkeypatch.setenv("SPARK_GRAFT_CENTROID_LIT_MAX_ELEMS", "0")
-    assert cents_inline(trained) is None
-    monkeypatch.delenv("SPARK_GRAFT_CENTROID_LIT_MAX_ELEMS")
+    monkeypatch.undo()
     bad = spark.createDataFrame([(0, [float("nan")])],
                                 "cell int, cvec array<double>")
     bad._rm_cents_rows = [(0, [float("nan")])]

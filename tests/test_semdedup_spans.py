@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -137,10 +138,45 @@ def _collect_semdedup_inputs(spark, centroids):
     return emb, ids, vecs, cells, cent
 
 
+def semdedup_reference(ids, vecs, cells, centroid_by_cell, eps: float,
+                       keep: str = "centroid_far"):
+    """Pure-NumPy reference: same greedy, same ordering, run per
+    cluster on the driver.  Returns {id: (keep, max_sim)}."""
+    thr = 1.0 - eps
+    out = {}
+    by_cell: dict[int, list[int]] = {}
+    for i, c in enumerate(cells):
+        by_cell.setdefault(c, []).append(i)
+    for c, idxs in by_cell.items():
+        x = np.array([np.asarray(vecs[i], dtype=np.float64)
+                      for i in idxs])
+        norms = np.linalg.norm(x, axis=1)
+        norms[norms == 0.0] = 1.0
+        xn = x / norms[:, None]
+        if keep == "centroid_far":
+            cv = np.asarray(centroid_by_cell[c], dtype=np.float64)
+            cn = np.linalg.norm(cv)
+            csim = xn @ (cv / cn) if cn > 0 else np.zeros(len(idxs))
+            order = sorted(range(len(idxs)),
+                           key=lambda j: (round(csim[j], 9),
+                                          ids[idxs[j]]))
+        else:
+            order = sorted(range(len(idxs)),
+                           key=lambda j: ids[idxs[j]])
+        kept: list[int] = []
+        for j in order:
+            s = float((xn[kept] @ xn[j]).max()) if kept else 0.0
+            ok = s < thr
+            out[ids[idxs[j]]] = (ok, round(s, 9))
+            if ok:
+                kept.append(j)
+    return out
+
+
 @pytest.mark.parametrize("keep", ["centroid_far", "min_id"])
 def test_semdedup_matches_numpy_reference(spark, keep):
     from rulemorph_spark.llm.clustering import kmeans_train
-    from rulemorph_spark.llm.semdedup import semdedup, semdedup_reference
+    from rulemorph_spark.llm.semdedup import semdedup
     emb = _t(spark, "embeddings")
     centroids = kmeans_train(emb, "vec_id", "embedding", k=8, iters=2)
     emb, ids, vecs, cells, cent = _collect_semdedup_inputs(spark,

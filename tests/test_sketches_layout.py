@@ -125,8 +125,47 @@ def test_bloom_blob_scheme_tag_enforced(spark):
     with pytest.raises(ValueError, match="scheme"):
         bloom_might_contain(members, "k", blob[1:], big_bits, k)
     # tagged blobs of the wrong length are refused too
-    with pytest.raises(ValueError, match="scheme"):
+    with pytest.raises(ValueError, match="length does not match"):
         bloom_might_contain(members, "k", bits + b"x", num_bits, k)
+
+
+def test_bloom_foreign_tag_names_the_scheme(spark):
+    """A blob whose tag byte is not the current scheme is told to
+    rebuild — never that its num_bits is wrong."""
+    members = _keys(spark, 100, 100)
+    bits = bloom_build(members, "k", 4096, 5)
+    for blob in (bytes([0]) + bits[1:], b""):
+        with pytest.raises(ValueError,
+                           match="untagged or carries a foreign scheme"):
+            bloom_might_contain(members, "k", blob, 4096, 5)
+
+
+def test_bloom_num_bits_mismatch_names_the_length(spark):
+    """A correctly tagged blob probed with another num_bits is a
+    signature error, not an older-scheme filter."""
+    members = _keys(spark, 100, 100)
+    bits = bloom_build(members, "k", 4096, 5)
+    with pytest.raises(ValueError, match="num_bits=2048") as err:
+        bloom_might_contain(members, "k", bits, 2048, 5)
+    assert "length does not match" in str(err.value)
+    assert "rebuilt" not in str(err.value)
+
+
+def test_bloom_build_num_bits_past_java_int(spark, monkeypatch):
+    """Spark's ``limit`` takes a Java int: a ``num_bits`` of 2**31 or
+    more must still build from the full key set (the bit packing is
+    stubbed so nothing of that size is allocated)."""
+    from rulemorph_spark.functions import sketches
+    seen = {}
+
+    def stub(h1, h2, num_bits, num_hashes):
+        seen.update(keys=h1.size, num_bits=num_bits)
+        return b"stub"
+
+    monkeypatch.setattr(sketches, "_pack_bits", stub)
+    keys = spark.createDataFrame([("a",), ("b",), ("c",)], "k string")
+    assert bloom_build(keys, "k", 2**31 + 8, 3) == b"stub"
+    assert seen == {"keys": 3, "num_bits": 2**31 + 8}
 
 
 def test_bloom_build_saturated_key_set_is_bounded_and_identical(spark):

@@ -49,9 +49,10 @@ def test_slow():
 """
 
 
-def _run_gate(tmp_path, *args) -> str:
+def _run_gate(tmp_path, *args, files: dict[str, str] | None = None) -> str:
     """Run a bare-directory pytest with this suite's conftest over one
-    smoke and one non-smoke test → its terminal output."""
+    smoke and one non-smoke test (plus any extra test ``files``) → its
+    terminal output."""
     import shutil
     import subprocess
     import sys
@@ -59,6 +60,8 @@ def _run_gate(tmp_path, *args) -> str:
     (tmp_path / "pytest.ini").write_text(
         "[pytest]\nmarkers =\n    smoke: fast tier\n")
     (tmp_path / "test_tiny.py").write_text(_TINY)
+    for name, text in (files or {}).items():
+        (tmp_path / name).write_text(text)
     env = dict(os.environ)
     env.pop("SPARK_GRAFT_FULL_TESTS", None)
     env["PYTHONPATH"] = os.pathsep.join(
@@ -87,3 +90,22 @@ def test_smoke_gate_leaves_m_and_k_selections_alone(tmp_path):
         assert "smoke tier:" not in out, (args, out)
     out = _run_gate(tmp_path, "--full")
     assert "2 passed" in out and "smoke tier:" not in out
+
+
+def test_absent_reference_checkout_is_announced(tmp_path):
+    """Suites reading a missing reference checkout collect nothing from
+    it; the run must say how many there were, not pass quietly."""
+    here = tmp_path / "here" / "reference"
+    here.mkdir(parents=True)
+
+    def suite(root) -> str:
+        return f'FIXTURES = "{root}/crates/fixtures"\n' + _TINY
+
+    files = {"test_gone.py": suite(tmp_path / "gone" / "reference"),
+             "test_here.py": suite(here)}
+    out = _run_gate(tmp_path, "--full", files=files)
+    assert ("reference checkout absent: 1 suites ran no reference cases"
+            in out.splitlines()), out
+    out = _run_gate(tmp_path, "--full",
+                    files={"test_gone.py": _TINY, "test_here.py": _TINY})
+    assert "reference checkout absent" not in out, out
