@@ -13,8 +13,10 @@ When the mapping's expression contains a UDF op in such a position,
 the WHOLE mapping value evaluates through the standalone interpreter
 (``interp.py`` — the engine's third fuzz oracle, green on all 59
 runnable reference goldens) inside one Arrow-batched pandas UDF: the
-record, the accumulated ``@out``, and the compile-time context ship as
-JSON, and errors re-raise with the standard engine payload.  This is a
+record, the accumulated ``@out``, and the context ship as JSON (a
+context known at compile time rides in the UDF's closure; one bound at
+run time, as a cached service plan binds it, is read per row), and
+errors re-raise with the standard engine payload.  This is a
 slow path by construction — these shapes are rare and row-local — but
 it is oracle-exact, including the per-item error paths the Column path
 could only approximate (``[?]`` placeholders, VERDICT r7 #5).
@@ -190,10 +192,31 @@ def finalize_filter_parse_error(raw_filter):
     return None
 
 
+def _context_arg(context_value, context_col: Column | None):
+    """``@context`` for a bridge UDF → (the canonical document fixed at
+    compile time, a Column of per-row JSON text).  A context bound at
+    run time (``context_col`` with no compile-time value: a cached
+    service plan reads it from its ``VALUES`` row) arrives per row; a
+    compile-time one rides in the closure and the column is NULL."""
+    from .. import interp as I
+
+    if context_value is None and context_col is not None:
+        return None, F.to_json(context_col)
+    fixed = I.canon(context_value) if context_value is not None else None
+    return fixed, F.lit(None).cast("string")
+
+
+def _context_value(fixed, ctx_t):
+    from .. import interp as I
+
+    return fixed if ctx_t is None else I.canon(_json.loads(ctx_t))
+
+
 def finalize_filter_column(raw_filter, version: int, item_col: Column,
                            idx_col: Column, context_value,
                            singleton_out: bool = False,
-                           guard: Column | None = None) -> Column:
+                           guard: Column | None = None,
+                           context_col: Column | None = None) -> Column:
     """A finalize.filter condition as a STRICT interp-evaluated boolean
     Column: per-item ``eval_v2_condition`` with ``@item``=(item, index)
     and ``@input``=item (``transform.rs:636-638``); evaluation errors
@@ -208,6 +231,9 @@ def finalize_filter_column(raw_filter, version: int, item_col: Column,
     passed, transform.rs:296-299) — the guard must live INSIDE the
     UDF because Spark extracts Python UDFs into an eager projection,
     so an outer ``F.when`` would not stop evaluation.
+
+    ``context_col``: the context as a run-time variant Column, read when
+    ``context_value`` is None (see :func:`_context_arg`).
     """
     BRIDGE_HITS["finalize"] += 1
     from .. import interp as I
@@ -223,19 +249,20 @@ def finalize_filter_column(raw_filter, version: int, item_col: Column,
     except I.V2ParseError as e:
         raise RuleError("expr_error", f"invalid v2 condition: {e}",
                         "finalize.filter") from None
-    ctx = I.canon(context_value) if context_value is not None else None
+    fixed, ctx_j = _context_arg(context_value, context_col)
     item_j = F.to_json(item_col)
     guard_col = (F.coalesce(guard, F.lit(False)) if guard is not None
                  else F.lit(True))
 
     @F.pandas_udf("boolean")
-    def _udf(item_s: pd.Series, idx_s: pd.Series,
-             g_s: pd.Series) -> pd.Series:
-        def run(it, ix, g):
+    def _udf(item_s: pd.Series, idx_s: pd.Series, g_s: pd.Series,
+             ctx_s: pd.Series) -> pd.Series:
+        def run(it, ix, g, ct):
             if not g:
                 return False
             item = _json.loads(it) if it is not None else None
             out = [item] if singleton_out else []
+            ctx = _context_value(fixed, ct)
             c = I.V2Ctx(item=(item, int(ix)))
             try:
                 return bool(I.eval_v2_condition(cond, item, ctx, out,
@@ -245,10 +272,11 @@ def finalize_filter_column(raw_filter, version: int, item_col: Column,
                     e.kind, e.message, e.path)) from None
 
         return pd.Series(
-            [run(a, b, g) for a, b, g in zip(item_s, idx_s, g_s)],
+            [run(a, b, g, ct)
+             for a, b, g, ct in zip(item_s, idx_s, g_s, ctx_s)],
             dtype="object")
 
-    return _udf(item_j, idx_col.cast("int"), guard_col)
+    return _udf(item_j, idx_col.cast("int"), guard_col, ctx_j)
 
 
 def when_value_column(raw_when, version: int, scope,
@@ -261,28 +289,30 @@ def when_value_column(raw_when, version: int, scope,
     from .. import interp as I
 
     model = I.parse_expr_model(raw_when)
-    ctx = I.canon(scope.context_value) \
-        if scope.context_value is not None else None
+    fixed, ctx_j = _context_arg(scope.context_value, scope.context)
     bp = str(base_path)
     record_j = F.to_json(scope.input)
     scope.used_out()
     out_j = F.to_json(scope.out) if scope.out is not None else F.lit("{}")
 
     @F.pandas_udf("boolean")
-    def _udf(rec_s: pd.Series, out_s: pd.Series) -> pd.Series:
-        def run(rec_t, out_t):
+    def _udf(rec_s: pd.Series, out_s: pd.Series,
+             ctx_s: pd.Series) -> pd.Series:
+        def run(rec_t, out_t, ctx_t):
             record = _json.loads(rec_t) if rec_t is not None else {}
             out = _json.loads(out_t) if out_t is not None else {}
+            ctx = _context_value(fixed, ctx_t)
             try:
                 return bool(I._eval_when_expr(model, record, ctx, out,
                                               bp, version))
             except I.InterpError:
                 return None
 
-        return pd.Series([run(r, o) for r, o in zip(rec_s, out_s)],
+        return pd.Series([run(r, o, c)
+                          for r, o, c in zip(rec_s, out_s, ctx_s)],
                          dtype="object")
 
-    return _udf(record_j, out_j)
+    return _udf(record_j, out_j, ctx_j)
 
 
 def mapping_value_column(raw_expr, version: int, scope,
@@ -303,18 +333,19 @@ def mapping_value_column(raw_expr, version: int, scope,
                 # interp raises this per record as an expr error
                 return V.raise_err("expr_error", str(e),
                                    str(base_path)).cast(V.VT)
-    ctx = I.canon(scope.context_value) \
-        if scope.context_value is not None else None
+    fixed, ctx_j = _context_arg(scope.context_value, scope.context)
     bp = str(base_path)
     record_j = F.to_json(scope.input)
     scope.used_out()
     out_j = F.to_json(scope.out) if scope.out is not None else F.lit("{}")
 
     @F.pandas_udf("string")
-    def _udf(rec_s: pd.Series, out_s: pd.Series) -> pd.Series:
-        def run(rec_t, out_t):
+    def _udf(rec_s: pd.Series, out_s: pd.Series,
+             ctx_s: pd.Series) -> pd.Series:
+        def run(rec_t, out_t, ctx_t):
             record = _json.loads(rec_t) if rec_t is not None else {}
             out = _json.loads(out_t) if out_t is not None else {}
+            ctx = _context_value(fixed, ctx_t)
             try:
                 if v2_pipe is not None:
                     v = I.eval_v2_pipe(v2_pipe, record, ctx, out, bp,
@@ -328,6 +359,7 @@ def mapping_value_column(raw_expr, version: int, scope,
                 return None
             return I.json_compact(v)
 
-        return pd.Series([run(r, o) for r, o in zip(rec_s, out_s)])
+        return pd.Series([run(r, o, c)
+                          for r, o, c in zip(rec_s, out_s, ctx_s)])
 
-    return F.parse_json(_udf(record_j, out_j))
+    return F.parse_json(_udf(record_j, out_j, ctx_j))

@@ -287,10 +287,22 @@ class CompiledRecordRule:
 class RuleCompiler:
     """Compiles one rule file (plus its branch-referenced rules)."""
 
-    def __init__(self, rule: RuleFile, context=None, base_dir: str = "."):
+    def __init__(self, rule: RuleFile, context=None, base_dir: str = ".",
+                 context_col: Column | None = None):
+        """``context_col``: the context as a run-time variant Column, in
+        place of the compile-time ``context`` document (a cached service
+        plan reads each request's context from its ``VALUES`` row);
+        nothing then folds the context's value into the plan."""
         self.rule = rule
         self.context = context
         self.base_dir = base_dir
+        self.context_col = context_col
+
+    def _context(self) -> Column | None:
+        if self.context_col is not None:
+            return self.context_col
+        return (V.lit_variant(self.context)
+                if self.context is not None else None)
 
     # -- expression helpers -------------------------------------------
 
@@ -490,8 +502,7 @@ class RuleCompiler:
 
     def _compile_inner(self, builder: Builder,
                        input_col: Column) -> CompiledRecordRule:
-        context_col = (V.lit_variant(self.context)
-                       if self.context is not None else None)
+        context_col = self._context()
         out_tree = OutTree()
         keep = F.lit(True)
         returned = F.lit(False)
@@ -617,7 +628,8 @@ class RuleCompiler:
             # nested branch paths resolve relative to the referenced
             # rule file's directory (transform.rs:566-601)
             sub = RuleCompiler(sub_rule, context=self.context,
-                               base_dir=os.path.dirname(full))
+                               base_dir=os.path.dirname(full),
+                               context_col=self.context_col)
             compiled = sub.compile(builder, branch_input)
             if sub_rule.finalize is not None and not branch.return_:
                 raise RuleError(
@@ -697,14 +709,13 @@ class RuleCompiler:
                 elif cond_needs_interp(cond_ir := _pc(fin.filter)):
                     cond = finalize_filter_column(
                         fin.filter, sub_rule.version, out_v, F.lit(0),
-                        self.context, singleton_out=True, guard=keep)
+                        self.context, singleton_out=True, guard=keep,
+                        context_col=self.context_col)
                 else:
                     arr = F.array(out_v).cast(V.VT)
-                    scope = Scope(input=out_v, context=(
-                        V.lit_variant(self.context)
-                        if self.context is not None else None),
-                        out=arr, item=out_v, item_index=F.lit(0),
-                        pipe=out_v)
+                    scope = Scope(input=out_v, context=self._context(),
+                                  out=arr, item=out_v, item_index=F.lit(0),
+                                  pipe=out_v)
                     cond = F.when(keep,
                                   compile_condition(cond_ir, scope,
                                                     "finalize.filter"))
@@ -744,8 +755,6 @@ class RuleCompiler:
                                                 f"{path}.{k}").alias(k))
             return F.parse_json(F.to_json(F.struct(*fields)))
         pipe = parse_expr(wrap)
-        scope = Scope(input=arr_col, out=arr_col,
-                      context=(V.lit_variant(self.context)
-                               if self.context is not None else None))
+        scope = Scope(input=arr_col, out=arr_col, context=self._context())
         value = compile_pipe(pipe, scope, path)
         return F.coalesce(value, V.vnull())

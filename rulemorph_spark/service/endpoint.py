@@ -19,15 +19,27 @@ Mirrors ``crates/rulemorph_endpoint/src/endpoint_engine.rs``:
 
 This layer is driver-side (per-request, single record).  Every rule a
 request runs (steps, ``input`` mappings, conditions, reply expressions)
-goes through ``transform_record``, which compiles it again for that
-request and evaluates it on a driver-local 1-row relation: no plan is
-cached, and no Spark job runs unless the rule needs a Python-UDF bridge
-op or a ``finalize.filter`` over ``@item.index``.
+goes through ``transform_record``.  It compiles each rule once per
+session and caches the analyzed plan, keyed by rule content and
+``base_dir`` (at most 64 plans, least recently used evicted first).
+The context is not in the key: each request's record and context
+(step params, a catch handler's ``@context.error``) are bound into a
+fresh copy of that plan, on a driver-local 1-row relation; the row
+parse, the copy, optimization and ``finalize`` still run per request.
+No Spark job runs unless the rule needs a Python-UDF bridge op or a
+``finalize.filter`` over ``@item.index``.  A cached plan keeps, until
+evicted, the branch-target rule files it read at its first compile and
+the session settings bound at analysis (such as the time zone).
+
+Request bodies are read as serde_json reads them: ``NaN``,
+``Infinity`` and numbers (float or integer literals) that overflow a
+double are invalid JSON.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import time
@@ -89,6 +101,25 @@ _MISSING = object()
 
 # RFC 7230 token (http::Method::from_bytes)
 _METHOD_RE = re.compile(r"[!#$%&'*+\-.^_`|~0-9A-Za-z]+")
+
+
+def _reject_constant(name: str):
+    raise ValueError(f"{name} is not a JSON value")
+
+
+def _in_range(text: str) -> str:
+    # serde_json reads an integer past u64/i64 as a double too
+    if not math.isfinite(float(text)):
+        raise ValueError("number out of range")
+    return text
+
+
+def _parse_body(text: str):
+    """A request body as serde_json reads it: ``NaN``/``Infinity`` are
+    not JSON, and a number that overflows a double is out of range."""
+    return json.loads(text, parse_constant=_reject_constant,
+                      parse_float=lambda t: float(_in_range(t)),
+                      parse_int=lambda t: int(_in_range(t)))
 
 
 def _parse_method(raw: str) -> str:
@@ -313,8 +344,8 @@ class EndpointEngine:
                   "query": qmap, "headers": hmap}
         if body_text:
             try:
-                record["body"] = json.loads(body_text)
-            except json.JSONDecodeError as e:
+                record["body"] = _parse_body(body_text)
+            except ValueError as e:
                 raise EndpointError("Invalid", f"invalid JSON body: {e}")
         return record
 
@@ -471,8 +502,8 @@ class EndpointEngine:
                   "query": qmap, "headers": hmap}
         if body_text:
             try:
-                record["body"] = json.loads(body_text)
-            except json.JSONDecodeError:
+                record["body"] = _parse_body(body_text)
+            except ValueError:
                 pass
         return record
 

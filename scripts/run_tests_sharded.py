@@ -59,6 +59,7 @@ SMOKE_FILES = {
     "test_entry_contract.py",
     "test_expr_fastpath.py",
     "test_service_record.py",
+    "test_service_concurrency.py",
 }
 
 

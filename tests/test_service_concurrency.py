@@ -18,6 +18,8 @@ import pytest
 
 from rulemorph_spark.service.endpoint import EndpointEngine
 
+pytestmark = pytest.mark.smoke
+
 ENDPOINT_YAML = """
 version: 2
 type: endpoint

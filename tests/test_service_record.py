@@ -5,7 +5,8 @@ into a ``LocalTableScan`` and ``collect()`` launches no Spark job.
 Each transform runs on a fresh ``threading.Thread``, like a
 ``ThreadingHTTPServer`` request, which has no ambient active session.
 Replies match the interpreter oracle, and errors keep their kind,
-message and path.
+message and path.  A rule compiles once per session; later calls run a
+copy of its cached plan rebound to their own record.
 """
 
 from __future__ import annotations
@@ -14,12 +15,17 @@ import importlib.util
 import itertools
 import os
 import random
+import sys
 import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
 from rulemorph_spark import interp
 from rulemorph_spark.errors import TransformEngineError
+from rulemorph_spark.model import parse_rule_file
+from rulemorph_spark.service import record as record_mod
+from rulemorph_spark.service.endpoint import EndpointEngine
 from rulemorph_spark.service.record import transform_record
 
 pytestmark = pytest.mark.smoke
@@ -89,9 +95,9 @@ def _on_request_thread(spark, fn):
     return out["res"], len(jobs)
 
 
-def _oracle(rule, record):
+def _oracle(rule, record, context=None):
     try:
-        v = interp.transform_record(rule, record)
+        v = interp.transform_record(rule, record, context=context)
     except interp.InterpError as e:
         return ("err", e.kind, e.message, e.path)
     return ("ok", None if v is interp.MISSING else v)
@@ -203,3 +209,245 @@ def test_finalize_sort_limit_and_wrap_run_no_job(spark):
     assert res == ("ok", {"items": [{"a": body["text"]}]})
     assert res == _oracle(FINALIZE_RULE, body)
     assert jobs == 0
+
+
+# --- plan cache --------------------------------------------------------
+
+@pytest.fixture
+def compiles(monkeypatch):
+    """Counts ``RuleCompiler.compile`` calls, on any thread."""
+    from rulemorph_spark.compiler.rule import RuleCompiler
+    orig = RuleCompiler.compile
+    counter = {"n": 0}
+    lock = threading.Lock()
+
+    def counting(self, *args, **kwargs):
+        with lock:
+            counter["n"] += 1
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(RuleCompiler, "compile", counting)
+    return counter
+
+
+def test_cached_rule_compiles_once_and_runs_no_job(spark, compiles):
+    record_mod._plans.pop(spark, None)
+    for i, body in enumerate(_bodies(seed=11, n=32)):
+        before = compiles["n"]
+        res, jobs = _on_request_thread(
+            spark, lambda b=body: transform_record(spark, F5_RULE, b))
+        if i == 0:
+            assert compiles["n"] > before
+        else:
+            assert compiles["n"] == before, f"call {i} recompiled"
+        assert jobs == 0
+        assert res == _oracle(F5_RULE, body)
+
+
+def test_cached_rules_answer_each_request_thread(spark):
+    """Eight request threads (more than the cores) share one cached plan
+    per rule; each reply belongs to its own record."""
+    bodies = _bodies(seed=12, n=16)
+    cases = ([(F5_RULE, b) for b in bodies]
+             + [(INPUT_RULE, {"body": b, "i": i})
+                for i, b in enumerate(bodies)])
+    transform_record(spark, F5_RULE, bodies[0])
+    transform_record(spark, INPUT_RULE, {"body": bodies[0]})
+
+    def run(case):
+        rule, rec = case
+        try:
+            return ("ok", transform_record(spark, rule, rec))
+        except TransformEngineError as e:
+            return ("err", e.kind, e.message, e.path)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            got = list(pool.map(run, cases, timeout=600))
+    finally:
+        sys.setswitchinterval(interval)
+    for (rule, rec), res in zip(cases, got):
+        assert res == _oracle(rule, rec)
+
+
+def test_error_leaves_the_cached_plan_intact(spark):
+    good = _bodies(seed=13, n=len(ERROR_CASES))
+    transform_record(spark, F5_RULE, good[0])
+    for (name, bad, expected), body in zip(ERROR_CASES, good):
+        with pytest.raises(TransformEngineError) as ei:
+            transform_record(spark, F5_RULE, bad)
+        assert (ei.value.kind, ei.value.message, ei.value.path) == \
+            expected, name
+        assert ("ok", transform_record(spark, F5_RULE, body)) == \
+            _oracle(F5_RULE, body), name
+
+
+CONTEXT_RULE = """
+version: 2
+input: {format: json}
+mappings:
+  - target: v
+    expr: ["@context.k", {"+": ["@input.n"]}]
+  - target: c
+    expr: "@context"
+"""
+
+# deep_merge in a map body runs the whole mapping through the
+# interpreter bridge; when-conditions of that shape take the bridge too
+CONTEXT_BRIDGE_RULE = """
+version: 2
+input: {format: json}
+mappings:
+  - target: xs
+    expr: ["@input.xs", {map: [{deep_merge: ["@context.extra"]}]}]
+  - target: w
+    value: 1
+    when: {gt: [["@input.xs", {map: [{deep_merge: ["@context.extra"]}]},
+                {len: []}], ["@context.min"]]}
+"""
+
+
+@pytest.mark.parametrize("rule", [CONTEXT_RULE, CONTEXT_BRIDGE_RULE],
+                         ids=["column", "bridge"])
+def test_context_is_bound_per_call(spark, compiles, rule):
+    """The context is read from the call's row, not compiled in: calls
+    that differ only in context share one plan and each gets its own
+    answer, with or without a context."""
+    contexts = [{"k": 10, "extra": {"z": 1}, "min": 0},
+                {"k": 20, "extra": {"z": [2]}, "min": 5},
+                None,
+                {"extra": {"y": "s"}, "k": 1.5, "min": 1},
+                {"k": 1, 2: "a", "b": 3}]  # YAML params mix key types
+    transform_record(spark, rule, {"n": 0, "xs": []}, context=contexts[0])
+    before = compiles["n"]
+    for n, ctx in enumerate(contexts * 2):
+        rec = {"n": n, "xs": [{"a": n}, {"a": -n}]}
+        assert ("ok", transform_record(spark, rule, rec, context=ctx)) \
+            == _oracle(rule, rec, ctx), (n, ctx)
+    assert compiles["n"] == before
+
+
+def test_cache_keeps_the_64_most_recent_rules(spark):
+    record_mod._plans.pop(spark, None)
+    rules = [f"version: 2\ninput: {{format: json}}\nmappings:\n"
+             f"  - target: v\n    value: {i}\n"
+             for i in range(record_mod._CACHE_SIZE + 1)]
+    for i, rule in enumerate(rules):
+        assert transform_record(spark, rule, {}) == {"v": i}
+    plans = record_mod._plans[spark]
+    assert record_mod._CACHE_SIZE == 64
+    assert len(plans) == 64
+    kept = {k[0] for k in plans}
+    assert repr(parse_rule_file(rules[0])) not in kept
+    assert repr(parse_rule_file(rules[-1])) in kept
+
+
+BRIDGE_RULE = """
+version: 2
+input: {format: json}
+mappings:
+  - target: flat
+    expr: ["@input.obj", {object_flatten: []}]
+"""
+
+
+def test_bridge_op_rule_is_cached_and_answers_per_record(spark, compiles):
+    records = [{"obj": {"a": {"b": i}, "c": [i, {"d": "x" * i}]}}
+               for i in range(3)]
+    for i, rec in enumerate(records):
+        before = compiles["n"]
+        res = transform_record(spark, BRIDGE_RULE, rec)
+        assert ("ok", res) == _oracle(BRIDGE_RULE, rec)
+        if i:
+            assert compiles["n"] == before
+
+
+# --- non-finite numbers ------------------------------------------------
+
+NON_FINITE_BODIES = ['{"x": NaN}', '{"x": Infinity}', '{"x": -Infinity}',
+                     '{"x": 1e400}', '{"x": 1' + '0' * 400 + '}']
+NON_FINITE_IDS = ["nan", "inf", "neg_inf", "float_overflow", "int_overflow"]
+
+ECHO_ENDPOINT = """
+version: 2
+type: endpoint
+endpoints:
+  - method: POST
+    path: /echo
+    steps: []
+    reply:
+      status: 200
+      body: "@input"
+  - method: POST
+    path: /caught
+    catch:
+      default: catch.yaml
+    steps: []
+    reply:
+      status: 200
+      body: "@input"
+"""
+
+# the handler echoes its fallback @input and the error it caught
+CATCH_ECHO = """
+version: 2
+input: {format: json}
+mappings:
+  - target: input
+    expr: "@input"
+  - target: kind
+    expr: "@context.error.kind"
+"""
+
+
+@pytest.fixture
+def echo_engine(spark, tmp_path):
+    (tmp_path / "endpoint.yaml").write_text(ECHO_ENDPOINT)
+    (tmp_path / "catch.yaml").write_text(CATCH_ECHO)
+    return EndpointEngine(spark, str(tmp_path / "endpoint.yaml"))
+
+
+@pytest.mark.parametrize("body_text", NON_FINITE_BODIES,
+                         ids=NON_FINITE_IDS)
+def test_non_finite_body_is_invalid_json(echo_engine, body_text):
+    malformed = echo_engine.handle_request("POST", "/echo",
+                                           body_text='{"x": }')
+    status, _, body = echo_engine.handle_request("POST", "/echo",
+                                                 body_text=body_text)
+    assert (status, body["kind"]) == (malformed[0], malformed[2]["kind"])
+    assert (status, body["kind"]) == (500, "Invalid")
+    assert body["message"].startswith("invalid JSON body: ")
+
+
+@pytest.mark.parametrize("body_text", NON_FINITE_BODIES,
+                         ids=NON_FINITE_IDS)
+def test_non_finite_body_runs_catch_without_body(echo_engine, body_text):
+    malformed = echo_engine.handle_request("POST", "/caught",
+                                           body_text='{"x": }')
+    got = echo_engine.handle_request("POST", "/caught",
+                                     body_text=body_text)
+    assert got == malformed
+    assert got[0] == 200 and got[2]["kind"] == "Invalid"
+    assert "body" not in got[2]["input"]
+
+
+@pytest.mark.parametrize("value", [float("nan"), float("inf")])
+def test_non_finite_record_fails_before_spark(value):
+    # no session: the error must come before any Spark call
+    with pytest.raises(ValueError, match="NaN or infinite"):
+        transform_record(None, INPUT_RULE, {"x": value})
+
+
+def test_catch_handlers_share_one_plan(echo_engine, compiles):
+    """A catch handler's ``@context.error`` differs per request (it
+    carries the parse position); every request still runs the cached
+    plans."""
+    echo_engine.handle_request("POST", "/caught", body_text='{"x": }')
+    before = compiles["n"]
+    for body_text in ['{"x": }', '{"yy": ]', "[1, 2", '{"x": NaN}']:
+        status, _, body = echo_engine.handle_request(
+            "POST", "/caught", body_text=body_text)
+        assert (status, body["kind"]) == (200, "Invalid")
+    assert compiles["n"] == before
