@@ -71,7 +71,7 @@ def _prepare(spark: SparkSession) -> None:
     # r9: suspend pyspark's per-Column-call debug-origin capture (3
     # py4j round trips + a stack walk per call) for the whole process —
     # query construction cost, measured 0.3-1.5 s per query at sf0.1
-    # (scripts/profile_queries.py "build" column; guide §1.2 step 2)
+    # (r9 per-query build-time profile; guide §1.2 step 2)
     from rulemorph_spark.engine import disable_df_debugging
     disable_df_debugging(spark)
     _prepared.add(spark)
@@ -1207,7 +1207,7 @@ def q_multimodal_probe(spark, sf_dir):
     """REAL codec path, oracle-gated end-to-end: per doc_id the query
     ENCODES a deterministic PNG (even ids) or PCM WAV (odd ids) with
     the repo's own stdlib encoders (llm/codecs.py) and then PARSES the
-    bytes back through ``extract_features(use_stub=False)`` — so
+    bytes back through ``extract_features`` — so
     width/height/channels/sample_rate/n_frames/duration_ms in the
     result come from genuine byte-level PNG/WAV header decoding.  The
     oracle predicts every field with pure doc_id arithmetic, so any
@@ -1245,7 +1245,7 @@ def q_multimodal_probe(spark, sf_dir):
 
     media = d.mapInPandas(
         encode_batches, "media_id long, kind string, payload binary")
-    feats = extract_features(media, use_stub=False)
+    feats = extract_features(media)
     return feats.select("media_id", "kind", "format", "width", "height",
                         "channels", "sample_rate", "n_frames",
                         "duration_ms", "error")

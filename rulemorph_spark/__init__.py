@@ -3,8 +3,9 @@
 A from-scratch rebuild of the capabilities of ``vinhphatfsg/rulemorph``
 (YAML-rule record transformation: CSV/JSON in → expression pipeline →
 JSON out) as a **rule compiler** targeting Spark DataFrame/Column plans,
-plus large-scale data-pipeline operators (dedup, similarity search, text
-analysis, multimodal columns) the reference lacks.
+plus large-scale data-pipeline operators (dedup, nearest-neighbor search,
+text analysis, quality filters, multimodal feature probes) the reference
+lacks.
 """
 
 from .engine import get_spark, transform

@@ -79,7 +79,7 @@ def get_spark(app_name: str = "rulemorph-spark",
     # trips plus a Python stack walk.  Rule compilation already
     # suspends it (compiler fast_columns()); query CONSTRUCTION paid
     # it everywhere else — 0.3-1.5 s per bench query at local[32]
-    # (profile_queries "build" column).  The public conf disables the
+    # (r9 per-query build-time profile).  The public conf disables the
     # capture; origins are a debugging nicety (engine errors carry
     # their own payload, errors.py).  SPARK_GRAFT_DF_DEBUG=true
     # restores the Spark default.
@@ -563,16 +563,22 @@ def _prepare_session(spark) -> None:
 
 def _transform_parsed(spark, rule, input_text, input_path, context,
                       base_dir, collect_warnings=False):
-    _prepare_session(spark)
     fmt = rule.input.format
-    if fmt == "csv":
-        if input_path is None:
-            import tempfile, os
-            tmp = tempfile.NamedTemporaryFile("w", suffix=".csv",
-                                              delete=False)
+    if fmt == "csv" and input_path is None:
+        # the CSV reader takes a path: spool the text to a temp file,
+        # removed once the rows are collected (or the transform fails)
+        import os
+        import tempfile
+        with tempfile.NamedTemporaryFile("w", suffix=".csv",
+                                         delete=False) as tmp:
             tmp.write(input_text)
-            tmp.close()
-            input_path = tmp.name
+        try:
+            return _transform_parsed(spark, rule, None, tmp.name, context,
+                                     base_dir, collect_warnings)
+        finally:
+            os.unlink(tmp.name)
+    _prepare_session(spark)
+    if fmt == "csv":
         csv_spec = rule.input.csv
         has_header = csv_spec.has_header if csv_spec else True
         delimiter = csv_spec.delimiter if csv_spec else ","

@@ -1,29 +1,26 @@
 """Typed-column operator library — the 100 TB scale path.
 
 The rule engine (``rulemorph_spark.compiler``) interprets dynamic JSON
-records through variant columns; this package re-expresses every operator
-family over **typed** DataFrame columns, where Catalyst gets full
-predicate pushdown, column pruning and whole-stage codegen.  The TPC-H
-query surface (``__spark_entry__.py``) and ``bench.py`` build on these.
+records through variant columns; this package holds the operators the
+declared query surface (``__spark_entry__.py``) and ``bench.py`` run over
+**typed** DataFrame columns, where Catalyst gets full predicate
+pushdown, column pruning and whole-stage codegen: scalar ops with the
+reference's edge semantics (``scalar``), as-of / interval / salted
+joins and the Bloom semi/anti router (``relational``), Bloom-filter
+sketches (``sketches``), the adaptive small-scan spread (``spread``)
+and plan diagnostics (``diag``).
 """
 
 from .scalar import (number_to_string, pad_end, pad_start, replace_first,
                      round_half_away, strict_bool, strict_int, to_base)
-from .relational import (asof_join, bloom_anti_join, bloom_prune,
-                         bloom_semi_join, bloom_split,
-                         grouped_percentiles, lookup_all,
-                         lookup_first, range_join_binned, salted_join,
-                         stable_sort, write_bucketed)
-from .sketches import (bloom_build, bloom_might_contain, bloom_params,
-                       hll_distinct, hll_merge_estimate, hll_sketch_table)
-from .layout import (cluster_write, compact_parquet, file_column_bounds,
-                     list_data_files, plan_compaction, zorder_key)
+from .relational import (asof_join, bloom_route, bloom_split,
+                         range_join_binned, salted_join)
+from .sketches import bloom_build, bloom_might_contain, bloom_params
 
 __all__ = [
     "number_to_string", "replace_first", "pad_start", "pad_end",
     "round_half_away", "to_base", "strict_int", "strict_bool",
-    "lookup_first", "lookup_all", "stable_sort",
-    "asof_join", "range_join_binned", "salted_join", "write_bucketed",
-    "grouped_percentiles",
-    "bloom_prune", "bloom_semi_join", "bloom_anti_join", "bloom_split",
+    "asof_join", "range_join_binned", "salted_join",
+    "bloom_route", "bloom_split",
+    "bloom_build", "bloom_might_contain", "bloom_params",
 ]

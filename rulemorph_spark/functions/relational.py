@@ -1,60 +1,17 @@
-"""Relational forms of the engine's record-level operators.
+"""Scale-shaped joins over typed DataFrames.
 
-The reference's ``lookup``/``lookup_first`` scan a context array per
-record — O(n·m) (``transform.rs:2851-2876``).  At scale the lookup table
-is a DataFrame and the operator is a **broadcast hash join**: one scan of
-the fact side, no shuffle when the dimension fits in memory.  These
-helpers are what the 100 TB path uses; the expression-level lookup stays
-available for small literal contexts.
+As-of (``asof_join``), interval (``range_join_binned``) and
+skew-salted (``salted_join``) joins, plus the Bloom-accelerated exact
+semi/anti router (``bloom_route``) and its two-output reference form
+(``bloom_split``).  Each avoids the shape a naive join degenerates to at
+100 TB: a per-key cross product, a hot shuffle partition, or a full
+fact-side exchange for a selective key set.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def lookup_first(records: DataFrame, lookup: DataFrame, record_key,
-                 lookup_key, select: list[str] | None = None,
-                 order_by: str | None = None) -> DataFrame:
-    """``lookup_first``: first match per record (or missing → null cols).
-
-    Duplicate lookup keys keep the first row by ``order_by`` (the
-    reference keeps array order; a DataFrame needs an explicit order).
-    Broadcasts the lookup side — at 1000 executors this is a map-side
-    join with zero shuffle of the fact table.
-    """
-    lk = lookup
-    if order_by is not None:
-        w = Window.partitionBy(lookup_key).orderBy(F.col(order_by))
-        lk = (lookup.withColumn("__rn__", F.row_number().over(w))
-              .filter(F.col("__rn__") == 1).drop("__rn__"))
-    if select is not None:
-        lk = lk.select(lookup_key, *select)
-    return records.join(F.broadcast(lk),
-                        records[record_key] == lk[lookup_key], "left")
-
-
-def lookup_all(records: DataFrame, lookup: DataFrame, record_key: str,
-               lookup_key: str, collect_col: str,
-               sort_col: str | None = None) -> DataFrame:
-    """``lookup``: all matches as an array per record.
-
-    join + groupBy + ``collect_list`` (sorted for determinism) — the
-    shuffle is on the record key, which is already the join key, so AQE
-    coalesces it into the join exchange.
-    """
-    sort_key = sort_col or collect_col
-    joined = records.join(F.broadcast(lookup),
-                          records[record_key] == lookup[lookup_key], "left")
-    return (joined.groupBy(records[record_key])
-            .agg(F.sort_array(F.collect_list(
-                F.struct(F.col(sort_key).alias("s"),
-                         F.col(collect_col).alias("v"))))
-                 .alias("__pairs__"))
-            .withColumn("matches",
-                        F.transform(F.col("__pairs__"), lambda p: p["v"]))
-            .drop("__pairs__"))
 
 
 def asof_join(left: DataFrame, right: DataFrame, left_key: str,
@@ -161,40 +118,6 @@ def salted_join(left: DataFrame, right: DataFrame, left_key: str,
     return l2.join(r2, cond).drop("__salt__")
 
 
-def write_bucketed(df: DataFrame, table: str, key: str,
-                   buckets: int = 256, path: str | None = None,
-                   sort: bool = True) -> None:
-    """Persist ``df`` hash-bucketed (and per-bucket sorted) by ``key``.
-
-    Bucketing is the shuffle-elimination strategy for repeated joins:
-    two tables bucketed by the same key with the same bucket count
-    sort-merge-join with **zero Exchange** — each task reads bucket i of
-    both sides.  At 100 TB this turns every recurring fact⋈fact join on
-    the bucket key from a full-cluster shuffle into a co-located scan;
-    pick ``buckets`` ≈ total data / target partition size (e.g. 100 TB /
-    256 MB ≈ 400k is too many files — bucket the *hot join keys* at
-    1k-16k and let AQE handle the rest).
-    """
-    w = df.write.bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    if path is not None:
-        w = w.option("path", path)
-    w.mode("overwrite").format("parquet").saveAsTable(table)
-
-
-def stable_sort(df: DataFrame, key: Column, ascending: bool = True,
-                index_col: str | None = None) -> DataFrame:
-    """``finalize.sort``: stable by original input order
-    (``transform.rs:678-688``).  With an explicit index column the sort is
-    total and deterministic under any partitioning."""
-    ordering = key.asc_nulls_last() if ascending else key.desc_nulls_last()
-    cols = [ordering]
-    if index_col is not None:
-        cols.append(F.col(index_col).asc())
-    return df.orderBy(*cols)
-
-
 def _bloom_filter_for(dim: DataFrame, dim_key: str,
                       expected_items: int | None,
                       fpp: float) -> tuple[bytes, int, int]:
@@ -208,86 +131,6 @@ def _bloom_filter_for(dim: DataFrame, dim_key: str,
     num_bits, num_hashes = bloom_params(max(expected_items, 1), fpp)
     return bloom_build(keys, "__k__", num_bits, num_hashes), \
         num_bits, num_hashes
-
-
-def bloom_prune(fact: DataFrame, dim: DataFrame, fact_key: str,
-                dim_key: str, *, expected_items: int | None = None,
-                fpp: float = 0.01) -> DataFrame:
-    """Drop fact rows whose join key **cannot** match any dim key, using
-    a Bloom filter built from the dim side — the semi-join-reduction
-    step that makes selective 100 TB joins cheap.
-
-    Why: a plain ``fact ⋈ dim`` shuffles the *entire* fact table on the
-    join key even when only 1% of fact rows survive.  Building a
-    vocabulary-sized Bloom filter over ``dim_key`` (one small job) and
-    applying it **before** the exchange means only candidate rows are
-    ever shuffled — the same idea as Spark's own runtime row-group /
-    bloom pruning, but available as an explicit operator for any plan
-    shape.  No false negatives, so composing with an exact join below
-    keeps results exact; false positives (≈ ``fpp``) only cost a little
-    extra shuffle.
-
-    ``expected_items`` sizes the filter (default: ``dim.count()`` — one
-    extra tiny job on the dim side).
-    """
-    from .sketches import bloom_might_contain
-    bits, num_bits, num_hashes = _bloom_filter_for(dim, dim_key,
-                                                   expected_items, fpp)
-    flagged = bloom_might_contain(fact, fact_key, bits, num_bits,
-                                  num_hashes, out_col="__mc__")
-    return flagged.filter(F.col("__mc__")).drop("__mc__")
-
-
-def bloom_semi_join(fact: DataFrame, dim: DataFrame, fact_key: str,
-                    dim_key: str, *, expected_items: int | None = None,
-                    fpp: float = 0.01,
-                    broadcast_keys: bool = True) -> DataFrame:
-    """EXACT left-semi join, bloom-accelerated: identical result to
-    ``fact.join(dim, fact[fact_key] == dim[dim_key], "left_semi")``.
-
-    The Bloom pre-filter (no false negatives) eliminates most
-    non-matching fact rows before the shuffle; the exact semi join then
-    removes the ≈``fpp`` false positives.  At 100 TB with a selective
-    dim this cuts the fact-side exchange by ~the selectivity factor.
-    ``broadcast_keys=True`` (default) hints the key set broadcast —
-    right for any dim a driver-built Bloom filter fits; pass False for
-    a dim whose *distinct key set* itself is cluster-sized, and the
-    exact pass becomes a shuffle semi join over the already-pruned
-    fact slice.
-    """
-    pruned = bloom_prune(fact, dim, fact_key, dim_key,
-                         expected_items=expected_items, fpp=fpp)
-    keys = dim.select(F.col(dim_key).alias("__dk__")).distinct()
-    if broadcast_keys:
-        keys = F.broadcast(keys)
-    return pruned.join(keys, pruned[fact_key] == F.col("__dk__"),
-                       "left_semi")
-
-
-def bloom_anti_join(fact: DataFrame, dim: DataFrame, fact_key: str,
-                    dim_key: str, *, expected_items: int | None = None,
-                    fpp: float = 0.01) -> DataFrame:
-    """EXACT left-anti join, bloom-accelerated: identical result to
-    ``fact.join(dim, on=key, "left_anti")``.
-
-    Rows the Bloom filter rejects are *definitely* non-matches — they
-    pass the anti join with **zero** shuffle; only the ≈matching slice
-    (true matches + ``fpp`` false positives) goes through the exact
-    anti join.  This is the scale shape for "remove already-seen /
-    contaminated ids from a 100 TB corpus against a big blocklist".
-    """
-    from .sketches import bloom_might_contain
-    bits, num_bits, num_hashes = _bloom_filter_for(dim, dim_key,
-                                                   expected_items, fpp)
-    flagged = bloom_might_contain(fact, fact_key, bits, num_bits,
-                                  num_hashes, out_col="__mc__")
-    definite_out = flagged.filter(~F.col("__mc__")).drop("__mc__")
-    candidates = flagged.filter(F.col("__mc__")).drop("__mc__")
-    keys = dim.select(F.col(dim_key).alias("__dk__")).distinct()
-    survivors = candidates.join(keys,
-                                candidates[fact_key] == F.col("__dk__"),
-                                "left_anti")
-    return definite_out.unionByName(survivors)
 
 
 def bloom_route(fact: DataFrame, dim: DataFrame, fact_key: str,
@@ -334,9 +177,10 @@ def bloom_split(fact: DataFrame, dim: DataFrame, fact_key: str,
                 fpp: float = 0.01) -> tuple[DataFrame, DataFrame]:
     """EXACT (semi, anti) pair sharing ONE Bloom filter build — for
     callers that route both matching and non-matching fact rows
-    (retain/quarantine splits, contaminated/clean partitions).  Same
-    results as :func:`bloom_semi_join` + :func:`bloom_anti_join` at
-    half the filter-construction cost."""
+    (retain/quarantine splits, contaminated/clean partitions): the
+    exact ``left_semi`` and ``left_anti`` joins on the key, from one
+    filter build.  Rows the filter rejects pass the anti side with no
+    shuffle; only the candidate slice meets the exact joins."""
     from .sketches import bloom_might_contain
     bits, num_bits, num_hashes = _bloom_filter_for(dim, dim_key,
                                                    expected_items, fpp)
@@ -352,28 +196,3 @@ def bloom_split(fact: DataFrame, dim: DataFrame, fact_key: str,
         candidates.join(keys, candidates[fact_key] == F.col("__dk__"),
                         "left_anti"))
     return semi, anti
-
-
-def grouped_percentiles(df: DataFrame, group_col: str, value_col: str,
-                        quantiles: list[float], *,
-                        exact: bool = True,
-                        accuracy: int = 10_000) -> DataFrame:
-    """Grouped quantiles → (group, quantiles array<double>).
-
-    ``exact=True`` uses ``percentile`` (full sort within each group —
-    correct at any size, memory-bound by the largest group).
-    ``exact=False`` is the 100 TB path: ``approx_percentile``'s
-    KLL/GK-style sketch, whose state per group is O(accuracy · log n)
-    regardless of group size and whose rank error is bounded by
-    ``1/accuracy`` — partial sketches merge map-side, so hot groups
-    never force a single-task sort.  Same output shape either way, so
-    callers can flip the flag per run-scale.
-    """
-    qarr = F.array(*[F.lit(float(q)) for q in quantiles])
-    if exact:
-        agg = F.percentile(value_col, qarr)
-    else:
-        agg = F.approx_percentile(value_col, qarr, F.lit(accuracy))
-    return (df.groupBy(group_col)
-            .agg(F.transform(agg, lambda x: x.cast("double"))
-                 .alias("quantiles")))

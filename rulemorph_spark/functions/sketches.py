@@ -1,36 +1,26 @@
-"""Sketch-based approximate operators — the sublinear-memory scale path.
+"""Bloom-filter membership sketches — the sublinear-memory prefilter.
 
-At 100 TB, exact distinct counts and membership tables stop fitting
-anywhere; the standard answers are mergeable sketches:
+At 100 TB an exact membership table stops fitting anywhere.  Spark's
+automatic runtime bloom join
+(`spark.sql.optimizer.runtime.bloomFilter.enabled`) covers the
+within-query case; this module adds the *explicit, reusable* filter —
+build once from a (possibly large) key set, persist the bits, and
+prefilter any number of later scans (e.g. decontamination against a
+fixed benchmark set).  PySpark 4.1 exposes no public bloom expression,
+so: two `xxhash64` seeds are computed JVM-side per key and expanded
+into the k probe positions by Kirsch-Mitzenmacher double hashing
+(position_i = (h1 + i*h2) mod num_bits — the standard Bloom
+construction); small filters are probed entirely in whole-stage
+codegen, large ones test bits in an Arrow-batched pandas UDF against a
+broadcast numpy bit array — no per-row Python hashing.
 
-- **HyperLogLog distinct counts** ride Spark's built-in DataSketches
-  HLL (`hll_sketch_agg` / `hll_union_agg`, JVM-side, mergeable):
-  per-partition/per-day sketch tables can be maintained incrementally
-  and unioned later without rescanning history.
-- **Bloom-filter membership prefilter**: Spark's automatic runtime
-  bloom join (`spark.sql.optimizer.runtime.bloomFilter.enabled`)
-  covers the within-query case; this module adds the *explicit,
-  reusable* filter — build once from a (possibly large) key set,
-  persist the bits, and prefilter any number of later scans (e.g.
-  decontamination against a fixed benchmark set).  PySpark 4.1
-  exposes no public bloom expression, so: two `xxhash64` seeds are
-  computed JVM-side per key and expanded into the k probe positions by
-  Kirsch-Mitzenmacher double hashing (position_i = (h1 + i*h2) mod
-  num_bits — the standard Bloom construction); small filters are
-  probed entirely in whole-stage codegen, large ones test bits in an
-  Arrow-batched pandas UDF against a broadcast numpy bit array — no
-  per-row Python hashing.
-
-  FORMAT (r10): persisted blobs are versioned — byte 0 is a scheme
-  tag (currently 2 = the double-hashing scheme above), the rest the
-  little-endian packed bit array.  ``bloom_might_contain`` REFUSES
-  blobs without a matching tag: r9 changed the hashing scheme (k
-  independent seeds → double hashing), and probing bits persisted
-  under the old scheme would silently produce false negatives —
-  rebuild any filter persisted before the tag existed.
-
-KLL quantile sketches already live in ``relational.grouped_percentiles``
-(``approx_percentile``).
+FORMAT (r10): persisted blobs are versioned — byte 0 is a scheme tag
+(currently 2 = the double-hashing scheme above), the rest the
+little-endian packed bit array.  ``bloom_might_contain`` REFUSES blobs
+without a matching tag: r9 changed the hashing scheme (k independent
+seeds → double hashing), and probing bits persisted under the old
+scheme would silently produce false negatives — rebuild any filter
+persisted before the tag existed.
 """
 
 from __future__ import annotations
@@ -39,59 +29,13 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "hll_distinct", "hll_sketch_table", "hll_merge_estimate",
     "bloom_build", "bloom_build_auto", "bloom_might_contain",
     "bloom_params",
 ]
-
-
-# --------------------------------------------------------------- HLL
-
-
-def hll_distinct(df: DataFrame, value_col: str,
-                 group_cols: list[str] | None = None,
-                 lgk: int = 12) -> DataFrame:
-    """Approximate COUNT(DISTINCT value) per group via HLL.
-
-    One shuffle (map-side partial sketches merge), constant memory per
-    group (2^lgk registers ≈ 1.6 KB at the default lgk=12, ~2% error).
-    """
-    agg = F.hll_sketch_estimate(
-        F.hll_sketch_agg(value_col, F.lit(lgk))).alias("approx_distinct")
-    if group_cols:
-        return df.groupBy(*group_cols).agg(agg)
-    return df.agg(agg)
-
-
-def hll_sketch_table(df: DataFrame, value_col: str,
-                     group_cols: list[str], lgk: int = 12) -> DataFrame:
-    """Materialize per-group HLL sketches (binary column ``hll``).
-
-    The incremental pattern: write one sketch row per (partition key,
-    batch); later distinct counts over any group subset come from
-    :func:`hll_merge_estimate` over the sketch table — no rescan of
-    the raw 100 TB.
-    """
-    return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(value_col, F.lit(lgk)).alias("hll"))
-
-
-def hll_merge_estimate(sketches: DataFrame,
-                       group_cols: list[str] | None = None,
-                       sketch_col: str = "hll") -> DataFrame:
-    """Union previously-materialized sketches → distinct estimates."""
-    agg = F.hll_sketch_estimate(
-        F.hll_union_agg(sketch_col)).alias("approx_distinct")
-    if group_cols:
-        return sketches.groupBy(*group_cols).agg(agg)
-    return sketches.agg(agg)
-
-
-# ------------------------------------------------------------- Bloom
 
 
 def bloom_params(expected_items: int, fpp: float = 0.01) -> tuple[int, int]:

@@ -57,8 +57,7 @@ def scan_bytes(df: DataFrame) -> int | None:
     return total
 
 
-def spread_small_scan(df: DataFrame, max_bytes: int | None = None
-                      ) -> DataFrame:
+def spread_small_scan(df: DataFrame) -> DataFrame:
     """Round-robin the rows of a *tiny* scan across the session's
     cores; identity for anything at scale (see module docstring).
 
@@ -68,9 +67,8 @@ def spread_small_scan(df: DataFrame, max_bytes: int | None = None
     where per-row work is trivial — the added exchange only pays for
     itself when it unlocks parallel compute.
     """
-    limit = _MAX_BYTES if max_bytes is None else max_bytes
     total = scan_bytes(df)
-    if total is None or total > limit:
+    if total is None or total > _MAX_BYTES:
         return df
     spark = df.sparkSession
     return df.repartition(spark.sparkContext.defaultParallelism)

@@ -1,7 +1,7 @@
 """Distributed k-means (Lloyd's algorithm) over an embedding column.
 
-Closes the loop for the IVF ANN path: ``similarity.ivf_*`` consumes a
-(cell, cvec) centroid table; round 1 used deterministic seed centroids,
+Closes the loop for the IVF ANN path: ``similarity.ivf_scored`` and
+``semdedup`` consume a (cell, cvec) centroid table; round 1 used deterministic seed centroids,
 this trains them from the corpus itself.  Also the generic corpus
 clustering primitive (topic bucketing, stratified curation).
 
@@ -178,15 +178,6 @@ def assign_cells_with_vec(df: DataFrame, centroids: DataFrame,
     return base.select(*cols).filter(F.col("cell").isNotNull())
 
 
-def assign_cells(df: DataFrame, centroids: DataFrame, id_col: str,
-                 vec_col: str) -> DataFrame:
-    """Nearest-centroid assignment → (id, cell): broadcast the one-row
-    centroid array, take the per-row argmin expression (see
-    :func:`assign_cells_with_vec`)."""
-    return assign_cells_with_vec(df, centroids, id_col, vec_col) \
-        .select(id_col, "cell")
-
-
 def _iter_partials(df: DataFrame, vec_col: str, cents_np) -> DataFrame:
     """One Lloyd iteration's map stage: per TASK, assign each vector to
     its nearest centroid with vectorized NumPy and emit the k partial
@@ -237,7 +228,7 @@ def _iter_partials(df: DataFrame, vec_col: str, cents_np) -> DataFrame:
 def kmeans_train(df: DataFrame, id_col: str, vec_col: str, k: int,
                  iters: int = 8) -> DataFrame:
     """Lloyd's algorithm: returns the trained (cell, cvec) table, the
-    exact shape ``similarity.ivf_assign`` / ``ivf_write_index`` expect.
+    exact shape ``similarity.ivf_scored`` and ``semdedup`` take.
 
     Empty cells keep their previous centroid (standard practice — no
     resampling, preserving determinism).
@@ -317,10 +308,3 @@ def kmeans_inertia(df: DataFrame, centroids: DataFrame, id_col: str,
     per_row = (df.select(vec_col).crossJoin(F.broadcast(cents))
                .select(d.alias("__d__")))
     return per_row.agg(F.sum("__d__")).collect()[0][0]
-
-
-def train_ivf_centroids(corpus: DataFrame, id_col: str, vec_col: str,
-                        k: int = 64, iters: int = 8) -> DataFrame:
-    """Convenience: trained centroids ready for
-    ``similarity.ivf_write_index(corpus, centroids, ...)``."""
-    return kmeans_train(corpus, id_col, vec_col, k, iters)

@@ -1,28 +1,22 @@
-"""Pure-stdlib media codecs for the multimodal pipeline.
+"""Pure-stdlib media probes for the multimodal pipeline.
 
-Real decoders — no Pillow/soundfile/ffmpeg required (none are
-installable in this environment), only ``zlib``/``struct``/``numpy``:
+Header parsers — no Pillow/soundfile/ffmpeg required, only
+``zlib``/``struct``/``numpy``:
 
-- **PNG**: full decode (8-bit gray / gray+alpha / RGB / RGBA /
-  palette, all five scanline filters, non-interlaced) and encode
-  (filter 0 + zlib).  Covers the overwhelming majority of real-world
-  PNGs; interlaced (Adam7) and 16-bit raise ``UnsupportedMedia``.
-- **BMP**: uncompressed 24/32-bit BITMAPINFOHEADER decode.
-- **WAV**: RIFF parse + PCM 8/16/32-bit decode to a numpy array.
-- **JPEG / GIF**: header probe (dimensions) — full JPEG entropy
-  decode is out of scope; probing is what the feature-extract stage
-  needs.
-- **AVI**: header probe (dimensions, duration, frame count) plus
-  real frame extraction from the ``movi`` list — for MJPEG AVIs the
-  extracted frames are standalone JPEGs and feed back into the JPEG
-  prober, making video frame-sampling a genuine decode path.
+- **PNG**: IHDR probe (dimensions, bit depth, channels) and encode
+  (filter 0 + zlib).
+- **BMP**: BITMAPINFOHEADER probe.
+- **WAV**: RIFF ``fmt``/``data`` probe (channels, rate, frames,
+  duration) and PCM int16 encode.
+- **JPEG / GIF**: header probe (dimensions) — what the feature-extract
+  stage needs.
+- **AVI**: ``avih`` probe (dimensions, duration, frame count).
 
 These run inside Arrow-batched ``mapInPandas`` workers (see
-``multimodal.py``), so per-image Python cost is amortized across
+``multimodal.py``), so per-payload Python cost is amortized across
 columnar batches and the stage stays a pure narrow map at cluster
-scale.  Mirrors the reference's media-probe surface (it shells out to
-codec libraries; here the container has none, so the formats are
-parsed directly).
+scale.  The encoders let ``q_multimodal_probe`` build real payloads
+whose probed fields its SQL oracle predicts.
 """
 
 from __future__ import annotations
@@ -104,86 +98,6 @@ def probe_png(payload: bytes) -> dict:
     raise CorruptMedia("PNG missing IHDR")
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
-def decode_png(payload: bytes) -> np.ndarray:
-    """Decode a PNG to ``uint8[H, W, C]`` (C per color type; palette → RGB).
-
-    Filters: all five (None/Sub/Up/Average/Paeth).  Vectorized where the
-    filter allows (None/Up are whole-row numpy ops); Sub/Average/Paeth
-    carry per-pixel state and run as tight per-row loops — fine inside
-    an Arrow batch worker where rows are typically thumbnails/tiles.
-    """
-    hdr = probe_png(payload)
-    if hdr["bit_depth"] != 8:
-        raise UnsupportedMedia(f"PNG bit depth {hdr['bit_depth']} (only 8)")
-    if hdr["interlaced"]:
-        raise UnsupportedMedia("interlaced (Adam7) PNG")
-    w, h = hdr["width"], hdr["height"]
-    channels = hdr["channels"]
-    if channels is None:
-        raise UnsupportedMedia(f"PNG color type {hdr['color_type']}")
-
-    idat = b"".join(d for t, d in _png_chunks(payload) if t == b"IDAT")
-    palette = None
-    if hdr["color_type"] == 3:
-        for t, d in _png_chunks(payload):
-            if t == b"PLTE":
-                palette = np.frombuffer(d, dtype=np.uint8).reshape(-1, 3)
-                break
-        if palette is None:
-            raise CorruptMedia("palette PNG missing PLTE")
-    raw = zlib.decompress(idat)
-    stride = w * channels
-    if len(raw) != h * (stride + 1):
-        raise CorruptMedia("PNG pixel data length mismatch")
-
-    out = np.zeros((h, stride), dtype=np.uint8)
-    bpp = channels
-    prev = np.zeros(stride, dtype=np.int32)
-    for y in range(h):
-        off = y * (stride + 1)
-        ftype = raw[off]
-        line = np.frombuffer(raw, dtype=np.uint8,
-                             count=stride, offset=off + 1).astype(np.int32)
-        if ftype == 0:                      # None
-            cur = line
-        elif ftype == 2:                    # Up
-            cur = (line + prev) & 0xFF
-        elif ftype == 1:                    # Sub
-            cur = line.copy()
-            for i in range(bpp, stride):
-                cur[i] = (cur[i] + cur[i - bpp]) & 0xFF
-        elif ftype == 3:                    # Average
-            cur = line.copy()
-            for i in range(stride):
-                left = cur[i - bpp] if i >= bpp else 0
-                cur[i] = (cur[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:                    # Paeth
-            cur = line.copy()
-            for i in range(stride):
-                left = cur[i - bpp] if i >= bpp else 0
-                ul = prev[i - bpp] if i >= bpp else 0
-                cur[i] = (cur[i] + _paeth(left, int(prev[i]), ul)) & 0xFF
-        else:
-            raise CorruptMedia(f"PNG filter type {ftype}")
-        out[y] = cur
-        prev = cur
-
-    img = out.reshape(h, w, channels)
-    if palette is not None:
-        img = palette[img[:, :, 0]]
-    return img
-
-
 def encode_png(img: np.ndarray) -> bytes:
     """Encode ``uint8[H, W]`` or ``uint8[H, W, C]`` (C ∈ 1,2,3,4) as PNG."""
     img = np.ascontiguousarray(img, dtype=np.uint8)
@@ -207,14 +121,6 @@ def encode_png(img: np.ndarray) -> bytes:
             + chunk(b"IEND", b""))
 
 
-def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resize via index gather (pure numpy, O(out))."""
-    h, w = img.shape[:2]
-    ys = (np.arange(height) * (h / height)).astype(np.int64).clip(0, h - 1)
-    xs = (np.arange(width) * (w / width)).astype(np.int64).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
 # --------------------------------------------------------------------------
 # BMP
 # --------------------------------------------------------------------------
@@ -226,30 +132,6 @@ def probe_bmp(payload: bytes) -> dict:
     bpp, compression = struct.unpack("<HI", payload[28:34])
     return {"width": int(w), "height": abs(int(h)), "bits_per_pixel": bpp,
             "compression": compression, "bottom_up": h > 0}
-
-
-def decode_bmp(payload: bytes) -> np.ndarray:
-    """Decode uncompressed 24/32-bit BMP to ``uint8[H, W, 3|4]`` (RGB order)."""
-    hdr = probe_bmp(payload)
-    if hdr["compression"] != 0:
-        raise UnsupportedMedia(f"BMP compression {hdr['compression']}")
-    if hdr["bits_per_pixel"] not in (24, 32):
-        raise UnsupportedMedia(f"BMP {hdr['bits_per_pixel']} bpp")
-    (offset,) = struct.unpack("<I", payload[10:14])
-    w, h = hdr["width"], hdr["height"]
-    nch = hdr["bits_per_pixel"] // 8
-    row_bytes = (w * nch + 3) & ~3  # rows padded to 4 bytes
-    need = offset + row_bytes * h
-    if len(payload) < need:
-        raise CorruptMedia("truncated BMP pixel data")
-    rows = np.frombuffer(payload, dtype=np.uint8, count=row_bytes * h,
-                         offset=offset).reshape(h, row_bytes)
-    img = rows[:, :w * nch].reshape(h, w, nch)
-    if hdr["bottom_up"]:
-        img = img[::-1]
-    # BGR(A) → RGB(A)
-    img = img[:, :, [2, 1, 0] + ([3] if nch == 4 else [])]
-    return np.ascontiguousarray(img)
 
 
 # --------------------------------------------------------------------------
@@ -326,27 +208,6 @@ def probe_wav(payload: bytes) -> dict:
     return fmt
 
 
-_WAV_DTYPES = {8: np.uint8, 16: np.int16, 32: np.int32}
-
-
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """Decode PCM WAV → (``samples[frames, channels]``, sample_rate)."""
-    fmt = probe_wav(payload)
-    if fmt["audio_format"] != 1:
-        raise UnsupportedMedia(f"WAV audio format {fmt['audio_format']} "
-                               "(only PCM)")
-    dtype = _WAV_DTYPES.get(fmt["bits_per_sample"])
-    if dtype is None:
-        raise UnsupportedMedia(f"WAV {fmt['bits_per_sample']}-bit samples")
-    for cid, off, size in _riff_chunks(payload):
-        if cid == b"data":
-            count = size // np.dtype(dtype).itemsize
-            samples = np.frombuffer(payload, dtype=dtype, count=count,
-                                    offset=off)
-            return samples.reshape(-1, fmt["channels"]), fmt["sample_rate"]
-    raise CorruptMedia("WAV missing data chunk")
-
-
 def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
     """Encode int16 ``samples[frames, channels]`` as PCM WAV."""
     samples = np.ascontiguousarray(samples, dtype=np.int16)
@@ -385,55 +246,6 @@ def probe_avi(payload: bytes) -> dict:
                         "usec_per_frame": int(usec_pf),
                         "duration_ms": (usec_pf * total_frames) // 1000}
     raise CorruptMedia("AVI missing avih header")
-
-
-def avi_frames(payload: bytes) -> list[bytes]:
-    """Extract raw video-frame chunks from the ``movi`` list.
-
-    For MJPEG AVIs each returned payload is a standalone JPEG (probe it
-    with :func:`probe_jpeg`); for other codecs the bytes are the raw
-    compressed frame.
-    """
-    frames: list[bytes] = []
-    for cid, off, size in _riff_chunks(payload):
-        if cid != b"LIST" or payload[off:off + 4] != b"movi":
-            continue
-        for cid2, off2, size2 in _riff_chunks(payload[:off + size],
-                                              start=off + 4):
-            # '00dc'/'00db' = stream-0 compressed/uncompressed video
-            if cid2[2:4] in (b"dc", b"db"):
-                frames.append(payload[off2:off2 + size2])
-    return frames
-
-
-def encode_avi_mjpeg(frames: list[bytes], width: int, height: int,
-                     fps: int = 25) -> bytes:
-    """Build a minimal MJPEG AVI from per-frame JPEG payloads.
-
-    Used by tests to exercise the real video probe/frame-extraction
-    path without ffmpeg; the output parses in standard players.
-    """
-    usec_pf = 1_000_000 // fps
-
-    def chunk(cid: bytes, data: bytes) -> bytes:
-        pad = b"\x00" if len(data) & 1 else b""
-        return cid + struct.pack("<I", len(data)) + data + pad
-
-    def lst(kind: bytes, data: bytes) -> bytes:
-        return chunk(b"LIST", kind + data)
-
-    avih = struct.pack("<14I", usec_pf, 0, 0, 0x10, len(frames), 0, 1,
-                       0, width, height, 0, 0, 0, 0)
-    strh = struct.pack("<4s4sIHHIIIIIIIIhhhh", b"vids", b"MJPG", 0, 0, 0,
-                       0, 1, fps, 0, len(frames), 0, 0xFFFFFFFF, 0,
-                       0, 0, width, height)
-    strf = struct.pack("<IiiHH4sIiiII", 40, width, height, 1, 24, b"MJPG",
-                       width * height * 3, 0, 0, 0, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 # --------------------------------------------------------------------------

@@ -13,10 +13,8 @@ Scale design notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from .text import fingerprint
 
 
 def _ref(c: Column | str) -> str | None:
@@ -75,12 +73,6 @@ def _shingles_sql(t: str, n: int) -> str:
     return (f"element_at(transform(array(split(lower(trim({t})), "
             f"'\\\\s+')), w -> CASE WHEN size(w) - {n - 1} <= 0 "
             f"THEN array(array_join(w, ' ')) ELSE {grams} END), 1)")
-
-
-def minhash_signature(text: Column, num_hashes: int = 8,
-                      shingle_n: int = 3) -> Column:
-    """MinHash signature as an array of bigint minima."""
-    return minhash_from_shingles(shingles(text, shingle_n), num_hashes)
 
 
 # sentinel larger than any h1 + i*h2 (h1 < 2^60, i*h2 < 32*2^56 = 2^61)
@@ -623,69 +615,6 @@ def remove_dup_spans(df: DataFrame, text_col: str = "text",
         .alias("removed_tokens"))
 
 
-def dedup_incremental(batch: DataFrame, store_path: str,
-                      key: Column, id_col: str,
-                      out_path: str | None = None) -> DataFrame:
-    """Exact dedup of an arriving batch against a persistent
-    fingerprint store — the continual-ingestion pattern: dedupe within
-    the batch, anti-join against every fingerprint ever admitted, then
-    admit the survivors' fingerprints.
-
-    The store holds only (fingerprint) — at 100 TB of corpus it is a
-    small fraction of the data and the anti-join is a broadcast when a
-    day's fingerprints fit in memory, else a shuffle on the
-    fingerprint key (same cost shape as ``dedup_exact``).
-
-    Durability ordering: survivors must exist somewhere durable BEFORE
-    their fingerprints are committed, or a crash in between loses the
-    documents forever (fingerprints present, corpus rows absent, re-run
-    anti-joins them away).  With ``out_path`` (the production form)
-    survivors are overwrite-written there first, then fingerprints
-    append — a crash between the writes re-runs cleanly: the overwrite
-    is idempotent (same fresh set recomputes) and the fingerprint
-    append happens on the re-run (duplicate fp rows from a crash after
-    both writes are harmless to the anti-join).  A re-run AFTER a
-    successful commit computes an EMPTY fresh set; the overwrite is
-    skipped then — an unconditional overwrite would delete the durable
-    survivors whose fingerprints are already committed, losing them
-    permanently.  Without ``out_path`` survivors live only in an eager
-    local checkpoint (which also keeps the returned plan from
-    re-reading the mutated store): fine for interactive use, not
-    crash-safe — the caller must persist the returned rows.  Returns
-    the surviving batch rows.
-    """
-    spark = batch.sparkSession
-    keyed = batch.withColumn("__k__", key)
-    within = dedup_exact(keyed, F.col("__k__"), id_col)
-    from pyspark.errors import AnalysisException
-    try:
-        seen = spark.read.parquet(store_path)
-        fresh = within.join(seen, within["__k__"] == seen["fp"],
-                            "left_anti")
-    except AnalysisException as e:
-        # only a missing store means "first batch" — a corrupt or
-        # unreadable store must fail loudly, not silently re-admit
-        # every fingerprint ever seen
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-        fresh = within
-    fresh = fresh.localCheckpoint(eager=True)
-    if out_path is not None:
-        if fresh.count():
-            fresh.drop("__k__").write.mode("overwrite").parquet(out_path)
-            admitted = spark.read.parquet(out_path)
-            (admitted.select(key.alias("fp"))
-             .distinct().write.mode("append").parquet(store_path))
-            return admitted
-        # nothing to admit (e.g. re-run after a successful commit):
-        # leave the previous batch's durable output untouched
-        return fresh.drop("__k__")
-    if fresh.count():
-        (fresh.select(F.col("__k__").alias("fp"))
-         .distinct().write.mode("append").parquet(store_path))
-    return fresh.drop("__k__")
-
-
 def minhash_est_sim(sig_a: Column, sig_b: Column) -> Column:
     """Jaccard estimate from two equal-length MinHash signatures: the
     fraction of agreeing minima (the classic unbiased estimator;
@@ -695,126 +624,6 @@ def minhash_est_sim(sig_a: Column, sig_b: Column) -> Column:
                                     lambda x, y: x == y),
                          lambda v: v))
     return eq.cast("double") / F.size(sig_a).cast("double")
-
-
-def fuzzy_dedup_incremental(batch: DataFrame, store_path: str,
-                            id_col: str = "doc_id",
-                            text_col: str = "text",
-                            num_hashes: int = 16, bands: int = 8,
-                            shingle_n: int = 3,
-                            threshold: float = 0.7,
-                            verify: str = "estimate",
-                            out_path: str | None = None) -> DataFrame:
-    """NEAR-duplicate dedup of an arriving batch against a persistent
-    MinHash band-key store — the fuzzy complement of
-    :func:`dedup_incremental` for continual ingestion: a paraphrased
-    re-crawl of an admitted document is dropped even though its exact
-    fingerprint differs.
-
-    Pipeline per batch (all bucketed joins, never all-pairs):
-
-    1. intra-batch: LSH band buckets → candidate pairs → similarity ≥
-       ``threshold`` edges → connected components → keep the min-id
-       representative of each cluster;
-    2. vs store: surviving docs' band rows join the stored band rows
-       on (band, band_key); candidates verified against the STORED
-       signature (or text) — matches are dropped;
-    3. survivors' band rows append to the store.
-
-    ``verify="estimate"`` (default) checks the MinHash-estimated
-    Jaccard — the store holds only (band, band_key, id, sig), a tiny
-    fraction of the corpus at 100 TB.  ``verify="exact"`` additionally
-    stores the document text and verifies with exact n-gram Jaccard —
-    tighter thresholds, bigger store; a store created under one mode
-    must stay in that mode.
-
-    Durability contract mirrors :func:`dedup_incremental`: with
-    ``out_path`` survivors are made durable BEFORE their band rows
-    commit (idempotent re-runs: an already-committed batch matches
-    itself in the store, computes an empty fresh set, and skips the
-    overwrite); without it the caller must persist the returned rows.
-    Returns the surviving batch rows.
-    """
-    if verify not in ("estimate", "exact"):
-        raise ValueError(f"unknown verify mode: {verify!r}")
-    if num_hashes % bands:
-        raise ValueError("bands must divide num_hashes")
-    spark = batch.sparkSession
-    rows_per_band = num_hashes // bands
-
-    def banded_of(df: DataFrame) -> DataFrame:
-        sig = df.select(
-            F.col(id_col), F.col(text_col),
-            minhash_from_shingles(shingles(text_col, shingle_n),
-                                  num_hashes).alias("sig"))
-        cols = [F.col(id_col), F.col("sig"),
-                F.posexplode(lsh_band_keys(F.col("sig"), bands,
-                                           rows_per_band))
-                .alias("band", "band_key")]
-        if verify == "exact":
-            cols.insert(2, F.col(text_col))
-        return sig.select(*cols)
-
-    def is_dup(a_sig, b_sig, a_text, b_text) -> Column:
-        if verify == "exact":
-            return jaccard_ngram(a_text, b_text, shingle_n) >= threshold
-        return minhash_est_sim(a_sig, b_sig) >= threshold
-
-    banded = banded_of(batch).localCheckpoint(eager=True)
-
-    # 1. intra-batch clusters → min-id survivor
-    a, b = banded.alias("a"), banded.alias("b")
-    text_a = F.col(f"a.{text_col}") if verify == "exact" else F.lit(None)
-    text_b = F.col(f"b.{text_col}") if verify == "exact" else F.lit(None)
-    edges = (a.join(b, (F.col("a.band") == F.col("b.band")) &
-                    (F.col("a.band_key") == F.col("b.band_key")) &
-                    (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .filter(is_dup(F.col("a.sig"), F.col("b.sig"),
-                            text_a, text_b))
-             .select(F.col(f"a.{id_col}").alias("src"),
-                     F.col(f"b.{id_col}").alias("dst"))
-             .distinct())
-    comp = connected_components(edges)
-    losers = comp.filter(F.col("node") != F.col("comp")) \
-        .select(F.col("node").alias(id_col))
-    within = batch.join(losers, id_col, "left_anti")
-
-    # 2. vs the persistent store
-    from pyspark.errors import AnalysisException
-    try:
-        store = spark.read.parquet(store_path)
-        w_banded = banded.join(losers, id_col, "left_anti")
-        s_text = F.col(f"s.{text_col}") if verify == "exact" \
-            else F.lit(None)
-        n_text = F.col(f"n.{text_col}") if verify == "exact" \
-            else F.lit(None)
-        hit_ids = (w_banded.alias("n")
-                   .join(store.alias("s"),
-                         (F.col("n.band") == F.col("s.band")) &
-                         (F.col("n.band_key") == F.col("s.band_key")))
-                   .filter(is_dup(F.col("n.sig"), F.col("s.sig"),
-                                  n_text, s_text))
-                   .select(F.col(f"n.{id_col}").alias(id_col))
-                   .distinct())
-        fresh = within.join(hit_ids, id_col, "left_anti")
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e):
-            raise
-        fresh = within
-    fresh = fresh.localCheckpoint(eager=True)
-
-    # 3. commit (durable output first, band rows second)
-    if out_path is not None:
-        if fresh.count():
-            fresh.write.mode("overwrite").parquet(out_path)
-            admitted = spark.read.parquet(out_path)
-            banded_of(admitted).write.mode("append").parquet(store_path)
-            return admitted
-        return fresh
-    if fresh.count():
-        (banded.join(fresh.select(id_col), id_col, "left_semi")
-         .write.mode("append").parquet(store_path))
-    return fresh
 
 
 def dedup_fuzzy(df: DataFrame, id_col: str = "doc_id",

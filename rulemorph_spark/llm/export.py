@@ -14,9 +14,7 @@ Design — deterministic two-level hashing, one shuffle:
   range-cut-of-global-rank would.
 * ``__ord__ = xxhash64(salt+1, id)`` — an independent pseudo-random
   order *within* each shard, so reading shards in any order still
-  yields a well-mixed stream (the property epoch shuffles need; for a
-  strict single global order use
-  :func:`rulemorph_spark.llm.sampling.shuffle_deterministic`).
+  yields a well-mixed stream (the property epoch shuffles need).
 
 The physical plan is ONE hash repartition on ``shard`` + a
 within-partition sort — no global sort, no range-boundary sampling, no

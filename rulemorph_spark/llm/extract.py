@@ -10,8 +10,6 @@ with a URL, not as clean text columns).
   degrade to empty text, never kill the job (same corrupt-isolation
   discipline as the media codecs).  Scale shape: a pure map stage —
   no shuffle, partitioning preserved.
-* :func:`extract_links` — anchor hrefs per document (same parser, one
-  pass), for link-graph or seed-expansion work.
 * :func:`url_domain` / :func:`domain_filter` — registrable-domain-ish
   key (last two labels, a deliberate public-suffix simplification —
   documented, swap in a PSL table for production) and an allow/block
@@ -41,7 +39,6 @@ class _TextExtractor(HTMLParser):
     def __init__(self):
         super().__init__(convert_charrefs=True)
         self.parts: list[str] = []
-        self.links: list[str] = []
         self._skip_depth = 0
 
     def handle_starttag(self, tag, attrs):
@@ -49,10 +46,6 @@ class _TextExtractor(HTMLParser):
             self._skip_depth += 1
         elif tag in _BLOCK_TAGS:
             self.parts.append("\n")
-        if tag == "a":
-            href = dict(attrs).get("href")
-            if href:
-                self.links.append(href)
 
     def handle_endtag(self, tag):
         if tag in _SKIP_TAGS and self._skip_depth:
@@ -69,16 +62,16 @@ class _TextExtractor(HTMLParser):
         return "\n".join(ln for ln in lines if ln)
 
 
-def _extract_one(html: str | None) -> tuple[str, list[str]]:
+def _extract_one(html: str | None) -> str:
     if not html:
-        return "", []
+        return ""
     p = _TextExtractor()
     try:
         p.feed(html)
         p.close()
     except Exception:  # malformed markup: keep what was parsed
         pass
-    return p.text(), p.links
+    return p.text()
 
 
 def html_to_text(df: DataFrame, html_col: str = "html",
@@ -87,19 +80,9 @@ def html_to_text(df: DataFrame, html_col: str = "html",
     preserved).  Arrow-batched; no shuffle."""
     @F.pandas_udf(T.StringType())
     def _extract(s: pd.Series) -> pd.Series:
-        return s.map(lambda h: _extract_one(h)[0])
+        return s.map(_extract_one)
 
     return df.withColumn(out_col, _extract(F.col(html_col)))
-
-
-def extract_links(df: DataFrame, html_col: str = "html",
-                  out_col: str = "links") -> DataFrame:
-    """Add ``out_col``: array of anchor hrefs in document order."""
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _links(s: pd.Series) -> pd.Series:
-        return s.map(lambda h: _extract_one(h)[1])
-
-    return df.withColumn(out_col, _links(F.col(html_col)))
 
 
 def url_domain(url: Column) -> Column:

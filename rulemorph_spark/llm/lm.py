@@ -109,8 +109,7 @@ def lm_score(corpus: DataFrame, logprobs: DataFrame,
 
 def lm_quality(corpus: DataFrame, text_col: str = "text",
                id_col: str = "doc_id",
-               train: DataFrame | None = None,
-               materialize: bool = False) -> DataFrame:
+               train: DataFrame | None = None) -> DataFrame:
     """Train-and-score convenience: fit the unigram table on ``train``
     (default: the corpus itself — self-perplexity, the boilerplate /
     gibberish detector) and score every document.
@@ -121,16 +120,13 @@ def lm_quality(corpus: DataFrame, text_col: str = "text",
     training shuffle once per execution — the scan feeding it runs one
     time (r9: the former eager ``localCheckpoint`` default paid a
     separate driver-blocking training job per call; measured 1.16 s →
-    0.86 s per scored run at sf0.1).  Pass ``materialize=True`` only
-    when the returned plan will be executed repeatedly and the model
-    should be pinned across those actions — at 100 TB the model would
-    be persisted to parquet instead; a localCheckpoint is the
-    in-session equivalent.
+    0.86 s per scored run at sf0.1).  A caller that runs the returned
+    plan repeatedly can pin the model itself: at 100 TB by persisting
+    the ``unigram_logprob_micro`` table to parquet and calling
+    ``lm_score`` on it.
     """
     fit_on = train if train is not None else corpus
     lp = unigram_logprob_micro(unigram_counts(fit_on, text_col))
-    if materialize:
-        lp = lp.localCheckpoint(eager=True)
     return lm_score(corpus, lp, text_col, id_col)
 
 

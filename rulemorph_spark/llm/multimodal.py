@@ -1,20 +1,12 @@
 """Multimodal column plumbing: image/audio/video as opaque binary + typed
-metadata, with decode/feature steps as Arrow-batched ``mapInPandas``.
+metadata, with the feature step as an Arrow-batched ``mapInPandas``.
 
-Two codec paths:
-
-- ``use_stub=True`` (default, backward-compatible): a deterministic
-  hash-seeded fake — the original round-1 contract, replayable by the
-  DuckDB oracle (`q_multimodal_probe`).
-- ``use_stub=False``: REAL decoding via :mod:`.codecs` — pure-stdlib
-  PNG/BMP/WAV decode and JPEG/GIF/AVI probing (zlib + struct; no
-  Pillow/soundfile/ffmpeg, which this container cannot install).
-  Unrecognized/corrupt payloads yield a null-featured row with an
-  ``error`` string instead of failing the stage — at 100 TB a single
-  bad object must not kill the job.
-
-Both paths share the same ``mapInPandas`` plumbing: Arrow batches,
-no shuffle, partitioning preserved.
+``extract_features`` probes every payload through :mod:`.codecs` —
+pure-stdlib PNG/BMP/JPEG/GIF/WAV/AVI header parsing (zlib + struct; no
+Pillow/soundfile/ffmpeg).  Unrecognized/corrupt payloads yield a
+null-featured row with an ``error`` string instead of failing the
+stage — at 100 TB a single bad object must not kill the job.  Arrow
+batches, no shuffle, partitioning preserved.
 """
 
 from __future__ import annotations
@@ -24,7 +16,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import codecs
@@ -36,40 +27,6 @@ MEDIA_SCHEMA = T.StructType([
     T.StructField("payload", T.BinaryType(), True),   # opaque bytes
     T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
 ])
-
-FEATURE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("kind", T.StringType(), False),
-    T.StructField("n_bytes", T.LongType(), True),
-    T.StructField("sha1", T.StringType(), True),
-    T.StructField("width", T.IntegerType(), True),
-    T.StructField("height", T.IntegerType(), True),
-    T.StructField("duration_ms", T.LongType(), True),
-])
-
-
-class DecodeUnavailable(NotImplementedError):
-    """Raised when a real codec is required but not installed."""
-
-
-def _fake_decode(payload: bytes, kind: str) -> dict:
-    """Deterministic stand-in for the codec layer (stub path).
-
-    Kept as the oracle-replayable default; the REAL path
-    (``use_stub=False``) decodes PNG/BMP/WAV and probes JPEG/GIF/AVI
-    via :mod:`.codecs` — pure stdlib, since PIL/soundfile/cv2/av are
-    absent from this container and cannot be installed.
-    """
-    h = hashlib.sha1(payload or b"").hexdigest()
-    seed = int(h[:8], 16)
-    if kind == "image":
-        return {"width": 64 + seed % 1024, "height": 64 + (seed >> 10) % 1024,
-                "duration_ms": None}
-    if kind in ("audio", "video"):
-        return {"width": None, "height": None,
-                "duration_ms": 1000 + seed % 600000}
-    raise DecodeUnavailable(f"unknown media kind: {kind}")
-
 
 REAL_FEATURE_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
@@ -87,323 +44,43 @@ REAL_FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def extract_features(df: DataFrame, *, use_stub: bool = True) -> DataFrame:
-    """Decode/probe each media payload → typed feature rows.
+def extract_features(df: DataFrame) -> DataFrame:
+    """Decode/probe each media payload → :data:`REAL_FEATURE_SCHEMA` rows.
 
     ``mapInPandas`` keeps Arrow batches columnar end-to-end; partitioning
     is preserved (no shuffle), so a 100 TB media table processes as a
-    pure map stage.
-
-    ``use_stub=False`` returns :data:`REAL_FEATURE_SCHEMA` rows with
-    genuinely parsed metadata (PNG/BMP/JPEG/GIF dimensions, WAV/AVI
-    duration); per-payload parse errors land in the ``error`` column.
+    pure map stage.  Rows carry genuinely parsed metadata (PNG/BMP/JPEG/
+    GIF dimensions, WAV/AVI duration); per-payload parse errors land in
+    the ``error`` column.
     """
-    if not use_stub:
-        def real_batches(it: Iterator[pd.DataFrame]) \
-                -> Iterator[pd.DataFrame]:
-            names = [f.name for f in REAL_FEATURE_SCHEMA]
-            for pdf in it:
-                rows = []
-                for media_id, kind, payload in zip(
-                        pdf["media_id"], pdf["kind"], pdf["payload"]):
-                    payload = bytes(payload) if payload is not None else b""
-                    row = {
-                        "media_id": media_id, "kind": kind, "format": None,
-                        "n_bytes": len(payload),
-                        "sha1": hashlib.sha1(payload).hexdigest(),
-                        "width": None, "height": None, "channels": None,
-                        "sample_rate": None, "n_frames": None,
-                        "duration_ms": None, "error": None,
-                    }
-                    try:
-                        p = codecs.probe(payload)
-                        row.update(
-                            format=p["format"], width=p["width"],
-                            height=p["height"], channels=p["channels"],
-                            sample_rate=p["sample_rate"],
-                            n_frames=p["n_frames"],
-                            duration_ms=p["duration_ms"])
-                    except (codecs.UnsupportedMedia,
-                            codecs.CorruptMedia) as exc:
-                        row["error"] = f"{type(exc).__name__}: {exc}"
-                    rows.append(row)
-                yield pd.DataFrame(rows, columns=names)
-
-        return df.mapInPandas(real_batches, REAL_FEATURE_SCHEMA)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def real_batches(it: Iterator[pd.DataFrame]) \
+            -> Iterator[pd.DataFrame]:
+        names = [f.name for f in REAL_FEATURE_SCHEMA]
         for pdf in it:
-            feats = []
-            # itertuples over the three needed columns — iterrows
-            # materializes a Series per row (10×+ slower per batch)
+            rows = []
             for media_id, kind, payload in zip(
                     pdf["media_id"], pdf["kind"], pdf["payload"]):
                 payload = bytes(payload) if payload is not None else b""
-                d = _fake_decode(payload, kind)
-                feats.append({
-                    "media_id": media_id,
-                    "kind": kind,
+                row = {
+                    "media_id": media_id, "kind": kind, "format": None,
                     "n_bytes": len(payload),
                     "sha1": hashlib.sha1(payload).hexdigest(),
-                    "width": d["width"],
-                    "height": d["height"],
-                    "duration_ms": d["duration_ms"],
-                })
-            yield pd.DataFrame(feats, columns=[f.name for f in FEATURE_SCHEMA])
-
-    return df.mapInPandas(batches, FEATURE_SCHEMA)
-
-
-PROBE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("kind", T.StringType(), False),
-    T.StructField("n_bytes", T.LongType(), True),
-    T.StructField("md5", T.StringType(), True),
-    T.StructField("width", T.IntegerType(), True),
-    T.StructField("height", T.IntegerType(), True),
-    T.StructField("duration_ms", T.LongType(), True),
-])
-
-
-def probe_payloads(df: DataFrame, id_col: str = "media_id",
-                   kind_col: str = "kind",
-                   payload_col: str = "payload") -> DataFrame:
-    """Oracle-able twin of ``extract_features``: same Arrow-batched
-    ``mapInPandas`` plumbing (the real multimodal execution path), but
-    the deterministic fake decode is seeded from md5 so a SQL engine
-    can replay it bit-for-bit.  Used by the correctness gate to prove
-    the batch iteration, schema, and partition-preserving shape — the
-    codec call is the only stubbed piece (see ``_fake_decode``).
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for media_id, kind, payload in zip(
-                    pdf["media_id"], pdf["kind"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                h = hashlib.md5(payload).hexdigest()
-                seed = int(h[:8], 16)
-                width = height = duration = None
-                if kind == "image":
-                    width = 64 + seed % 1024
-                    height = 64 + (seed >> 10) % 1024
-                else:
-                    duration = 1000 + seed % 600000
-                out.append({"media_id": media_id, "kind": kind,
-                            "n_bytes": len(payload), "md5": h,
-                            "width": width, "height": height,
-                            "duration_ms": duration})
-            yield pd.DataFrame(out, columns=[f.name for f in PROBE_SCHEMA])
-
-    cols = [F.col(id_col).alias("media_id"), F.col(kind_col).alias("kind"),
-            F.col(payload_col).alias("payload")]
-    return df.select(*cols).mapInPandas(batches, PROBE_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Plan video frame-sampling: one row per (media_id, frame_ts).
-
-    The expensive decode happens downstream per planned frame; planning
-    itself is a pure projection + explode (scales linearly).
-    """
-    feats = extract_features(df)
-    ts = F.sequence(F.lit(0),
-                    F.coalesce(F.col("duration_ms"), F.lit(0)),
-                    F.lit(every_ms))
-    return (feats.filter(F.col("kind") == "video")
-            .select("media_id", F.explode(ts).alias("frame_ts_ms")))
-
-
-RESIZE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("payload", T.BinaryType(), True),   # re-encoded PNG
-    T.StructField("width", T.IntegerType(), True),
-    T.StructField("height", T.IntegerType(), True),
-    T.StructField("error", T.StringType(), True),
-])
-
-
-def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Real image resize: decode PNG/BMP → nearest-neighbor resample →
-    re-encode PNG.  Pure map stage (no shuffle); decode errors become
-    ``error`` rows so one corrupt object can't fail a 100 TB pass.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [f.name for f in RESIZE_SCHEMA]
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                row = {"media_id": media_id, "payload": None,
-                       "width": None, "height": None, "error": None}
+                    "width": None, "height": None, "channels": None,
+                    "sample_rate": None, "n_frames": None,
+                    "duration_ms": None, "error": None,
+                }
                 try:
-                    fmt = codecs.sniff_format(payload)
-                    if fmt == "png":
-                        img = codecs.decode_png(payload)
-                    elif fmt == "bmp":
-                        img = codecs.decode_bmp(payload)
-                    else:
-                        raise codecs.UnsupportedMedia(
-                            f"resize needs png/bmp, got {fmt}")
-                    out = codecs.resize_nearest(img, width, height)
-                    row.update(payload=codecs.encode_png(out),
-                               width=width, height=height)
+                    p = codecs.probe(payload)
+                    row.update(
+                        format=p["format"], width=p["width"],
+                        height=p["height"], channels=p["channels"],
+                        sample_rate=p["sample_rate"],
+                        n_frames=p["n_frames"],
+                        duration_ms=p["duration_ms"])
                 except (codecs.UnsupportedMedia,
                         codecs.CorruptMedia) as exc:
                     row["error"] = f"{type(exc).__name__}: {exc}"
                 rows.append(row)
             yield pd.DataFrame(rows, columns=names)
 
-    return (df.select("media_id", "payload")
-            .mapInPandas(batches, RESIZE_SCHEMA))
-
-
-AUDIO_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("sample_rate", T.IntegerType(), True),
-    T.StructField("channels", T.IntegerType(), True),
-    T.StructField("n_frames", T.IntegerType(), True),
-    T.StructField("duration_ms", T.LongType(), True),
-    T.StructField("rms", T.DoubleType(), True),
-    T.StructField("peak", T.DoubleType(), True),
-    T.StructField("error", T.StringType(), True),
-])
-
-
-def audio_stats(df: DataFrame) -> DataFrame:
-    """Real audio feature extraction: decode WAV PCM and compute
-    normalized RMS / peak amplitude per payload (numpy over the raw
-    sample matrix inside the Arrow batch — no per-sample Python)."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [f.name for f in AUDIO_SCHEMA]
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                row = dict.fromkeys(names)
-                row.update(media_id=media_id)
-                try:
-                    meta = codecs.probe_wav(payload)
-                    samples, rate = codecs.decode_wav(payload)
-                    x = samples.astype(np.float64)
-                    scale = float(np.iinfo(samples.dtype).max) or 1.0
-                    x = x / scale
-                    row.update(sample_rate=rate,
-                               channels=meta["channels"],
-                               n_frames=meta["n_frames"],
-                               duration_ms=meta["duration_ms"],
-                               rms=float(np.sqrt((x ** 2).mean()))
-                               if x.size else 0.0,
-                               peak=float(np.abs(x).max())
-                               if x.size else 0.0)
-                except (codecs.UnsupportedMedia,
-                        codecs.CorruptMedia) as exc:
-                    row["error"] = f"{type(exc).__name__}: {exc}"
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=names)
-
-    return (df.select("media_id", "payload")
-            .mapInPandas(batches, AUDIO_SCHEMA))
-
-
-FRAME_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("frame_index", T.IntegerType(), False),
-    T.StructField("frame_ts_ms", T.LongType(), True),
-    T.StructField("frame_payload", T.BinaryType(), True),
-    T.StructField("frame_width", T.IntegerType(), True),
-    T.StructField("frame_height", T.IntegerType(), True),
-])
-
-
-def extract_frames(df: DataFrame, every_ms: int | None = None) -> DataFrame:
-    """REAL video frame extraction for AVI containers: walk the
-    ``movi`` list, emit one row per (sampled) frame with its bytes and
-    timestamp; MJPEG frames additionally get probed dimensions.
-
-    ``every_ms=None`` keeps every frame; otherwise frames are sampled
-    at that timestamp stride.  One input row fans out to its frames
-    inside the same task — a flatMap-shaped stage, still no shuffle.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [f.name for f in FRAME_SCHEMA]
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    meta = codecs.probe_avi(payload)
-                    frames = codecs.avi_frames(payload)
-                except (codecs.UnsupportedMedia, codecs.CorruptMedia):
-                    continue
-                ms_pf = meta["usec_per_frame"] / 1000.0
-                next_ts = 0.0
-                for i, frame in enumerate(frames):
-                    ts = i * ms_pf
-                    if every_ms is not None:
-                        if ts + 1e-9 < next_ts:
-                            continue
-                        next_ts += every_ms
-                    fw = fh = None
-                    try:
-                        pj = codecs.probe_jpeg(frame)
-                        fw, fh = pj["width"], pj["height"]
-                    except Exception:
-                        pass  # non-JPEG codec: keep the raw bytes
-                    rows.append({"media_id": media_id, "frame_index": i,
-                                 "frame_ts_ms": int(ts),
-                                 "frame_payload": frame,
-                                 "frame_width": fw, "frame_height": fh})
-            yield pd.DataFrame(rows, columns=names)
-
-    return (df.select("media_id", "payload")
-            .mapInPandas(batches, FRAME_SCHEMA))
-
-
-def synthetic_real_media(spark, n: int = 24) -> DataFrame:
-    """Deterministic media table whose payloads are REAL encoded files
-    (PNG images, PCM WAVs, MJPEG AVIs) built by :mod:`.codecs` — lets
-    tests exercise the genuine decode path without any external codec
-    library or binary fixtures."""
-    import numpy as np
-    rows = []
-    for i in range(n):
-        kind = ["image", "audio", "video"][i % 3]
-        rng = np.random.default_rng(1000 + i)
-        if kind == "image":
-            img = rng.integers(0, 256, size=(16 + i % 7, 12 + i % 5, 3),
-                               dtype=np.uint8)
-            payload, mime = codecs.encode_png(img), "image/png"
-        elif kind == "audio":
-            samples = rng.integers(-20000, 20000,
-                                   size=(800 + 100 * (i % 4), 1),
-                                   dtype=np.int16)
-            payload, mime = codecs.encode_wav(samples, 8000), "audio/wav"
-        else:
-            # SOF0 layout: precision, HEIGHT, WIDTH, ncomp
-            jpg = (b"\xff\xd8\xff\xc0\x00\x11\x08"
-                   + (48 + i).to_bytes(2, "big")
-                   + (64 + i).to_bytes(2, "big")
-                   + b"\x03" + bytes(9) + b"\xff\xd9")
-            payload = codecs.encode_avi_mjpeg([jpg] * (2 + i % 3),
-                                              64 + i, 48 + i, fps=10)
-            mime = "video/x-msvideo"
-        rows.append((i, kind, mime, payload, {"src": f"synthetic://{i}"}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def synthetic_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic fake media table for tests (payload = seeded bytes)."""
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = hashlib.sha256(str(i).encode()).digest() * 4
-        rows.append((i, kind, f"application/x-{kind}", payload,
-                     {"src": f"synthetic://{i}"}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return df.mapInPandas(real_batches, REAL_FEATURE_SCHEMA)

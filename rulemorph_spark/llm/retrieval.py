@@ -176,11 +176,9 @@ def bm25_write_index(corpus: DataFrame, path: str,
     """Materialize the BM25 index at ``path``: postings range-clustered
     and sorted by term (so each file's parquet footer covers a narrow
     term range — a query's equality filters row-group-prune to the
-    matched terms' files), plus the 1-row stats table.
-
-    This is the retrieval analogue of ``similarity.ivf_write_index``:
-    build once, then any number of query batches run as pruned scans
-    with no re-tokenization of the corpus.
+    matched terms' files), plus the 1-row stats table.  Build once,
+    then any number of query batches run as pruned scans with no
+    re-tokenization of the corpus.
     """
     postings, stats = bm25_index(corpus, text_col, id_col)
     (postings.repartitionByRange(num_files, "term")

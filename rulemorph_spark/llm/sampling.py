@@ -73,29 +73,3 @@ def mixture_sample(df: DataFrame, stratum_col: str,
                            F.lit(int(round(frac * buckets)))) \
             .otherwise(threshold)
     return df.filter(bucket < threshold)
-
-
-def shuffle_deterministic(df: DataFrame, id_col: str = "doc_id",
-                          salt: str = "shuffle",
-                          num_partitions: int | None = None
-                          ) -> DataFrame:
-    """Global pseudo-random but REPRODUCIBLE corpus ordering — the
-    training-epoch shuffle: order by ``xxhash64(salt, id)``.  Identical
-    on every rerun, engine, and input partitioning; change ``salt`` to
-    get an independent permutation (one per epoch).
-
-    Scale shape: a range-partitioned sort on the hash key — the one
-    shuffle any global ordering costs, with no driver involvement;
-    writing the result preserves the order file-by-file (Spark writes
-    partitions in range order), which is what a sequential training
-    reader consumes.
-    """
-    key = F.xxhash64(F.lit(salt), F.col(id_col))
-    out = df.withColumn("__shuffle_key__", key)
-    if num_partitions:
-        out = out.repartitionByRange(num_partitions,
-                                     F.col("__shuffle_key__"))
-    else:
-        out = out.repartitionByRange(F.col("__shuffle_key__"))
-    return (out.sortWithinPartitions("__shuffle_key__")
-            .drop("__shuffle_key__"))

@@ -101,9 +101,9 @@ def semdedup(df: DataFrame, id_col: str = "doc_id",
     group).  Filter ``keep`` to materialize the pruned corpus.
 
     ``centroids``: a trained (cell, cvec) table (e.g. from
-    ``clustering.kmeans_train`` or ``train_ivf_centroids``) — pass it
-    to reuse an existing clustering; omitted, a fresh ``k``-cluster
-    model is trained from the corpus itself.
+    ``clustering.kmeans_train``) — pass it to reuse an existing
+    clustering; omitted, a fresh ``k``-cluster model is trained from
+    the corpus itself.
 
     A pair is a near-duplicate when cosine ≥ ``1 - eps`` (the paper's
     parameterization).

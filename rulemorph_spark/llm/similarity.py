@@ -1,15 +1,16 @@
-"""Approximate / exact nearest-neighbor search over embedding columns.
+"""Approximate / exact nearest-neighbor candidates over embedding columns.
 
-- brute-force cosine top-k: the correctness baseline — a crossJoin
-  pruned to the query set, windowed rank.  Fine for ≤10⁵ corpus ×
-  small query batches.
-- IVF (inverted-file) top-k: the scale path — k-means-style coarse
-  cells (deterministic seed centroids), each vector assigned to its
-  nearest cell, queries probe only ``nprobe`` cells.  At 100 TB the
-  cell assignment is a broadcast join against ≤64k centroids and the
-  probe is a partition-pruned scan when the table is written
-  partitioned by cell id.
-- LSH (random-hyperplane) top-k: the centroid-free scale path — each
+Each strategy returns un-ranked ``(query_id, neighbor, cosine)`` rows;
+the caller ranks them (``q_ann_topk`` ranks all three under one
+window).
+
+- brute force: the correctness baseline — a crossJoin against the
+  broadcast query set.  Fine for ≤10⁵ corpus × small query batches.
+- IVF (inverted-file): the scale path — k-means-style coarse cells
+  (deterministic seed centroids), each vector assigned to its nearest
+  cell, queries probe only ``nprobe`` cells.  At 100 TB the cell
+  assignment is a per-row argmax over ≤64k broadcast centroids.
+- LSH (random-hyperplane): the centroid-free scale path — each
   vector gets an ``nbits``-bit sign signature under pseudo-random ±1
   hyperplanes; candidates share a bucket with the query (multi-probe:
   plus all buckets at Hamming distance 1).  No training step, a single
@@ -22,7 +23,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import cosine_similarity
@@ -31,10 +32,11 @@ from .dedup import cosine_similarity
 def brute_force_scored(corpus: DataFrame, queries: DataFrame, id_col: str,
                        vec_col: str, query_id: str = "query_id"
                        ) -> DataFrame:
-    """Exact cosine of every (corpus row, query) pair — the un-ranked
-    half of :func:`brute_force_topk`, exposed so composite callers can
-    rank several strategies' candidates under ONE shared window
-    (r9, guide §2.4: one exchange instead of one per strategy)."""
+    """Exact cosine of every (corpus row, query) pair, un-ranked, so
+    composite callers can rank several strategies' candidates under ONE
+    shared window (r9, guide §2.4: one exchange instead of one per
+    strategy).  Cosine is rounded to 6 places so rank ties break on the
+    neighbor id deterministically across engines."""
     q = queries.select(F.col(id_col).alias(query_id),
                        F.col(vec_col).alias("__qv__"))
     joined = corpus.crossJoin(F.broadcast(q)) \
@@ -42,23 +44,6 @@ def brute_force_scored(corpus: DataFrame, queries: DataFrame, id_col: str,
     cos = F.round(cosine_similarity(vec_col, "__qv__"), 6)
     return joined.select(F.col(query_id), F.col(id_col).alias("neighbor"),
                          cos.alias("cosine"))
-
-
-def brute_force_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
-                     vec_col: str, k: int = 5,
-                     query_id: str = "query_id") -> DataFrame:
-    """Exact top-k by cosine for each query vector.
-
-    Output: (query_id, neighbor id, rounded cosine, rank).  Cosine is
-    rounded before ranking so ties break on id deterministically across
-    engines.
-    """
-    scored = brute_force_scored(corpus, queries, id_col, vec_col,
-                                query_id)
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col("neighbor").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
 
 
 def _cents_1row(centroids: DataFrame, centroid_id: str,
@@ -126,68 +111,6 @@ def _probe_cells(vec_col: str, nprobe: int) -> Column:
                              6))).alias("negc"),
             c["cell"].alias("cell"))))
     return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cell"])
-
-
-def ivf_assign(corpus: DataFrame, centroids: DataFrame, id_col: str,
-               vec_col: str, centroid_id: str = "cell",
-               centroid_vec: str = "cvec") -> DataFrame:
-    """Assign each vector to its nearest centroid.
-
-    r9 (guide §2.4): the centroid table collapses to a one-row struct
-    array (broadcast), and the assignment is a per-row argmax
-    EXPRESSION — the former crossJoin blew the corpus up k-fold and
-    shuffled it through a per-id row_number window (an Exchange of
-    corpus×k rows carrying the full vectors).  Same assignment
-    bit-for-bit (`tests/test_similarity.py` equivalence pin)."""
-    cell_type = centroids.schema[centroid_id].dataType
-    base = _with_cents(corpus, centroids, centroid_id, centroid_vec)
-    return (base
-            .select(id_col, vec_col,
-                    _nearest_cell(vec_col, cell_type).alias(centroid_id))
-            .filter(F.col(centroid_id).isNotNull()))
-
-
-def ivf_write_index(corpus: DataFrame, centroids: DataFrame, path: str,
-                    id_col: str, vec_col: str) -> None:
-    """Materialize the IVF index: the corpus with cell assignments,
-    written **partitioned by cell id**.
-
-    This is what makes IVF sublinear at rest: a probe of ``nprobe``
-    cells becomes a partition-pruned scan (``PartitionFilters`` in the
-    plan) — only nprobe/ncells of the files are opened, no full-corpus
-    scan per query batch.
-    """
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    assigned.write.partitionBy("cell").mode("overwrite").parquet(path)
-
-
-def ivf_topk_indexed(spark, index_path: str, queries: DataFrame,
-                     centroids: DataFrame, id_col: str, vec_col: str,
-                     k: int = 5, nprobe: int = 2) -> DataFrame:
-    """IVF search against a materialized index (``ivf_write_index``).
-
-    Collects the probe cells (tiny: queries × nprobe) and pushes them
-    into the scan as a partition filter, so only the probed cells'
-    files are read.
-    """
-    qbase = _with_cents(
-        queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("__qv__")),
-        centroids)
-    probe = qbase.select("query_id", "__qv__",
-                         F.explode(_probe_cells("__qv__", nprobe))
-                         .alias("cell"))
-    cells = [r["cell"] for r in probe.select("cell").distinct().collect()]
-    index = spark.read.parquet(index_path).filter(F.col("cell").isin(cells))
-    cand = index.join(F.broadcast(probe), "cell") \
-        .filter(F.col(id_col) != F.col("query_id"))
-    cos = F.round(cosine_similarity(vec_col, "__qv__"), 6)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
-                                               F.col("neighbor").asc())
-    return (cand.select("query_id", F.col(id_col).alias("neighbor"),
-                        cos.alias("cosine"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
 
 
 _LCG_A = 1_013_904_223
@@ -280,7 +203,7 @@ def lsh_scored(corpus: DataFrame, queries: DataFrame, id_col: str,
     probed buckets, never a cross product.  Output may rank fewer than
     ``k`` neighbors for a query when its probed buckets are sparse —
     the standard ANN recall trade-off (raise ``nbits`` probing or fall
-    back to ``brute_force_topk`` for stragglers).
+    back to ``brute_force_scored`` for stragglers).
     """
     # one unbound expression reused for both sides — Column trees are
     # immutable, and building the signature once halves the py4j cost
@@ -309,19 +232,6 @@ def lsh_scored(corpus: DataFrame, queries: DataFrame, id_col: str,
     cos = F.round(cosine_similarity(vec_col, "__qv__"), 6)
     return cand.select("query_id", F.col(id_col).alias("neighbor"),
                        cos.alias("cosine"))
-
-
-def lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
-             vec_col: str, k: int = 5, nbits: int = 6,
-             multiprobe: bool = True) -> DataFrame:
-    """LSH approximate top-k: :func:`lsh_scored` candidates ranked by
-    (cosine DESC, neighbor ASC) per query."""
-    scored = lsh_scored(corpus, queries, id_col, vec_col, nbits,
-                        multiprobe)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
-                                               F.col("neighbor").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
 
 
 def ivf_scored(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
@@ -354,62 +264,3 @@ def ivf_scored(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
     cos = F.round(cosine_similarity(vec_col, "__qv__"), 6)
     return cand.select("query_id", F.col(id_col).alias("neighbor"),
                        cos.alias("cosine"))
-
-
-def ivf_topk(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
-             id_col: str, vec_col: str, k: int = 5,
-             nprobe: int = 2) -> DataFrame:
-    """IVF search: probe the ``nprobe`` nearest cells per query.
-
-    At scale, corpus-by-cell is a bucketed/partitioned table, so each
-    query touches ~nprobe/ncells of the data instead of all of it.
-    """
-    scored = ivf_scored(corpus, queries, centroids, id_col, vec_col,
-                        nprobe)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
-                                               F.col("neighbor").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
-
-def l2_normalize(vec: Column) -> Column:
-    """Unit-normalize a float array (zero vectors pass through
-    unchanged — no NaNs).  The norm is hoisted through a
-    single-element transform so it evaluates once per row, not once
-    per component (interpreted-HOF re-eval, see dedup gram builders).
-    After normalization, cosine == dot product, which halves the
-    per-pair cost of every downstream similarity op."""
-    def build(v: Column) -> Column:
-        norm = F.sqrt(F.aggregate(
-            v, F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double")))
-        return F.element_at(
-            F.transform(
-                F.array(norm),
-                lambda n: F.when(n == 0, v.cast("array<double>"))
-                .otherwise(F.transform(
-                    v, lambda x: x.cast("double") / n))), 1)
-
-    return F.element_at(F.transform(F.array(vec), build), 1)
-
-
-def mean_pool(df: DataFrame, group_col: str, vec_col: str,
-              out_col: str = "vec") -> DataFrame:
-    """Element-wise mean vector per group — pool chunk/passage
-    embeddings into one document embedding (the standard retrieval /
-    semdedup preprocessing).  Same distributed shape as the k-means
-    centroid update: posexplode → groupBy(group, dim) avg →
-    re-assemble; shuffle key space = groups × dims with map-side
-    partial aggregation."""
-    dims = df.select(
-        F.col(group_col),
-        F.posexplode(F.col(vec_col)).alias("__d__", "__v__"))
-    means = (dims.groupBy(group_col, "__d__")
-             .agg(F.avg("__v__").alias("__m__")))
-    return (means.groupBy(group_col)
-            .agg(F.array_sort(F.collect_list(
-                F.struct(F.col("__d__"), F.col("__m__"))))
-                 .alias("__p__"))
-            .select(F.col(group_col),
-                    F.transform(F.col("__p__"),
-                                lambda p: p["__m__"]).alias(out_col)))

@@ -42,14 +42,6 @@ def stopword_ratio(text: Column) -> Column:
         F.size(stops).cast("double") / F.size(words).cast("double"))
 
 
-def mean_word_length(text: Column) -> Column:
-    words = F.split(F.trim(text), WORD_SPLIT_RE)
-    total = F.aggregate(words, F.lit(0).cast("long"),
-                        lambda acc, w: acc + F.length(w))
-    return F.when(F.size(words) == 0, F.lit(0.0)).otherwise(
-        total.cast("double") / F.size(words).cast("double"))
-
-
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality heuristic: length band + stopword presence
     + punctuation sanity.  A cheap first-pass filter for pretraining
@@ -140,21 +132,6 @@ def fingerprint_from_words(words: Column,
     array."""
     head = F.slice(words, 1, prefix_words)
     return F.md5(F.array_join(head, " "))
-
-
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass projection adding all text-analysis columns."""
-    t = F.col(text_col)
-    return df.select(
-        "*",
-        char_count(t).alias("n_chars_computed"),
-        word_count(t).alias("n_words"),
-        token_count(t).alias("n_tokens"),
-        F.round(stopword_ratio(t), 6).alias("stop_ratio"),
-        F.round(quality_score(t), 6).alias("quality"),
-        lang_id_en(t).alias("lang_pred"),
-        fingerprint(t).alias("fp"),
-    )
 
 
 # ---------------------------------------------------------------------
@@ -266,43 +243,11 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
             .agg(F.count("*").alias("n_hit_shingles")))
 
 
-def decontaminate_bloom(corpus: DataFrame, benchmark: DataFrame,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        n: int = 8, fpp: float = 0.001) -> DataFrame:
-    """Bloom-accelerated :func:`decontaminate` — identical output.
-
-    When the benchmark shingle set is too large to broadcast as rows
-    (a full eval-suite union can be 10⁸ shingles), a Bloom filter over
-    it is ~KBs-per-million-keys and has **no false negatives**: corpus
-    shingles that fail the filter are dropped before the join, the
-    ≈``fpp`` false positives are removed by the exact broadcast join
-    over the survivors.  The corpus side still never shuffles until
-    the per-doc count fold — this just shrinks the join input by
-    ~the contamination rate.
-    """
-    from ..functions.sketches import bloom_build_auto, bloom_might_contain
-    bench_sh = (benchmark
-                .select(F.explode(shingle_strings(F.col(text_col), n))
-                        .alias("sh"))
-                .distinct())
-    # r9: one job sizes AND builds (the distinct-pair collect is the
-    # exact count) — the former count() was a second full shingle pass
-    bits, num_bits, num_hashes = bloom_build_auto(bench_sh, "sh", fpp)
-    corp_sh = corpus.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(shingle_strings(F.col(text_col), n)))
-        .alias("sh"))
-    candidates = (bloom_might_contain(corp_sh, "sh", bits, num_bits,
-                                      num_hashes, out_col="__mc__")
-                  .filter(F.col("__mc__")).drop("__mc__"))
-    return (candidates.join(F.broadcast(bench_sh), "sh")
-            .groupBy(id_col)
-            .agg(F.count("*").alias("n_hit_shingles")))
-
-
-def repetition_cols(text: Column, n: int = 3) -> tuple[Column, Column]:
-    """Gopher-style repetition signals as pure per-row Columns (public
-    recipe: Rae et al. 2021 §A1.1): ``top_gram_frac`` = share of the
+def repetition_cols_from_words(words: Column,
+                               n: int = 3) -> tuple[Column, Column]:
+    """Gopher-style repetition signals as pure per-row Columns over a
+    PRE-TOKENIZED lowercased word array (public recipe: Rae et al.
+    2021 §A1.1): ``top_gram_frac`` = share of the
     most frequent n-gram, ``dup_gram_frac`` = share of n-gram
     occurrences whose n-gram appears more than once.
 
@@ -317,18 +262,10 @@ def repetition_cols(text: Column, n: int = 3) -> tuple[Column, Column]:
     (The round-1 form exploded to (doc, gram) rows and aggregated
     twice — two corpus-sized shuffles for a row-local computation;
     measured at sf0.1 this form is also ~1.2× faster than the explode
-    even before network costs.)
+    even before network costs.)  Callers computing several per-doc
+    signals materialize the tokens once in a prior projection and share
+    them (one split per row instead of one per signal).
     """
-    return repetition_cols_from_words(
-        F.split(F.lower(F.trim(text)), WORD_SPLIT_RE), n)
-
-
-def repetition_cols_from_words(words: Column,
-                               n: int = 3) -> tuple[Column, Column]:
-    """:func:`repetition_cols` over a PRE-TOKENIZED lowercased word
-    array — callers computing several per-doc signals materialize the
-    tokens once in a prior projection and share them (one split per
-    row instead of one per signal)."""
     acc0 = F.struct(F.lit(None).cast("long").alias("prev"),
                     F.lit(0).cast("long").alias("run"),
                     F.lit(0).cast("long").alias("maxrun"),
@@ -365,15 +302,6 @@ def repetition_cols_from_words(words: Column,
 
     res = F.transform(F.array(words), whole)[0]
     return F.round(res["top"], 6), F.round(res["dup"], 6)
-
-
-def repetition_stats(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """DataFrame form of :func:`repetition_cols` — one narrow
-    projection, no shuffle, linear scale-out."""
-    top, dup = repetition_cols(F.col(text_col), n)
-    return df.select(F.col(id_col), top.alias("top_gram_frac"),
-                     dup.alias("dup_gram_frac"))
 
 
 def tfidf_top_terms(df: DataFrame, text_col: str = "text",
@@ -430,41 +358,3 @@ def assign_token_bins(df: DataFrame, token_col: str, budget: int,
         F.lit(0))
     return df.withColumn("bin",
                          F.floor(preceding / F.lit(budget)).cast("long"))
-
-
-def pack_sequences(df: DataFrame, token_col: str, budget: int,
-                   text_col: str = "text", part_col: str = "source",
-                   order_col: str = "doc_id") -> DataFrame:
-    """Materialize :func:`assign_token_bins` into the rows a
-    fixed-context trainer consumes: one row per (partition key, bin)
-    with the member documents in deterministic order, their
-    concatenated text, token total, and budget utilization.
-
-    Same scale shape as the binning itself (one window shuffle + one
-    groupBy on the same key — co-partitioned, AQE coalesced); the
-    per-sequence ``docs`` array is bounded by the token budget, not
-    the corpus.  The straddling document stays whole in the bin its
-    prefix sum chose — consumers truncate or overflow-split exactly
-    as fixed-context pretraining does.
-
-    Output: (part_col, bin, docs array, n_docs, text, n_tokens,
-    fill_frac).
-    """
-    binned = assign_token_bins(df, token_col, budget, part_col,
-                               order_col)
-    members = F.array_sort(F.collect_list(
-        F.struct(F.col(order_col).alias("o"),
-                 F.col(text_col).alias("t"),
-                 F.col(token_col).alias("n"))))
-    agg = (binned.groupBy(part_col, "bin")
-           .agg(members.alias("__m__")))
-    return agg.select(
-        part_col, "bin",
-        F.transform(F.col("__m__"), lambda m: m["o"]).alias("docs"),
-        F.size(F.col("__m__")).alias("n_docs"),
-        F.array_join(F.transform(F.col("__m__"), lambda m: m["t"]),
-                     "\n").alias("text"),
-        F.aggregate(F.col("__m__"), F.lit(0).cast("long"),
-                    lambda a, m: a + m["n"]).alias("n_tokens")
-    ).withColumn("fill_frac",
-                 F.round(F.col("n_tokens") / F.lit(budget), 4))

@@ -14,10 +14,9 @@ Exactly-once discipline (the standard idempotent-foreachBatch recipe):
   recovered/re-run epoch rewrites the same directory instead of
   duplicating rows;
 - fingerprints append only AFTER the survivors are durable
-  (durability ordering, same invariant as ``dedup_incremental``); a
-  crash between the two writes re-runs the epoch: the fresh set
-  recomputes identically (fps not yet committed), the overwrite is
-  idempotent;
+  (durability ordering); a crash between the two writes re-runs the
+  epoch: the fresh set recomputes identically (fps not yet
+  committed), the overwrite is idempotent;
 - a re-run after BOTH writes committed computes an empty fresh set and
   leaves the durable directory untouched.
 

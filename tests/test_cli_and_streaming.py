@@ -202,6 +202,22 @@ def test_csv_index_has_no_global_window(spark, tmp_path):
     assert [r["__idx__"] for r in rows] == list(range(100))
 
 
+def test_csv_text_transform_leaves_no_temp_file(spark, tmp_path,
+                                                monkeypatch):
+    """CSV text input is spooled to a temp file for the reader; the
+    file must be gone once the transform returns (a long-lived server
+    runs one transform per request)."""
+    from rulemorph_spark.engine import transform
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rule = ("version: 1\ninput:\n  format: csv\n  csv:\n"
+            "    has_header: true\nmappings:\n"
+            "  - target: name\n    source: name\n")
+    out = transform(spark, rule, input_text="id,name\n1,a\n2,b\n")
+    assert out == [{"name": "a"}, {"name": "b"}]
+    assert list(tmp_path.glob("*.csv")) == []
+
+
 def test_zip_with_index_multi_partition(spark):
     """dense 0-based index across MANY partitions: every index appears
     exactly once and follows partition order (the per-partition offset

@@ -48,9 +48,10 @@ def test_plan_summary_counts_shuffles_and_python_evals(spark):
               .filter("o_totalprice > 100").select("o_orderkey"))
     assert plan_summary(narrow)["wholestage_codegen_spans"] >= 1
 
-    from rulemorph_spark.llm.multimodal import synthetic_media, \
-        extract_features
-    media = synthetic_media(spark, n=4)
+    from rulemorph_spark.llm.multimodal import extract_features
+    media = spark.createDataFrame(
+        [(i, "image", bytes([i]) * 16) for i in range(4)],
+        "media_id long, kind string, payload binary")
     assert plan_summary(extract_features(media))["python_udf_evals"] >= 1
 
 

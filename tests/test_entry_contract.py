@@ -62,6 +62,84 @@ def test_only_engine_reads_the_environment():
     assert sites == []
 
 
+# Library defs that no program calls, kept because tests check a live
+# operator against them (or read back what it writes).
+_REFERENCE_DEFS = {
+    "dup_span_coverage",     # remove_dup_spans
+    "bloom_split",           # bloom_route
+    "seed_centroids",        # kmeans_train
+    "kmeans_inertia",        # kmeans_train
+    "read_training_shards",  # write_training_shards
+}
+# functions/diag.py helpers only tests call; the run report (ROADMAP
+# direction 5) gives them a caller or deletes them.
+_DIAG_DEFS = {"partition_skew", "key_skew", "interp_bridge_stats"}
+
+
+def test_library_defs_have_program_callers():
+    """Every public top-level def in ``llm/`` and ``functions/`` is
+    reached from a program — the package (CLI, service, MCP),
+    ``__spark_entry__.py``, ``bench.py``, ``perfbench/`` or
+    ``scripts/`` — or is named above.  Reachability is by name through
+    the library's own bodies; ``__init__`` re-exports, ``__all__`` and
+    docstrings do not count.  An operator only tests call is code to
+    maintain with no user."""
+    import ast
+    import pathlib
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "rulemorph_spark"
+    libs = (pkg / "llm", pkg / "functions")
+    programs = ([*pkg.rglob("*.py"), root / "__spark_entry__.py",
+                 root / "bench.py", *(root / "scripts").glob("*.py")]
+                + [p for p in (root / "perfbench").rglob("*.py")
+                   if "tests" not in p.parts])
+
+    def names(node, alias):
+        return {alias.get(n.id, n.id) if isinstance(n, ast.Name)
+                else n.attr for n in ast.walk(node)
+                if isinstance(n, (ast.Name, ast.Attribute))}
+
+    reached, uses, public = set(), {}, set()
+    for path in programs:
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        alias = {a.asname: a.name.rsplit(".", 1)[-1]
+                 for n in ast.walk(tree)
+                 if isinstance(n, (ast.Import, ast.ImportFrom))
+                 for a in n.names if a.asname}
+        in_lib = any(d in path.parents for d in libs)
+        if path.name == "__init__.py" and in_lib:
+            continue  # re-exports only
+        for st in tree.body:
+            if isinstance(st, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(st, ast.Assign) and any(
+                    isinstance(t, ast.Name) and t.id == "__all__"
+                    for t in st.targets):
+                continue
+            defined = ([st.name] if isinstance(
+                st, (ast.FunctionDef, ast.ClassDef)) else
+                [t.id for t in getattr(st, "targets", [])
+                 if isinstance(t, ast.Name)])
+            if in_lib and defined:
+                for name in defined:
+                    uses.setdefault(name, set()).update(names(st, alias))
+                if isinstance(st, ast.FunctionDef) and \
+                        not st.name.startswith("_"):
+                    public.add(f"{path.relative_to(pkg)}:{st.name}")
+            else:
+                reached |= names(st, alias)
+    todo = list(reached)
+    while todo:
+        for name in uses.get(todo.pop(), ()):
+            if name not in reached:
+                reached.add(name)
+                todo.append(name)
+    keep = _REFERENCE_DEFS | _DIAG_DEFS
+    unused = sorted(d for d in public
+                    if d.rsplit(":", 1)[1] not in reached | keep)
+    assert unused == []
+
+
 def test_agg_cents_equivalence(spark):
     """r9: the cents-based q_agg_pricing_summary must be bit-identical
     to the original decimal(18,2)-sum formulation on every SF the

@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from rulemorph_spark.functions.diag import plan_summary
 from rulemorph_spark.llm.extract import (
     domain_filter,
-    extract_links,
     html_to_text,
     url_domain,
 )
@@ -45,12 +44,6 @@ def test_html_to_text_blocks_and_noise(spark):
     assert got[2] == "unclosed still fine"
     assert got[3] == ""
     assert got[4] == "plain text, no tags"
-
-
-def test_extract_links(spark):
-    df = spark.createDataFrame([(1, HTML)], "doc_id long, html string")
-    links = extract_links(df).collect()[0]["links"]
-    assert links == ["https://example.com/a"]
 
 
 def test_url_domain_forms(spark):

@@ -13,9 +13,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from rulemorph_spark.functions.relational import (
-    asof_join, range_join_binned, salted_join, write_bucketed)
-
-SF_DIR = "/root/testdata/sf0.001"
+    asof_join, range_join_binned, salted_join)
 
 
 def test_asof_backward_basic(spark):
@@ -93,39 +91,6 @@ def test_range_join_boundaries(spark):
     assert sorted(r["rid"] for r in out.collect()) == [0, 1]
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    sf = "/root/testdata/sf0.001"
-    o = spark.read.parquet(f"{sf}/orders.parquet") \
-        .select("o_orderkey", "o_totalprice")
-    li = spark.read.parquet(f"{sf}/lineitem.parquet") \
-        .select("l_orderkey", "l_quantity")
-    expected = o.join(li, o.o_orderkey == li.l_orderkey).count()
-
-    write_bucketed(o, "bj_orders", "o_orderkey", buckets=8,
-                   path=str(tmp_path / "o"))
-    write_bucketed(li, "bj_lineitem", "l_orderkey", buckets=8,
-                   path=str(tmp_path / "li"))
-    try:
-        a, b = spark.table("bj_orders"), spark.table("bj_lineitem")
-        j = a.join(b, a.o_orderkey == b.l_orderkey)
-        # force the sort-merge path: broadcast would bypass bucketing on
-        # these tiny test tables (at scale both sides are too big to
-        # broadcast, which is the case bucketing exists for)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = j._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        # co-located bucketed join: no shuffle on either side
-        assert "Exchange" not in plan, plan
-        assert j.count() == expected
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bj_orders")
-        spark.sql("DROP TABLE IF EXISTS bj_lineitem")
-
-
 def test_salted_join_equals_plain_join(spark):
     # hot key 7 has 200 rows on the left
     left = spark.createDataFrame(
@@ -151,21 +116,3 @@ def test_connected_components_chain_and_island(spark):
            for r in connected_components(edges).collect()}
     assert got == {(0, 0), (1, 0), (2, 0), (3, 0), (4, 0),
                    (10, 10), (11, 10)}
-
-
-def test_grouped_percentiles_sketch_close_to_exact(spark):
-    """the approx (sketch) path tracks the exact sort path within the
-    documented rank-error bound — the flip-a-flag contract."""
-    from rulemorph_spark.functions.relational import grouped_percentiles
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    qs = [0.25, 0.5, 0.9]
-    exact = {r[0]: r[1] for r in grouped_percentiles(
-        li, "l_returnflag", "l_quantity", qs, exact=True).collect()}
-    approx = {r[0]: r[1] for r in grouped_percentiles(
-        li, "l_returnflag", "l_quantity", qs, exact=False,
-        accuracy=10_000).collect()}
-    assert exact.keys() == approx.keys()
-    for g in exact:
-        for e, a in zip(exact[g], approx[g]):
-            # l_quantity spans 1..50; 1e-4 rank error is far under 1 unit
-            assert abs(e - a) <= 1.0, (g, exact[g], approx[g])

@@ -44,6 +44,29 @@ def _py_bm25(docs: dict, queries: dict, k1=K1, b=B):
     return out
 
 
+def _file_bounds(path: str, col: str) -> list[tuple]:
+    """(min, max) of ``col`` per parquet data file, from the footers —
+    the stats a scan planner prunes files with."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for name in sorted(os.listdir(path)):
+        if not name.endswith(".parquet"):
+            continue
+        md = pq.ParquetFile(os.path.join(path, name)).metadata
+        stats = [rg.column(ci).statistics
+                 for rg in (md.row_group(i) for i in range(md.num_row_groups))
+                 for ci in range(rg.num_columns)
+                 if rg.column(ci).path_in_schema == col]
+        stats = [st for st in stats if st is not None and st.has_min_max]
+        if stats:
+            out.append((min(st.min for st in stats),
+                        max(st.max for st in stats)))
+    return out
+
+
 def test_bm25_matches_python_reference(spark):
     docs_df = (spark.read.parquet(f"{SF}/documents.parquet")
                .select("doc_id", "text").limit(120).cache())
@@ -147,10 +170,8 @@ def test_bm25_indexed_matches_adhoc_and_prunes(spark, tmp_path):
     assert [(r[0], r[1], round(r[2], 9), r[3]) for r in a] == \
         [(r[0], r[1], round(r[2], 9), r[3]) for r in e]
     # clustered postings: term ranges are tight per file (prunable)
-    from rulemorph_spark.functions.layout import file_column_bounds
-    bounds = file_column_bounds(f"{path}/postings", ["term"])
-    assert len(bounds) >= 2
-    spans = sorted((b["term_min"], b["term_max"]) for b in bounds)
+    spans = sorted(_file_bounds(f"{path}/postings", "term"))
+    assert len(spans) >= 2
     for (lo1, hi1), (lo2, _) in zip(spans, spans[1:]):
         assert hi1 <= lo2  # disjoint sorted ranges
     # the pushed IN filter appears in the scan

@@ -1,10 +1,11 @@
-"""Round-2 operators: bloom-pruned joins, unigram-LM quality scoring,
-distributed k-means, bloom decontamination.
+"""Round-2 operators: the Bloom semi/anti split, unigram-LM quality
+scoring, distributed k-means, duplicate-span coverage, perplexity
+buckets and multi-language ID.
 
 Each scale-path operator is verified against its exact counterpart
-(bloom joins vs plain joins, decontaminate_bloom vs decontaminate,
-Spark k-means vs a NumPy Lloyd reference) — the same
-exact-equivalence strategy the round-1 ANN/dedup suites use.
+(the Bloom split vs plain joins, Spark k-means vs a NumPy Lloyd
+reference) — the same exact-equivalence strategy the round-1
+ANN/dedup suites use.
 """
 
 from __future__ import annotations
@@ -25,59 +26,6 @@ def _t(spark, name):
 
 def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
-
-
-# -------------------------------------------------------------- bloom joins
-
-def test_bloom_semi_join_matches_exact(spark):
-    from rulemorph_spark.functions.relational import bloom_semi_join
-    orders = _t(spark, "orders")
-    # a selective dim: customers in one segment
-    dim = (_t(spark, "customer")
-           .filter(F.col("c_mktsegment") == "BUILDING")
-           .select("c_custkey"))
-    got = bloom_semi_join(orders, dim, "o_custkey", "c_custkey")
-    want = orders.join(dim, orders["o_custkey"] == dim["c_custkey"],
-                       "left_semi")
-    assert _rows(got, ["o_orderkey"]) == _rows(want, ["o_orderkey"])
-
-
-def test_bloom_anti_join_matches_exact(spark):
-    from rulemorph_spark.functions.relational import bloom_anti_join
-    orders = _t(spark, "orders")
-    dim = (_t(spark, "customer")
-           .filter(F.col("c_mktsegment") == "BUILDING")
-           .select("c_custkey"))
-    got = bloom_anti_join(orders, dim, "o_custkey", "c_custkey")
-    want = orders.join(dim, orders["o_custkey"] == dim["c_custkey"],
-                       "left_anti")
-    assert _rows(got, ["o_orderkey"]) == _rows(want, ["o_orderkey"])
-
-
-def test_bloom_prune_no_false_negatives_and_selective(spark):
-    from rulemorph_spark.functions.relational import bloom_prune
-    orders = _t(spark, "orders")
-    dim = (_t(spark, "customer")
-           .filter(F.col("c_custkey") % 50 == 0).select("c_custkey"))
-    pruned = bloom_prune(orders, dim, "o_custkey", "c_custkey", fpp=0.01)
-    truth = orders.join(dim, orders["o_custkey"] == dim["c_custkey"],
-                        "left_semi")
-    n_truth, n_pruned, n_all = truth.count(), pruned.count(), orders.count()
-    # every true match survives (no false negatives) ...
-    missing = truth.join(pruned.select("o_orderkey"), "o_orderkey",
-                         "left_anti").count()
-    assert missing == 0
-    # ... and the filter actually prunes (false positives ≈ fpp)
-    assert n_truth <= n_pruned < n_all
-    assert n_pruned - n_truth <= max(20, 0.05 * n_all)
-
-
-def test_bloom_semi_join_empty_dim(spark):
-    from rulemorph_spark.functions.relational import bloom_semi_join
-    orders = _t(spark, "orders")
-    dim = _t(spark, "customer").filter(F.lit(False)).select("c_custkey")
-    assert bloom_semi_join(orders, dim, "o_custkey", "c_custkey",
-                           expected_items=1).count() == 0
 
 
 # ---------------------------------------------------------------- LM scoring
@@ -147,7 +95,8 @@ def _np_kmeans(vecs, seed_idx, iters):
 
 
 def test_kmeans_matches_numpy_reference(spark):
-    from rulemorph_spark.llm.clustering import assign_cells, kmeans_train
+    from rulemorph_spark.llm.clustering import (assign_cells_with_vec,
+                                                kmeans_train)
     emb = (_t(spark, "embeddings")
            .select("vec_id",
                    F.transform("embedding",
@@ -157,8 +106,8 @@ def test_kmeans_matches_numpy_reference(spark):
     k, iters = 6, 4
     trained = kmeans_train(emb, "vec_id", "embedding", k, iters=iters)
     got_assign = {r["vec_id"]: r["cell"]
-                  for r in assign_cells(emb, trained, "vec_id",
-                                        "embedding").collect()}
+                  for r in assign_cells_with_vec(emb, trained, "vec_id",
+                                                 "embedding").collect()}
 
     rows = sorted(emb.collect(), key=lambda r: r["vec_id"])
     ids = np.array([r["vec_id"] for r in rows])
@@ -216,14 +165,20 @@ def test_kmeans_null_vectors_cannot_seed_and_ragged_raises(spark):
 
 
 def test_trained_centroids_feed_ivf(spark):
-    from rulemorph_spark.llm.clustering import train_ivf_centroids
-    from rulemorph_spark.llm.similarity import ivf_topk
+    from pyspark.sql import Window
+
+    from rulemorph_spark.llm.clustering import kmeans_train
+    from rulemorph_spark.llm.similarity import ivf_scored
     emb = _t(spark, "embeddings")
-    cents = train_ivf_centroids(emb, "vec_id", "embedding", k=8, iters=2)
+    cents = kmeans_train(emb, "vec_id", "embedding", k=8, iters=2)
     assert cents.count() == 8
     queries = emb.filter(F.col("vec_id") % 100 == 0)
-    top = ivf_topk(emb, queries, cents, "vec_id", "embedding", k=3,
-                   nprobe=3)
+    scored = ivf_scored(emb, queries, cents, "vec_id", "embedding",
+                        nprobe=3)
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
+                                               F.col("neighbor").asc())
+    top = (scored.withColumn("rank", F.row_number().over(w))
+           .filter(F.col("rank") <= 3))
     assert top.count() == queries.count() * 3
 
 
@@ -272,19 +227,6 @@ def test_cents_inline_literal_matches_broadcast(spark, monkeypatch):
                                 "cell int, cvec array<double>")
     bad._rm_cents_rows = [(0, [float("nan")])]
     assert cents_inline(bad) is None
-
-
-# -------------------------------------------------------- bloom decontaminate
-
-def test_decontaminate_bloom_matches_exact(spark):
-    from rulemorph_spark.llm.text import decontaminate, decontaminate_bloom
-    docs = _t(spark, "documents")
-    bench = docs.filter(F.col("doc_id") % 23 == 0)
-    corpus = docs.filter(F.col("doc_id") % 23 != 0)
-    exact = decontaminate(corpus, bench, n=8)
-    fast = decontaminate_bloom(corpus, bench, n=8, fpp=0.001)
-    cols = ["doc_id", "n_hit_shingles"]
-    assert _rows(fast, cols) == _rows(exact, cols)
 
 
 # ---------------------------------------------------- dup-span coverage

@@ -76,20 +76,3 @@ def test_token_bins_match_prefix_sum_model(spark, tokens, budget):
             want.add((i, cum // budget))
             cum += t
     assert got == want
-
-
-def test_shuffle_deterministic_is_reproducible_permutation(spark):
-    from rulemorph_spark.llm.sampling import shuffle_deterministic
-    df = spark.range(5000).withColumnRenamed("id", "doc_id")
-    a = [r["doc_id"] for r in
-         shuffle_deterministic(df, num_partitions=8).collect()]
-    b = [r["doc_id"] for r in
-         shuffle_deterministic(df.repartition(13),
-                               num_partitions=8).collect()]
-    assert a == b                       # rerun + repartition stable
-    assert sorted(a) == list(range(5000))   # a permutation
-    assert a != list(range(5000))       # actually shuffled
-    c = [r["doc_id"] for r in
-         shuffle_deterministic(df, salt="epoch2",
-                               num_partitions=8).collect()]
-    assert sorted(c) == list(range(5000)) and c != a  # fresh epoch

@@ -107,7 +107,8 @@ def test_short_docs_do_not_crash_gram_ops(spark):
     for the ANSI-mode element_at crash (Spark 4 default)."""
     from rulemorph_spark.llm.dedup import (dup_span_coverage,
                                            remove_dup_spans)
-    from rulemorph_spark.llm.text import repetition_stats
+    from rulemorph_spark.llm.text import (WORD_SPLIT_RE,
+                                          repetition_cols_from_words)
     df = spark.createDataFrame(
         [(1, "tiny"), (2, "two words"), (3, "two words"),
          (4, "a full length document with plenty of tokens inside")],
@@ -119,16 +120,18 @@ def test_short_docs_do_not_crash_gram_ops(spark):
     cut = {r["doc_id"]: r["text"]
            for r in remove_dup_spans(df, n=5, min_docs=2).collect()}
     assert cut[2] == "" and cut[1] == "tiny"
-    reps = repetition_stats(df, n=3).collect()
+    words = F.split(F.lower(F.trim(F.col("text"))), WORD_SPLIT_RE)
+    reps = df.select(*repetition_cols_from_words(words, 3)).collect()
     assert len(reps) == 4
 
 
 # -------------------------------------------------------------- SemDeDup
 
 def _collect_semdedup_inputs(spark, centroids):
-    from rulemorph_spark.llm.clustering import assign_cells
+    from rulemorph_spark.llm.clustering import assign_cells_with_vec
     emb = _t(spark, "embeddings")
-    assigned = assign_cells(emb, centroids, "vec_id", "embedding")
+    assigned = assign_cells_with_vec(emb, centroids, "vec_id",
+                                     "embedding").select("vec_id", "cell")
     rows = (emb.join(assigned, "vec_id")
             .select("vec_id", "embedding", "cell").collect())
     cent = {r["cell"]: r["cvec"] for r in centroids.collect()}
@@ -239,28 +242,3 @@ def test_semdedup_sharding_bounds_group_size(spark):
     kept = [r for r in out if r["keep"]]
     # one survivor per shard (all 40 are identical): 40/10 = 4 shards
     assert 1 <= len(kept) <= 4
-
-
-# ------------------------------------------------- embedding hygiene
-
-def test_l2_normalize_and_mean_pool(spark):
-    import math
-    from rulemorph_spark.llm.similarity import l2_normalize, mean_pool
-    df = spark.createDataFrame(
-        [(1, [3.0, 4.0]), (2, [0.0, 0.0]), (3, [1.0, 0.0])],
-        "id long, v array<double>")
-    got = {r["id"]: r["n"] for r in
-           df.select("id", l2_normalize(F.col("v")).alias("n"))
-           .collect()}
-    assert got[1] == [0.6, 0.8]
-    assert got[2] == [0.0, 0.0]          # zero vector: no NaNs
-    assert got[3] == [1.0, 0.0]
-    assert math.isclose(sum(x * x for x in got[1]), 1.0)
-
-    chunks = spark.createDataFrame(
-        [(10, [1.0, 3.0]), (10, [3.0, 5.0]), (20, [2.0, 2.0])],
-        "doc_id long, emb array<double>")
-    pooled = {r["doc_id"]: r["vec"] for r in
-              mean_pool(chunks, "doc_id", "emb").collect()}
-    assert pooled[10] == [2.0, 4.0]
-    assert pooled[20] == [2.0, 2.0]

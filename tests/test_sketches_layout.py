@@ -1,56 +1,20 @@
-"""Sketch operators (HLL distinct, Bloom prefilter) and Z-order layout
-clustering: accuracy, no-false-negative, and measured pruning-quality
-guarantees."""
+"""Bloom prefilter sketches: sizing, no-false-negative and
+false-positive-rate guarantees, and the serialized-filter contract."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from rulemorph_spark.functions.layout import (cluster_write,
-                                              file_column_bounds,
-                                              zorder_key)
 from rulemorph_spark.functions.sketches import (bloom_build,
                                                 bloom_might_contain,
-                                                bloom_params, hll_distinct,
-                                                hll_merge_estimate,
-                                                hll_sketch_table)
+                                                bloom_params)
 
 
 def _keys(spark, n, mod, prefix="u"):
     return (spark.range(n)
             .withColumn("k", F.concat(F.lit(prefix),
                                       (F.col("id") % mod).cast("string"))))
-
-
-# ----------------------------------------------------------------- HLL
-
-
-def test_hll_distinct_accuracy(spark):
-    df = _keys(spark, 20000, 3137)
-    est = hll_distinct(df, "k").collect()[0]["approx_distinct"]
-    assert abs(est - 3137) / 3137 < 0.05
-
-
-def test_hll_grouped_and_merge_equivalence(spark):
-    df = _keys(spark, 10000, 997).withColumn(
-        "g", (F.col("id") % 2).cast("string"))
-    grouped = {r["g"]: r["approx_distinct"]
-               for r in hll_distinct(df, "k", ["g"]).collect()}
-    assert set(grouped) == {"0", "1"}
-    # incremental pattern: sketch per (g, batch), merge later — the
-    # merged estimate must equal the direct whole-data estimate exactly
-    # (HLL union is lossless over identical lgk registers)
-    batches = df.withColumn("batch", (F.col("id") % 5).cast("string"))
-    sketches = hll_sketch_table(batches, "k", ["g", "batch"])
-    assert sketches.count() == 10
-    merged = {r["g"]: r["approx_distinct"]
-              for r in hll_merge_estimate(sketches, ["g"]).collect()}
-    assert merged == grouped
-    total = hll_merge_estimate(sketches).collect()[0]["approx_distinct"]
-    direct = hll_distinct(df, "k").collect()[0]["approx_distinct"]
-    assert total == direct
 
 
 # --------------------------------------------------------------- Bloom
@@ -185,82 +149,3 @@ def test_bloom_build_saturated_key_set_is_bounded_and_identical(spark):
     # no false negatives still holds
     probe = bloom_might_contain(many, "k", via_fallback, num_bits, k)
     assert probe.filter(~F.col("might_contain")).count() == 0
-
-
-# -------------------------------------------------------------- Z-order
-
-
-def _zref(xs, ys, bits=8):
-    """Pure-python Morton reference over pre-scaled ints."""
-    out = []
-    for x, y in zip(xs, ys):
-        z = 0
-        for b in range(bits):
-            z |= ((x >> b) & 1) << (2 * b)
-            z |= ((y >> b) & 1) << (2 * b + 1)
-        out.append(z)
-    return out
-
-
-def test_zorder_key_matches_reference(spark):
-    top = 255
-    # both dims end exactly at 255 so min/max scaling is the identity
-    rows = [(x, y) for x in range(0, 256, 17) for y in range(0, 256, 15)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    got = (df.withColumn("z", zorder_key(df, ["x", "y"], bits=8))
-           .orderBy("x", "y").collect())
-    # with min=0 / max=255 the scaling is identity, so the key must be
-    # bit-exact Morton interleave
-    xs = [r["x"] for r in got]
-    ys = [r["y"] for r in got]
-    assert [r["z"] for r in got] == _zref(xs, ys)
-    assert top == 255  # scaling identity precondition
-
-
-def test_zorder_key_validation(spark):
-    df = spark.createDataFrame([(1, 2)], "x long, y long")
-    with pytest.raises(ValueError):
-        zorder_key(df, [])
-    with pytest.raises(ValueError):
-        zorder_key(df, ["x", "y"], bits=32)  # 64 > 63
-
-
-def test_cluster_write_tightens_file_bounds(spark, tmp_path):
-    """The measurable claim: Z-order clustering shrinks per-file
-    bounding boxes on BOTH dimensions vs the unclustered layout, so
-    min/max pruning works for predicates on either column."""
-    rng = np.random.default_rng(7)
-    pts = rng.integers(0, 10_000, size=(20_000, 2))
-    df = spark.createDataFrame(
-        [(int(x), int(y)) for x, y in pts], "x long, y long") \
-        .repartition(8)  # random layout baseline
-
-    naive = str(tmp_path / "naive")
-    clustered = str(tmp_path / "clustered")
-    df.write.parquet(naive)
-    cluster_write(df, ["x", "y"], clustered, num_files=8)
-
-    def mean_area(path):
-        bounds = file_column_bounds(path, ["x", "y"])
-        assert bounds, f"no stats read from {path}"
-        areas = [(b["x_max"] - b["x_min"]) * (b["y_max"] - b["y_min"])
-                 for b in bounds]
-        return sum(areas) / len(areas)
-
-    naive_area = mean_area(naive)
-    clustered_area = mean_area(clustered)
-    # each of 8 z-range files should cover ~1/8 of the plane; random
-    # files cover ~all of it.  Require at least a 3x tightening.
-    assert clustered_area < naive_area / 3, (naive_area, clustered_area)
-
-    # clustering preserves the data
-    back = spark.read.parquet(clustered)
-    assert back.count() == 20_000
-    assert back.agg(F.sum("x"), F.sum("y")).collect() == \
-        df.agg(F.sum("x"), F.sum("y")).collect()
-
-
-def test_zorder_rejects_non_numeric(spark):
-    df = spark.createDataFrame([(1, "a")], "x long, s string")
-    with pytest.raises(ValueError, match="non-numeric"):
-        zorder_key(df, ["x", "s"])
