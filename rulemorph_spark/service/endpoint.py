@@ -19,17 +19,33 @@ Mirrors ``crates/rulemorph_endpoint/src/endpoint_engine.rs``:
 
 This layer is driver-side (per-request, single record).  Every rule a
 request runs (steps, ``input`` mappings, conditions, reply expressions)
-goes through ``transform_record``.  It compiles each rule once per
-session and caches the analyzed plan, keyed by rule content and
-``base_dir`` (at most 64 plans, least recently used evicted first).
-The context is not in the key: each request's record and context
-(step params, a catch handler's ``@context.error``) are bound into a
-fresh copy of that plan, on a driver-local 1-row relation; the row
-parse, the copy, optimization and ``finalize`` still run per request.
-No Spark job runs unless the rule needs a Python-UDF bridge op or a
-``finalize.filter`` over ``@item.index``.  A cached plan keeps, until
-evicted, the branch-target rule files it read at its first compile and
-the session settings bound at analysis (such as the time zone).
+goes through ``transform_record`` (``record.py``):
+
+- **Optimized-plan cache.**  Each rule is compiled and optimized once
+  per session, over an opaque record leaf that keeps the optimizer from
+  folding the plan.  The optimized plan is cached, keyed by rule content
+  and ``base_dir`` (at most 64 plans, least recently used evicted
+  first).  The context is not in the key: step params and a catch
+  handler's ``@context.error`` are read from the request's row.
+- **Evaluator pool.**  A request borrows an evaluator: the plan's
+  ``Project``/``Filter`` chain bound once as Catalyst's interpreted
+  projections and predicates.  A session keeps at most
+  ``defaultParallelism`` evaluators per plan and 16 in all; a request
+  waits while none can be had.
+- **Per request** there remain the record's JSON text and about ten
+  py4j calls to fill the input row and run the chain: no plan copy,
+  optimizer run, ``Dataset`` or Spark job.  A rule with ``finalize``
+  also runs that step as a query over a driver-local relation holding
+  the evaluated row.
+- **The one Dataset path.**  A rule whose optimized plan is not such a
+  chain (a Python-UDF bridge op puts an ``ArrowEvalPython`` node in it)
+  runs a rebound copy of its analyzed plan as a ``Dataset`` per request,
+  and one Spark job.  A ``finalize.filter`` over ``@item.index`` also
+  runs a job.
+
+A cached plan keeps, until evicted, the branch-target rule files it read
+at its first compile and the session settings bound at analysis (such
+as the time zone).
 
 Request bodies are read as serde_json reads them: ``NaN``,
 ``Infinity`` and numbers (float or integer literals) that overflow a
@@ -744,7 +760,7 @@ class EndpointEngine:
                     if rule.select:
                         try:
                             tokens = parse_path(rule.select)
-                        except Exception:
+                        except RuleError:
                             raise EndpointError(
                                 "Invalid",
                                 f"invalid select path: {rule.select}")

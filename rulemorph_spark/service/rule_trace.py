@@ -47,7 +47,7 @@ from ..errors import RuleError, TransformEngineError
 from ..expr_ir import (IfStep, LetStep, MapStep, OpStep, RefStep,
                        StartLiteral, StartPipeValue, StartRef, is_v2_expr,
                        parse_expr)
-from ..model import Mapping, RuleFile
+from ..model import Mapping, RuleFile, parse_rule_dict
 
 _ERRS = (TransformEngineError, RuleError,
          _interp.InterpError, _interp.InterpRuleError)
@@ -624,9 +624,10 @@ def _branch_child_trace(spark, target_path: str, step_input, context,
         if isinstance(doc, dict):
             doc = dict(doc)
             doc.pop("type", None)
-        from ..model import parse_rule_dict
         sub = parse_rule_dict(doc)
-    except Exception:
+    except (OSError, yaml.YAMLError, RuleError):
+        # an unreadable or invalid branch target has no child trace;
+        # any other failure reaches the step's ``trace_error``
         return None
     sub_dir = os.path.dirname(resolved)
     child_nodes = build_rule_nodes_from_rule(spark, sub, step_input,

@@ -130,6 +130,35 @@ def test_endpoint_network_step_with_select(spark, engine_dir):
     assert log[0][1] == "http://upstream/users/42"
 
 
+
+def test_select_path_error_is_invalid_but_other_errors_surface(
+        spark, engine_dir, monkeypatch):
+    """Only a path error (``RuleError``) is an invalid select path; a
+    fault in the parser itself is not reported as one."""
+    from rulemorph_spark.errors import RuleError
+    from rulemorph_spark.service import endpoint
+
+    def call():
+        eng = EndpointEngine(spark, f"{engine_dir}/endpoint.yaml",
+                             http_opener=_fake_http_factory([]))
+        return eng.handle_request("GET", "/users/42",
+                                  query={"verbose": "true"}, headers={})
+
+    def bad_path(path):
+        raise RuleError("invalid_path", "path segment is empty")
+
+    monkeypatch.setattr(endpoint, "parse_path", bad_path)
+    status, _, body = call()
+    assert (status, body["kind"]) == (500, "Invalid")
+    assert body["message"] == "invalid select path: data.name"
+
+    def parser_bug(path):
+        raise TypeError("parser bug (injected)")
+
+    monkeypatch.setattr(endpoint, "parse_path", parser_bug)
+    with pytest.raises(TypeError, match="parser bug"):
+        call()
+
 def test_endpoint_network_retry_and_catch(spark, engine_dir):
     calls = []
 

@@ -1,12 +1,12 @@
 """Single-record service transforms (``service.record.transform_record``)
-run on a driver-local 1-row relation: the optimizer folds the rule plan
-into a ``LocalTableScan`` and ``collect()`` launches no Spark job.
+run on the driver and launch no Spark job.
 
 Each transform runs on a fresh ``threading.Thread``, like a
 ``ThreadingHTTPServer`` request, which has no ambient active session.
 Replies match the interpreter oracle, and errors keep their kind,
-message and path.  A rule compiles once per session; later calls run a
-copy of its cached plan rebound to their own record.
+message and path.  A rule compiles and optimizes once per session;
+later calls evaluate its cached plan with a pooled evaluator, and only
+a plan that is not a Project/Filter chain runs a rebound ``Dataset``.
 """
 
 from __future__ import annotations
@@ -101,6 +101,11 @@ def _oracle(rule, record, context=None):
     except interp.InterpError as e:
         return ("err", e.kind, e.message, e.path)
     return ("ok", None if v is interp.MISSING else v)
+
+
+def _entry(spark, rule: str):
+    """The session's cache entry for ``rule``."""
+    return record_mod._plans[spark][(repr(parse_rule_file(rule)), ".")]
 
 
 def test_job_counter_sees_a_job(spark):
@@ -244,15 +249,28 @@ def test_cached_rule_compiles_once_and_runs_no_job(spark, compiles):
         assert res == _oracle(F5_RULE, body)
 
 
-def test_cached_rules_answer_each_request_thread(spark):
+def test_cached_rules_answer_each_request_thread(spark, monkeypatch):
     """Eight request threads (more than the cores) share one cached plan
-    per rule; each reply belongs to its own record."""
+    per rule and its pool: each reply belongs to its own record, and no
+    plan ever has more live evaluators than its bound."""
+    record_mod._plans.pop(spark, None)
+    record_mod._pools.pop(spark, None)
     bodies = _bodies(seed=12, n=16)
     cases = ([(F5_RULE, b) for b in bodies]
              + [(INPUT_RULE, {"body": b, "i": i})
                 for i, b in enumerate(bodies)])
     transform_record(spark, F5_RULE, bodies[0])
     transform_record(spark, INPUT_RULE, {"body": bodies[0]})
+    plans = [_entry(spark, F5_RULE), _entry(spark, INPUT_RULE)]
+    evaluators = record_mod._pools[spark]
+    seen = []
+    call = record_mod._Evaluator.__call__
+
+    def observed(self, raw, ctx):
+        seen.append(dict(evaluators.live))
+        return call(self, raw, ctx)
+
+    monkeypatch.setattr(record_mod._Evaluator, "__call__", observed)
 
     def run(case):
         rule, rec = case
@@ -270,6 +288,12 @@ def test_cached_rules_answer_each_request_thread(spark):
         sys.setswitchinterval(interval)
     for (rule, rec), res in zip(cases, got):
         assert res == _oracle(rule, rec)
+    assert len(seen) == len(cases)
+    for plan in plans:
+        assert plan.bound == spark.sparkContext.defaultParallelism
+        assert max(live.get(plan, 0) for live in seen) <= plan.bound
+    assert all(sum(live.values()) <= record_mod._EVALUATORS
+               for live in seen)
 
 
 def test_error_leaves_the_cached_plan_intact(spark):
@@ -353,7 +377,19 @@ mappings:
 """
 
 
-def test_bridge_op_rule_is_cached_and_answers_per_record(spark, compiles):
+def test_bridge_op_rule_is_cached_and_answers_per_record(spark, compiles,
+                                                         monkeypatch):
+    """A Python-UDF bridge op cannot run inside a projection: its plan
+    takes the Dataset path, the entry says why, and every call rebinds
+    the cached plan to its own record."""
+    rebinds = []
+    rebound = record_mod._rebound
+
+    def counting(*args):
+        rebinds.append(1)
+        return rebound(*args)
+
+    monkeypatch.setattr(record_mod, "_rebound", counting)
     records = [{"obj": {"a": {"b": i}, "c": [i, {"d": "x" * i}]}}
                for i in range(3)]
     for i, rec in enumerate(records):
@@ -362,6 +398,125 @@ def test_bridge_op_rule_is_cached_and_answers_per_record(spark, compiles):
         assert ("ok", res) == _oracle(BRIDGE_RULE, rec)
         if i:
             assert compiles["n"] == before
+    entry = _entry(spark, BRIDGE_RULE)
+    assert entry.bound == 0
+    assert "EvalPython" in entry.reason
+    assert len(rebinds) == len(records)
+
+
+# --- evaluators ----------------------------------------------------------
+
+@pytest.fixture
+def no_dataset(spark, monkeypatch):
+    """Calling it makes every later SQL query and Dataset-path call
+    raise."""
+    def arm():
+        def refuse(*args, **kwargs):
+            raise AssertionError("a cached evaluator plan built a Dataset")
+
+        monkeypatch.setattr(type(spark), "sql", refuse)
+        monkeypatch.setattr(record_mod, "_rebound", refuse)
+    return arm
+
+
+@pytest.mark.parametrize("rule,records", [
+    (F5_RULE, _bodies(seed=14, n=6)),
+    (INPUT_RULE, [{"body": b, "i": i}
+                  for i, b in enumerate(_bodies(seed=15, n=3))]),
+    (WHEN_RULE, [{"keep": True, "n": 2}, {"keep": False, "n": 3},
+                 {"keep": True, "n": "x"}]),
+], ids=["f5", "input", "when"])
+def test_hit_builds_no_dataset(spark, no_dataset, rule, records):
+    transform_record(spark, rule, records[0])
+    assert _entry(spark, rule).reason is None
+    no_dataset()
+    for rec in records:
+        res, jobs = _on_request_thread(
+            spark, lambda r=rec: transform_record(spark, rule, r))
+        assert res == _oracle(rule, rec)
+        assert jobs == 0
+
+
+def test_record_when_false_returns_none_through_the_filter(spark,
+                                                           no_dataset):
+    transform_record(spark, WHEN_RULE, {"keep": True, "n": 1})
+    no_dataset()
+    ev = record_mod._Evaluator(spark, _entry(spark, WHEN_RULE).serialized)
+    assert [p for p, _ in ev.steps].count(False) == 1  # one Filter
+    assert ev('{"keep": false, "n": 1}', None) is None
+    assert ev('{"keep": true, "n": 1}', None) == '{"n":2.0}'
+    res, _ = _on_request_thread(
+        spark, lambda: transform_record(spark, WHEN_RULE,
+                                        {"keep": False, "n": 1}))
+    assert res == ("ok", None) == _oracle(WHEN_RULE, {"keep": False, "n": 1})
+
+
+FALSE_WHEN_RULE = """
+version: 2
+input: {format: json}
+mappings:
+  - target: a
+    expr: ["@input.s", {"+": [1]}]
+    when: {eq: ["@input.go", true]}
+  - target: b
+    expr: "@input.s"
+"""
+
+
+def test_false_when_skips_a_mapping_that_would_raise(spark, no_dataset):
+    records = [{"go": False, "s": "x"}, {"go": True, "s": 2},
+               {"go": True, "s": "x"}, {"s": "y"}]
+    transform_record(spark, FALSE_WHEN_RULE, {"go": True, "s": 1})
+    no_dataset()
+    for rec in records:
+        res, _ = _on_request_thread(
+            spark, lambda r=rec: transform_record(spark, FALSE_WHEN_RULE, r))
+        assert res == _oracle(FALSE_WHEN_RULE, rec), rec
+    assert _oracle(FALSE_WHEN_RULE, records[0]) == ("ok", {"b": "x"})
+    assert _oracle(FALSE_WHEN_RULE, records[2])[0] == "err"
+
+
+# map keys repeat: the session's LAST_WIN dedup policy keeps the last
+KEY_BY_RULE = """
+version: 2
+input: {format: json}
+mappings:
+  - target: by_id
+    expr: ["@input.xs", {key_by: ["@item.id"]}]
+"""
+
+
+def test_evaluator_reads_the_session_settings(spark, no_dataset):
+    """An evaluator runs on a request thread, outside any query: it
+    still evaluates under the session's settings."""
+    transform_record(spark, KEY_BY_RULE, {"xs": []})
+    no_dataset()
+    # the request thread builds, and first runs, its own evaluator
+    record_mod._pools.pop(spark, None)
+    rec = {"xs": [{"id": "a", "v": 1}, {"id": "b", "v": 2},
+                  {"id": "a", "v": 3}]}
+    res, _ = _on_request_thread(
+        spark, lambda: transform_record(spark, KEY_BY_RULE, rec))
+    assert res == _oracle(KEY_BY_RULE, rec)
+    assert res[1]["by_id"]["a"] == {"id": "a", "v": 3}
+
+
+def test_session_cap_drops_the_least_recently_used_evaluator(
+        spark, monkeypatch):
+    monkeypatch.setattr(record_mod, "_EVALUATORS", 2)
+    record_mod._plans.pop(spark, None)
+    record_mod._pools.pop(spark, None)
+    rules = [f"version: 2\ninput: {{format: json}}\nmappings:\n"
+             f"  - target: v\n    expr: [\"@input.n\", {{\"+\": [{i}]}}]\n"
+             for i in range(3)]
+    for n in range(2):
+        for i, rule in enumerate(rules):
+            assert transform_record(spark, rule, {"n": n}) == \
+                {"v": float(n + i)}
+            live = record_mod._pools[spark].live
+            assert sum(live.values()) <= 2
+        # the first rule's evaluator was the least recently used
+        assert set(live) == {_entry(spark, rules[1]), _entry(spark, rules[2])}
 
 
 # --- non-finite numbers ------------------------------------------------

@@ -8,6 +8,7 @@ import tempfile
 
 import pytest
 
+from rulemorph_spark.errors import RuleError
 from rulemorph_spark.service.endpoint import EndpointEngine
 from rulemorph_spark.service.trace import build_api_graph
 
@@ -837,3 +838,39 @@ mappings:
     step = rule_steps[0]
     assert "child_trace" not in step
     assert "replay exploded (injected)" in step["trace_error"]
+
+
+@pytest.mark.parametrize("error,recorded", [
+    (TypeError("replay bug (injected)"), True),
+    (RuleError("invalid_rule", "bad branch target (injected)"), False),
+], ids=["other_error", "rule_error"])
+def test_branch_child_trace_failure_reaches_trace_error(
+        spark, svc_dir, tmp_path, monkeypatch, error, recorded):
+    """An invalid branch target has no child trace; any other failure
+    while replaying it is recorded on the step as ``trace_error``."""
+    import json as _json
+
+    from rulemorph_spark.service import rule_trace
+
+    def fail(doc):
+        raise error
+
+    monkeypatch.setattr(rule_trace, "parse_rule_dict", fail)
+    tdir = tmp_path / "traces"
+    eng = EndpointEngine(spark, f"{svc_dir}/endpoint.yaml",
+                         http_opener=lambda *a: (200, {"up": True}),
+                         trace_dir=str(tdir))
+    status, _, _ = eng.handle_request("GET", "/things/5")
+    assert status == 200
+    docs = [fn for fn in os.listdir(tdir) if fn.endswith(".json")]
+    with open(tdir / docs[0]) as fh:
+        doc = _json.load(fh)
+    step = [s for s in doc["steps"] if s["kind"] == "step"][0]
+    if recorded:
+        assert "child_trace" not in step
+        assert "TypeError: replay bug (injected)" in step["trace_error"]
+    else:
+        assert "trace_error" not in step
+        branch = [n for n in step["child_trace"]["records"][0]["nodes"]
+                  if n["kind"] == "branch"][0]
+        assert "child_trace" not in branch
