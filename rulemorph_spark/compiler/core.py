@@ -211,11 +211,6 @@ class OpPath(str):
         return self.sub(j)
 
 
-# back-compat alias: a v1 standalone step path
-def V1OpPath(step_path: str, base: str) -> OpPath:
-    return OpPath(step_path, "v1_standalone", base)
-
-
 def raw_path(path, j: int) -> str:
     """Lambda-arg path (raw args index; see :meth:`OpPath.raw`)."""
     return path.raw(j) if isinstance(path, OpPath) else path

@@ -202,12 +202,6 @@ def op_flatten(scope, cur, args, path):
     return V.arr_to_variant(arr)
 
 
-def _int_arg(scope, cur, arg: Pipe, path: str) -> Column:
-    from .ops_scalar import _as_i64
-    value = compile_pipe(arg, scope.child(pipe=cur), path)
-    return _as_i64(value, path, "count must be an integer")
-
-
 def _clamped_count(n: Column, size: Column) -> Column:
     """saturate n to [-size, size] — overflow-safe like the reference's
     take/drop (``tests/array_ops_overflow_32bit.rs``); avoids ANSI

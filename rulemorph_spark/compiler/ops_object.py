@@ -125,7 +125,7 @@ def op_deep_merge(scope, cur, args, path):
         for o in ops
     ]).cast("array<string>"))
     # array of JSON texts; decode inside the UDF (paths precomputed to
-    # plain strings so the closure never pickles a V1OpPath)
+    # plain strings so the closure never pickles an OpPath)
     arg_paths = [str(arg_path(path, j)) for j in range(len(ops))]
     udf = _json_udf("deep_merge", _make_deep_merge_outer(arg_paths))
     result = udf(packed)
@@ -742,7 +742,7 @@ def _obj_unary_udf(scope, cur, args, path, make_fn):
     ops = _operands(scope, cur, args, path)
     o = ops[0]
     # operand-attributed plain-string path (v1: ...expr.args[0]); the
-    # closure must never pickle a V1OpPath
+    # closure must never pickle an OpPath
     udf = _json_udf("obj_op", make_fn(str(arg_path(path, 0))))
     result = F.parse_json(udf(F.to_json(o)))
     return seq_strict(ops, path, result)

@@ -29,7 +29,7 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..errors import RuleError
+from ..errors import RuleError, rule_error_to_transform
 from ..expr_ir import is_v2_expr, parse_condition, parse_expr, v1_expr_to_pipe
 from ..model import Mapping, RuleFile, load_rule_file
 from ..paths import Key, parse_path
@@ -264,7 +264,8 @@ class CompiledRecordRule:
     def __init__(self, keep: Column, out_tree: OutTree, returned: Column,
                  returned_out: Column,
                  warn_flags: list[tuple[str, Column]] | None = None,
-                 returned_names: list[str] | None = None):
+                 returned_names: list[str] | None = None,
+                 finalized_return: str | None = None):
         self.keep = keep
         self.out_tree = out_tree
         self.returned = returned
@@ -273,6 +274,10 @@ class CompiledRecordRule:
         # trees — the table path must materialize columns for these
         # (the document path reads them out of `returned_out` JSON)
         self.returned_names = returned_names or []
+        # path of a `return: true` branch whose target ran finalize: on
+        # its rows `returned_out` is an array or a wrap value, not a
+        # record, so it has no per-key columns for the table path
+        self.finalized_return = finalized_return
         # (rule path, boolean Column) — true on rows whose when/record_when
         # evaluation failed (reference converts those errors to warnings,
         # transform.rs:1041-1091)
@@ -509,6 +514,7 @@ class RuleCompiler:
         returned_out = F.lit(None).cast(V.VT)
         warn_flags: list[tuple[str, Column]] = []
         returned_names: list[str] = []
+        finalized_return: str | None = None
 
         def scope():
             # fresh out_used cell per scope: after a compile, a truthy
@@ -590,11 +596,12 @@ class RuleCompiler:
                             keep & guard, "k",
                             deps=[input_col, keep, returned, out_dep(sa)])
                 if step.branch is not None:
-                    keep, returned, returned_out, out_tree = \
+                    keep, returned, returned_out, out_tree, fin_ret = \
                         self._compile_branch(builder, step.branch, spath,
                                              scope, keep, returned,
                                              returned_out, out_tree,
                                              input_col, returned_names)
+                    finalized_return = finalized_return or fin_ret
         else:
             apply_mappings(self.rule.mappings, "mappings")
 
@@ -602,7 +609,8 @@ class RuleCompiler:
                                   returned=returned,
                                   returned_out=returned_out,
                                   warn_flags=warn_flags,
-                                  returned_names=returned_names)
+                                  returned_names=returned_names,
+                                  finalized_return=finalized_return)
 
     def _compile_branch(self, builder: Builder, branch, spath, scope_fn,
                         keep, returned, returned_out, out_tree, input_col,
@@ -610,7 +618,9 @@ class RuleCompiler:
         """branch step (``transform.rs:491-527``): the referenced rule runs
         with **@input = the current @out** (``transform.rs:509``) and its
         own per-record finalize (``transform.rs:288-308``); the result is
-        deep-merged into the output or returned outright."""
+        deep-merged into the output or returned outright.  The last item
+        returned is ``spath`` when a returned target's output went
+        through finalize (``CompiledRecordRule.finalized_return``)."""
         sb = scope_fn()
         cond = self._compile_when(branch.when, sb, f"{spath}.branch")
         cond = builder.add(F.coalesce(cond, F.lit(False)), "b",
@@ -636,18 +646,23 @@ class RuleCompiler:
                     "invalid_rule",
                     "branch rules with finalize require return: true",
                     spath)
-            out_col, sub_keep = self._apply_record_finalize(
-                builder, sub_rule, compiled)
-            return compiled, out_col, sub_keep
+            # a target's output is not a record when it ran finalize,
+            # or returned such an output itself
+            finalized = (sub_rule.finalize is not None
+                         or compiled.finalized_return is not None)
+            return (compiled, sub.finalize_record(builder, compiled),
+                    compiled.keep, finalized)
 
         then_c = compile_target(branch.then)
         else_c = compile_target(branch.else_)
+        finalized = branch.return_ and any(
+            t is not None and t[3] for t in (then_c, else_c))
 
         active = keep & ~returned
         for taken, target in ((cond, then_c), (~cond, else_c)):
             if target is None:
                 continue
-            compiled, out_col, sub_keep = target
+            compiled, out_col, sub_keep, _ = target
             gate = active & taken & sub_keep
             gate_deps = [keep, returned, cond, sub_keep]
             if branch.return_:
@@ -668,93 +683,119 @@ class RuleCompiler:
                 out_tree.dep_names |= _dep_names(gate_deps)
             keep = builder.add(keep & (~(active & taken) | sub_keep), "k",
                                deps=gate_deps)
-        return keep, returned, returned_out, out_tree
+        return (keep, returned, returned_out, out_tree,
+                spath if finalized else None)
 
-    def _apply_record_finalize(self, builder: Builder, sub_rule: RuleFile,
-                               compiled: CompiledRecordRule):
-        """Per-record finalize for a branch-referenced rule
-        (``transform.rs:288-308``): the single output record becomes a
-        singleton array; filter/sort checks/wrap apply to it.
+    def finalize_record(self, builder: Builder,
+                        compiled: CompiledRecordRule) -> Column:
+        """The rule's output for one record, materialized as a variant
+        column (``transform_record_with_warnings_inner``,
+        ``transform.rs:288-308``); a record is dropped, with no output,
+        only where ``compiled.keep`` is false.
 
-        Returns (output_variant_col, keep_col).
-        """
-        out_v = F.parse_json(compiled.out_json())
+        Without ``finalize`` the output is the record.  Otherwise
+        finalize applies to the singleton array: filter, then sort,
+        offset and limit leave ``[record]`` or ``[]``, and the output is
+        that array or the ``wrap`` value over it.  Finalize errors are
+        hard, and only a kept record raises them."""
         keep = compiled.keep
-        # every column composed below embeds the sub-rule's out tree /
-        # keep / return columns — declare them once for Builder.add and
-        # annotate the composed keep for downstream deps lists
-        base_deps = _dep_names([compiled.out_tree, compiled.keep,
-                                compiled.returned, compiled.returned_out])
-        fin = sub_rule.finalize
+        deps = [compiled.out_tree, keep, compiled.returned,
+                compiled.returned_out]
+        out_v = F.parse_json(compiled.out_json())
+        fin = self.rule.finalize
         if fin is None:
-            return builder.add(out_v, "bo", deps=base_deps), keep
-        from ..expr_ir import parse_condition as _pc
+            return builder.add(out_v, "bo", deps=deps)
+        from . import sqlfn
         from .interp_bridge import (cond_needs_interp,
                                     finalize_filter_column,
                                     finalize_filter_parse_error)
-        with rule_version(sub_rule.version):
+        with rule_version(self.rule.version), \
+                sqlfn.deferred(builder._df.sparkSession):
+            # filter, sort key and array all read the record: parse its
+            # JSON once
+            out_v = builder.add(out_v, "fo", deps=deps)
+            # the record is still in the array
+            alive = keep
             if fin.has_filter:
-                # finalize eval errors are HARD (transform.rs:304 `?`s
-                # them) — strict compile, guarded so the condition only
-                # evaluates for records whose gate passed
-                # (transform.rs:296-299).  Condition-parse errors fire
-                # per surviving record (the reference parses inside the
-                # per-record apply_finalize), so they raise as a guarded
-                # column, not at compile.
+                # guarded so the condition only evaluates for a kept
+                # record (transform.rs:296-299).  A condition that
+                # fails to parse raises per kept record: the reference
+                # parses it inside the per-record apply_finalize.
                 perr = finalize_filter_parse_error(fin.filter)
                 if perr is not None:
                     cond = F.when(keep, V.raise_err(
-                        perr[0], perr[1],
-                        "finalize.filter").cast("boolean"))
-                elif cond_needs_interp(cond_ir := _pc(fin.filter)):
+                        perr[0], perr[1], "finalize.filter").cast("boolean"))
+                elif cond_needs_interp(cond_ir := parse_condition(fin.filter)):
                     cond = finalize_filter_column(
-                        fin.filter, sub_rule.version, out_v, F.lit(0),
+                        fin.filter, self.rule.version, out_v, F.lit(0),
                         self.context, singleton_out=True, guard=keep,
                         context_col=self.context_col)
                 else:
-                    arr = F.array(out_v).cast(V.VT)
                     scope = Scope(input=out_v, context=self._context(),
-                                  out=arr, item=out_v, item_index=F.lit(0),
+                                  out=F.array(out_v).cast(V.VT),
+                                  item=out_v, item_index=F.lit(0),
                                   pipe=out_v)
-                    cond = F.when(keep,
-                                  compile_condition(cond_ir, scope,
-                                                    "finalize.filter"))
-                keep = keep & F.coalesce(cond, F.lit(False))
+                    cond = F.when(keep, compile_condition(
+                        cond_ir, scope, "finalize.filter"))
+                alive = alive & F.coalesce(cond, F.lit(False))
             if fin.sort is not None:
-                tokens = parse_path(fin.sort.by, error_code="expr_error")
-                skey = V.navigate(out_v, tokens)
-                keep = keep & F.when(
-                    skey.isNull(),
-                    V.raise_err("invalid_ref",
-                                "finalize.sort.by path not found",
-                                "finalize.sort.by").cast("boolean")
-                ).otherwise(F.lit(True))
-            if fin.offset or (fin.limit is not None and fin.limit < 1):
-                keep = keep & F.lit(False)
+                # `&` short-circuits: only a record still in the array
+                # checks its key
+                alive = alive & checked_sort_key(out_v,
+                                                 fin.sort.by).isNotNull()
+            arr = F.when(alive, F.array(out_v)).otherwise(F.array())
+            if fin.offset or fin.limit is not None:
+                # records[offset:][:limit]; the array holds one record
+                # at most
+                arr = F.slice(arr, max(fin.offset or 0, 0) + 1,
+                              1 if fin.limit is None else max(fin.limit, 0))
+            out = arr.cast(V.VT)
             if fin.has_wrap:
-                arr = F.when(keep, F.array(out_v)).otherwise(F.array()) \
-                       .cast(V.VT)
-                out_v = self._compile_wrap_template(fin.wrap, arr,
-                                                    "finalize.wrap")
-        handle = builder.add(out_v, "bo", deps=base_deps)
-        try:
-            keep._rm_names = set(base_deps)
-        except AttributeError:  # pragma: no cover — Column with slots
-            pass
-        return handle, keep
+                # a wrap may read neither @out nor @input: the size test
+                # still evaluates the array, and with it the filter and
+                # the sort check
+                out = F.when(F.size(arr) >= 0, compile_wrap_template(
+                    fin.wrap, out, self._context(), "finalize.wrap"))
+            return builder.add(out, "bo", deps=deps + [out_v])
 
-    def _compile_wrap_template(self, wrap, arr_col: Column,
-                               path: str) -> Column:
-        """wrap template → variant Column (objects nest, leaves are v2
-        exprs over @input/@out = the records array)."""
-        if isinstance(wrap, dict):
-            fields = []
-            for k, v in wrap.items():
-                fields.append(
-                    self._compile_wrap_template(v, arr_col,
-                                                f"{path}.{k}").alias(k))
-            return F.parse_json(F.to_json(F.struct(*fields)))
+
+def checked_sort_key(item: Column, by: str) -> Column:
+    """``finalize.sort.by`` read from ``item``: the key, never NULL; a
+    missing key, or one that is not a string, number or bool, raises
+    (``transform.rs:663-669``)."""
+    key = V.navigate(item, parse_path(by, error_code="expr_error"))
+    ok = V.is_number(key) | V.is_string(key) | V.is_bool(key)
+    return (F.when(key.isNull(),
+                   V.raise_err("invalid_ref",
+                               "finalize.sort.by path not found",
+                               "finalize.sort.by"))
+            .when(~ok, V.raise_err("expr_error",
+                                   "sort key must be string/number/bool",
+                                   "finalize.sort.by"))
+            .otherwise(key))
+
+
+def compile_wrap_template(wrap, arr: Column, context: Column | None,
+                          path: str) -> Column:
+    """``finalize.wrap`` (``transform.rs:716-749``) → one variant Column.
+    Objects nest and come out key-sorted, like the reference's
+    ``BTreeMap``; every other node is a v2 expr with ``@input`` and
+    ``@out`` bound to ``arr``, the output array; missing → null."""
+    if isinstance(wrap, dict):
+        if not wrap:
+            return V.lit_variant({})
+        return F.parse_json(F.to_json(F.struct(*[
+            compile_wrap_template(v, arr, context, f"{path}.{k}").alias(k)
+            for k, v in wrap.items()])))
+    try:
         pipe = parse_expr(wrap)
-        scope = Scope(input=arr_col, out=arr_col, context=self._context())
-        value = compile_pipe(pipe, scope, path)
-        return F.coalesce(value, V.vnull())
+    except RuleError as e:
+        # the reference parses a leaf as it evaluates it: the parse
+        # error raises where the value is made
+        err = rule_error_to_transform(e)
+        if err is None:
+            raise
+        return V.raise_err("expr_error", f"invalid v2 expr: {err.message}",
+                           path).cast(V.VT)
+    scope = Scope(input=arr, out=arr, context=context)
+    return F.coalesce(compile_pipe(pipe, scope, path), V.vnull())

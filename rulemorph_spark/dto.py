@@ -187,12 +187,6 @@ def _each_struct(schema: Schema, base: str):
     yield base, schema, name_of
 
 
-def _field_type_name(f: Field, name_of, base, path_name):
-    if f.children is not None:
-        return path_name
-    return f.type
-
-
 def _render_rust(schema: Schema, base: str) -> str:
     out = ["use serde::{Deserialize, Serialize};"]
     if schema.has_json():

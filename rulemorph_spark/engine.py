@@ -19,15 +19,15 @@ from __future__ import annotations
 import json
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .compiler import variant as V
-from .compiler.core import Scope, compile_condition, compile_pipe, \
-    rule_version
-from .compiler.rule import RuleCompiler
+from .compiler.core import Scope, compile_condition, rule_version
+from .compiler.rule import (RuleCompiler, checked_sort_key,
+                            compile_wrap_template)
 from .errors import (TransformEngineError, extract_engine_error, RuleError)
-from .expr_ir import parse_condition, parse_expr
+from .expr_ir import parse_condition
 from .model import RuleFile, parse_rule_file
 
 
@@ -379,21 +379,7 @@ def apply_finalize(df: DataFrame, rule: RuleFile,
                 df = df.drop("__fidx__")
         item = F.parse_json(F.col("__json__"))
     if fin.sort is not None:
-        from .paths import parse_path
-        tokens = parse_path(fin.sort.by, error_code="expr_error")
-        key = V.navigate(item, tokens)
-        t = V.typeof(key)
-        ok = V.is_number(key) | (t == "STRING") | (t == "BOOLEAN")
-        # absent key is a hard error (transform.rs:663-669)
-        key_checked = (
-            F.when(key.isNull(),
-                   V.raise_err("invalid_ref",
-                               "finalize.sort.by path not found",
-                               "finalize.sort.by"))
-            .when(~ok, V.raise_err("expr_error",
-                                   "sort key must be string/number/bool",
-                                   "finalize.sort.by"))
-            .otherwise(key))
+        key_checked = checked_sort_key(item, fin.sort.by)
         num_key = F.when(V.is_number(key_checked),
                          key_checked.try_cast("double"))
         str_key = F.when(~V.is_number(key_checked),
@@ -420,53 +406,24 @@ def apply_finalize(df: DataFrame, rule: RuleFile,
 
 def _apply_wrap(records: list, wrap, rule: RuleFile, spark: SparkSession,
                 context=None):
-    """finalize.wrap: object template — objects nest, every other node is
-    a v2 expr evaluated with both @input and @out bound to the whole
-    output array; missing → null (``transform.rs:707-749``)."""
+    """finalize.wrap over the whole output array
+    (``compile_wrap_template``)."""
+    from .compiler import sqlfn
     # a driver-local 1-row relation: the select below folds into a
     # LocalTableScan and its collect launches no Spark job
     df = spark.sql("SELECT parse_json(:arr) AS __arr__ "
                    "FROM VALUES (0) AS t(__w__)",
                    args={"arr": json.dumps(records)})
-
-    # compile every leaf, run ONE select/collect for the whole template
-    # (a per-leaf collect would launch one Spark job per leaf)
-    leaves: list[tuple[str, Column]] = []
-
-    def compile_leaf(raw, path) -> int:
-        pipe = parse_expr(raw)
-        with rule_version(rule.version):
-            scope = Scope(input=F.col("__arr__"), out=F.col("__arr__"),
-                          context=(V.lit_variant(context)
-                                   if context is not None else None))
-            col = compile_pipe(pipe, scope, path)
-        leaves.append((path, F.to_json(col).alias(f"__w{len(leaves)}__")))
-        return len(leaves) - 1
-
-    def walk(node, path):
-        if isinstance(node, dict):
-            return {k: walk(v, f"{path}.{k}") for k, v in node.items()}
-        return compile_leaf(node, path)
-
-    from .compiler import sqlfn
     try:
-        with sqlfn.bound(spark):
-            skeleton = walk(wrap, "finalize.wrap")
-        values = []
-        if leaves:
-            row = df.select(*[c for _, c in leaves]).collect()[0]
-            values = [json.loads(row[f"__w{i}__"])
-                      if row[f"__w{i}__"] is not None else None
-                      for i in range(len(leaves))]
+        with sqlfn.bound(spark), rule_version(rule.version):
+            col = compile_wrap_template(
+                wrap, F.col("__arr__"),
+                V.lit_variant(context) if context is not None else None,
+                "finalize.wrap")
+        out = df.select(F.to_json(col)).collect()[0][0]
     except RuleError as e:
         raise TransformEngineError("ExprError", str(e), "finalize.wrap")
-
-    def fill(node):
-        if isinstance(node, dict):
-            return {k: fill(v) for k, v in node.items()}
-        return values[node]
-
-    return fill(skeleton)
+    return json.loads(out)
 
 
 # --- main entry ---------------------------------------------------------
@@ -659,7 +616,9 @@ def transform_table(df: DataFrame, rule_text_or_rule,
     can't distinguish absent-key from null, so gated-off / missing
     outputs are SQL NULL in both modes.  Rules with ``finalize`` are
     rejected (apply ordinary Spark ``orderBy``/``limit`` to the
-    result instead — finalize is a document-level contract).
+    result instead — finalize is a document-level contract), and so
+    are ``return: true`` branches to a target with ``finalize``: that
+    target answers with an array or a wrap value, not a row.
     """
     from .compiler.typed import TypedFallback, TypedRuleCompiler
 
@@ -746,6 +705,11 @@ def _transform_table_variant(df: DataFrame, rule, context,
     compiled = RuleCompiler(rule, context=context,
                             base_dir=base_dir).compile(
         builder, F.col("__record__"))
+    if compiled.finalized_return is not None:
+        raise RuleError("invalid_rule",
+                        "transform_table does not support finalize in a "
+                        "return: true branch target; use orderBy/limit on "
+                        "the result", compiled.finalized_return)
     out = builder.df.filter(compiled.keep)
 
     def materialize(node, name):

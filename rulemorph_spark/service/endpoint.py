@@ -34,14 +34,13 @@ goes through ``transform_record`` (``record.py``):
   waits while none can be had.
 - **Per request** there remain the record's JSON text and about ten
   py4j calls to fill the input row and run the chain: no plan copy,
-  optimizer run, ``Dataset`` or Spark job.  A rule with ``finalize``
-  also runs that step as a query over a driver-local relation holding
-  the evaluated row.
+  optimizer run, ``Dataset`` or Spark job.  A rule's ``finalize`` is
+  part of the chain: it is the per-record finalize that branch targets
+  run too.
 - **The one Dataset path.**  A rule whose optimized plan is not such a
   chain (a Python-UDF bridge op puts an ``ArrowEvalPython`` node in it)
   runs a rebound copy of its analyzed plan as a ``Dataset`` per request,
-  and one Spark job.  A ``finalize.filter`` over ``@item.index`` also
-  runs a job.
+  and one Spark job.
 
 A cached plan keeps, until evicted, the branch-target rule files it read
 at its first compile and the session settings bound at analysis (such
@@ -451,8 +450,7 @@ class EndpointEngine:
                                      None) or 0
                 nodes = build_network_nodes(
                     rule, request_us=request_us, total_us=total_us,
-                    spark=self.spark, step_input=step_input,
-                    context=context)
+                    step_input=step_input, context=context)
                 node.child_trace = build_rule_trace(
                     "network", os.path.basename(full), rel_path, 2,
                     yaml_source_to_json(source) or {}, step_input,
@@ -460,8 +458,8 @@ class EndpointEngine:
                     nodes, total_us, status)
                 return
             sub_dir = os.path.dirname(full)
-            nodes = build_rule_nodes_from_rule(
-                self.spark, rule, step_input, context, sub_dir)
+            nodes = build_rule_nodes_from_rule(rule, step_input, context,
+                                               sub_dir)
             node.child_trace = build_rule_trace(
                 "normal", os.path.basename(full), rel_path, rule.version,
                 yaml_source_to_json(source) or {}, step_input,

@@ -587,17 +587,6 @@ def _write_message(stdout, mode: str, message: dict) -> None:
     stdout.flush()
 
 
-# Back-compat helper kept for callers/tests that analyze a JSON text
-# directly; the tool surface now routes through mcp_tools.
-def analyze_input(text: str) -> dict:
-    records = mcp_tools._json_records(json.loads(text), None)
-    stats = mcp_tools.analyze_records(records)
-    return {
-        "summary": {"records": len(records), "paths": len(stats)},
-        "paths": mcp_tools.stats_to_json(stats),
-    }
-
-
 def main():
     McpServer().serve_stdio()
 

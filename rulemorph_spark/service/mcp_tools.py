@@ -29,6 +29,7 @@ from typing import Any
 
 import yaml
 
+from ..errors import RuleError
 from .dto_parse import (DtoParseError, append_path,
                         generate_mappings_from_schema, parse_dto_schema)
 
@@ -146,7 +147,6 @@ def _check_format(format_, input_json) -> None:
 
 def _load_rule_source(rules_path, rules_text):
     """Returns (RuleFile, yaml_text)."""
-    from ..errors import RuleError
     from ..model import parse_rule_file
     if rules_path is not None:
         try:
@@ -199,7 +199,7 @@ def _json_records(value, records_path: str | None) -> list:
     if records_path:
         try:
             tokens = parse_path(records_path)
-        except Exception as e:
+        except RuleError as e:
             raise InvalidParams(f"records_path is invalid: {e}") from e
         found, target = get_path(value, tokens)
         if not found:
@@ -362,7 +362,7 @@ def _leaf_from_path(path: str) -> str | None:
     from ..paths import Key, parse_path
     try:
         tokens = parse_path(path)
-    except Exception:
+    except RuleError:
         return path
     for tok in reversed(tokens):
         if isinstance(tok, Key):
@@ -633,7 +633,7 @@ def _truncate_bytes(text: str, max_bytes: int) -> str:
 
 def run_transform(spark, args: dict) -> dict:
     from ..engine import transform_with_warnings
-    from ..errors import RuleError, TransformEngineError
+    from ..errors import TransformEngineError
 
     rules_path = _opt_str(args, "rules_path")
     rules_text = _opt_str(args, "rules_text")
@@ -825,7 +825,6 @@ DTO_LANGUAGES = ("rust", "typescript", "python", "go", "java", "kotlin",
 
 def run_generate_dto(args: dict) -> dict:
     from ..dto import generate_dto
-    from ..errors import RuleError
     rules_path = _opt_str(args, "rules_path")
     rules_text = _opt_str(args, "rules_text")
     language = _opt_str(args, "language")

@@ -4,17 +4,20 @@ Endpoint/MCP requests transform ONE record at a time. A rule is compiled
 and optimized once per session; every later request evaluates that
 optimized plan on the driver with Catalyst's interpreted evaluators.
 Such a request builds no plan copy, runs no optimizer, builds no
-``Dataset`` and launches no Spark job; ``finalize`` and the Dataset
-path below are the exceptions.
+``Dataset`` and launches no Spark job; the Dataset path below is the
+exception.
 
 **Compile (a cache miss).** The rule compiles over a driver-local 1-row
 relation: the record and the context enter as an inline ``VALUES`` table
-(``__idx__``, ``__raw__``, ``__ctx__``; ``parse_json`` on top). In the
-analyzed pre-finalize projection, that ``LocalRelation`` is swapped for
-an opaque leaf with the same output attributes, a ``LogicalRDD`` over an
-empty RDD, so the optimizer's ``ConvertToLocalRelation`` cannot fold the
-plan away. The plan is then optimized once; the FIXTURES §F5 rule
-optimizes to four ``Project``s over that leaf.
+(``__idx__``, ``__raw__``, ``__ctx__``; ``parse_json`` on top). The
+projection's ``__json__`` is the record's output; for a rule with
+``finalize`` that is ``RuleCompiler.finalize_record``, the same per-record
+finalize that branch targets run. In the analyzed projection, the
+``VALUES`` ``LocalRelation`` is swapped for an opaque leaf with the same
+output attributes, a ``LogicalRDD`` over an empty RDD, so the
+optimizer's ``ConvertToLocalRelation`` cannot fold the plan away. The
+plan is then optimized once; the FIXTURES §F5 rule optimizes to four
+``Project``s over that leaf.
 
 **The cache.** It is per ``SparkSession`` (weakly keyed), then keyed by
 rule content and ``base_dir``. It keeps the ``_CACHE_SIZE`` (64) most
@@ -43,8 +46,7 @@ dropped.
 **Per request** there remain the JSON text of the record and the context
 and about ten py4j calls: make the session active on the JVM thread
 (expressions read settings such as the map-key dedup policy from it),
-fill the input row, run each node, read ``__json__``. A rule with
-``finalize`` also runs that step (below).
+fill the input row, run each node, read ``__json__``.
 
 **The Dataset path.** The shape check runs once, at compile. A plan
 whose optimized form is not a chain of ``Project``/``Filter`` nodes over
@@ -55,11 +57,6 @@ deserializes a copy, rebinds its ``VALUES`` leaf to the request's row,
 and collects it. A Python-UDF bridge op takes this path: its optimized
 plan holds an ``ArrowEvalPython`` node, and each request runs one Spark
 job.
-
-**finalize** has one implementation. ``apply_finalize`` runs over a
-driver-local relation that holds the evaluated row (no job, except for a
-``finalize.filter`` over ``@item.index``, which re-indexes through an
-RDD).
 
 A cached plan holds fixed, until it is evicted, what its compile read:
 branch-target rule files under ``base_dir`` (edits to them are not
@@ -80,7 +77,6 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import apply_finalize, _apply_wrap
 from ..errors import TransformEngineError, extract_engine_error
 from ..model import RuleFile, parse_rule_file
 
@@ -96,11 +92,6 @@ _RECORD_SQL = ("SELECT __idx__, parse_json(__raw__) AS __record__, "
 
 # the columns of ``_RECORD_SQL``'s leaf, in order: an evaluator's input row
 _LEAF = ["__idx__", "__raw__", "__ctx__"]
-
-# a finalize rule's input: the evaluated row, or no row when the rule
-# filtered the record out
-_ROW_SQL = ("SELECT * FROM VALUES (0L, CAST(:json AS STRING)) "
-            "AS t(__idx__, __json__) WHERE :keep")
 
 # plans kept per session (least recently used evicted first).  Plans
 # are kept serialized: each evaluator deserializes a copy of its own,
@@ -177,7 +168,7 @@ class _Pool:
 # eq=False: a plan is its own identity (it keys the pool)
 @dataclass(frozen=True, eq=False)
 class _Plan:
-    # the pre-finalize projection, Java-serialized (a JVM ByteBuffer):
+    # the record projection, Java-serialized (a JVM ByteBuffer):
     # optimized over the opaque record leaf, or analyzed over the
     # ``VALUES`` leaf on the Dataset path
     serialized: Any
@@ -204,34 +195,24 @@ def transform_record(spark: SparkSession, rule: RuleFile | str,
                      base_dir: str = ".") -> Any | None:
     """Apply a rule to one record (``transform_record_with_warnings_inner``,
     ``transform.rs:288-308``): returns the output value, or None when the
-    record is filtered out; finalize applies to the singleton array."""
+    rule drops the record; finalize applies to the singleton array."""
     if isinstance(rule, str):
         rule = parse_rule_file(rule)
     raw = _json_text(record, "record")
     ctx = None if context is None else _json_text(context, "context")
     plan = _cached_plan(spark, rule, base_dir, raw, ctx)
-    try:
-        if plan.reason is not None:
-            result = _rebound(spark, plan, raw, ctx)
-        else:
-            out = _evaluate(spark, plan, raw, ctx)
-            if rule.finalize is None:
-                return None if out is None else json.loads(out)
-            result = spark.sql(_ROW_SQL, args={"json": out,
-                                               "keep": out is not None})
-        result, wrap = apply_finalize(result, rule, context)
-        rows = result.collect()
-    except Exception as exc:
-        err = extract_engine_error(exc)
-        if err is not None:
-            raise err from exc
-        raise
-    records = [json.loads(r["__json__"]) for r in rows]
-    if wrap is not None:
-        return _apply_wrap(records, wrap, rule, spark, context)
-    if rule.finalize is not None:
-        return records[0] if len(records) == 1 else records
-    return records[0] if records else None
+    if plan.reason is None:
+        out = _evaluate(spark, plan, raw, ctx)
+    else:
+        try:
+            rows = _rebound(spark, plan, raw, ctx).collect()
+        except Exception as exc:
+            err = extract_engine_error(exc)
+            if err is not None:
+                raise err from exc
+            raise
+        out = rows[0]["__json__"] if rows else None
+    return None if out is None else json.loads(out)
 
 
 def _json_text(value: Any, what: str) -> str:
@@ -277,12 +258,15 @@ def _compile(spark: SparkSession, rule: RuleFile, base_dir: str,
 
     df, row = _record_rows(spark, raw, ctx)
     builder = Builder(df)
-    compiled = RuleCompiler(rule, base_dir=base_dir,
-                            context_col=F.col("__context__")).compile(
-        builder, F.col("__record__"))
+    compiler = RuleCompiler(rule, base_dir=base_dir,
+                            context_col=F.col("__context__"))
+    compiled = compiler.compile(builder, F.col("__record__"))
+    # a rule without finalize outputs its record's JSON as it is
+    out = (compiled.out_json() if rule.finalize is None
+           else F.to_json(compiler.finalize_record(builder, compiled)))
     result = (builder.df.withColumn("__keep__", compiled.keep)
               .filter(F.col("__keep__"))
-              .withColumn("__json__", compiled.out_json())
+              .withColumn("__json__", out)
               .select("__idx__", "__json__"))
     analyzed = result._jdf.queryExecution().analyzed()
     # a cached plan serves every request: a subquery's own plan would

@@ -28,8 +28,7 @@ the same tree-walking mirror of transform.rs/v2_eval.rs that anchors
 the three-way fuzz) with accumulated @out seeded through literal
 ``value:`` mappings — ZERO Spark jobs per traced request (VERDICT r6
 next-round #5; previously one tiny Spark job per replayed evaluation,
-O(S+M) jobs per request).  The ``spark`` parameters are kept for
-caller compatibility but unused.
+O(S+M) jobs per request).
 """
 
 from __future__ import annotations
@@ -125,10 +124,10 @@ def _rule_raw(rule: RuleFile) -> dict:
     return raw
 
 
-def transform_record(spark, rule: RuleFile, record, context=None,
+def transform_record(rule: RuleFile, record, context=None,
                      base_dir: str = "."):
     """Single-record transform through the standalone interpreter —
-    zero Spark jobs (``spark`` unused, kept for call-site parity)."""
+    zero Spark jobs."""
     out = _interp.transform_record(json.dumps(_rule_raw(rule)), record,
                                    context=context, base_dir=base_dir)
     return None if out is _interp.MISSING else out
@@ -186,7 +185,7 @@ def _literal_prior(out: dict) -> list[Mapping]:
             for k, v in out.items()]
 
 
-def _eval_rule(spark, mappings: list[Mapping], record, context,
+def _eval_rule(mappings: list[Mapping], record, context,
                base_dir: str, target: str):
     """One replay evaluation: run ``mappings`` over the record through
     the interpreter; return the target's value, ``_MISS`` when absent,
@@ -201,16 +200,15 @@ def _eval_rule(spark, mappings: list[Mapping], record, context,
     return out[target]
 
 
-def _eval_expr(spark, out: dict, expr_raw, record, context, base_dir):
+def _eval_expr(out: dict, expr_raw, record, context, base_dir):
     """Evaluate a v2 expr with the accumulated @out visible; returns
     value, ``_MISS``, or raises."""
     mappings = _literal_prior(out) + [
         Mapping(target="__tr__", expr=expr_raw, has_expr=True)]
-    return _eval_rule(spark, mappings, record, context, base_dir,
-                      "__tr__")
+    return _eval_rule(mappings, record, context, base_dir, "__tr__")
 
 
-def eval_trace_condition(spark, out: dict, cond_raw, record, context,
+def eval_trace_condition(out: dict, cond_raw, record, context,
                          base_dir, path: str = "when") -> bool:
     """``eval_trace_condition`` (endpoint_engine.rs:2813-2868): the v2
     CONDITION form first; else a bare v2 expr (missing → false, bool →
@@ -296,7 +294,7 @@ def _pipe_prefix_raws(expr_raw) -> tuple[list, list[str]] | None:
     return prefixes, labels
 
 
-def build_pipe_steps(spark, out: dict, expr_raw, record, context,
+def build_pipe_steps(out: dict, expr_raw, record, context,
                      base_dir) -> list[dict] | None:
     """``build_pipe_steps`` (endpoint_engine.rs:3180-3260): per-step
     outputs; a failing step keeps the previous value and the replay
@@ -310,8 +308,7 @@ def build_pipe_steps(spark, out: dict, expr_raw, record, context,
     steps: list[dict] = []
     # start value
     try:
-        current = _eval_expr(spark, out, prefixes[0], record, context,
-                             base_dir)
+        current = _eval_expr(out, prefixes[0], record, context, base_dir)
     except _ERRS:
         current = _MISS
     steps.append({"index": 0, "label": labels[0], "input": None,
@@ -327,8 +324,7 @@ def build_pipe_steps(spark, out: dict, expr_raw, record, context,
         step_input = None if current is _MISS else current
         candidate = ok_steps + [raw_list[k]]
         try:
-            nxt = _eval_expr(spark, out, candidate, record, context,
-                             base_dir)
+            nxt = _eval_expr(out, candidate, record, context, base_dir)
             ok_steps = candidate
             current = nxt
         except _ERRS:
@@ -341,7 +337,7 @@ def build_pipe_steps(spark, out: dict, expr_raw, record, context,
 
 # --- mapping ops ----------------------------------------------------------
 
-def build_mapping_ops_with_values(spark, mappings: list[Mapping], record,
+def build_mapping_ops_with_values(mappings: list[Mapping], record,
                                   context, out: dict, version: int,
                                   step_index: int,
                                   base_dir: str = ".") -> list[dict]:
@@ -370,7 +366,7 @@ def build_mapping_ops_with_values(spark, mappings: list[Mapping], record,
         pipe_steps = None
         if m.has_expr and version >= 2 and is_v2_expr(m.expr):
             pipe_value = m.expr
-            pipe_steps = build_pipe_steps(spark, out, m.expr, record,
+            pipe_steps = build_pipe_steps(out, m.expr, record,
                                           context, base_dir)
             if pipe_steps:
                 iv = pipe_steps[0]["output"]
@@ -380,7 +376,7 @@ def build_mapping_ops_with_values(spark, mappings: list[Mapping], record,
         elif m.source is not None:
             try:
                 got = _eval_rule(
-                    spark, _literal_prior(out) + [
+                    _literal_prior(out) + [
                         Mapping(target="__tr__", source=m.source)],
                     record, context, base_dir, "__tr__")
             except _ERRS:
@@ -430,7 +426,7 @@ def _set_path(out: dict, target: str, value) -> None:
 
 # --- rule replay ------------------------------------------------------------
 
-def build_rule_nodes_from_rule(spark, rule: RuleFile, record, context,
+def build_rule_nodes_from_rule(rule: RuleFile, record, context,
                                base_dir: str) -> list[dict]:
     """``build_rule_nodes_from_rule`` (endpoint_engine.rs:2355-2690)."""
     nodes: list[dict] = []
@@ -441,7 +437,7 @@ def build_rule_nodes_from_rule(spark, rule: RuleFile, record, context,
                               finalize=None)
             t0 = time.perf_counter()
             try:
-                result = ("ok", transform_record(spark, partial, record,
+                result = ("ok", transform_record(partial, record,
                                                  context=context,
                                                  base_dir=base_dir))
             except _ERRS as e:
@@ -499,7 +495,7 @@ def build_rule_nodes_from_rule(spark, rule: RuleFile, record, context,
 
             if step_active and status != "error" and step.has_record_when:
                 try:
-                    flag = eval_trace_condition(spark, seed,
+                    flag = eval_trace_condition(seed,
                                                 step.record_when, record,
                                                 context, base_dir)
                     meta["record_when"] = flag
@@ -512,7 +508,7 @@ def build_rule_nodes_from_rule(spark, rule: RuleFile, record, context,
                 asserts_ok = True
                 for ai, a in enumerate(step.asserts):
                     try:
-                        flag = eval_trace_condition(spark, seed, a.when,
+                        flag = eval_trace_condition(seed, a.when,
                                                     record, context,
                                                     base_dir)
                     except _ERRS as e:
@@ -543,7 +539,7 @@ def build_rule_nodes_from_rule(spark, rule: RuleFile, record, context,
                     refs.append(br.else_)
                     labels.append("branch: else")
                 try:
-                    taken_flag = eval_trace_condition(spark, seed,
+                    taken_flag = eval_trace_condition(seed,
                                                       br.when, record,
                                                       context, base_dir)
                     branch_taken = ("then" if taken_flag
@@ -566,14 +562,14 @@ def build_rule_nodes_from_rule(spark, rule: RuleFile, record, context,
                     meta["rule_ref"] = target_path
                     meta["rule_ref_label"] = f"branch: {branch_taken}"
                     child_trace = _branch_child_trace(
-                        spark, target_path, step_input, context, base_dir)
+                        target_path, step_input, context, base_dir)
 
             children = []
             if status == "ok" and step.mappings is not None:
                 mapping_out = dict(step_input) \
                     if isinstance(step_input, dict) else {}
                 children = build_mapping_ops_with_values(
-                    spark, step.mappings, record, context, mapping_out,
+                    step.mappings, record, context, mapping_out,
                     rule.version, index, base_dir)
 
             node = {"id": f"step-{index}", "kind": kind, "label": label,
@@ -593,7 +589,7 @@ def build_rule_nodes_from_rule(spark, rule: RuleFile, record, context,
         t0 = time.perf_counter()
         out: dict = {}
         children = build_mapping_ops_with_values(
-            spark, rule.mappings, record, context, out, rule.version, 0,
+            rule.mappings, record, context, out, rule.version, 0,
             base_dir)
         node = {"id": "step-0", "kind": "mapping", "label": "mappings",
                 "status": "ok", "input": record, "output": out,
@@ -603,12 +599,11 @@ def build_rule_nodes_from_rule(spark, rule: RuleFile, record, context,
         nodes.append(node)
 
     if rule.finalize is not None:
-        nodes.append(_finalize_node(spark, rule, record, context,
-                                    base_dir))
+        nodes.append(_finalize_node(rule, record, context, base_dir))
     return nodes
 
 
-def _branch_child_trace(spark, target_path: str, step_input, context,
+def _branch_child_trace(target_path: str, step_input, context,
                         base_dir: str):
     """Recursive child trace for the taken branch rule (normal rules
     only, endpoint_engine.rs:2570-2605)."""
@@ -630,10 +625,10 @@ def _branch_child_trace(spark, target_path: str, step_input, context,
         # any other failure reaches the step's ``trace_error``
         return None
     sub_dir = os.path.dirname(resolved)
-    child_nodes = build_rule_nodes_from_rule(spark, sub, step_input,
-                                             context, sub_dir)
+    child_nodes = build_rule_nodes_from_rule(sub, step_input, context,
+                                             sub_dir)
     try:
-        child_output = transform_record(spark, sub, step_input,
+        child_output = transform_record(sub, step_input,
                                         context=context,
                                         base_dir=sub_dir)
     except _ERRS:
@@ -645,13 +640,13 @@ def _branch_child_trace(spark, target_path: str, step_input, context,
         child_nodes, sum_node_duration_us(child_nodes), "ok")
 
 
-def _finalize_node(spark, rule: RuleFile, record, context,
+def _finalize_node(rule: RuleFile, record, context,
                    base_dir: str) -> dict:
     """The trailing finalize node (endpoint_engine.rs:2691-2785)."""
     base_rule = replace(rule, finalize=None)
     t0 = time.perf_counter()
     try:
-        pre = transform_record(spark, base_rule, record, context=context,
+        pre = transform_record(base_rule, record, context=context,
                                base_dir=base_dir)
     except _ERRS:
         pre = None
@@ -660,7 +655,7 @@ def _finalize_node(spark, rule: RuleFile, record, context,
     t1 = time.perf_counter()
     status, output, error = "ok", None, None
     try:
-        got = transform_record(spark, rule, record, context=context,
+        got = transform_record(rule, record, context=context,
                                base_dir=base_dir)
         output = got if got is not None else None
     except _ERRS as e:
@@ -707,7 +702,7 @@ def _finalize_node(spark, rule: RuleFile, record, context,
 # --- network step nodes ----------------------------------------------------
 
 def build_network_nodes(rule, *, request_us: int, total_us: int,
-                        spark=None, step_input=None, context=None) -> list:
+                        step_input=None, context=None) -> list:
     """``build_network_nodes_with_timing``
     (endpoint_engine.rs:4460-4538 test surface, builder above it):
     one ``kind: network`` node with op children — request (with the
@@ -727,12 +722,12 @@ def build_network_nodes(rule, *, request_us: int, total_us: int,
         children.append({"id": "op-body", "kind": "op", "label": "body",
                          "status": "ok", "meta": {"op": "body"},
                          "args": {"expr": json.dumps(rule.body_expr)}})
-    if rule.body_map is not None and spark is not None:
+    if rule.body_map is not None:
         from ..model import _parse_mapping
         out: dict = {}
         mappings = [_parse_mapping(m, "body_map") for m in rule.body_map]
         children.extend(build_mapping_ops_with_values(
-            spark, mappings, step_input if step_input is not None else {},
+            mappings, step_input if step_input is not None else {},
             context, out, 2, 0, rule.base_dir))
     if rule.body_rule is not None:
         children.append({"id": "op-body-rule", "kind": "op",
@@ -757,11 +752,9 @@ def build_network_nodes(rule, *, request_us: int, total_us: int,
     if rule.body_rule is not None:
         node["meta"] = {"rule_ref": rule.body_rule,
                         "rule_ref_label": "body_rule"}
-        if spark is not None:
-            child = _branch_child_trace(spark, rule.body_rule,
-                                        step_input if step_input
-                                        is not None else {},
-                                        context, rule.base_dir)
-            if child is not None:
-                node["child_trace"] = child
+        child = _branch_child_trace(
+            rule.body_rule, step_input if step_input is not None else {},
+            context, rule.base_dir)
+        if child is not None:
+            node["child_trace"] = child
     return [node]

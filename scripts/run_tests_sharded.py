@@ -60,6 +60,7 @@ SMOKE_FILES = {
     "test_expr_fastpath.py",
     "test_service_record.py",
     "test_service_concurrency.py",
+    "test_finalize_filter.py",
 }
 
 

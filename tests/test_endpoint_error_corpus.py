@@ -372,18 +372,18 @@ def test_eval_trace_condition_invalid_v2_wording():
     from rulemorph_spark.service.rule_trace import eval_trace_condition
 
     with _pytest.raises(TransformEngineError) as ei:
-        eval_trace_condition(None, {}, "@bogus.x", {"n": 1}, None, ".")
+        eval_trace_condition({}, "@bogus.x", {"n": 1}, None, ".")
     assert ei.value.message == ("invalid v2 condition: invalid start "
                                 "value: invalid v2 reference: @bogus.x")
     # the condition form still wins when it parses
-    assert eval_trace_condition(None, {}, {"gt": ["@input.n", 0]},
+    assert eval_trace_condition({}, {"gt": ["@input.n", 0]},
                                 {"n": 1}, None, ".") is True
     # bare expr form: missing → false, bool → flag, other → error
-    assert eval_trace_condition(None, {}, ["@input.nope"],
+    assert eval_trace_condition({}, ["@input.nope"],
                                 {"n": 1}, None, ".") is False
     from rulemorph_spark.interp import InterpError
     with _pytest.raises((TransformEngineError, InterpError)) as ei:
-        eval_trace_condition(None, {}, ["@input.n"], {"n": 1}, None, ".")
+        eval_trace_condition({}, ["@input.n"], {"n": 1}, None, ".")
     assert ei.value.message == \
         "when/record_when must evaluate to boolean"
 

@@ -74,21 +74,29 @@ _REFERENCE_DEFS = {
 # functions/diag.py helpers only tests call; the run report (ROADMAP
 # direction 5) gives them a caller or deletes them.
 _DIAG_DEFS = {"partition_skew", "key_skew", "interp_bridge_stats"}
+# compiler/sqlfn.py's switch for the SQL-function fast path: the
+# cross-path parity tests run each rule with it off and on
+_SQLFN_SWITCH = {"enable", "disable", "registered_names"}
+# decorators that register an op: the registry, not a name, calls it
+_REGISTERING = {"register", "_treg"}
 
 
 def test_library_defs_have_program_callers():
-    """Every public top-level def in ``llm/`` and ``functions/`` is
-    reached from a program — the package (CLI, service, MCP),
+    """Every public top-level def in ``llm/``, ``functions/``,
+    ``service/`` and ``compiler/`` is reached from a program — the rest
+    of the package (engine, CLI, interp, streaming, sources),
     ``__spark_entry__.py``, ``bench.py``, ``perfbench/`` or
     ``scripts/`` — or is named above.  Reachability is by name through
-    the library's own bodies; ``__init__`` re-exports, ``__all__`` and
-    docstrings do not count.  An operator only tests call is code to
-    maintain with no user."""
+    the library's own bodies; a def an op-registering decorator wraps
+    is reached.  ``__init__`` re-exports, ``__all__`` and docstrings do
+    not count.  An operator only tests call is code to maintain with no
+    user."""
     import ast
     import pathlib
     root = pathlib.Path(__file__).resolve().parent.parent
     pkg = root / "rulemorph_spark"
-    libs = (pkg / "llm", pkg / "functions")
+    libs = (pkg / "llm", pkg / "functions", pkg / "service",
+            pkg / "compiler")
     programs = ([*pkg.rglob("*.py"), root / "__spark_entry__.py",
                  root / "bench.py", *(root / "scripts").glob("*.py")]
                 + [p for p in (root / "perfbench").rglob("*.py")
@@ -98,6 +106,13 @@ def test_library_defs_have_program_callers():
         return {alias.get(n.id, n.id) if isinstance(n, ast.Name)
                 else n.attr for n in ast.walk(node)
                 if isinstance(n, (ast.Name, ast.Attribute))}
+
+    def registers(st):
+        for d in getattr(st, "decorator_list", ()):
+            f = d.func if isinstance(d, ast.Call) else d
+            if isinstance(f, ast.Name) and f.id in _REGISTERING:
+                return True
+        return False
 
     reached, uses, public = set(), {}, set()
     for path in programs:
@@ -123,6 +138,8 @@ def test_library_defs_have_program_callers():
             if in_lib and defined:
                 for name in defined:
                     uses.setdefault(name, set()).update(names(st, alias))
+                if registers(st):
+                    reached.add(st.name)
                 if isinstance(st, ast.FunctionDef) and \
                         not st.name.startswith("_"):
                     public.add(f"{path.relative_to(pkg)}:{st.name}")
@@ -134,7 +151,7 @@ def test_library_defs_have_program_callers():
             if name not in reached:
                 reached.add(name)
                 todo.append(name)
-    keep = _REFERENCE_DEFS | _DIAG_DEFS
+    keep = _REFERENCE_DEFS | _DIAG_DEFS | _SQLFN_SWITCH
     unused = sorted(d for d in public
                     if d.rsplit(":", 1)[1] not in reached | keep)
     assert unused == []

@@ -11,7 +11,8 @@ import tempfile
 import pytest
 
 from rulemorph_spark.service.endpoint import EndpointEngine, EndpointError
-from rulemorph_spark.service.mcp import McpServer, analyze_input
+from rulemorph_spark.service.mcp import McpServer
+from rulemorph_spark.service.mcp_tools import run_analyze_input
 
 ENDPOINT_YAML = """
 version: 2
@@ -251,11 +252,35 @@ def test_mcp_protocol(spark):
 
 
 def test_analyze_input():
-    result = analyze_input('[{"a": 1, "b": {"c": "x"}}, {"a": null}]')
+    result = run_analyze_input(
+        {"input_text": '[{"a": 1, "b": {"c": "x"}}, {"a": null}]'})["meta"]
     assert result["summary"]["records"] == 2
     paths = {f["path"]: f["types"] for f in result["paths"]}
     assert paths["a"] == {"number": 1, "null": 1}
     assert paths["b.c"] == {"string": 1}
+
+
+@pytest.fixture
+def broken_parse_path(monkeypatch):
+    """``parse_path`` failing with an error that is not a path error."""
+    from rulemorph_spark import paths
+
+    def broken(*args, **kwargs):
+        raise TypeError("parse_path bug (injected)")
+
+    monkeypatch.setattr(paths, "parse_path", broken)
+
+
+def test_records_path_surfaces_a_non_path_error(broken_parse_path):
+    with pytest.raises(TypeError, match="injected"):
+        run_analyze_input({"input_json": {"rows": [{"a": 1}]},
+                           "records_path": "rows"})
+
+
+def test_target_leaf_surfaces_a_non_path_error(broken_parse_path):
+    from rulemorph_spark.service import mcp_tools
+    with pytest.raises(TypeError, match="injected"):
+        mcp_tools._leaf_from_path("a.b")
 
 
 def test_http_server_round_trip(spark, engine_dir):

@@ -419,13 +419,42 @@ def no_dataset(spark, monkeypatch):
     return arm
 
 
+# per-record finalize, no bridge op: it runs in the cached projection
+FINALIZE_HIT_RULE = """
+version: 2
+input: {format: json}
+mappings:
+  - target: n
+    expr: "@input.n"
+finalize:
+  filter: {gte: ["@item.n", 0]}
+  sort: {by: n, order: desc}
+  limit: 1
+  wrap:
+    items: "@out"
+    first: ["@out", {first: []}, {get: ["n"]}]
+"""
+
+INDEX_FILTER_RULE = """
+version: 2
+input: {format: json}
+mappings:
+  - target: n
+    expr: "@input.n"
+finalize:
+  filter: {eq: ["@item.index", 0]}
+"""
+
+
 @pytest.mark.parametrize("rule,records", [
     (F5_RULE, _bodies(seed=14, n=6)),
     (INPUT_RULE, [{"body": b, "i": i}
                   for i, b in enumerate(_bodies(seed=15, n=3))]),
     (WHEN_RULE, [{"keep": True, "n": 2}, {"keep": False, "n": 3},
                  {"keep": True, "n": "x"}]),
-], ids=["f5", "input", "when"])
+    (FINALIZE_HIT_RULE, [{"n": 2}, {"n": -1}, {"n": None}, {}]),
+    (INDEX_FILTER_RULE, [{"n": 2}, {"n": "x"}]),
+], ids=["f5", "input", "when", "finalize", "item_index"])
 def test_hit_builds_no_dataset(spark, no_dataset, rule, records):
     transform_record(spark, rule, records[0])
     assert _entry(spark, rule).reason is None

@@ -761,7 +761,7 @@ def test_rule_trace_replay_issues_zero_spark_jobs(spark, svc_dir):
 
     def run():
         holder["nodes"] = build_rule_nodes_from_rule(
-            spark, rule, record, None, svc_dir)
+            rule, record, None, svc_dir)
 
     jobs = _count_jobs(spark, run)
     assert jobs == 0, f"trace replay issued {jobs} Spark jobs"
