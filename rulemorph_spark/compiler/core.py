@@ -285,14 +285,14 @@ V2_NATIVE_STEP_OPS = {
 
 # ops that manage the pipe-value binding THEMSELVES, so compile_step
 # must hand them the raw Column:
-# - pandas-UDF-backed ops (Spark forbids Python UDFs inside higher-
-#   order-function lambdas): deep_merge, object_(un)flatten, and
-#   pick/omit (which go through the UDF when paths are data-driven);
+# - pick/omit, whose Column bodies read the raw pipe value directly
+#   (deep_merge, object_(un)flatten and the pick/omit forms with no
+#   Column body evaluate through the interpreter: see
+#   interp_bridge.needs_interp);
 # - SQL-function-backed ops (round 8): the date ops pass the raw pipe
 #   value as the function ARGUMENT (the analyzer binds it once via a
 #   Project) and fall back to an internal V.let inside lambda scopes.
-UDF_OPS = {"deep_merge", "object_flatten", "object_unflatten",
-           "pick", "omit", "date_format", "to_unixtime",
+UDF_OPS = {"pick", "omit", "date_format", "to_unixtime",
            "+", "-", "*", "/",
            # round 9: string/stringify ops with SQL-function fast paths
            # (ops_string_sql.py) — raw pipe value becomes the function

@@ -1,28 +1,25 @@
-"""Interpreter-backed evaluation for Python-UDF ops in lambda positions.
+"""Interpreter-backed evaluation for the ops Spark cannot express.
 
-The pandas-UDF-backed object ops (``deep_merge``, ``object_flatten``,
-``object_unflatten``, dynamic ``pick``/``omit``) are legal only as
-DIRECT steps of a mapping's own pipe — compile_step hands them the raw
-pipe value there.  In any NESTED position (array-op bodies, ``{map:}``
-step bodies, if-branches, operand args of other ops) the Python UDF
-lands inside a Catalyst lambda, which Spark rejects at analysis time
-(round-8 find: such rules failed with a misleading runtime-looking
-error; the reference interprets them fine).
+``deep_merge``, ``object_flatten`` and ``object_unflatten`` recurse
+over data-dependent shapes, and a ``pick``/``omit`` whose paths are not
+plain object keys known at compile time reads them from data; no Column
+expression covers them.  They have one Python implementation, the
+standalone interpreter (``interp.py``, the engine's oracle).  When any
+of them appears anywhere in a mapping's expression — a direct step,
+an array-op body, a ``{map:}`` step body, an if-branch or an operand
+of another op — the WHOLE mapping value evaluates through ``interp``
+inside one Arrow-batched pandas UDF (:func:`needs_interp`): the record,
+the accumulated ``@out`` and the context ship as JSON (a context known
+at compile time rides in the UDF's closure; one bound at run time, as
+a cached service plan binds it, is read per row), and errors re-raise
+with the standard engine payload.  Whole-mapping evaluation is what
+lets these ops sit inside Catalyst lambdas, where Spark rejects a
+Python UDF.  It is a slow path by construction, but oracle-exact,
+including per-item error paths.
 
-When the mapping's expression contains a UDF op in such a position,
-the WHOLE mapping value evaluates through the standalone interpreter
-(``interp.py`` — the engine's third fuzz oracle, green on all 59
-runnable reference goldens) inside one Arrow-batched pandas UDF: the
-record, the accumulated ``@out``, and the context ship as JSON (a
-context known at compile time rides in the UDF's closure; one bound at
-run time, as a cached service plan binds it, is read per row), and
-errors re-raise with the standard engine payload.  This is a
-slow path by construction — these shapes are rare and row-local — but
-it is oracle-exact, including the per-item error paths the Column path
-could only approximate (``[?]`` placeholders, VERDICT r7 #5).
-
-``when``/``record_when`` conditions take the same fallback
-(:func:`when_value_column`), and ``finalize.filter`` conditions take a
+``when``/``record_when`` conditions take the same route
+(:func:`when_value_column`), as do ``finalize.wrap`` leaves
+(:func:`wrap_value_column`); ``finalize.filter`` conditions take a
 STRICT one (:func:`finalize_filter_column` — finalize eval errors
 propagate, ``transform.rs:638``, unlike the when channel's
 warn-and-false).
@@ -36,15 +33,15 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..errors import RuleError, encode_engine_error
+from ..errors import encode_engine_error
 from ..expr_ir import (CondAll, CondAny, CondCompare, CondExpr, IfStep,
                        LetStep, MapStep, OpStep, Pipe, RefStep,
                        StartLiteral, StartRef)
 from ..registry import OP_ALIASES
+from .ops_object import literal_key_paths
 
-_UDF_ALWAYS = frozenset({"deep_merge", "object_flatten",
+_INTERP_OPS = frozenset({"deep_merge", "object_flatten",
                          "object_unflatten"})
-_UDF_DYNAMIC = frozenset({"pick", "omit"})  # UDF only for dynamic paths
 
 # observability (VERDICT r8 watch item #2): the bridge is a deliberate
 # whole-mapping-interpreted slow path for rare shapes — these counters
@@ -54,67 +51,48 @@ _UDF_DYNAMIC = frozenset({"pick", "omit"})  # UDF only for dynamic paths
 BRIDGE_HITS = {"mapping": 0, "when": 0, "finalize": 0}
 
 
-def _op_needs_udf(step: OpStep) -> bool:
+def _op_needs_interp(step: OpStep) -> bool:
     op = OP_ALIASES.get(step.op, step.op)
-    if op in _UDF_ALWAYS:
-        return True
-    if op in _UDF_DYNAMIC:
-        return any(not (isinstance(a.start, StartLiteral) and not a.steps)
-                   for a in step.args)
-    return False
+    if op in ("pick", "omit"):
+        return literal_key_paths(step.args) is None
+    return op in _INTERP_OPS
 
 
-def _cond_has_udf(cond) -> bool:
+def cond_needs_interp(cond) -> bool:
+    """A v2 condition (when/record_when, finalize.filter) holding an op
+    only ``interp`` implements, in any of its pipes."""
     if isinstance(cond, (CondAll, CondAny)):
-        return any(_cond_has_udf(c) for c in cond.conditions)
+        return any(cond_needs_interp(c) for c in cond.conditions)
     if isinstance(cond, CondCompare):
-        return any(_pipe_has_trapped_udf(p, top=False) for p in cond.args)
+        return any(needs_interp(p) for p in cond.args)
     if isinstance(cond, CondExpr):
-        return _pipe_has_trapped_udf(cond.expr, top=False)
-    return False
-
-
-def _pipe_has_trapped_udf(pipe: Pipe, top: bool) -> bool:
-    """True when a UDF-requiring op sits anywhere a Catalyst lambda
-    would trap it.  ``top`` marks the mapping's own pipe, whose direct
-    op steps are the one safe position."""
-    for step in pipe.steps:
-        if isinstance(step, OpStep):
-            if not top and _op_needs_udf(step):
-                return True
-            if any(_pipe_has_trapped_udf(a, top=False)
-                   for a in step.args):
-                return True
-        elif isinstance(step, MapStep):
-            for s in step.steps:
-                if _pipe_has_trapped_udf(Pipe(start=StartLiteral(None),
-                                              steps=[s]), top=False):
-                    return True
-        elif isinstance(step, IfStep):
-            if _cond_has_udf(step.cond):
-                return True
-            branches = [step.then_branch]
-            if step.else_branch is not None:
-                branches.append(step.else_branch)
-            if any(_pipe_has_trapped_udf(b, top=False) for b in branches):
-                return True
-        elif isinstance(step, LetStep):
-            # bindings compile at the enclosing pipe's lambda depth
-            if any(_pipe_has_trapped_udf(e, top=top)
-                   for _n, e in step.bindings):
-                return True
+        return needs_interp(cond.expr)
     return False
 
 
 def needs_interp(pipe: Pipe) -> bool:
-    return _pipe_has_trapped_udf(pipe, top=True)
-
-
-def cond_needs_interp(cond) -> bool:
-    """v2 when/record_when conditions: every pipe position inside a
-    condition compiles under comparison/short-circuit machinery, so
-    any UDF-requiring op defers."""
-    return _cond_has_udf(cond)
+    """True when an op only ``interp`` implements appears anywhere in
+    ``pipe``."""
+    for step in pipe.steps:
+        if isinstance(step, OpStep):
+            if _op_needs_interp(step) or any(needs_interp(a)
+                                             for a in step.args):
+                return True
+        elif isinstance(step, MapStep):
+            if needs_interp(Pipe(start=StartLiteral(None),
+                                 steps=step.steps)):
+                return True
+        elif isinstance(step, IfStep):
+            branches = [step.then_branch]
+            if step.else_branch is not None:
+                branches.append(step.else_branch)
+            if cond_needs_interp(step.cond) or any(needs_interp(b)
+                                                    for b in branches):
+                return True
+        elif isinstance(step, LetStep):
+            if any(needs_interp(e) for _n, e in step.bindings):
+                return True
+    return False
 
 
 # --- condition ref introspection (finalize.filter routing) -------------
@@ -171,12 +149,13 @@ def cond_uses_item_index(cond) -> bool:
                for r in _iter_cond_refs(cond))
 
 
-def finalize_filter_parse_error(raw_filter):
+def parse_finalize_filter(raw_filter):
     """The reference's finalize.filter condition-parse protocol
-    (``transform.rs:620-633``): returns ``(kind, message)`` when the
-    value fails to parse as a v2 condition, else None.  Callers raise
-    it on the transform-error channel with path ``finalize.filter`` —
-    BEFORE the engine's own ``parse_condition``, whose wordings differ.
+    (``transform.rs:620-633``) → ``(cond, None)`` with the interp
+    condition, or ``(None, (kind, message))`` when the value fails to
+    parse as a v2 condition.  Callers raise the error on the
+    transform-error channel with path ``finalize.filter`` — BEFORE the
+    engine's own ``parse_condition``, whose wordings differ.
     ``parse_expr_model`` failures propagate to the caller's own rule
     parse channel (they fire at rule-parse time in both engines)."""
     from .. import interp as I
@@ -184,12 +163,11 @@ def finalize_filter_parse_error(raw_filter):
     model = I.parse_expr_model(raw_filter)
     raw = I._expr_to_json_for_v2_condition(model)
     if raw is None:
-        return ("expr_error", "finalize.filter must be a v2 condition")
+        return None, ("expr_error", "finalize.filter must be a v2 condition")
     try:
-        I.parse_v2_condition(raw)
+        return I.parse_v2_condition(raw), None
     except I.V2ParseError as e:
-        return ("expr_error", f"invalid v2 condition: {e}")
-    return None
+        return None, ("expr_error", f"invalid v2 condition: {e}")
 
 
 def _context_arg(context_value, context_col: Column | None):
@@ -212,12 +190,12 @@ def _context_value(fixed, ctx_t):
     return fixed if ctx_t is None else I.canon(_json.loads(ctx_t))
 
 
-def finalize_filter_column(raw_filter, version: int, item_col: Column,
-                           idx_col: Column, context_value,
-                           singleton_out: bool = False,
+def finalize_filter_column(cond, item_col: Column, idx_col: Column,
+                           context_value, singleton_out: bool = False,
                            guard: Column | None = None,
                            context_col: Column | None = None) -> Column:
-    """A finalize.filter condition as a STRICT interp-evaluated boolean
+    """A finalize.filter condition (``cond``, from
+    :func:`parse_finalize_filter`) as a STRICT interp-evaluated boolean
     Column: per-item ``eval_v2_condition`` with ``@item``=(item, index)
     and ``@input``=item (``transform.rs:636-638``); evaluation errors
     re-raise with the standard engine payload (finalize errors are
@@ -238,17 +216,6 @@ def finalize_filter_column(raw_filter, version: int, item_col: Column,
     BRIDGE_HITS["finalize"] += 1
     from .. import interp as I
 
-    model = I.parse_expr_model(raw_filter)
-    raw = I._expr_to_json_for_v2_condition(model)
-    if raw is None:
-        raise RuleError("expr_error",
-                        "finalize.filter must be a v2 condition",
-                        "finalize.filter")
-    try:
-        cond = I.parse_v2_condition(raw)
-    except I.V2ParseError as e:
-        raise RuleError("expr_error", f"invalid v2 condition: {e}",
-                        "finalize.filter") from None
     fixed, ctx_j = _context_arg(context_value, context_col)
     item_j = F.to_json(item_col)
     guard_col = (F.coalesce(guard, F.lit(False)) if guard is not None
@@ -315,26 +282,13 @@ def when_value_column(raw_when, version: int, scope,
     return _udf(record_j, out_j, ctx_j)
 
 
-def mapping_value_column(raw_expr, version: int, scope,
-                         base_path: str) -> Column:
-    """The mapping's value as an interp-evaluated variant Column."""
-    BRIDGE_HITS["mapping"] += 1
+def _value_column(evaluate, scope) -> Column:
+    """``evaluate(record, out, context)`` per row as a variant Column
+    over ``scope``'s input, ``@out`` and context: MISSING → NULL, and
+    interp errors re-raise with the standard engine payload."""
     from .. import interp as I
-    from . import variant as V
 
-    model = I.parse_expr_model(raw_expr)
-    v2_pipe = None
-    if version >= 2:
-        j = I._expr_to_json_for_v2_pipe(model)
-        if j is not None:
-            try:
-                v2_pipe = I.parse_v2_pipe_from_value(j)
-            except I.V2ParseError as e:
-                # interp raises this per record as an expr error
-                return V.raise_err("expr_error", str(e),
-                                   str(base_path)).cast(V.VT)
     fixed, ctx_j = _context_arg(scope.context_value, scope.context)
-    bp = str(base_path)
     record_j = F.to_json(scope.input)
     scope.used_out()
     out_j = F.to_json(scope.out) if scope.out is not None else F.lit("{}")
@@ -345,13 +299,8 @@ def mapping_value_column(raw_expr, version: int, scope,
         def run(rec_t, out_t, ctx_t):
             record = _json.loads(rec_t) if rec_t is not None else {}
             out = _json.loads(out_t) if out_t is not None else {}
-            ctx = _context_value(fixed, ctx_t)
             try:
-                if v2_pipe is not None:
-                    v = I.eval_v2_pipe(v2_pipe, record, ctx, out, bp,
-                                       I.V2Ctx())
-                else:
-                    v = I.eval_expr(model, record, ctx, out, bp, None)
+                v = evaluate(record, out, _context_value(fixed, ctx_t))
             except I.InterpError as e:
                 raise RuntimeError(encode_engine_error(
                     e.kind, e.message, e.path)) from None
@@ -363,3 +312,47 @@ def mapping_value_column(raw_expr, version: int, scope,
                           for r, o, c in zip(rec_s, out_s, ctx_s)])
 
     return F.parse_json(_udf(record_j, out_j, ctx_j))
+
+
+def mapping_value_column(raw_expr, version: int, scope,
+                         base_path: str) -> Column:
+    """The mapping's value as an interp-evaluated variant Column."""
+    BRIDGE_HITS["mapping"] += 1
+    from .. import interp as I
+    from . import variant as V
+
+    model = I.parse_expr_model(raw_expr)
+    bp = str(base_path)
+    if version >= 2:
+        j = I._expr_to_json_for_v2_pipe(model)
+        if j is not None:
+            try:
+                v2_pipe = I.parse_v2_pipe_from_value(j)
+            except I.V2ParseError as e:
+                # interp raises this per record as an expr error
+                return V.raise_err("expr_error", str(e),
+                                   bp).cast(V.VT)
+            return _value_column(
+                lambda record, out, ctx: I.eval_v2_pipe(
+                    v2_pipe, record, ctx, out, bp, I.V2Ctx()), scope)
+    return _value_column(
+        lambda record, out, ctx: I.eval_expr(model, record, ctx, out, bp,
+                                             None), scope)
+
+
+def wrap_value_column(raw_leaf, scope, path: str) -> Column:
+    """A ``finalize.wrap`` leaf as an interp-evaluated variant Column
+    (``eval_wrap_value``, ``transform.rs:716-749``): a v2 expr whose
+    ``scope`` binds ``@input`` and ``@out`` to the output array."""
+    BRIDGE_HITS["finalize"] += 1
+    from .. import interp as I
+    from . import variant as V
+
+    try:
+        expr = I.parse_v2_expr(I.canon(raw_leaf))
+    except I.V2ParseError as e:
+        return V.raise_err("expr_error", f"invalid v2 expr: {e}",
+                           path).cast(V.VT)
+    return _value_column(
+        lambda record, out, ctx: I.eval_v2_expr(expr, out, ctx, out, path,
+                                                I.V2Ctx()), scope)

@@ -1,34 +1,28 @@
 """JSON/object ops: merge, get, pick, omit, keys/values/entries, len,
-from_entries, object_flatten, object_unflatten.
+from_entries.
 
 Reference semantics: ``transform.rs:4360-5057``.  Objects compile to
 ``map<string,variant>`` Columns.  Note: the variant encoding stores object
 keys sorted, so key-enumeration order is sorted here where the reference
 preserves insertion order (structural JSON equality is unaffected).
 
-``object_flatten`` / ``object_unflatten`` / ``deep_merge`` recurse over
-data-dependent shapes that Column expressions cannot express for unbounded
-depth — they run as Arrow-batched pandas UDFs over canonical JSON text
-(the engine's only Python-side ops; everything else is JVM-side).
+``deep_merge``, ``object_flatten``, ``object_unflatten`` and the
+``pick``/``omit`` forms whose paths are not plain object keys known at
+compile time have no Column body: a mapping that uses them evaluates
+through the interpreter (``interp_bridge.needs_interp``).
 """
 
 from __future__ import annotations
 
-import json as _json
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..errors import RuleError, encode_engine_error
+from ..errors import RuleError
 from ..expr_ir import Pipe, StartLiteral
-from ..paths import Index, Key, parse_path
+from ..paths import Index, parse_path
 from . import variant as V
-from .core import (arg_path, compile_pipe, register, rerr, rerr_dyn,
-                   sub_path)
+from .core import arg_path, register, rerr, rerr_dyn
 from .ops_scalar import _operands, seq_strict
-
-_MISSING_SENTINEL = "\x00missing\x00"
 
 
 def _obj_or_error(o: Column, path: str) -> Column:
@@ -63,82 +57,6 @@ def op_merge(scope, cur, args, path):
     return F.when(merged.isNull(), F.lit(None).cast(V.VT)).otherwise(
         V.map_to_variant(merged))
 
-
-def _json_udf(fn_name: str, py_fn):
-    """Wrap a JSON-text → JSON-text python function as an Arrow pandas UDF.
-
-    ``None`` input/output encodes *missing*; engine errors are raised with
-    the standard payload so the driver recovers {kind, path}.
-    """
-    @F.pandas_udf("string")
-    def _udf(col: pd.Series) -> pd.Series:
-        def run(text):
-            if text is None:
-                return None
-            return py_fn(_json.loads(text))
-        return col.map(run)
-    return _udf
-
-
-def _py_err(kind, message, path):
-    return RuntimeError(encode_engine_error(kind, message, path))
-
-
-def _make_deep_merge(arg_paths):
-    def deep_merge(payload):
-        objs = payload  # list of objects (nulls pre-checked)
-        def merge(target, incoming):
-            for k, v in incoming.items():
-                if isinstance(target.get(k), dict) and isinstance(v, dict):
-                    merge(target[k], v)
-                else:
-                    target[k] = v
-        result = {}
-        first = True
-        for j, o in enumerate(objs):
-            if o == _MISSING_SENTINEL:
-                continue
-            if o is None:
-                raise _py_err("expr_error", "expr arg must not be null",
-                              arg_paths[j])
-            if not isinstance(o, dict):
-                raise _py_err("expr_error", "expr arg must be object",
-                              arg_paths[j])
-            if first:
-                result = _json.loads(_json.dumps(o))
-                first = False
-            else:
-                merge(result, o)
-        if first:
-            return None
-        return _json.dumps(result)
-    return deep_merge
-
-
-@register("deep_merge")
-def op_deep_merge(scope, cur, args, path):
-    """Recursive object merge; arrays replaced (``transform.rs:5059-5080``).
-    Unbounded recursion → pandas-UDF slow path."""
-    ops = _operands(scope, cur, args, path)
-    packed = F.to_json(F.array(*[
-        F.coalesce(F.to_json(o), F.lit(_json.dumps(_MISSING_SENTINEL)))
-        for o in ops
-    ]).cast("array<string>"))
-    # array of JSON texts; decode inside the UDF (paths precomputed to
-    # plain strings so the closure never pickles an OpPath)
-    arg_paths = [str(arg_path(path, j)) for j in range(len(ops))]
-    udf = _json_udf("deep_merge", _make_deep_merge_outer(arg_paths))
-    result = udf(packed)
-    return F.when(result.isNull(), F.lit(None).cast(V.VT)).otherwise(
-        F.parse_json(result))
-
-
-def _make_deep_merge_outer(arg_paths):
-    inner = _make_deep_merge(arg_paths)
-    def outer(texts):
-        objs = [_json.loads(t) for t in texts]
-        return inner(objs)
-    return outer
 
 
 @register("get")
@@ -211,48 +129,36 @@ def _literal_or_none(arg: Pipe):
     return None
 
 
-def _paths_from_args(args, path, *, allow_terminal_index: bool):
-    """pick/omit paths must be compile-time literals here
-    (``transform.rs:4964-5040``); dedup + conflict checks apply.  Path
-    args start at original arg index 1 (index 0 is the object), and
-    errors attribute to the offending arg (fixture r02)."""
-    raw_paths: list[tuple[str, str]] = []
-    for j, a in enumerate(args, start=1):
-        # v1 has ONE paths operand at args[1]; v2 validates each arg
-        # 0-based with array items at args[j][k] — sub_path covers both
-        ap = sub_path(path, j - 1)
+def literal_key_paths(args):
+    """The pick/omit path args as deduplicated token paths
+    (``transform.rs:4964-5040``) when the Column bodies can take them:
+    bare literal strings or string arrays that parse, hold no array
+    index and do not conflict.  Else None: such a pick/omit evaluates
+    through the interpreter (``interp_bridge.needs_interp``), which
+    raises the reference's errors per record."""
+    raw_paths: list[str] = []
+    for a in args:
         lit = _literal_or_none(a)
-        if lit is None:
-            raise RuleError("expr_error",
-                            "pick/omit paths must be literals for the Spark "
-                            "compiler", ap)
         if isinstance(lit, str):
-            raw_paths.append((lit, ap))
+            raw_paths.append(lit)
         elif isinstance(lit, list) and all(isinstance(x, str) for x in lit):
-            raw_paths.extend((x, f"{ap}[{k}]") for k, x in enumerate(lit))
-        elif isinstance(lit, list):
-            bad = next(k for k, x in enumerate(lit)
-                       if not isinstance(x, str))
-            raise RuleError("expr_error",
-                            "paths must be a string or array of strings",
-                            f"{ap}[{bad}]")
+            raw_paths.extend(lit)
         else:
-            raise RuleError("expr_error",
-                            "paths must be a string or array of strings",
-                            ap)
+            return None
     token_paths = []
-    for p, ap in raw_paths:
-        tokens = parse_path(p, error_code="expr_error")
-        if not allow_terminal_index and tokens and isinstance(tokens[-1], Index):
-            raise RuleError("expr_error",
-                            "path must not end with array index", ap)
+    for p in raw_paths:
+        try:
+            tokens = parse_path(p, error_code="expr_error")
+        except RuleError:
+            return None
+        if any(isinstance(tok, Index) for tok in tokens):
+            return None
         if tokens in token_paths:
             continue
         for existing in token_paths:
             shorter, longer = sorted((existing, tokens), key=len)
             if longer[:len(shorter)] == shorter:
-                raise RuleError("expr_error",
-                                "path conflicts with another path", ap)
+                return None
         token_paths.append(tokens)
     return token_paths
 
@@ -271,17 +177,12 @@ def _build_object(fields: list[tuple[str, Column]]) -> Column:
     return V.map_to_variant(m)
 
 
-def _pick_tree(base: Column, token_paths, path) -> Column:
-    """Reconstruct the picked sub-object (object keys only beyond root)."""
+def _pick_tree(base: Column, token_paths) -> Column:
+    """Reconstruct the picked sub-object from object-key paths."""
     groups: dict[str, list] = {}
     for tokens in token_paths:
-        if not tokens:
-            continue
-        head = tokens[0]
-        if not isinstance(head, Key):
-            raise RuleError("expr_error",
-                            "pick paths must start with an object key", path)
-        groups.setdefault(head.name, []).append(tokens[1:])
+        if tokens:
+            groups.setdefault(tokens[0].name, []).append(tokens[1:])
     fields = []
     for key, rests in groups.items():
         child = V.get_key(base, key)
@@ -289,35 +190,14 @@ def _pick_tree(base: Column, token_paths, path) -> Column:
             fields.append((key, child))
         else:
             fields.append((key, F.when(child.isNotNull(),
-                                       _pick_tree(child, rests, path))))
+                                       _pick_tree(child, rests))))
     return _build_object(fields)
-
-
-def _args_all_literal(args) -> bool:
-    return all(_literal_or_none(a) is not None for a in args)
-
-
-def _paths_need_udf(args, path, *, allow_terminal_index: bool) -> bool:
-    """Dynamic paths, or literal paths with array indexes, take the
-    python slow path (Column reconstruction handles object keys only)."""
-    if not _args_all_literal(args):
-        return True
-    try:
-        token_paths = _paths_from_args(args, path,
-                                       allow_terminal_index=allow_terminal_index)
-    except RuleError:
-        return True  # surface the reference-shaped error from the UDF
-    return any(isinstance(tok, Index) for t in token_paths for tok in t)
-
 
 @register("pick")
 def op_pick(scope, cur, args, path):
-    if _paths_need_udf(args, path, allow_terminal_index=True):
-        return _pick_omit_udf(scope, cur, args, path, pick=True)
     ops = _operands(scope, cur, args, path)
     base = ops[0]
-    token_paths = _paths_from_args(args, path, allow_terminal_index=True)
-    picked = _pick_tree(base, token_paths, path)
+    picked = _pick_tree(base, literal_key_paths(args))
     p0 = arg_path(path, 0)
     return (
         F.when(base.isNull(), F.lit(None).cast(V.VT))
@@ -329,13 +209,12 @@ def op_pick(scope, cur, args, path):
     )
 
 
-def _omit_tree(base_map: Column, token_paths, path) -> Column:
-    """map<string,variant> with the given literal paths removed."""
-    top_removed = {t[0].name for t in token_paths
-                   if len(t) == 1 and isinstance(t[0], Key)}
+def _omit_tree(base_map: Column, token_paths) -> Column:
+    """map<string,variant> with the given object-key paths removed."""
+    top_removed = {t[0].name for t in token_paths if len(t) == 1}
     nested: dict[str, list] = {}
     for t in token_paths:
-        if len(t) > 1 and isinstance(t[0], Key):
+        if len(t) > 1:
             nested.setdefault(t[0].name, []).append(t[1:])
     result = base_map
     if top_removed:
@@ -346,7 +225,7 @@ def _omit_tree(base_map: Column, token_paths, path) -> Column:
         # as extra HOF lambda variables
         def rewrite(k, v):
             child_obj = V.as_map(v)
-            rewritten = V.map_to_variant(_omit_tree(child_obj, rests, path))
+            rewritten = V.map_to_variant(_omit_tree(child_obj, rests))
             return F.when((k == key) & child_obj.isNotNull(), rewritten) \
                     .otherwise(v)
         return rewrite
@@ -358,15 +237,10 @@ def _omit_tree(base_map: Column, token_paths, path) -> Column:
 
 @register("omit")
 def op_omit(scope, cur, args, path):
-    if _paths_need_udf(args, path, allow_terminal_index=False):
-        return _pick_omit_udf(scope, cur, args, path, pick=False)
     ops = _operands(scope, cur, args, path)
     base = ops[0]
-    token_paths = _paths_from_args(args, path, allow_terminal_index=True)
-    token_paths = [t for t in token_paths
-                   if all(isinstance(tok, Key) for tok in t)]
     omitted = V.map_to_variant(_omit_tree(base.try_cast(V.MAP_T),
-                                          token_paths, path))
+                                          literal_key_paths(args)))
     p0 = arg_path(path, 0)
     return (
         F.when(base.isNull(), F.lit(None).cast(V.VT))
@@ -376,164 +250,6 @@ def op_omit(scope, cur, args, path):
               rerr("expr_error", "expr arg must be object", p0).cast(V.VT))
         .otherwise(omitted)
     )
-
-
-def _py_parse_paths(values, err_paths, *, allow_terminal_index: bool):
-    """``eval_json_paths_arg`` (``transform.rs:4964-5040``) in Python.
-    ``err_paths[j]`` is the error path for ``values[j]`` (arg-level
-    attribution for v1 ops, fixture r02)."""
-    from ..paths import Index as PIndex
-    from ..paths import parse_path as pp
-    raw: list[tuple[str, str]] = []
-    for v, ep in zip(values, err_paths):
-        if isinstance(v, str):
-            raw.append((v, ep))
-        elif isinstance(v, list):
-            # array items attribute to their index inside the arg
-            # (``_eval_json_paths_arg``: ``{arg}[{k}]``)
-            for k, item in enumerate(v):
-                if not isinstance(item, str):
-                    raise _py_err("expr_error",
-                                  "paths must be a string or array of "
-                                  "strings", f"{ep}[{k}]")
-                raw.append((item, f"{ep}[{k}]"))
-        else:
-            raise _py_err("expr_error",
-                          "paths must be a string or array of strings", ep)
-    token_paths = []
-    for p, ep in raw:
-        try:
-            tokens = pp(p, error_code="expr_error")
-        except RuleError as e:
-            raise _py_err("expr_error", str(e), ep)
-        if not allow_terminal_index and tokens and \
-                isinstance(tokens[-1], PIndex):
-            raise _py_err("expr_error",
-                          "path must not end with array index", ep)
-        if tokens in token_paths:
-            continue
-        for existing in token_paths:
-            shorter, longer = sorted((existing, tokens), key=len)
-            if longer[:len(shorter)] == shorter:
-                raise _py_err("expr_error",
-                              "path conflicts with another path", ep)
-        token_paths.append(tokens)
-    return token_paths
-
-
-def _py_set_path_with_indexes(root, tokens, value, path):
-    from ..paths import Index as PIndex
-    from ..paths import Key as PKey
-    cur = root
-    for i, tok in enumerate(tokens[:-1]):
-        nxt_tok = tokens[i + 1]
-        if isinstance(tok, PKey):
-            if not isinstance(cur, dict):
-                raise _py_err("expr_error",
-                              "intermediate path is not an object", path)
-            if tok.name not in cur:
-                cur[tok.name] = [] if isinstance(nxt_tok, PIndex) else {}
-            cur = cur[tok.name]
-        else:
-            if not isinstance(cur, list):
-                raise _py_err("expr_error",
-                              "intermediate path is not an array", path)
-            while len(cur) <= tok.index:
-                cur.append({} if isinstance(nxt_tok, PKey) else [])
-            cur = cur[tok.index]
-    last = tokens[-1]
-    if isinstance(last, PKey):
-        if not isinstance(cur, dict):
-            raise _py_err("expr_error",
-                          "intermediate path is not an object", path)
-        cur[last.name] = value
-    else:
-        if not isinstance(cur, list):
-            raise _py_err("expr_error",
-                          "intermediate path is not an array", path)
-        while len(cur) <= last.index:
-            cur.append(None)
-        cur[last.index] = value
-
-
-def _py_get_path(value, tokens):
-    from ..paths import get_path as gp
-    return gp(value, tokens)
-
-
-def _py_remove_path(value, tokens):
-    from ..paths import Index as PIndex
-    from ..paths import Key as PKey
-    cur = value
-    for tok in tokens[:-1]:
-        if isinstance(tok, PKey) and isinstance(cur, dict):
-            cur = cur.get(tok.name)
-        elif isinstance(tok, PIndex) and isinstance(cur, list) \
-                and 0 <= tok.index < len(cur):
-            cur = cur[tok.index]
-        else:
-            return
-    last = tokens[-1]
-    if isinstance(last, PKey) and isinstance(cur, dict):
-        cur.pop(last.name, None)
-    elif isinstance(last, PIndex) and isinstance(cur, list) \
-            and 0 <= last.index < len(cur):
-        cur.pop(last.index)
-
-
-def _pick_omit_udf(scope, cur, args, path, *, pick: bool):
-    """Dynamic pick/omit (paths from data, e.g. @context.paths) —
-    pandas-UDF slow path mirroring ``transform.rs:4476-4593``."""
-    ops = _operands(scope, cur, args, path)
-    # plain strings precomputed so the closure never pickles an OpPath;
-    # the base is operand 0, each paths arg attributes per sub_path
-    # (v1: the one paths operand at args[1]; v2: 0-based per-arg)
-    arg_paths = [str(arg_path(path, 0))] + \
-        [str(sub_path(path, j)) for j in range(len(ops) - 1)]
-
-    def run(parts):
-        base = parts[0]
-        if base == _MISSING_SENTINEL:
-            return None
-        if base is None:
-            raise _py_err("expr_error", "expr arg must not be null",
-                          arg_paths[0])
-        if not isinstance(base, dict):
-            raise _py_err("expr_error", "expr arg must be object",
-                          arg_paths[0])
-        raw_paths = []
-        for j, p in enumerate(parts[1:], start=1):
-            if p == _MISSING_SENTINEL:
-                return None
-            if p is None:
-                raise _py_err("expr_error", "expr arg must not be null",
-                              arg_paths[j])
-            raw_paths.append(p)
-        token_paths = _py_parse_paths(raw_paths, arg_paths[1:],
-                                      allow_terminal_index=pick)
-        if pick:
-            out = {}
-            for tokens in token_paths:
-                found, v = _py_get_path(base, tokens)
-                if found:
-                    _py_set_path_with_indexes(out, tokens, v, arg_paths[0])
-            return _json.dumps(out)
-        for tokens in token_paths:
-            _py_remove_path(base, tokens)
-        return _json.dumps(base)
-
-    packed = F.to_json(F.array(*[
-        F.coalesce(F.to_json(o), F.lit(_json.dumps(_MISSING_SENTINEL)))
-        for o in ops
-    ]).cast("array<string>"))
-
-    def outer(texts):
-        return run([_json.loads(t) for t in texts])
-
-    udf = _json_udf("pick_omit", outer)
-    result = udf(packed)
-    return F.when(result.isNull(), F.lit(None).cast(V.VT)).otherwise(
-        F.parse_json(result))
 
 
 def _obj_unary(scope, cur, args, path, fn):
@@ -669,94 +385,3 @@ def op_from_entries(scope, cur, args, path):
     )
     return seq_strict(ops, path, result)
 
-
-def _make_object_flatten(path):
-    """``flatten_object`` (``transform.rs:5077-5143``): dotted keys are
-    bracket-quoted in the flat path; bracket/empty keys error; empty
-    objects stay as ``{}`` leaves."""
-    def seg(prefix, k):
-        if k == "":
-            raise _py_err("expr_error",
-                          "object_flatten does not support empty keys", path)
-        if "[" in k or "]" in k:
-            raise _py_err(
-                "expr_error",
-                "object_flatten does not support keys with '[' or ']'", path)
-        if "." in k:
-            escaped = k.replace("\\", "\\\\").replace('"', '\\"')
-            return prefix + f'["{escaped}"]'
-        return f"{prefix}.{k}" if prefix else k
-
-    def flatten(obj):
-        if not isinstance(obj, dict):
-            raise _py_err("expr_error", "expr arg must be object", path)
-        out = {}
-        def walk(prefix, m):
-            for k, v in m.items():
-                p = seg(prefix, k)
-                if isinstance(v, dict) and v:
-                    walk(p, v)
-                else:
-                    out[p] = v
-        walk("", obj)
-        return _json.dumps(out)
-    return flatten
-
-
-def _make_object_unflatten(path):
-    def unflatten(obj):
-        if not isinstance(obj, dict):
-            raise _py_err("expr_error", "expr arg must be object", path)
-        from ..paths import Index as PIndex
-        from ..paths import parse_path as pp
-        root = {}
-        seen = []
-        for key, value in obj.items():
-            try:
-                tokens = pp(key, error_code="expr_error")
-            except RuleError as e:
-                raise _py_err("expr_error", str(e), path)
-            if any(isinstance(t, PIndex) for t in tokens):
-                raise _py_err("expr_error",
-                              "array indexes are not allowed in path", path)
-            names = [t.name for t in tokens]
-            for s in seen:
-                shorter, longer = sorted((s, names), key=len)
-                if longer[:len(shorter)] == shorter:
-                    raise _py_err("expr_error",
-                                  "path conflicts with another path", path)
-            seen.append(names)
-            curm = root
-            for name in names[:-1]:
-                nxt = curm.setdefault(name, {})
-                if not isinstance(nxt, dict):
-                    raise _py_err("expr_error",
-                                  "path conflicts with another path", path)
-                curm = nxt
-            curm[names[-1]] = value
-        return _json.dumps(root)
-    return unflatten
-
-
-def _obj_unary_udf(scope, cur, args, path, make_fn):
-    ops = _operands(scope, cur, args, path)
-    o = ops[0]
-    # operand-attributed plain-string path (v1: ...expr.args[0]); the
-    # closure must never pickle an OpPath
-    udf = _json_udf("obj_op", make_fn(str(arg_path(path, 0))))
-    result = F.parse_json(udf(F.to_json(o)))
-    return seq_strict(ops, path, result)
-
-
-@register("object_flatten")
-def op_object_flatten(scope, cur, args, path):
-    """nested object → flat dotted-path keys (``transform.rs:4832-4856``);
-    pandas-UDF slow path (unbounded recursion)."""
-    return _obj_unary_udf(scope, cur, args, path, _make_object_flatten)
-
-
-@register("object_unflatten")
-def op_object_unflatten(scope, cur, args, path):
-    """inverse of object_flatten; index paths & conflicts error
-    (``transform.rs:4858-4913``)."""
-    return _obj_unary_udf(scope, cur, args, path, _make_object_unflatten)

@@ -340,8 +340,8 @@ class RuleCompiler:
                         ("ref" in raw or ("op" in raw and "if" not in raw))):
                     cond = parse_condition(raw)
                     if cond_needs_interp(cond):
-                        # pandas-UDF op in a lambda position: evaluate
-                        # the condition through the interpreter
+                        # an op only the interpreter implements:
+                        # evaluate the condition through it
                         return when_value_column(raw, self.rule.version,
                                                  scope, path)
                     return compile_condition(cond, scope, path)
@@ -370,9 +370,8 @@ class RuleCompiler:
             pipe = self._expr_pipe(mapping.expr, f"{path}.expr")
             from .interp_bridge import mapping_value_column, needs_interp
             if needs_interp(pipe):
-                # pandas-UDF op in a lambda position: evaluate the
-                # whole mapping through the interpreter (oracle-exact;
-                # Spark rejects Python UDFs inside Catalyst lambdas)
+                # an op only the interpreter implements: evaluate the
+                # whole mapping through it (oracle-exact)
                 value = mapping_value_column(mapping.expr,
                                              self.rule.version, scope,
                                              f"{path}.expr")
@@ -708,7 +707,7 @@ class RuleCompiler:
         from . import sqlfn
         from .interp_bridge import (cond_needs_interp,
                                     finalize_filter_column,
-                                    finalize_filter_parse_error)
+                                    parse_finalize_filter)
         with rule_version(self.rule.version), \
                 sqlfn.deferred(builder._df.sparkSession):
             # filter, sort key and array all read the record: parse its
@@ -721,14 +720,14 @@ class RuleCompiler:
                 # record (transform.rs:296-299).  A condition that
                 # fails to parse raises per kept record: the reference
                 # parses it inside the per-record apply_finalize.
-                perr = finalize_filter_parse_error(fin.filter)
+                icond, perr = parse_finalize_filter(fin.filter)
                 if perr is not None:
                     cond = F.when(keep, V.raise_err(
                         perr[0], perr[1], "finalize.filter").cast("boolean"))
                 elif cond_needs_interp(cond_ir := parse_condition(fin.filter)):
                     cond = finalize_filter_column(
-                        fin.filter, self.rule.version, out_v, F.lit(0),
-                        self.context, singleton_out=True, guard=keep,
+                        icond, out_v, F.lit(0), self.context,
+                        singleton_out=True, guard=keep,
                         context_col=self.context_col)
                 else:
                     scope = Scope(input=out_v, context=self._context(),
@@ -780,7 +779,9 @@ def compile_wrap_template(wrap, arr: Column, context: Column | None,
     """``finalize.wrap`` (``transform.rs:716-749``) → one variant Column.
     Objects nest and come out key-sorted, like the reference's
     ``BTreeMap``; every other node is a v2 expr with ``@input`` and
-    ``@out`` bound to ``arr``, the output array; missing → null."""
+    ``@out`` bound to ``arr``, the output array; missing → null.  A
+    leaf holding an op only the interpreter implements evaluates
+    through it (``interp_bridge.wrap_value_column``)."""
     if isinstance(wrap, dict):
         if not wrap:
             return V.lit_variant({})
@@ -797,5 +798,8 @@ def compile_wrap_template(wrap, arr: Column, context: Column | None,
             raise
         return V.raise_err("expr_error", f"invalid v2 expr: {err.message}",
                            path).cast(V.VT)
+    from .interp_bridge import needs_interp, wrap_value_column
     scope = Scope(input=arr, out=arr, context=context)
-    return F.coalesce(compile_pipe(pipe, scope, path), V.vnull())
+    value = (wrap_value_column(wrap, scope, path) if needs_interp(pipe)
+             else compile_pipe(pipe, scope, path))
+    return F.coalesce(value, V.vnull())

@@ -277,28 +277,15 @@ def records_from_csv(spark: SparkSession, path: str, has_header: bool,
 # --- finalize -----------------------------------------------------------
 
 
-def _finalize_filter_on_driver(df: DataFrame, raw_filter, rule: RuleFile,
-                               context) -> DataFrame:
-    """finalize.filter with an ``@out`` reference: the condition sees
-    the WHOLE pre-filter output array (``transform.rs:634``), a global
-    value no per-row plan can supply — evaluated through the
-    interpreter on the driver (the reference's own loop is single-node
-    and clones the full vector the same way)."""
+def _finalize_filter_on_driver(df: DataFrame, cond, context) -> DataFrame:
+    """finalize.filter with an ``@out`` reference: the condition (the
+    interp condition ``cond``) sees the WHOLE pre-filter output array
+    (``transform.rs:634``), a global value no per-row plan can supply —
+    evaluated through the interpreter on the driver (the reference's
+    own loop is single-node and clones the full vector the same way)."""
     from . import interp as I
     from .errors import normalize_kind
 
-    model = I.parse_expr_model(raw_filter)
-    raw = I._expr_to_json_for_v2_condition(model)
-    if raw is None:
-        raise TransformEngineError(normalize_kind("expr_error"),
-                                   "finalize.filter must be a v2 condition",
-                                   "finalize.filter")
-    try:
-        cond = I.parse_v2_condition(raw)
-    except I.V2ParseError as e:
-        raise TransformEngineError(normalize_kind("expr_error"),
-                                   f"invalid v2 condition: {e}",
-                                   "finalize.filter") from None
     rows = sorted(df.select("__idx__", "__json__").collect(),
                   key=lambda r: r["__idx__"])
     items = [json.loads(r["__json__"]) for r in rows]
@@ -336,9 +323,9 @@ def apply_finalize(df: DataFrame, rule: RuleFile,
                                              cond_uses_item_index,
                                              cond_uses_out,
                                              finalize_filter_column,
-                                             finalize_filter_parse_error)
+                                             parse_finalize_filter)
         from .errors import normalize_kind
-        perr = finalize_filter_parse_error(fin.filter)
+        icond, perr = parse_finalize_filter(fin.filter)
         if perr is not None:
             raise TransformEngineError(normalize_kind(perr[0]), perr[1],
                                        "finalize.filter")
@@ -348,7 +335,7 @@ def apply_finalize(df: DataFrame, rule: RuleFile,
             # global, so this shape evaluates on the driver exactly
             # like the reference's single-node loop (which clones the
             # full vector too, transform.rs:634).
-            df = _finalize_filter_on_driver(df, fin.filter, rule, context)
+            df = _finalize_filter_on_driver(df, icond, context)
         else:
             idx_col = F.col("__idx__").cast("int")
             fidx = False
@@ -363,8 +350,8 @@ def apply_finalize(df: DataFrame, rule: RuleFile,
             if cond_needs_interp(cond_ir):
                 with rule_version(rule.version):
                     cond = finalize_filter_column(
-                        fin.filter, rule.version,
-                        F.parse_json(F.col("__json__")), idx_col, context)
+                        icond, F.parse_json(F.col("__json__")), idx_col,
+                        context)
             else:
                 with rule_version(rule.version):
                     scope = Scope(input=item,

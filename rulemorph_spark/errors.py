@@ -237,7 +237,16 @@ def decode_dbg_message(message: str) -> str:
 
 
 def extract_engine_error(exc: BaseException) -> TransformEngineError | None:
-    """Recover a TransformEngineError from a Spark exception message."""
+    """Recover a TransformEngineError from a Spark exception message.
+
+    An ``AnalysisException`` gives None: analysis evaluates no row, so
+    no engine error was raised, and a marker in its text is plan text
+    (an unevaluated ``raise_error`` call) — Spark's own error class is
+    the real cause."""
+    from pyspark.errors import AnalysisException
+
+    if isinstance(exc, AnalysisException):
+        return None
     text = str(exc)
     start = text.find(_MARKER)
     if start < 0:

@@ -948,19 +948,6 @@ def _parse_cond_array(value: Any, kind: str) -> V2Cond:
     return V2Cond(kind, conds=[parse_v2_condition(c) for c in value])
 
 
-def is_v2_expr_value(value: Any) -> bool:
-    """``is_v2_expr`` (v2_parser.rs:1367-1385)."""
-    if isinstance(value, list):
-        return True
-    if isinstance(value, str):
-        return (value.startswith("@") or value == "$"
-                or value.startswith("lit:"))
-    if isinstance(value, dict):
-        return not ("ref" in value
-                    or ("op" in value and "if" not in value))
-    return False
-
-
 # =========================================================================
 # v1 evaluation (transform.rs)
 # =========================================================================
@@ -4865,17 +4852,3 @@ def transform_record(rule_text_or_rule, record, context=None,
         rule, canon(record), canon(context) if context is not None
         else None, base_dir)
     return MISSING if boxed is None else boxed.v
-
-
-def eval_pipe_json(pipe_json, record, context=None, out=None,
-                   pipe_value=MISSING, base_path="expr"):
-    """Evaluate a raw v2 pipe (JSON form) over a Python record — the
-    building block for three-way fuzzing and trace replay."""
-    pipe = parse_v2_pipe_from_value(canon(pipe_json))
-    ctx = V2Ctx()
-    if pipe_value is not MISSING:
-        ctx = ctx.with_pipe_value(pipe_value)
-    return eval_v2_pipe(pipe, canon(record),
-                        canon(context) if context is not None else None,
-                        canon(out) if out is not None else {},
-                        base_path, ctx)

@@ -1,16 +1,16 @@
-"""Robust corpus ingestion: distributed line readers that QUARANTINE
+"""Robust corpus ingestion: a distributed NDJSON reader that QUARANTINES
 malformed records instead of failing the job or silently dropping them.
 
 At 100 TB a single corrupt line must not kill a ten-hour ingest
 (FAILFAST), and silently nulling it (PERMISSIVE + drop) loses the
-evidence operators need to fix the producer.  These readers split every
+evidence operators need to fix the producer.  The reader splits every
 input line into exactly one of two DataFrames:
 
 - **good**: parsed columns per the caller's schema;
 - **quarantine**: the raw line + source file, untouched, for triage
   and replay.
 
-Built on ``spark.read.text`` + ``from_json`` / ``from_csv`` rather than
+Built on ``spark.read.text`` + ``from_json`` rather than
 the DataFrameReader's ``columnNameOfCorruptRecord`` machinery: the
 corrupt-column route needs caching workarounds to filter on (Spark
 disallows plans referencing only the internal corrupt column), while
@@ -74,63 +74,6 @@ def read_ndjson_quarantine(
                      "mode": "PERMISSIVE"}))
     bad = (F.col("__rec__").isNull() |
            F.col(f"__rec__.{corrupt}").isNotNull())
-    good = parsed.filter(~bad).select(
-        *[F.col(f"__rec__.{f.name}") for f in schema.fields])
-    quarantine = parsed.filter(bad).select(*_quarantine_cols())
-    return good, quarantine
-
-
-def read_csv_quarantine(
-        spark: SparkSession, path: str, schema: T.StructType | str,
-        sep: str = ",", header: bool = False,
-        strict_arity: bool = True) -> tuple[DataFrame, DataFrame]:
-    """Read CSV lines into ``(good, quarantine)``.
-
-    A line quarantines when ``from_csv`` cannot parse it, or (with
-    ``strict_arity``) when its field count differs from the schema —
-    the classic truncated-row / stray-delimiter corruption that
-    permissive CSV readers silently pad with NULLs.
-
-    ``header=True`` drops one header line per input FILE (matched by
-    content, the only distributed-safe interpretation).
-    """
-    import re as _re
-
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    lines = _lines(spark, path)
-    if header:
-        # drop each file's FIRST line: min monotonically-increasing id
-        # per file (text partitions follow file offsets, so the min id
-        # is the first line).  A tiny (file, id) aggregate + broadcast
-        # anti-join — NOT a per-file window, which would funnel every
-        # line of a file through one task.
-        ids = lines.withColumn("__id__", F.monotonically_increasing_id())
-        firsts = ids.groupBy("__file__").agg(F.min("__id__")
-                                             .alias("__id__"))
-        lines = (ids.join(F.broadcast(firsts), ["__file__", "__id__"],
-                          "left_anti")
-                 .drop("__id__"))
-    corrupt = "__corrupt__"
-    parse_schema = T.StructType(
-        list(schema.fields) + [T.StructField(corrupt, T.StringType())])
-    parsed = lines.withColumn(
-        "__rec__",
-        F.from_csv(F.col("__raw__"), parse_schema.simpleString(),
-                   {"sep": sep, "mode": "PERMISSIVE",
-                    "columnNameOfCorruptRecord": corrupt}))
-    # type-level corruption (e.g. letters in an int column) sets the
-    # corrupt field — without it PERMISSIVE silently nulls the cell
-    bad = (F.col("__rec__").isNull() |
-           F.col(f"__rec__.{corrupt}").isNotNull())
-    if strict_arity:
-        # a truncated or over-long line still parses PERMISSIVEly
-        # (padded with NULLs / extra fields dropped), so arity is
-        # checked against the raw delimiter count.  Unquoted-separator
-        # heuristic — disable for data with quoted separators.
-        n_fields = F.size(F.split(F.col("__raw__"),
-                                  _re.escape(sep), -1))
-        bad = bad | (n_fields != F.lit(len(schema.fields)))
     good = parsed.filter(~bad).select(
         *[F.col(f"__rec__.{f.name}") for f in schema.fields])
     quarantine = parsed.filter(bad).select(*_quarantine_cols())

@@ -1,14 +1,8 @@
-"""Structured-Streaming execution of compiled rules + event-time and
-stateful operators."""
+"""Structured-Streaming execution of compiled rules and event-time
+session windows."""
 
 from .stream import transform_stream, transform_stream_files
-from .dedup import dedup_stream
-from .windows import (event_time, ns_to_timestamp, session_window_agg,
-                      tumbling_window_agg)
-from .joins import attribution_join, interval_join
-from .corpus import ingest_batch, ingest_corpus_stream
+from .windows import event_time, session_window_agg
 
-__all__ = ["transform_stream", "transform_stream_files", "dedup_stream",
-           "event_time", "ns_to_timestamp", "session_window_agg",
-           "tumbling_window_agg", "interval_join", "attribution_join",
-           "ingest_batch", "ingest_corpus_stream"]
+__all__ = ["transform_stream", "transform_stream_files", "event_time",
+           "session_window_agg"]

@@ -1,4 +1,4 @@
-"""Event-time windowed aggregation for streams (watermark + window).
+"""Event-time session windows for streams (watermark + session window).
 
 The reference engine has no event-time processing (SURVEY §2.1 "not
 present": no watermarks / event-time windows); this is Spark-native
@@ -6,10 +6,10 @@ extension surface.  The same transformation works on a batch DataFrame
 and a streaming DataFrame — Structured Streaming's unified model — so
 correctness is tested by batch/stream equivalence.
 
-Scale: a windowed agg shuffles on (window, keys); state per open window
-per key is O(1) aggregates and the watermark bounds how many windows
-stay open, so state size = keys × windows-in-watermark-horizon,
-independent of stream length.
+Scale: a session agg shuffles on (session window, keys); state per
+open session per key is O(1) aggregates and the watermark bounds how
+many sessions stay open, so state size = keys × sessions-in-watermark-
+horizon, independent of stream length.
 """
 
 from __future__ import annotations
@@ -25,47 +25,12 @@ def event_time(col: Column) -> Column:
     return col.cast("timestamp")
 
 
-def ns_to_timestamp(col: Column) -> Column:
-    """nanosecond-epoch long → TimestampType, truncating to
-    microseconds (Spark's native resolution) — for long-typed event
-    feeds."""
-    return F.timestamp_micros(F.floor(col / F.lit(1000)).cast("long"))
-
-
-def tumbling_window_agg(df: DataFrame, ts_col: str, *, keys: list[str],
-                        value_col: str | None = None,
-                        window: str = "1 minute",
-                        watermark: str = "2 minutes") -> DataFrame:
-    """Tumbling event-time window counts (+ exact value sum via integer
-    cents) per key.
-
-    On a streaming DataFrame the watermark lets Spark finalize and emit
-    windows older than ``watermark`` behind the max seen event time and
-    drop later-arriving data for them; on a batch DataFrame
-    ``withWatermark`` is a no-op, yielding identical results — which is
-    what the equivalence test asserts.
-    """
-    aggs = [F.count("*").alias("n")]
-    if value_col is not None:
-        cents = F.floor(F.col(value_col) * 10000 + 0.5).cast("long")
-        aggs.append((F.sum(cents) / F.lit(10000.0)).alias("sum_value"))
-    return (df.withWatermark(ts_col, watermark)
-            .groupBy(F.window(F.col(ts_col), window).alias("win"), *keys)
-            .agg(*aggs)
-            .select(F.col("win.start").alias("win_start"),
-                    F.col("win.end").alias("win_end"), *keys,
-                    *[F.col(a) for a in
-                      (["n"] + (["sum_value"] if value_col else []))]))
-
-
 def session_window_agg(df: DataFrame, ts_col: str, *, keys: list[str],
                        gap: str = "30 minutes",
                        value_col: str | None = None,
                        watermark: str | None = None) -> DataFrame:
     """Gap-based sessions via Spark's native ``session_window`` — the
-    idiomatic form of the lag+running-sum sessionization (and of the
-    applyInPandasWithState sessionizer, whose custom-logic slot this
-    does not replace).
+    idiomatic form of the lag+running-sum sessionization.
 
     State shape on a stream: one open session per key, merged as events
     arrive, finalized once the watermark passes ``end``; on a batch
@@ -90,29 +55,3 @@ def session_window_agg(df: DataFrame, ts_col: str, *, keys: list[str],
                     *[F.col(c) for c in
                       (["n_events"] +
                        (["session_value"] if value_col else []))]))
-
-
-def windowed_approx_distinct(df: DataFrame, ts_col: str, value_col: str,
-                             *, keys: list[str] | None = None,
-                             window: str = "1 minute",
-                             watermark: str = "2 minutes",
-                             lgk: int = 12) -> DataFrame:
-    """Approximate COUNT(DISTINCT value) per event-time window via HLL.
-
-    The streaming-safe distinct: exact streaming count-distinct needs
-    per-window state proportional to the number of distinct values
-    (unbounded); an HLL register set is a fixed 2^lgk bytes per open
-    (window, key) group and Spark's DataSketches aggregate supports
-    partial merge, so it runs identically under the streaming planner
-    (batch/stream equivalence tested).  ~2% error at the default lgk.
-    """
-    keys = keys or []
-    return (df.withWatermark(ts_col, watermark)
-            .groupBy(F.window(F.col(ts_col), window).alias("win"), *keys)
-            .agg(F.hll_sketch_estimate(
-                F.hll_sketch_agg(value_col, F.lit(lgk)))
-                .alias("approx_distinct"),
-                F.count("*").alias("n"))
-            .select(F.col("win.start").alias("win_start"),
-                    F.col("win.end").alias("win_end"), *keys,
-                    "approx_distinct", "n"))

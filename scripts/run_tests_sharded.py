@@ -31,7 +31,6 @@ WEIGHTS = {
     "test_golden_reference.py": 320,
     "test_pipe_fuzz.py": 260,
     "test_oracle_parity.py": 250,
-    "test_stateful_streaming.py": 220,
     "test_endpoint_fuzz.py": 200,
     "test_retrieval.py": 160,
     "test_cli_and_streaming.py": 150,
@@ -61,6 +60,7 @@ SMOKE_FILES = {
     "test_service_record.py",
     "test_service_concurrency.py",
     "test_finalize_filter.py",
+    "test_interp_bridge.py",
 }
 
 

@@ -1,11 +1,10 @@
-"""Lambda-trapped pandas-UDF ops route through the interpreter
-(compiler/interp_bridge.py): deep_merge / object_(un)flatten / dynamic
-pick/omit inside array-op bodies, {map:} step bodies, if-branches, or
-operand args — positions where Spark forbids Python UDFs (round-8
-find: these rules previously failed analysis with a misleading error;
-the reference interprets them fine).  Every case compares the ENGINE
-against the INTERPRETER oracle — results and error {kind, message,
-path} alike."""
+"""The ops Spark cannot express evaluate through the interpreter
+(compiler/interp_bridge.py) in every position: deep_merge,
+object_(un)flatten, and pick/omit whose paths are dynamic, indexed or
+malformed — as a mapping's direct step, inside array-op bodies,
+{map:} step bodies, if-branches, operand args, when-conditions and
+finalize.wrap leaves.  Every case compares the ENGINE against the
+INTERPRETER oracle — results and error {kind, message, path} alike."""
 
 from __future__ import annotations
 
@@ -16,6 +15,8 @@ import pytest
 from rulemorph_spark import interp as I
 from rulemorph_spark.engine import transform
 from rulemorph_spark.errors import TransformEngineError
+
+pytestmark = pytest.mark.smoke
 
 
 def _engine(spark, rule, records):
@@ -101,21 +102,117 @@ mappings:
 """, [{"xs": [{"ok": 1}, {"ba[d": 2}]}]),
 ]
 
+_V1_DEEP_MERGE = """
+version: 1
+input: {format: json, json: {}}
+mappings:
+  - target: out
+    expr: {op: deep_merge, args: [{ref: "input.a"}, {ref: "input.b"}]}
+"""
+_V2_DEEP_MERGE = """
+version: 2
+input: {format: json}
+mappings:
+  - target: out
+    expr: ["@input.a", {deep_merge: ["@input.b"]}]
+"""
+_TOP_LEVEL = """
+version: 2
+input: {format: json}
+mappings:
+  - target: out
+    expr: ["@input.doc", {%s}]
+"""
+_IN_MAP = """
+version: 2
+input: {format: json}
+mappings:
+  - target: out
+    expr: ["@input.xs", {map: [{%s}]}]
+"""
+
+CASES += [
+    # a direct deep_merge step, v1 and v2: ok rows (a missing operand
+    # is skipped), a non-object operand, a null operand
+    *[(rule, records)
+      for rule in (_V1_DEEP_MERGE, _V2_DEEP_MERGE)
+      for records in (
+          [{"a": {"x": {"y": 1}, "k": [1]}, "b": {"x": {"z": 2}, "k": [2]}},
+           {"a": {"p": 1}}],
+          [{"a": {"x": 1}, "b": 5}],
+          [{"a": None, "b": {"x": 1}}])],
+    # object_flatten: a dotted key is bracket-quoted, an empty key errors
+    (_TOP_LEVEL % "object_flatten: []",
+     [{"doc": {"a.b": {"c": 1}, "d": {}, "e": [1]}}]),
+    (_TOP_LEVEL % "object_flatten: []", [{"doc": {"a": {"": 1}}}]),
+    # object_unflatten: conflicting paths
+    (_TOP_LEVEL % "object_unflatten: []", [{"doc": {"a": 1, "a.b": 2}}]),
+    # dynamic pick/omit: ok, and a path that is not a string
+    (_TOP_LEVEL % 'pick: ["@input.fields"]',
+     [{"doc": {"a": {"b": 1, "c": 2}, "d": 3}, "fields": ["a.b", "d"]}]),
+    (_TOP_LEVEL % 'omit: ["@input.fields"]',
+     [{"doc": {"a": {"b": 1, "c": 2}, "d": 3}, "fields": ["a.b", "d"]}]),
+    (_TOP_LEVEL % 'pick: ["@input.fields"]',
+     [{"doc": {"a": 1}, "fields": ["a", 7]}]),
+    # a literal indexed path, as a direct step and inside a map body
+    (_TOP_LEVEL % 'pick: ["a[0]"]', [{"doc": {"a": [1, 2], "b": 3}}]),
+    (_IN_MAP % 'pick: ["a[0]"]', [{"xs": [{"a": [1, 2]}, {"a": [3]}]}]),
+    # literal paths the reference rejects per record, inside a map body
+    (_IN_MAP % 'omit: ["a[0]"]', [{"xs": [{"a": [1, 2]}]}]),
+    (_IN_MAP % 'pick: ["a..b"]', [{"xs": [{"a": {"b": 1}}]}]),
+    # a finalize.wrap leaf: @input and @out are the output array
+    ("""
+version: 2
+input: {format: json}
+mappings:
+  - target: a
+    expr: ["@input.a"]
+finalize:
+  wrap:
+    merged: ["@out", {first: []}, {deep_merge: [{"a": {"z": 1}}]}]
+    n: ["@out", {len: []}]
+""", [{"a": {"y": 1}}, {"a": {"y": 2}}]),
+]
+
 
 @pytest.mark.parametrize("rule,records", CASES)
 def test_engine_matches_interp(spark, rule, records):
     assert _engine(spark, rule, records) == _oracle(rule, records)
 
 
-def test_top_level_udf_ops_stay_on_the_column_path(spark):
-    """A direct deep_merge step must NOT take the interp fallback."""
+def test_direct_steps_need_interp():
+    """The predicate covers every position, a mapping's direct step
+    included; a pick of plain literal keys keeps its Column body."""
     from rulemorph_spark.compiler.interp_bridge import needs_interp
     from rulemorph_spark.expr_ir import parse_expr
 
-    pipe = parse_expr(["@input.a", {"deep_merge": [{"z": 1}]}])
-    assert not needs_interp(pipe)
-    pipe2 = parse_expr(["@input.xs", {"map": [{"deep_merge": [{"z": 1}]}]}])
-    assert needs_interp(pipe2)
+    assert needs_interp(parse_expr(["@input.a", {"deep_merge": [{"z": 1}]}]))
+    assert needs_interp(
+        parse_expr(["@input.xs", {"map": [{"deep_merge": [{"z": 1}]}]}]))
+    assert needs_interp(parse_expr(["@input.a", {"pick": ["b[0]"]}]))
+    assert not needs_interp(parse_expr(["@input.a", {"pick": ["b.c"]}]))
+
+
+def test_analysis_error_is_not_an_engine_error(spark):
+    """An AnalysisException prints the plan, raise_error markers
+    included; it must surface as itself, not as a row error."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    from rulemorph_spark.compiler import variant as V
+    from rulemorph_spark.errors import extract_engine_error
+
+    @F.pandas_udf("long")
+    def plus_one(s):
+        return s + 1
+
+    df = spark.range(1).select(F.array(F.col("id")).alias("xs"))
+    with pytest.raises(AnalysisException) as ei:
+        df.select(F.transform("xs", lambda x: F.when(
+            x > 0, plus_one(x)).otherwise(V.raise_err(
+                "expr_error", "boom", "p").cast("long")))).collect()
+    assert "RULEMORPH_ERROR" in str(ei.value)
+    assert extract_engine_error(ei.value) is None
 
 
 WHEN_CASES = [

@@ -42,58 +42,6 @@ def test_ndjson_quarantine_empty_and_all_good(spark, tmp_path):
     assert bad.count() == 0
 
 
-def test_csv_quarantine_arity_and_parse(spark, tmp_path):
-    from rulemorph_spark.sources import read_csv_quarantine
-    p = _write(tmp_path / "rows.csv", "\n".join([
-        "1,alpha,10.5",
-        "2,beta",              # truncated: arity 2 != 3
-        "3,gamma,1.5,extra",   # over-long: arity 4 != 3
-        "4,delta,2.25",
-    ]) + "\n")
-    good, bad = read_csv_quarantine(
-        spark, p, "id int, name string, score double")
-    assert sorted((r["id"], r["name"], r["score"])
-                  for r in good.collect()) == \
-        [(1, "alpha", 10.5), (4, "delta", 2.25)]
-    assert sorted(r["raw"] for r in bad.collect()) == \
-        ["2,beta", "3,gamma,1.5,extra"]
-
-
-def test_csv_quarantine_header_dropped_per_file(spark, tmp_path):
-    from rulemorph_spark.sources import read_csv_quarantine
-    d = tmp_path / "csvs"
-    d.mkdir()
-    _write(d / "a.csv", "id,name\n1,x\n2,y\n")
-    _write(d / "b.csv", "id,name\n3,z\n")
-    good, bad = read_csv_quarantine(
-        spark, str(d), "id int, name string", header=True)
-    assert sorted((r["id"], r["name"]) for r in good.collect()) == \
-        [(1, "x"), (2, "y"), (3, "z")]
-    # headers are dropped, not quarantined
-    assert bad.count() == 0
-
-
-def test_csv_quarantine_regex_separator_escaped(spark, tmp_path):
-    from rulemorph_spark.sources import read_csv_quarantine
-    p = _write(tmp_path / "pipe.csv", "1|one\n2|two\n3|three|oops\n")
-    good, bad = read_csv_quarantine(spark, p, "id int, word string",
-                                    sep="|")
-    assert sorted(r["word"] for r in good.collect()) == ["one", "two"]
-    assert [r["raw"] for r in bad.collect()] == ["3|three|oops"]
-
-
-def test_csv_quarantine_type_corruption_not_silently_nulled(
-        spark, tmp_path):
-    from rulemorph_spark.sources import read_csv_quarantine
-    p = _write(tmp_path / "typed.csv",
-               "1,good,2.5\nNOTANUMBER,bad,3.5\n2,fine,xx\n")
-    good, bad = read_csv_quarantine(
-        spark, p, "id int, name string, score double")
-    assert sorted(r["id"] for r in good.collect()) == [1]
-    assert sorted(r["raw"] for r in bad.collect()) == \
-        ["2,fine,xx", "NOTANUMBER,bad,3.5"]
-
-
 # --------------------------------------------------- pipeline CLI command
 
 def test_cli_pipeline_ndjson_to_parquet(spark, tmp_path):

@@ -1,14 +1,7 @@
-"""End-to-end incremental corpus ingestion (streaming/corpus.py):
-stream of document files → declarative cleaning → dedup against the
-persistent fingerprint store → per-epoch idempotent sink.
-
-Verifies the three invariants the module promises:
-1. a drained stream's admitted output == batch dedup_exact survivors
-   of the cleaned input;
-2. a second stream run over NEW files admits only unseen fingerprints;
-3. re-running a fully-committed epoch admits nothing and leaves the
-   durable output untouched.
-"""
+"""End-to-end versioned corpus ingestion (streaming/corpus.py): a
+stream of document files → dedup against the persistent fingerprint
+store → one CorpusStore version per epoch, exactly once across
+replays."""
 
 from __future__ import annotations
 
@@ -16,27 +9,13 @@ import os
 import shutil
 import tempfile
 
-import pytest
 from pyspark.sql import functions as F
-
-from rulemorph_spark.llm.text import fingerprint
-from rulemorph_spark.streaming.corpus import (ingest_batch,
-                                              ingest_corpus_stream)
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def _docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
-
-
-def _expected_keep_ids(docs_df):
-    """batch-side truth: min doc_id per fingerprint."""
-    keyed = docs_df.select(fingerprint(F.col("text")).alias("fp"),
-                           "doc_id")
-    return sorted(r["keep_id"] for r in
-                  keyed.groupBy("fp")
-                  .agg(F.min("doc_id").alias("keep_id")).collect())
 
 
 def _drop_file(df, src_dir, name):
@@ -49,92 +28,6 @@ def _drop_file(df, src_dir, name):
                     if f.endswith(".parquet"))
         shutil.copy(os.path.join(stage, "d", part),
                     os.path.join(src_dir, name))
-
-
-def _run_stream(spark, src_dir, schema, store, out, ckpt):
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    q = ingest_corpus_stream(stream, store_path=store, out_path=out,
-                             checkpoint_path=ckpt)
-    q.awaitTermination(120)
-    assert not q.isActive
-
-
-def test_stream_ingest_matches_batch_dedup(spark):
-    docs = _docs(spark)
-    schema = docs.schema
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        os.makedirs(src)
-        store, out = os.path.join(d, "store"), os.path.join(d, "out")
-        ckpt = os.path.join(d, "ckpt")
-
-        # epoch 1: the first half of the corpus
-        first = docs.filter(F.col("doc_id") < 250)
-        _drop_file(first, src, "f1.parquet")
-        _run_stream(spark, src, schema, store, out, ckpt)
-        got1 = sorted(r["doc_id"] for r in
-                      spark.read.parquet(out).select("doc_id").collect())
-        assert got1 == _expected_keep_ids(first)
-
-        # epoch 2: second half + full overlap with the first half —
-        # only fingerprints never seen before may be admitted
-        _drop_file(docs, src, "f2.parquet")
-        _run_stream(spark, src, schema, store, out, ckpt)
-        got2 = sorted(r["doc_id"] for r in
-                      spark.read.parquet(out).select("doc_id").collect())
-        want_all = _expected_keep_ids(docs)
-        # every admitted fingerprint set matches the global batch truth
-        got_fps = sorted(r["fp"] for r in spark.read.parquet(out)
-                         .select(fingerprint(F.col("text")).alias("fp"))
-                         .collect())
-        want_fps = sorted(r["fp"] for r in docs
-                          .select(fingerprint(F.col("text")).alias("fp"))
-                          .distinct().collect())
-        assert got_fps == want_fps
-        # ids: first-epoch winners stay; new fps admit their min id
-        assert set(got1) <= set(got2)
-        assert len(got2) == len(want_all)
-
-
-def test_ingest_batch_rerun_is_idempotent(spark):
-    docs = _docs(spark).filter(F.col("doc_id") < 100)
-    key = fingerprint(F.col("text"))
-    with tempfile.TemporaryDirectory() as d:
-        store, out = os.path.join(d, "store"), os.path.join(d, "out")
-        n1 = ingest_batch(docs, 0, store_path=store, out_path=out,
-                          key=key)
-        assert n1 > 0
-        first = sorted(r["doc_id"] for r in
-                       spark.read.parquet(out).collect())
-        # re-run the SAME epoch after full commit: nothing admitted,
-        # durable output untouched (the regression the round-1 advisor
-        # flagged on dedup_incremental)
-        n2 = ingest_batch(docs, 0, store_path=store, out_path=out,
-                          key=key)
-        assert n2 == 0
-        again = sorted(r["doc_id"] for r in
-                       spark.read.parquet(out).collect())
-        assert again == first
-
-
-def test_ingest_batch_applies_cleaning_spec(spark):
-    docs = _docs(spark).filter(F.col("doc_id") < 200)
-    key = fingerprint(F.col("text"))
-    spec = {"steps": [{"op": "hash_sample", "fraction": 0.5}]}
-    with tempfile.TemporaryDirectory() as d:
-        store, out = os.path.join(d, "store"), os.path.join(d, "out")
-        ingest_batch(docs, 0, store_path=store, out_path=out, key=key,
-                     spec=spec)
-        from rulemorph_spark.llm.pipeline import run_pipeline
-        from rulemorph_spark.llm.dedup import dedup_exact
-        cleaned = run_pipeline(docs, spec)
-        want = sorted(r["doc_id"] for r in
-                      dedup_exact(cleaned.withColumn("__k__", key),
-                                  F.col("__k__"), "doc_id")
-                      .select("doc_id").collect())
-        got = sorted(r["doc_id"] for r in
-                     spark.read.parquet(out).collect())
-        assert got == want
 
 
 def test_versioned_stream_replay_after_checkpoint_loss(spark):

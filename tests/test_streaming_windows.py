@@ -1,4 +1,4 @@
-"""Batch/stream equivalence for event-time windowed aggregation
+"""Batch/stream equivalence for event-time session windows
 (streaming/windows.py): the same transformation over the events table
 run (a) as a batch DataFrame and (b) as a file-source stream with an
 availableNow trigger into a memory sink must agree exactly.
@@ -13,67 +13,19 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from rulemorph_spark.streaming.windows import (event_time,
-                                               tumbling_window_agg)
+from rulemorph_spark.streaming.windows import event_time, session_window_agg
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _prepared(df):
-    return df.select(event_time(F.col("ts")).alias("ets"),
-                     "event_type", "value")
-
-
-def test_stream_equals_batch(spark):
-    batch = _prepared(spark.read.parquet(f"{SF_DIR}/events.parquet"))
-    expected = tumbling_window_agg(
-        batch, "ets", keys=["event_type"], value_col="value",
-        window="1 minute", watermark="2 minutes")
-    exp_rows = sorted(map(tuple, expected.collect()))
-    assert len(exp_rows) > 10
-
-    schema = spark.read.parquet(f"{SF_DIR}/events.parquet").schema
-    with tempfile.TemporaryDirectory() as d:
-        # the file-stream source requires a directory of files
-        shutil.copy(f"{SF_DIR}/events.parquet",
-                    os.path.join(d, "part-0.parquet"))
-        stream = _prepared(spark.readStream.schema(schema).parquet(d))
-        out = tumbling_window_agg(
-            stream, "ets", keys=["event_type"], value_col="value",
-            window="1 minute", watermark="2 minutes")
-        name = f"win_{uuid.uuid4().hex[:8]}"
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        got_rows = sorted(map(tuple, spark.table(name).collect()))
-    assert got_rows == exp_rows
-
-
-def test_windowed_agg_is_streaming_safe(spark):
-    # the plan must be accepted by the streaming planner (no global
-    # sort/limit) — starting the query at all proves it; also check
-    # schema shape
-    batch = _prepared(spark.read.parquet(f"{SF_DIR}/events.parquet"))
-    out = tumbling_window_agg(batch, "ets", keys=["event_type"])
-    assert [f.name for f in out.schema.fields] == [
-        "win_start", "win_end", "event_type", "n"]
-
-
 def test_session_window_stream_equals_batch(spark):
-    from rulemorph_spark.streaming.windows import session_window_agg
-
     src = spark.read.parquet(f"{SF_DIR}/events.parquet")
     batch = src.select(event_time(F.col("ts")).alias("ets"), "user_id",
-                      "value")
+                       "value")
     expected = sorted(map(tuple, session_window_agg(
         batch, "ets", keys=["user_id"], gap="30 minutes",
         value_col="value").collect()))
     assert len(expected) > 10
-
-    import os
-    import shutil
-    import tempfile
-    import uuid
 
     with tempfile.TemporaryDirectory() as d:
         shutil.copy(f"{SF_DIR}/events.parquet",
@@ -85,37 +37,6 @@ def test_session_window_stream_equals_batch(spark):
                                  gap="30 minutes", value_col="value",
                                  watermark="2 minutes")
         name = f"sess_{uuid.uuid4().hex[:8]}"
-        q = (out.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        got = sorted(map(tuple, spark.table(name).collect()))
-    assert got == expected
-
-
-def test_windowed_approx_distinct_stream_equals_batch(spark):
-    from rulemorph_spark.streaming.windows import windowed_approx_distinct
-
-    src = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    batch = src.select(event_time(F.col("ts")).alias("ets"),
-                       "event_type", "user_id")
-    expected = sorted(map(tuple, windowed_approx_distinct(
-        batch, "ets", "user_id", keys=["event_type"],
-        window="5 minutes").collect()))
-    assert len(expected) > 5
-    # sanity: estimates are positive and bounded by window row count
-    for row in expected:
-        assert 0 < row[3] <= row[4] * 1.05
-
-    with tempfile.TemporaryDirectory() as d:
-        shutil.copy(f"{SF_DIR}/events.parquet",
-                    os.path.join(d, "part-0.parquet"))
-        stream = (spark.readStream.schema(src.schema).parquet(d)
-                  .select(event_time(F.col("ts")).alias("ets"),
-                          "event_type", "user_id"))
-        out = windowed_approx_distinct(stream, "ets", "user_id",
-                                       keys=["event_type"],
-                                       window="5 minutes")
-        name = f"hll_{uuid.uuid4().hex[:8]}"
         q = (out.writeStream.format("memory").queryName(name)
              .outputMode("complete").trigger(availableNow=True).start())
         q.awaitTermination(120)
