@@ -1,12 +1,16 @@
-"""Dual expression backends: one generic builder, two renderings.
+"""Expression backends: one generic builder, several renderings.
 
-Construction-heavy op subtrees are written against this backend
-protocol.  The date parse chain (``ops_date.py``) is written ONCE and
-rendered either as
+Op semantics are written ONCE against this backend protocol — the
+date parse chain (``ops_date.py``), the string/number kernels and
+their variant bodies (``ops_string.py``), the arithmetic body
+(``ops_arith_sql.py``) — and rendered as
 
 - ``ColB`` — the hand-built Column tree (used inside Catalyst lambda
   scopes, where SQL-function call arguments cannot reference the free
-  lambda variable), or
+  lambda variable, and wherever the SQL path declines);
+- ``InlineColB`` — ``ColB`` with substituting lets: a lambda-free
+  tree for the typed engine (``typed.py``, whose error sites are its
+  own ``_terr``) and the typed-column library (``functions/scalar``);
 - ``SqlB`` — SQL text registered per signature as a session SQL
   function (``sqlfn.py``): the analyzer binds each ARGUMENT once via
   an injected Project and the optimizer inlines the body, so a call
@@ -16,11 +20,9 @@ rendered either as
   copies at runtime) which keeps the body lambda-free — lambda-free
   projections stay INSIDE whole-stage codegen.
 
-For the date chain, one generic builder guarantees the two paths cannot
-drift (round 8, VERDICT r7 #1).  The arithmetic and string fast paths
-use ``SqlB`` only (``ops_arith_sql._arith_body``,
-``ops_string_sql``); their Column paths are written separately, for
-arithmetic in ``ops_scalar._numeric_fold``.
+One builder per op means the renderings cannot drift.  Only the
+arithmetic fold still has a hand-written Column twin
+(``ops_scalar._numeric_fold`` beside ``ops_arith_sql._arith_body``).
 """
 
 from __future__ import annotations
@@ -140,6 +142,18 @@ class ColB:
 
     def concat(self, *xs):
         return F.concat(*xs)
+
+
+class InlineColB(ColB):
+    """``ColB`` whose lets substitute the bound expression: the tree
+    stays lambda-free, so a typed projection stays inside whole-stage
+    codegen (a transform lambda is CodegenFallback)."""
+
+    def let(self, x, fn):
+        return fn(x)
+
+    def let_many(self, xs, fn):
+        return fn(*xs)
 
 
 class SqlB:

@@ -486,9 +486,10 @@ def _date_sqlfn_call(cur: Column, ret_t: str, core, vp: str):
     return sqlfn.call(name, cur, *b.slot_args()).cast(V.VT)
 
 
-@register("date_format")
-def op_date_format(scope: Scope, cur, args, path):
-    vp = arg_path(path, 0)
+def date_format_args(args, path):
+    """The literal arguments of ``date_format``: (output format, input
+    formats or None, timezone offset seconds or None).  Both engines
+    parse them here, at compile time."""
     out_fmt = _lit_str_arg(args[0], arg_path(path, 1), "output format")
     if not isinstance(out_fmt, str):
         raise RuleError("expr_error", "output format must be a string",
@@ -512,7 +513,38 @@ def op_date_format(scope: Scope, cur, args, path):
         tp = arg_path(path, 3)
         tz = _lit_str_arg(args[2], tp, "timezone")
         tz_seconds = parse_tz_literal(str(tz), tp)
+    return out_fmt, input_formats, tz_seconds
 
+
+def to_unixtime_args(args, path):
+    """The literal arguments of ``to_unixtime``: (unit, timezone offset
+    seconds or None)."""
+    unit = "s"
+    tz_seconds: int | None = None
+    if len(args) >= 1:
+        up = arg_path(path, 1)
+        second = str(_lit_str_arg(args[0], up, "unit / timezone"))
+        if len(args) == 2:
+            if second not in ("s", "ms"):
+                raise RuleError("expr_error", "unit must be s or ms", up)
+            unit = second
+        elif second in ("s", "ms"):
+            unit = second
+        elif looks_like_timezone(second):
+            tz_seconds = parse_tz_literal(second, up)
+        else:
+            raise RuleError("expr_error", "unit must be s or ms", up)
+    if len(args) == 2:
+        tp = arg_path(path, 2)
+        tz = str(_lit_str_arg(args[1], tp, "timezone"))
+        tz_seconds = parse_tz_literal(tz, tp)
+    return unit, tz_seconds
+
+
+@register("date_format")
+def op_date_format(scope: Scope, cur, args, path):
+    vp = arg_path(path, 0)
+    out_fmt, input_formats, tz_seconds = date_format_args(args, path)
     fast = _date_sqlfn_call(
         cur, "STRING",
         lambda b, s: _b_date_format_core(b, s, input_formats, tz_seconds,
@@ -539,26 +571,7 @@ def op_date_format(scope: Scope, cur, args, path):
 @register("to_unixtime")
 def op_to_unixtime(scope: Scope, cur, args, path):
     vp = arg_path(path, 0)
-    unit = "s"
-    tz_seconds: int | None = None
-    if len(args) >= 1:
-        up = arg_path(path, 1)
-        second = str(_lit_str_arg(args[0], up, "unit / timezone"))
-        if len(args) == 2:
-            if second not in ("s", "ms"):
-                raise RuleError("expr_error", "unit must be s or ms", up)
-            unit = second
-        elif second in ("s", "ms"):
-            unit = second
-        elif looks_like_timezone(second):
-            tz_seconds = parse_tz_literal(second, up)
-        else:
-            raise RuleError("expr_error", "unit must be s or ms", up)
-    if len(args) == 2:
-        tp = arg_path(path, 2)
-        tz = str(_lit_str_arg(args[1], tp, "timezone"))
-        tz_seconds = parse_tz_literal(tz, tp)
-
+    unit, tz_seconds = to_unixtime_args(args, path)
     fast = _date_sqlfn_call(
         cur, "BIGINT",
         lambda b, s: _b_to_unixtime_core(b, s, tz_seconds, unit, vp), vp)

@@ -179,63 +179,6 @@ def _as_i64(o: Column, path: str, msg: str) -> Column:
     )
 
 
-# --- string ops ---------------------------------------------------------
-
-@register("concat")
-def op_concat(scope, cur, args, path):
-    from ..expr_ir import StartLiteral
-
-    # literal scalar args can never fail value_to_string — skip their
-    # check probes (each probe adds plan size; the t13 extended rule
-    # concats many literals)
-    safe = [False] + [
-        bool(not a.steps and isinstance(a.start, StartLiteral)
-             and isinstance(a.start.value, (str, int, float, bool)))
-        for a in args]
-
-    from .ops_string_sql import string_sqlfn
-    fast = string_sqlfn("concat", scope, cur, args, path, safe=safe)
-    if fast is not None:
-        return fast
-    # inline fallback: concat is in UDF_OPS (compile_step skips its
-    # pipe binding for the fast path above), so bind the raw pipe here
-    # — every part/protocol piece below references it several times
-    return V.let(cur, lambda x: _concat_inline(scope, x, args, path,
-                                               safe))
-
-
-def _concat_inline(scope, cur, args, path, safe):
-    if cur_version() >= 2:
-        # v2: each part through eval_value_as_string — serde Display
-        # numbers (2.0 → "2.0"), null/containers → "expected string,
-        # got {:?}" (``v2_eval.rs:1820-1843``); null rides the cheap
-        # positional protocol with the rendered-Null wording
-        def build2(*ops):
-            parts = [V.as_string_v2(o, arg_path(path, i))
-                     for i, o in enumerate(ops)]
-            return seq_strict(list(ops), path,
-                              F.concat(*parts).cast(V.VT),
-                              null_msg="expected string, got Null",
-                              checks=[None if safe[i] else _chk(pt)
-                                      for i, pt in enumerate(parts)])
-        return _operands_bound(scope, cur, args, path, build2)
-
-    def build(*ops):
-        # v1: null → "concat does not accept null"
-        # (``transform.rs:1421-1426``), then value_to_string
-        # (``transform.rs:5774-5785``)
-        parts = [V.to_string_strict(o, arg_path(path, i),
-                                    "value must be string/number/bool")
-                 for i, o in enumerate(ops)]
-        # per-arg value_to_string runs inside the reference loop:
-        # concat(array_lit, missing) is a stringify error, not missing
-        return seq_strict(list(ops), path, F.concat(*parts).cast(V.VT),
-                          null_msg="concat does not accept null",
-                          checks=[None if safe[i] else _chk(pt)
-                                  for i, pt in enumerate(parts)])
-    return _operands_bound(scope, cur, args, path, build)
-
-
 @register("coalesce")
 def op_coalesce(scope, cur, args, path):
     # first non-missing, non-null (transform.rs:1434-1457); all → missing.
@@ -246,227 +189,6 @@ def op_coalesce(scope, cur, args, path):
         return F.coalesce(*guarded, F.lit(None).cast(V.VT))
     return _operands_bound(scope, cur, args, path, build,
                            short=lambda c: ~V.is_absent(c))
-
-
-@register("to_string")
-def op_to_string(scope, cur, args, path):
-    from .ops_string_sql import string_sqlfn
-    fast = string_sqlfn("to_string", scope, cur, args, path)
-    if fast is not None:
-        return fast
-    return V.let(cur, lambda x: _to_string_inline(scope, x, args, path))
-
-
-def _to_string_inline(scope, cur, args, path):
-    ops = _operands(scope, cur, args, path)
-    if cur_version() >= 2:
-        # v2-native to_string never errors: null → "null", containers →
-        # their JSON text, numbers via serde Display — integral floats
-        # keep .0 (v2_eval.rs:1813-1825, ``n.to_string()``)
-        o = ops[0]
-        result = (
-            F.when(o.isNull(), F.lit(None).cast("string"))
-            .when(V.is_vnull(o), F.lit("null"))
-            .when(V.is_array(o) | V.is_object(o), F.to_json(o))
-            .when(V.is_number(o), V.serde_num_str(o))
-            .otherwise(o.try_cast("string"))
-        )
-        return result.cast(V.VT)
-    return seq_strict(ops, path,
-                      V.to_string_strict(ops[0],
-                                         arg_path(path, 0)).cast(V.VT))
-
-
-def _unary_string(scope, cur, args, path, fn):
-    ops = _operands(scope, cur, args, path)
-    if cur_version() >= 2:
-        # v2: eval_value_as_string — serde-Display numbers accepted,
-        # null/containers → "expected string, got {:?}"
-        # (``v2_eval.rs:1792-1811``)
-        s = V.as_string_v2(ops[0], arg_path(path, 0))
-        return seq_strict(ops, path, fn(s).cast(V.VT),
-                          null_msg="expected string, got Null")
-    # v1: null → "expr arg must not be null", non-string → "value must
-    # be a string" (``eval_unary_string_op``, ``transform.rs:1996-2030``)
-    s = _as_string(ops[0], arg_path(path, 0))
-    return seq_strict(ops, path, fn(s).cast(V.VT))
-
-
-@register("trim")
-def op_trim(scope, cur, args, path):
-    from .ops_string_sql import string_sqlfn
-    fast = string_sqlfn("trim", scope, cur, args, path)
-    if fast is not None:
-        return fast
-    return V.let(cur, lambda x: _unary_string(scope, x, args, path,
-                                              F.trim))
-
-
-@register("lowercase")
-def op_lowercase(scope, cur, args, path):
-    from .ops_string_sql import string_sqlfn
-    fast = string_sqlfn("lowercase", scope, cur, args, path)
-    if fast is not None:
-        return fast
-    return V.let(cur, lambda x: _unary_string(scope, x, args, path,
-                                              F.lower))
-
-
-@register("uppercase")
-def op_uppercase(scope, cur, args, path):
-    from .ops_string_sql import string_sqlfn
-    fast = string_sqlfn("uppercase", scope, cur, args, path)
-    if fast is not None:
-        return fast
-    return V.let(cur, lambda x: _unary_string(scope, x, args, path,
-                                              F.upper))
-
-
-@register("replace")
-def op_replace(scope, cur, args, path):
-    from .ops_string_sql import string_sqlfn
-    fast = string_sqlfn("replace", scope, cur, args, path)
-    if fast is not None:
-        return fast
-    return V.let(cur, lambda x: _replace_inline(scope, x, args, path))
-
-
-def _replace_inline(scope, cur, args, path):
-    """Four modes (``transform.rs:2162-2236``): default literal-FIRST,
-    ``all`` literal-all, ``regex`` regex-first, ``regex_all`` regex-all."""
-    def build(*ops):
-        value = _as_string(ops[0], arg_path(path, 0))
-        pattern = _as_string(ops[1], arg_path(path, 1))
-        replacement = _as_string(ops[2], arg_path(path, 2))
-        mode = (_as_string(ops[3], arg_path(path, 3)) if len(ops) == 4
-                else F.lit("__first__"))
-
-        lit_first = _replace_literal_first(value, pattern, replacement)
-        lit_all = F.replace(value, pattern, replacement)
-        rx_first = _replace_regex_first(value, pattern, replacement)
-        rx_all = F.regexp_replace(value, pattern, replacement)
-
-        result = (
-            F.when(mode == "__first__", lit_first)
-            .when(mode == "all", lit_all)
-            .when(mode == "regex", rx_first)
-            .when(mode == "regex_all", rx_all)
-            .otherwise(rerr("expr_error",
-                            "replace mode must be all|regex|regex_all",
-                            arg_path(path, 3)).cast("string"))
-        )
-        # per-arg stringify order (eval_replace, transform.rs:2162-2200)
-        checks = [_chk(value), _chk(pattern), _chk(replacement)]
-        if len(ops) == 4:
-            checks.append(_chk(mode))
-        return seq_strict(list(ops), path, result.cast(V.VT),
-                          checks=checks)
-
-    return _operands_bound(scope, cur, args, path, build)
-
-
-def _replace_literal_first(value, pattern, replacement):
-    pos = F.instr(value, pattern)  # 1-based, 0 = no match
-    return (
-        F.when(pattern == "", F.concat(replacement, value))
-        .when(pos == 0, value)
-        .otherwise(F.concat(
-            F.substring(value, F.lit(1), pos - 1),
-            replacement,
-            F.substring(value, pos + F.length(pattern),
-                        F.length(value)),
-        ))
-    )
-
-
-def _replace_regex_first(value, pattern, replacement):
-    # first-match splice: locate, re-replace just the matched slice so $n
-    # group references still resolve (Rust regex.replace(first)).
-    pos = F.call_function("regexp_instr", value, pattern)  # 1-based, 0=miss
-    matched = F.call_function("regexp_extract", value, pattern, F.lit(0))
-    head = F.substring(value, F.lit(1), pos - 1)
-    tail = F.substring(value, pos + F.length(matched), F.length(value))
-    replaced = F.regexp_replace(matched, pattern, replacement)
-    return F.when(pos == 0, value).otherwise(F.concat(head, replaced, tail))
-
-
-@register("split")
-def op_split(scope, cur, args, path):
-    from .ops_string_sql import string_sqlfn
-    fast = string_sqlfn("split", scope, cur, args, path)
-    if fast is not None:
-        return fast
-    return V.let(cur, lambda x: _split_inline(scope, x, args, path))
-
-
-def _split_inline(scope, cur, args, path):
-    """Literal delimiter, keeps empty parts (``transform.rs:2238-2282``)."""
-    def build(*ops):
-        value = _as_string(ops[0], arg_path(path, 0))
-        delim = _as_string(ops[1], arg_path(path, 1))
-        delim_checked = F.when(delim == "", rerr(
-            "expr_error", "split delimiter must not be empty",
-            arg_path(path, 1)).cast("string")).otherwise(delim)
-        # F.split takes a regex -> escape the literal delimiter per row
-        escaped = F.regexp_replace(
-            delim_checked,
-            F.lit(r"([\\.\[\]\{\}\(\)\*\+\?\^\$\|])"),
-            F.lit(r"\\$1"))
-        parts = F.split(value, escaped, F.lit(-1))
-        arr = F.transform(parts, lambda x: x.cast(V.VT))
-        # arg 0 converts COMPLETELY before arg 1 evaluates
-        # (eval_arg_string_at per arg, transform.rs:2256-2267): split
-        # over a non-string pipe with a null delimiter is "value must
-        # be a string", not the delimiter's null error
-        return seq_strict(list(ops), path, V.arr_to_variant(arr),
-                          checks=[_chk(value), _chk(delim_checked)])
-
-    return _operands_bound(scope, cur, args, path, build)
-
-
-def _pad(scope, cur, args, path, *, start: bool):
-    def build(*ops):
-        value = _as_string(ops[0], arg_path(path, 0))
-        length = _as_i64(ops[1], arg_path(path, 1),
-                         "pad length must be a non-negative integer")
-        length = F.when(length < 0, rerr(
-            "expr_error", "pad length must be a non-negative integer",
-            arg_path(path, 1)).cast("long")).otherwise(length)
-        pad = (_as_string(ops[2], arg_path(path, 2)) if len(ops) == 3
-               else F.lit(" "))
-        fn = F.lpad if start else F.rpad
-        padded = fn(value, length.cast("int"), pad)
-        # Spark lpad/rpad truncate long values & mishandle empty pad;
-        # the reference returns the value unchanged (:2356-2373)
-        result = F.when((F.length(value) >= length) | (pad == ""),
-                        value).otherwise(padded)
-        # per-arg conversion order (eval_pad, transform.rs:2284-2340):
-        # value stringifies BEFORE the length's null/int checks
-        checks = [_chk(value), _chk(length)]
-        if len(ops) == 3:
-            checks.append(_chk(pad))
-        return seq_strict(list(ops), path, result.cast(V.VT),
-                          checks=checks)
-
-    return _operands_bound(scope, cur, args, path, build)
-
-
-@register("pad_start")
-def op_pad_start(scope, cur, args, path):
-    from .ops_string_sql import string_sqlfn
-    fast = string_sqlfn("pad_start", scope, cur, args, path)
-    if fast is not None:
-        return fast
-    return V.let(cur, lambda x: _pad(scope, x, args, path, start=True))
-
-
-@register("pad_end")
-def op_pad_end(scope, cur, args, path):
-    from .ops_string_sql import string_sqlfn
-    fast = string_sqlfn("pad_end", scope, cur, args, path)
-    if fast is not None:
-        return fast
-    return V.let(cur, lambda x: _pad(scope, x, args, path, start=False))
 
 
 # --- numeric ops ---------------------------------------------------------
@@ -613,88 +335,6 @@ def _numeric_fold(scope, cur, args, path, op, exact_two=False):
     return V.let(cur, lambda x: _operands_bound(
         scope, x, args, path, build,
         short=lambda c: arith_decided(c, version)))
-
-
-@register("round")
-def op_round(scope, cur, args, path):
-    """Half-away-from-zero with optional scale (``transform.rs:2437-2515``)."""
-    from .ops_string_sql import string_sqlfn
-    fast = string_sqlfn("round", scope, cur, args, path)
-    if fast is not None:
-        return fast
-    return V.let(cur, lambda x: _round_inline(scope, x, args, path))
-
-
-def _round_inline(scope, cur, args, path):
-    def build(*bound) -> Column:  # operands let-bound (see _numeric_fold)
-        number = V.to_number_strict(bound[0], arg_path(path, 0),
-                                    "operand must be a number")
-        if len(bound) == 2:
-            sp = arg_path(path, 1)
-            scale = _as_i64(bound[1], sp,
-                            "scale must be a non-negative integer")
-            # the reference splits the range errors (eval_round,
-            # transform.rs): negative vs "scale is too large"; the
-            # converted scale is let-bound (3 references)
-            scale = V.let(scale, lambda s: F.when(s < 0, rerr(
-                "expr_error", "scale must be a non-negative integer",
-                sp).cast("long"))
-                .when(s > 308, rerr(
-                    "expr_error", "scale is too large", sp).cast("long"))
-                .otherwise(s))
-        else:
-            scale = F.lit(0).cast("long")
-        # Rust f64::round = half away from zero.  Spark's floor/ceil
-        # over DOUBLE return LONG and overflow beyond i64 (r7 fuzz:
-        # round(1e20) clamped to 9.2e18); doubles at |x| >= 2^53 are
-        # already integral, where f64::round is the identity.
-        # factor and scaled are let-bound (referenced 2× / 5× below —
-        # round 8 plan-size audit)
-        result = V.let(
-            F.pow(F.lit(10.0), scale.cast("double")),
-            lambda factor: V.let(number * factor, lambda scaled: F.when(
-                F.abs(scaled) >= F.lit(9007199254740992.0), scaled
-            ).otherwise(
-                F.when(scaled >= 0, F.floor(scaled + 0.5)).otherwise(
-                    F.ceil(scaled - 0.5)).cast("double")) / factor))
-        # value converts before the scale's null/int checks
-        # (eval_round, transform.rs:2437-2476)
-        checks = [_chk(number)]
-        if len(bound) == 2:
-            checks.append(_chk(scale))
-        return seq_strict(list(bound), path, V.num_to_variant(result),
-                          checks=checks)
-
-    return _operands_bound(scope, cur, args, path, build)
-
-
-@register("to_base")
-def op_to_base(scope, cur, args, path):
-    from .ops_string_sql import string_sqlfn
-    fast = string_sqlfn("to_base", scope, cur, args, path)
-    if fast is not None:
-        return fast
-    return V.let(cur, lambda x: _to_base_inline(scope, x, args, path))
-
-
-def _to_base_inline(scope, cur, args, path):
-    """int → base-2..36 lowercase digits (``transform.rs:2517-2574``)."""
-    def build(*ops):
-        number = _as_i64(ops[0], arg_path(path, 0),
-                         "value must be an integer")
-        base = _as_i64(ops[1], arg_path(path, 1),
-                       "base must be an integer")
-        base = F.when((base < 2) | (base > 36), rerr(
-            "expr_error", "base must be between 2 and 36",
-            arg_path(path, 1)).cast("long")).otherwise(base)
-        digits = F.lower(F.call_function("conv",
-                                         F.abs(number).cast("string"),
-                                         F.lit(10), base.cast("int")))
-        result = F.when(number < 0,
-                        F.concat(F.lit("-"), digits)).otherwise(digits)
-        return seq_strict(list(ops), path, result.cast(V.VT))
-
-    return _operands_bound(scope, cur, args, path, build)
 
 
 # --- logical ops ---------------------------------------------------------

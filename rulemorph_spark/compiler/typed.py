@@ -71,9 +71,12 @@ from ..expr_ir import (CondAll, CondAny, CondCompare, CondExpr, Condition,
                        StartLiteral, StartPipeValue, StartRef)
 from ..paths import Index, Key, parse_path
 from ..registry import OP_ALIASES, OP_ARITY, eval_arity_anomaly
+from . import ops_string as S
 from . import variant as V
+from .backend import InlineColB
 from .core import (OpPath, V2_NATIVE_STEP_OPS, arg_path, lenient_errors,
                    lenient_on, raw_path, step_op_path, sub_path)
+from .ops_scalar import _chk, _f64_as_i64
 
 _LONG_MAX = (1 << 63) - 1
 
@@ -285,6 +288,18 @@ def _terr(dtype, kind: str, message: str, path: str,
     return raise_col.cast(dtype)
 
 
+class _TypedB(InlineColB):
+    """The backend the string kernels (``ops_string``) render through:
+    lambda-free lets keep typed projections inside whole-stage codegen,
+    and error sites are :func:`_terr`."""
+
+    def err(self, kind, msg, path, t):
+        return _terr(t, kind, msg, path)
+
+
+_TB = _TypedB()
+
+
 def _probe0(o: "TVal") -> Column:
     """Always-zero, never-NULL NUMERIC probe that FORCES evaluation of
     ``o.col`` (fires its embedded per-row errors).  Numeric on purpose
@@ -346,15 +361,6 @@ def _isnull(v: TVal) -> Column:
     if _is_null(v.dtype):
         return F.lit(not v.missing)
     return v.col.isNull()
-
-
-def _chk(col: Column) -> Column:
-    """Zero-length check probe: evaluates ``col`` (raising embedded
-    errors) and contributes no text; never NULL."""
-    # as_nullable: substring(a,1,0) folds to "" for NON-nullable a
-    # (SPARK-33847 family), deleting the probe — see V.as_nullable
-    return F.coalesce(F.substring(V.as_nullable(col).cast("string"),
-                                  1, 0), V.clit(""))
 
 
 def _force(probe: Column, col: Column) -> Column:
@@ -1603,29 +1609,19 @@ def _str_conv_safe(o: "TVal") -> bool:
             or _is_null(dt))
 
 
-def _t_unary_string(scope, cur, args, path, fn):
+def _t_unary_string(scope, cur, args, path, op):
     """v2 trim/lowercase/uppercase: ``eval_value_as_string`` — numbers
     and bools stringify (serde Display), null/containers → "expected
     string, got {:?}" (``v2_eval.rs:1792-1811``)."""
     ops = _toperands(scope, cur, args, path)
     s = t_str_v2(ops[0], path)
-    return _seq(ops, path, fn(s), T.StringType(),
+    return _seq(ops, path, S.unary_string(_TB, op, s), T.StringType(),
                 null_msg="expected string, got Null")
 
 
-@_treg("trim")
-def t_trim(scope, cur, args, path):
-    return _t_unary_string(scope, cur, args, path, F.trim)
-
-
-@_treg("lowercase")
-def t_lowercase(scope, cur, args, path):
-    return _t_unary_string(scope, cur, args, path, F.lower)
-
-
-@_treg("uppercase")
-def t_uppercase(scope, cur, args, path):
-    return _t_unary_string(scope, cur, args, path, F.upper)
+for _name in ("trim", "lowercase", "uppercase"):
+    T_OPS[_name] = (lambda _op: lambda scope, cur, args, path:
+                    _t_unary_string(scope, cur, args, path, _op))(_name)
 
 
 def _json_canon(col: Column, dt: T.DataType) -> tuple[Column, T.DataType]:
@@ -1765,24 +1761,9 @@ def t_round(scope, cur, args, path):
         else:
             scale = _terr("long", "expr_error",
                           "scale must be a non-negative integer", sp)
-        # range errors split: negative vs "scale is too large"
-        scale = (F.when(scale < 0,
-                        _terr("long", "expr_error",
-                              "scale must be a non-negative integer", sp))
-                 .when(scale > 308,
-                       _terr("long", "expr_error", "scale is too large",
-                             sp))
-                 .otherwise(scale))
+        scale = S.round_scale(_TB, scale, sp)
     else:
         scale = F.lit(0).cast("long")
-    factor = F.pow(F.lit(10.0), scale.cast("double"))
-    scaled = number * factor
-    # |x| >= 2^53 doubles are integral: f64::round is the identity,
-    # and Spark's long-returning floor/ceil would overflow (r7 fuzz)
-    big = F.abs(scaled) >= F.lit(9007199254740992.0)
-    rounded = F.when(big, scaled).otherwise(
-        F.when(scaled >= 0, F.floor(scaled + 0.5)).otherwise(
-            F.ceil(scaled - 0.5)).cast("double"))
     # value converts before the scale's null/int checks (eval_round,
     # transform.rs:2437-2476); probes only where the conversion can
     # actually raise (a num-typed value / a literal int scale cannot)
@@ -1793,8 +1774,8 @@ def t_round(scope, cur, args, path):
         s = ops[1]
         checks.append(None if s.nonnull and _is_int(s.dtype)
                       else _chk(scale))
-    out = _seq(ops, path, rounded / factor, T.DoubleType(),
-               checks=checks)
+    out = _seq(ops, path, S.round_half_away(_TB, number, scale),
+               T.DoubleType(), checks=checks)
     # round is v1-delegated: json_number_from_f64 re-emits INTEGRAL
     # results as i64 PER ROW (huge values stay Float — the `as i64`
     # saturation round-trip fails).  A double column cannot carry the
@@ -1890,7 +1871,7 @@ def t_cast_int(scope, cur, args, path):
         d = o.col.cast("double")
         col = F.when(F.abs(d % F.lit(1.0))
                      < F.lit(2.220446049250313e-16),
-                     _t_f64_as_i64(d)).otherwise(
+                     _f64_as_i64(d)).otherwise(
             _terr("long", "expr_error", "failed to cast to int", path))
     elif _is_str(dt):
         parsed = F.when(o.col.rlike(r"^[+-]?[0-9]+$"),
@@ -1967,15 +1948,6 @@ def t_strict_str(v: TVal, path: str,
     return _terr_forced([v], "string", "expr_error", msg, path)
 
 
-def _t_f64_as_i64(d: Column) -> Column:
-    """Rust ``f as i64``: truncate toward zero, saturate at the i64
-    bounds (see ops_scalar._f64_as_i64)."""
-    return F.coalesce(
-        d.try_cast("long"),
-        F.when(d > 0, F.lit(9223372036854775807).cast("long"))
-        .otherwise(F.lit(-9223372036854775808).cast("long")))
-
-
 def t_i64(v: TVal, path: str, msg: str) -> Column:
     """``value_to_i64`` (``transform.rs:5819-5844``) — int, float with
     ``fract().abs() < f64::EPSILON`` surviving the ``as i64``
@@ -1990,7 +1962,7 @@ def t_i64(v: TVal, path: str, msg: str) -> Column:
         return F.when(parsed.isNotNull(), parsed).otherwise(
             _terr("long", "expr_error", msg, path))
     d = t_num(v, path, msg)
-    i = _t_f64_as_i64(d)
+    i = _f64_as_i64(d)
     eps = F.lit(2.220446049250313e-16)
     ok = (F.abs(d % F.lit(1.0)) < eps) & \
         (F.abs(i.cast("double") - d) < eps)
@@ -2001,26 +1973,15 @@ def t_i64(v: TVal, path: str, msg: str) -> Column:
 @_treg("replace")
 def t_replace(scope, cur, args, path):
     """Four modes: literal-first (default) / all / regex / regex_all
-    (``transform.rs:2162-2236``); shares the splice helpers with the
-    variant path."""
-    from ..functions.scalar import replace_first as _lit_first
-    from .ops_scalar import _replace_regex_first
+    (``transform.rs:2162-2236``)."""
     ops = _toperands(scope, cur, args, path)
     value = t_strict_str(ops[0], arg_path(path, 0))
     pattern = t_strict_str(ops[1], arg_path(path, 1))
     replacement = t_strict_str(ops[2], arg_path(path, 2))
     mode = (t_strict_str(ops[3], arg_path(path, 3)) if len(ops) == 4
             else F.lit("__first__"))
-    result = (
-        F.when(mode == "__first__", _lit_first(value, pattern, replacement))
-        .when(mode == "all", F.replace(value, pattern, replacement))
-        .when(mode == "regex", _replace_regex_first(value, pattern,
-                                                    replacement))
-        .when(mode == "regex_all", F.regexp_replace(value, pattern,
-                                                    replacement))
-        .otherwise(_terr("string", "expr_error",
-                         "replace mode must be all|regex|regex_all",
-                         arg_path(path, 3))))
+    result = S.replace(_TB, value, pattern, replacement, mode,
+                       arg_path(path, 3))
     # per-arg stringify interleaves with the protocol (eval_replace
     # converts each arg COMPLETELY in order, transform.rs:2162-2200):
     # replace(array_pipe, null, …) is the pipe's stringify error, not
@@ -2037,36 +1998,24 @@ def t_split(scope, cur, args, path):
     output is a native ``array<string>`` column."""
     ops = _toperands(scope, cur, args, path)
     value = t_strict_str(ops[0], arg_path(path, 0))
-    delim = t_strict_str(ops[1], arg_path(path, 1))
-    delim_checked = F.when(delim == "", _terr(
-        "string", "expr_error", "split delimiter must not be empty",
-        arg_path(path, 1))).otherwise(delim)
-    escaped = F.regexp_replace(delim_checked,
-                               F.lit(r"([\\.\[\]\{\}\(\)\*\+\?\^\$\|])"),
-                               F.lit(r"\\$1"))
-    parts = F.split(value, escaped, F.lit(-1))
+    delim = S.split_delim(_TB, t_strict_str(ops[1], arg_path(path, 1)),
+                          arg_path(path, 1))
     # arg 0 converts COMPLETELY before arg 1 (eval_arg_string_at per
     # arg, transform.rs:2256-2267)
-    return _seq(ops, path, parts, T.ArrayType(T.StringType()),
-                checks=[_chk(value), _chk(delim_checked)])
+    return _seq(ops, path, S.split(_TB, value, delim),
+                T.ArrayType(T.StringType()),
+                checks=[_chk(value), _chk(delim)])
 
 
 def _t_pad(scope, cur, args, path, *, start: bool):
     ops = _toperands(scope, cur, args, path)
     value = t_strict_str(ops[0], arg_path(path, 0))
-    length = t_i64(ops[1], arg_path(path, 1),
-                   "pad length must be a non-negative integer")
-    length = F.when(length < 0, _terr(
-        "long", "expr_error", "pad length must be a non-negative integer",
-        arg_path(path, 1))).otherwise(length)
+    length = S.pad_length(_TB, t_i64(
+        ops[1], arg_path(path, 1),
+        "pad length must be a non-negative integer"), arg_path(path, 1))
     pad = (t_strict_str(ops[2], arg_path(path, 2)) if len(ops) == 3
            else F.lit(" "))
-    fn = F.lpad if start else F.rpad
-    padded = fn(value, length.cast("int"), pad)
-    # reference never truncates and treats empty pad as a no-op
-    # (``transform.rs:2356-2373``); Spark lpad/rpad truncate
-    result = F.when((F.length(value) >= length) | (pad == ""),
-                    value).otherwise(padded)
+    result = S.pad(_TB, value, length, pad, start)
     # value stringifies BEFORE the length's checks (eval_pad,
     # transform.rs:2284-2340)
     checks = [_chk(value), _chk(length)]
@@ -2117,15 +2066,10 @@ def t_to_base(scope, cur, args, path):
     (``transform.rs:2517-2574``; Spark's conv is unsigned+uppercase)."""
     ops = _toperands(scope, cur, args, path)
     number = t_i64(ops[0], arg_path(path, 0), "value must be an integer")
-    base = t_i64(ops[1], arg_path(path, 1), "base must be an integer")
-    base = F.when((base < 2) | (base > 36), _terr(
-        "long", "expr_error", "base must be between 2 and 36",
-        arg_path(path, 1))).otherwise(base)
-    digits = F.lower(F.call_function("conv", F.abs(number).cast("string"),
-                                     F.lit(10), base.cast("int")))
-    result = F.when(number < 0,
-                    F.concat(F.lit("-"), digits)).otherwise(digits)
-    return _seq(ops, path, result, T.StringType())
+    base = S.base_range(_TB, t_i64(ops[1], arg_path(path, 1),
+                                   "base must be an integer"),
+                        arg_path(path, 1))
+    return _seq(ops, path, S.to_base(_TB, number, base), T.StringType())
 
 
 def _py_scalar_type(vals) -> T.DataType | None:
@@ -2221,33 +2165,11 @@ def t_lookup_first(scope, cur, args, path):
 def t_date_format(scope, cur, args, path):
     """Same compile-time chrono→Spark pattern translation as the variant
     path (``ops_date.py``), over native string columns."""
-    from .ops_date import (_lit_str_arg, _render, looks_like_timezone,
-                           parse_datetime_utc, parse_tz_literal)
+    from .ops_date import _render, date_format_args, parse_datetime_utc
     ops = _toperands(scope, cur, args, path)
     vp = arg_path(path, 0)
     value = t_strict_str(ops[0], vp)
-    out_fmt = _lit_str_arg(args[0], arg_path(path, 1), "output format")
-    if not isinstance(out_fmt, str):
-        raise RuleError("expr_error", "output format must be a string",
-                        arg_path(path, 1))
-    input_formats: list[str] | None = None
-    tz_seconds: int | None = None
-    if len(args) >= 2:
-        ip = arg_path(path, 2)
-        third = _lit_str_arg(args[1], ip, "input format / timezone")
-        if isinstance(third, str) and looks_like_timezone(third):
-            tz_seconds = parse_tz_literal(third, ip)
-        elif isinstance(third, str):
-            input_formats = [third]
-        elif isinstance(third, list):
-            input_formats = [str(x) for x in third]
-        else:
-            raise RuleError("expr_error",
-                            "input_format must be a string or array", ip)
-    if len(args) == 3:
-        tp = arg_path(path, 3)
-        tz = _lit_str_arg(args[2], tp, "timezone")
-        tz_seconds = parse_tz_literal(str(tz), tp)
+    out_fmt, input_formats, tz_seconds = date_format_args(args, path)
     ts, input_off = parse_datetime_utc(value, input_formats, tz_seconds,
                                        vp)
     render_off = (F.lit(tz_seconds) if tz_seconds is not None
@@ -2258,29 +2180,10 @@ def t_date_format(scope, cur, args, path):
 
 @_treg("to_unixtime")
 def t_to_unixtime(scope, cur, args, path):
-    from .ops_date import (_lit_str_arg, looks_like_timezone,
-                           parse_datetime_utc, parse_tz_literal)
+    from .ops_date import parse_datetime_utc, to_unixtime_args
     ops = _toperands(scope, cur, args, path)
     value = t_strict_str(ops[0], arg_path(path, 0))
-    unit = "s"
-    tz_seconds: int | None = None
-    if len(args) >= 1:
-        up = arg_path(path, 1)
-        second = str(_lit_str_arg(args[0], up, "unit / timezone"))
-        if len(args) == 2:
-            if second not in ("s", "ms"):
-                raise RuleError("expr_error", "unit must be s or ms", up)
-            unit = second
-        elif second in ("s", "ms"):
-            unit = second
-        elif looks_like_timezone(second):
-            tz_seconds = parse_tz_literal(second, up)
-        else:
-            raise RuleError("expr_error", "unit must be s or ms", up)
-    if len(args) == 2:
-        tp = arg_path(path, 2)
-        tz = str(_lit_str_arg(args[1], tp, "timezone"))
-        tz_seconds = parse_tz_literal(tz, tp)
+    unit, tz_seconds = to_unixtime_args(args, path)
     ts, _ = parse_datetime_utc(value, None, tz_seconds, arg_path(path, 0))
     if unit == "ms":
         result = (F.unix_micros(ts) / 1000).cast("long")

@@ -11,14 +11,14 @@ sketches (``sketches``), the adaptive small-scan spread (``spread``)
 and plan diagnostics (``diag``).
 """
 
-from .scalar import (number_to_string, pad_end, pad_start, replace_first,
-                     round_half_away, strict_bool, strict_int, to_base)
+from .scalar import (pad_end, pad_start, replace_first, round_half_away,
+                     strict_bool, strict_int, to_base)
 from .relational import (asof_join, bloom_route, bloom_split,
                          range_join_binned, salted_join)
 from .sketches import bloom_build, bloom_might_contain, bloom_params
 
 __all__ = [
-    "number_to_string", "replace_first", "pad_start", "pad_end",
+    "replace_first", "pad_start", "pad_end",
     "round_half_away", "to_base", "strict_int", "strict_bool",
     "asof_join", "range_join_binned", "salted_join",
     "bloom_route", "bloom_split",

@@ -1,7 +1,8 @@
 """Typed-column scalar ops with the reference's edge semantics.
 
-These mirror the rule-engine ops (see ``compiler/ops_scalar.py``) on
-plain typed columns — no variant wrapping, fully codegen-able.
+The string/number ops are the rule engines' own kernels
+(``compiler/ops_string.py``) applied to plain typed columns — no
+variant wrapping, fully codegen-able.
 """
 
 from __future__ import annotations
@@ -9,65 +10,44 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..compiler import ops_string as K
+from ..compiler.backend import InlineColB
 
-def number_to_string(d: Column) -> Column:
-    """Integral doubles render without the decimal point
-    (``transform.rs:5903-5923``): 1.0 → "1", 2.5 → "2.5"."""
-    return F.when(
-        (d == F.floor(d)) & (F.abs(d) < F.lit(9.2e18)),
-        d.cast("long").cast("string"),
-    ).otherwise(d.cast("string"))
+# the compiler's kernels, rendered as lambda-free Column trees
+_B = InlineColB()
+
+
+def _lit(x: Column | str | int) -> Column:
+    return x if isinstance(x, Column) else F.lit(x)
 
 
 def replace_first(s: Column, pattern: Column | str,
                   replacement: Column | str) -> Column:
     """Literal first-occurrence replace (``transform.rs:2223``)."""
-    pat = F.lit(pattern) if isinstance(pattern, str) else pattern
-    rep = F.lit(replacement) if isinstance(replacement, str) else replacement
-    pos = F.instr(s, pat)
-    return (
-        F.when(pat == "", F.concat(rep, s))
-        .when(pos == 0, s)
-        .otherwise(F.concat(
-            F.substring(s, F.lit(1), pos - 1), rep,
-            F.substring(s, pos + F.length(pat), F.length(s))))
-    )
-
-
-def _pad(s: Column, length: int, pad: str, start: bool) -> Column:
-    fn = F.lpad if start else F.rpad
-    padded = fn(s, length, pad)
-    # reference never truncates and treats empty pad as no-op
-    # (transform.rs:2356-2373); Spark lpad/rpad truncate
-    return F.when((F.length(s) >= length) | (F.lit(pad) == ""), s) \
-            .otherwise(padded)
+    return K.replace_literal_first(_B, s, _lit(pattern), _lit(replacement))
 
 
 def pad_start(s: Column, length: int, pad: str = " ") -> Column:
-    return _pad(s, length, pad, True)
+    """Left pad that never truncates; an empty pad is a no-op
+    (``transform.rs:2356-2373``)."""
+    return K.pad(_B, s, F.lit(length), F.lit(pad), True)
 
 
 def pad_end(s: Column, length: int, pad: str = " ") -> Column:
-    return _pad(s, length, pad, False)
+    """Right pad that never truncates; an empty pad is a no-op."""
+    return K.pad(_B, s, F.lit(length), F.lit(pad), False)
 
 
 def round_half_away(d: Column, scale: int = 0) -> Column:
-    """Half-away-from-zero (Rust ``f64::round``; ``transform.rs:2507-2512``).
-    Spark's ``F.round`` is HALF_UP which matches; this form documents the
-    contract and survives negative inputs identically."""
-    factor = F.lit(float(10 ** scale))
-    scaled = d * factor
-    r = F.when(scaled >= 0, F.floor(scaled + 0.5)).otherwise(
-        F.ceil(scaled - 0.5))
-    return r.cast("double") / factor
+    """Half-away-from-zero (Rust ``f64::round``;
+    ``transform.rs:2507-2512``); |x| >= 2^53 passes through."""
+    return K.round_half_away(_B, d, F.lit(scale))
 
 
 def to_base(n: Column, base: int) -> Column:
     """int → base-2..36 lowercase string with '-' for negatives
-    (``to_radix_string``, ``transform.rs:5861-5888``; Spark's ``conv`` is
-    unsigned and uppercase)."""
-    digits = F.lower(F.conv(F.abs(n).cast("string"), 10, base))
-    return F.when(n < 0, F.concat(F.lit("-"), digits)).otherwise(digits)
+    (``to_radix_string``, ``transform.rs:5861-5888``)."""
+    return K.to_base(_B, n, F.lit(base))
 
 
 def strict_int(s: Column) -> Column:

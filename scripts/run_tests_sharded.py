@@ -36,6 +36,7 @@ WEIGHTS = {
     "test_cli_and_streaming.py": 150,
     "test_compile_scale.py": 150,
     "test_sqlfn.py": 110,
+    "test_string_sqlfn.py": 100,
     "test_plan_quality.py": 100,
     "test_trace_graph.py": 80,
     "test_interp_golden.py": 70,
@@ -61,6 +62,7 @@ SMOKE_FILES = {
     "test_service_concurrency.py",
     "test_finalize_filter.py",
     "test_interp_bridge.py",
+    "test_string_sqlfn.py",
 }
 
 

@@ -12,8 +12,6 @@ import tempfile
 
 import pytest
 
-FIXTURES = "/root/reference/crates/rulemorph/tests/fixtures"
-
 RULE_SIMPLE = """
 version: 2
 input:
@@ -406,46 +404,108 @@ mappings:
             assert rows == [(1, "A-12.0"), (3, "C-30.0")]
 
 
-def test_cli_transform_emits_warnings_json():
+# small rule/input pairs shaped like the reference CLI fixtures
+# (rulemorph_cli/tests/cli.rs); each test writes its own into tmp_path
+WHEN_COMPARE_RULE = """
+version: 2
+input: {format: json}
+mappings:
+  - target: id
+    source: id
+  - target: big
+    value: true
+    when: {gt: ["@input.size", 10]}
+"""
+WHEN_COMPARE_INPUT = [{"id": 1, "size": 20}, {"id": 2, "size": "large"}]
+
+CSV_RULE = """
+version: 1
+input:
+  format: csv
+  csv: {has_header: true}
+mappings:
+  - target: user.id
+    source: id
+    type: int
+  - target: user.name
+    source: name
+  - target: active
+    source: active
+    type: bool
+"""
+CSV_INPUT = "id,name,active\n1,alice,true\n2,bob,false\n"
+
+CAST_RULE = """
+version: 1
+input: {format: json, json: {}}
+mappings:
+  - target: count
+    source: count
+    type: int
+"""
+
+DTO_RULE = """
+version: 1
+input: {format: json, json: {}}
+mappings:
+  - target: user.id
+    source: id
+    type: int
+  - target: user.name
+    source: name
+    type: string
+"""
+
+
+def _write(tmp_path, name, content):
+    path = tmp_path / name
+    path.write_text(content if isinstance(content, str)
+                    else json.dumps(content))
+    return str(path)
+
+
+def test_cli_transform_emits_warnings_json(tmp_path):
     """``transform_emits_warnings_json`` (cli.rs:174-198): with
     ``-e json`` the warnings land on stderr as ONE json array of
     ``{"type": "warning", "kind": ...}`` objects, exit code 0."""
-    base = f"{FIXTURES}/t10_when_compare"
-    r = _run_cli("transform", "-r", f"{base}/rules.yaml",
-                 "-i", f"{base}/input.json", "-e", "json")
+    r = _run_cli("transform",
+                 "-r", _write(tmp_path, "rules.yaml", WHEN_COMPARE_RULE),
+                 "-i", _write(tmp_path, "input.json", WHEN_COMPARE_INPUT),
+                 "-e", "json")
     assert r.returncode == 0, r.stderr
     values = _last_json_array(r.stderr)
     assert values[0]["type"] == "warning"
     assert values[0]["kind"] == "ExprError"
 
 
-def test_cli_transform_warnings_text_format():
+def test_cli_transform_warnings_text_format(tmp_path):
     """Text warnings use the reference's ``W <Kind> path=.. msg=".."``
     shape (emit_transform_warnings, main.rs:658-667)."""
-    base = f"{FIXTURES}/t10_when_compare"
-    r = _run_cli("transform", "-r", f"{base}/rules.yaml",
-                 "-i", f"{base}/input.json")
+    r = _run_cli("transform",
+                 "-r", _write(tmp_path, "rules.yaml", WHEN_COMPARE_RULE),
+                 "-i", _write(tmp_path, "input.json", WHEN_COMPARE_INPUT))
     assert r.returncode == 0, r.stderr
     lines = [ln for ln in r.stderr.splitlines() if ln.startswith("W ")]
     assert lines and lines[0].startswith("W ExprError")
     assert 'msg="' in lines[0]
 
 
-def test_cli_preflight_success_returns_zero():
+def test_cli_preflight_success_returns_zero(tmp_path):
     """``preflight_success_returns_zero`` (cli.rs:51-66)."""
-    base = f"{FIXTURES}/p01_preflight_ok"
-    r = _run_cli("preflight", "-r", f"{base}/rules.yaml",
-                 "-i", f"{base}/input.json")
+    r = _run_cli("preflight",
+                 "-r", _write(tmp_path, "rules.yaml", CAST_RULE),
+                 "-i", _write(tmp_path, "input.json", [{"count": "12"}]))
     assert r.returncode == 0, r.stderr
     assert r.stdout.strip() == ""  # preflight discards output
 
 
-def test_cli_preflight_json_errors():
+def test_cli_preflight_json_errors(tmp_path):
     """``preflight_json_errors`` (cli.rs:68-92): exit 3 with one stderr
     array of ``{"type": "transform", "kind": "TypeCastFailed"}``."""
-    base = f"{FIXTURES}/p03_preflight_type_cast_failed"
-    r = _run_cli("preflight", "-r", f"{base}/rules.yaml",
-                 "-i", f"{base}/input.json", "-e", "json")
+    r = _run_cli("preflight",
+                 "-r", _write(tmp_path, "rules.yaml", CAST_RULE),
+                 "-i", _write(tmp_path, "input.json", [{"count": "abc"}]),
+                 "-e", "json")
     assert r.returncode == 3, r.stderr
     payload = _last_json_array(r.stderr)
     assert payload[0]["type"] == "transform"
@@ -476,29 +536,36 @@ def test_cli_validation_error_shapes():
 
 def test_cli_transform_writes_output_file(tmp_path):
     """``transform_writes_output_file`` (cli.rs:145-172): -o creates
-    nested parent dirs and writes the expected JSON."""
-    base = f"{FIXTURES}/t01_csv_basic"
+    nested parent dirs and writes the interpreter's output for the same
+    files."""
+    from rulemorph_spark import interp
     out_path = tmp_path / "nested" / "out.json"
-    r = _run_cli("transform", "-r", f"{base}/rules.yaml",
-                 "-i", f"{base}/input.csv", "-o", str(out_path))
+    r = _run_cli("transform",
+                 "-r", _write(tmp_path, "rules.yaml", CSV_RULE),
+                 "-i", _write(tmp_path, "input.csv", CSV_INPUT),
+                 "-o", str(out_path))
     assert r.returncode == 0, r.stderr
-    with open(f"{base}/expected.json") as fh:
-        expected = json.load(fh)
+    expected = interp.transform(CSV_RULE, input_text=CSV_INPUT)
+    assert expected
     assert json.loads(out_path.read_text()) == expected
 
 
-def test_cli_transform_validate_flag_exit_2():
+def test_cli_transform_validate_flag_exit_2(tmp_path):
     """``transform_validate_flag_reports_validation_error``
     (cli.rs:201-219): -v validates first and exits 2."""
-    rules = f"{FIXTURES}/v01_missing_mapping_value/rules.yaml"
-    inp = f"{FIXTURES}/t01_csv_basic/input.csv"
-    r = _run_cli("transform", "-r", rules, "-i", inp, "-v")
+    rules = _write(tmp_path, "rules.yaml",
+                   "version: 1\ninput:\n  format: csv\n"
+                   "  csv: {has_header: true}\n"
+                   "mappings:\n  - target: user.id\n")
+    r = _run_cli("transform", "-r", rules,
+                 "-i", _write(tmp_path, "input.csv", CSV_INPUT), "-v")
     assert r.returncode == 2, r.stderr
 
 
-def test_cli_generate_rust_dto():
+def test_cli_generate_rust_dto(tmp_path):
     """``generate_outputs_rust_dto`` (cli.rs:222-238)."""
-    base = f"{FIXTURES}/dto01_basic"
-    r = _run_cli("generate", "-r", f"{base}/rules.yaml", "-l", "rust")
+    r = _run_cli("generate",
+                 "-r", _write(tmp_path, "rules.yaml", DTO_RULE),
+                 "-l", "rust")
     assert r.returncode == 0, r.stderr
     assert "pub struct" in r.stdout

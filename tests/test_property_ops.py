@@ -128,3 +128,27 @@ def test_ops_match_model(spark, records):
                     (key, rec, got)
             else:
                 assert _num_eq(actual, expected), (key, rec, got)
+
+
+@pytest.mark.parametrize("value,scale,want", [
+    (1e20, 0, 1e20),            # |x| >= 2^53: f64::round is the identity
+    (-1e20, 2, -1e20),
+    (2.5, 0, 3.0),              # half away from zero
+    (-2.5, 0, -3.0),
+    (1.005, 1, 1.0),
+])
+def test_round_half_away_matches_interp(spark, value, scale, want):
+    """functions.scalar.round_half_away is the engines' round kernel:
+    Spark's floor/ceil over DOUBLE return BIGINT, so without the 2^53
+    guard round_half_away(1e20) clamps to 9.223372036854776e18."""
+    from pyspark.sql import functions as F
+
+    from rulemorph_spark import interp as I
+    from rulemorph_spark.functions.scalar import round_half_away
+
+    got = spark.range(1).select(
+        round_half_away(F.lit(value), scale).alias("r")).collect()[0]["r"]
+    rule = ("version: 2\ninput: {format: json}\nmappings:\n"
+            f"  - target: r\n    expr: [\"@input.x\", {{round: [{scale}]}}]\n")
+    oracle = I.transform(rule, input_text=json.dumps([{"x": value}]))
+    assert got == want == oracle[0]["r"]

@@ -1,12 +1,14 @@
-"""String-op SQL-function fast path (round 9): cross-path parity.
+"""String-op parity: the two renderings of one body, and the oracle.
 
 The string/stringify ops (trim/lowercase/uppercase, to_string, concat,
-split, pad_start/pad_end, replace, to_base) compile to session SQL
-functions outside lambda scopes (compiler/ops_string_sql.py) and keep
-the inline Column path for lambda contexts / step-bearing args.  Every
-case runs BOTH paths (sqlfn enabled vs disabled) and both must agree
-value-for-value and error-for-error — the drift detector for the dual
-implementation, covering every protocol branch: missing short-circuit,
+split, pad_start/pad_end, replace, to_base, round) write each variant
+body once (compiler/ops_string.py) and render it as a session SQL
+function outside lambda scopes or as the inline Column tree inside
+lambda contexts / for step-bearing args.  Every case runs BOTH
+renderings (sqlfn enabled vs disabled) AND the interpreter oracle; all
+three must agree value-for-value — kind-exactly, as JSON text, so
+``45000`` and ``45000.0`` differ — and error-for-error (kind, message,
+path).  The cases cover every protocol branch: missing short-circuit,
 variant-null wording, type errors, the serde/Rust float renderings,
 mode dispatch, and boundary values.
 """
@@ -17,16 +19,27 @@ import json
 
 import pytest
 
+from rulemorph_spark import interp as I
 from rulemorph_spark.compiler import sqlfn
 from rulemorph_spark.engine import transform
 from rulemorph_spark.errors import TransformEngineError
 
+pytestmark = pytest.mark.smoke
+
 
 def _run(spark, rule, record):
     try:
-        return ("ok", transform(spark, rule,
-                                input_text=json.dumps([record])))
+        return ("ok", json.dumps(transform(spark, rule,
+                                           input_text=json.dumps([record]))))
     except TransformEngineError as e:
+        return ("err", e.kind, e.message, e.path)
+
+
+def _oracle(rule, record):
+    try:
+        return ("ok", json.dumps(I.transform(
+            rule, input_text=json.dumps([record]))))
+    except I.InterpError as e:
         return ("err", e.kind, e.message, e.path)
 
 
@@ -38,7 +51,16 @@ def _both(spark, rule, record):
     finally:
         sqlfn.enable(spark)
     assert fast == slow, (rule, record, fast, slow)
+    oracle = _oracle(rule, record)
+    assert fast == oracle, (rule, record, fast, oracle)
     return fast
+
+
+# Spark's parse_json reads -0.0 as DECIMAL(1,0) 0, so the engine never
+# sees the sign that interp renders ("-0.0" in v2, "-0" in v1)
+_NZERO = pytest.mark.xfail(
+    strict=True, reason="parse_json('-0.0') is DECIMAL(1,0) 0: the sign "
+    "is lost in the reader, so the engine renders 0 where interp keeps -0")
 
 
 def _v2(expr):
@@ -72,7 +94,7 @@ V2_CASES = [
     ["@input.big", {"to_string": []}],     # bare-e scientific
     ["@input.sci", {"to_string": []}],
     ["@input.huge", {"to_string": []}],    # 2^60 ryu-shortest
-    ["@input.nzero", {"to_string": []}],
+    pytest.param(["@input.nzero", {"to_string": []}], marks=_NZERO),
     ["@input.exp16", {"to_string": []}],
     ["@input.e_m4", {"to_string": []}],
     ["@input.arr", {"to_string": []}],     # containers → JSON text
@@ -105,13 +127,33 @@ V2_CASES = [
     ["@input.n", {"to_base": ["@input.f"]}],   # base must be integer
     ["@input.f", {"to_base": [16]}],           # value must be integer
     ["@input.num_s", {"to_base": [16]}],       # i64-string accepted
+    ["@input.f", {"to_base": ["@input.nul"]}],  # null check first
+    # round: half away from zero, integral results re-emit as ints
+    ["@input.f", {"round": []}],               # 3, not 3.0
+    ["@input.tiny", {"round": [7]}],
+    ["@input.neg", {"round": [1]}],
+    ["@input.big", {"round": [2]}],            # |x| >= 2^53 passes
+    ["@input.num_s", {"round": []}],           # numeric string
+    ["@input.n", {"round": [-1]}],             # negative scale error
+    ["@input.n", {"round": [309]}],            # scale too large
+    ["@input.s", {"round": []}],               # operand must be a number
+    ["@input.nul", {"round": [1]}],            # null operand
+    ["@input.n", {"round": ["@input.nul"]}],   # null scale
+    # the Column rendering inside a lambda scope: conversions, then
+    # the checks in operand order, as at the top level
+    [["@input.f"], {"map": [{"to_base": ["@input.nul"]}]}],
+    [["@input.t"], {"map": [{"replace": ["@input.n", "-"]}]}],
+    [["@input.csv"], {"map": [{"split": [""]}]}],
+    [["@input.num_s"], {"map": [{"pad_end": [6, "ab"]}]}],
+    [["@input.f"], {"map": [{"round": ["@input.f"]}]}],
 ]
 
 V1_CASES = [
     # v1 to_string: integral trim + Rust {} float rendering
     {"op": "to_string", "args": [{"ref": "input.intf"}]},   # "2"
     {"op": "to_string", "args": [{"ref": "input.big"}]},
-    {"op": "to_string", "args": [{"ref": "input.nzero"}]},  # "-0"
+    pytest.param({"op": "to_string", "args": [{"ref": "input.nzero"}]},
+                 marks=_NZERO),                          # "-0"
     {"op": "to_string", "args": [{"ref": "input.arr"}]},    # error
     {"op": "concat", "args": [{"ref": "input.s"},
                               {"ref": "input.intf"}]},
@@ -148,7 +190,7 @@ def test_lambda_scope_falls_back(spark):
     rule = _v2([[" x ", "y "],
                 {"map": [{"op": "trim", "args": []}]}])
     out = _run(spark, rule, REC)
-    assert out == ("ok", [{"out": ["x", "y"]}])
+    assert out == ("ok", json.dumps([{"out": ["x", "y"]}]))
 
 
 def test_step_bearing_arg_falls_back(spark):
