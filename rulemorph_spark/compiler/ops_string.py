@@ -683,14 +683,17 @@ def _body_replace(op, b, cv, o, path, version, safe):
 
 
 def _body_to_base(op, b, cv, o, path, version, safe):
-    # both operands pass the null protocol before either converts
-    # (eval_to_base, transform.rs:2517-2574): no interleaved probes
+    # both operands are checked for missing, then both for null, before
+    # either converts (eval_to_base, transform.rs:2517-2574): a missing
+    # base makes a null value missing, not a null error
     p1 = arg_path(path, 1)
     number = cv.as_i64(o[0], arg_path(path, 0), "value must be an integer")
     base = base_range(b, cv.as_i64(o[1], p1, "base must be an integer"),
                       p1)
-    return cv.layers(o, path, b.cast(to_base(b, number, base), "variant"),
-                     [None, None])
+    layered = cv.layers(o, path, b.cast(to_base(b, number, base), "variant"),
+                        [None, None])
+    return b.case([(b.or_(b.isnull(o[0]), b.isnull(o[1])),
+                    b.null("variant"))], layered)
 
 
 def _body_round(op, b, cv, o, path, version, safe):

@@ -107,6 +107,11 @@ def disable(spark: SparkSession) -> None:
     _state(spark).disabled = True
 
 
+def is_disabled(spark: SparkSession) -> bool:
+    """Whether this session takes the inline Column path."""
+    return _state(spark).disabled
+
+
 def enable(spark: SparkSession) -> None:
     st = _state(spark)
     st.disabled = False

@@ -2065,11 +2065,24 @@ def t_to_base(scope, cur, args, path):
     """int → base-2..36 lowercase digits, ``-`` for negatives
     (``transform.rs:2517-2574``; Spark's conv is unsigned+uppercase)."""
     ops = _toperands(scope, cur, args, path)
+    # eval_to_base checks both operands for missing before either for
+    # null: a missing base makes a null value missing
+    base_mw = ops[1].missing_when
+    if (ops[1].missing or base_mw is not None) and ops[0].errs:
+        raise TypedFallback("to_base over a maybe-missing base")
+    if ops[1].missing:
+        return _missing()
     number = t_i64(ops[0], arg_path(path, 0), "value must be an integer")
     base = S.base_range(_TB, t_i64(ops[1], arg_path(path, 1),
                                    "base must be an integer"),
                         arg_path(path, 1))
-    return _seq(ops, path, S.to_base(_TB, number, base), T.StringType())
+    out = _seq(ops, path, S.to_base(_TB, number, base), T.StringType())
+    if base_mw is None:
+        return out
+    mw = _mw(ops[1])
+    return TVal(F.when(mw, F.lit(None).cast(out.dtype)).otherwise(out.col),
+                out.dtype, maybe_missing=True, missing_when=mw | _mw(out),
+                errs=out.errs, const=out.const)
 
 
 def _py_scalar_type(vals) -> T.DataType | None:

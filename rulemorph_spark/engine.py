@@ -444,16 +444,26 @@ def transform_with_warnings(spark: SparkSession, rule_text: str,
     are {path, count} aggregates of when/record_when evaluation
     failures (the reference's error-to-warning conversion).
     ``format_override`` replaces the rule's input format — the CLI's
-    ``-f csv|json`` (``apply_format_override``, main.rs:500-507)."""
-    rule = parse_rule_file(rule_text)
-    if format_override is not None:
-        if format_override not in ("csv", "json"):
-            raise RuleError("invalid_rule",
-                            "format override must be csv or json",
-                            "input.format")
-        rule.input.format = format_override
+    ``-f csv|json`` (``apply_format_override``, main.rs:500-507).
+
+    The rule compiles once per session (``compiler/compiled.py``); a
+    later call replays the compiled program over its own records."""
+    from .compiler.compiled import lookup, rule_key
+    key = rule_key(spark, "transform", rule_text, context, base_dir,
+                   format_override, collect_warnings)
+    prog = lookup(spark, key)
+    if prog is not None:
+        rule = prog.rule
+    else:
+        rule = parse_rule_file(rule_text)
+        if format_override is not None:
+            if format_override not in ("csv", "json"):
+                raise RuleError("invalid_rule",
+                                "format override must be csv or json",
+                                "input.format")
+            rule.input.format = format_override
     try:
-        return _transform_parsed(spark, rule, input_text, input_path,
+        return _transform_parsed(spark, key, rule, input_text, input_path,
                                  context, base_dir,
                                  collect_warnings=collect_warnings)
     except TransformEngineError:
@@ -505,7 +515,65 @@ def _prepare_session(spark) -> None:
         pass  # conf locked down → deep pipes may hit the 100 cap
 
 
-def _transform_parsed(spark, rule, input_text, input_path, context,
+def _program(df: DataFrame, key: tuple, build):
+    """→ (the session's program under ``key``, compiled by ``build()``
+    on a miss, and ``frame(name)``: the program's DataFrame ``name``
+    over ``df``).  ``build()`` returns the program and its DataFrames
+    over ``df``; a program that kept no plan compiles again here."""
+    from .compiler.compiled import compiled_rule
+    built = {}
+
+    def first():
+        prog, frames = build()
+        built.update(frames)
+        return prog
+
+    prog = compiled_rule(df.sparkSession, key, df.schema.json(), first)
+    if not built and not prog.replays and prog.fallback is None:
+        built.update(build()[1])
+    return prog, lambda name: built[name] if built else prog.replay(df, name)
+
+
+def _compile_records(df: DataFrame, rule: RuleFile, context,
+                     base_dir: str, collect_warnings: bool):
+    """→ (the ``transform`` program of ``rule`` over ``df``, its
+    DataFrames over ``df``: ``rows`` (``__idx__``, ``__json__``) and,
+    with ``collect_warnings`` and when/record_when channels in the
+    rule, ``warnings``)."""
+    from .compiler.compiled import CompiledRule
+    from .compiler.rule import Builder
+    from .model import recording_loads
+    builder = Builder(df)
+    try:
+        with recording_loads() as loads:
+            compiled = RuleCompiler(rule, context=context,
+                                    base_dir=base_dir).compile(
+                builder, F.col("__record__"))
+    except RuleError as e:
+        # the reference parses v2 mapping exprs at EVAL, so expr-level
+        # parse failures are transform ExprErrors with the V2ParseError
+        # Display wrappers (CLI rc=3), not rule errors (rc=2)
+        from .errors import rule_error_to_transform
+        te = rule_error_to_transform(e)
+        if te is not None:
+            raise te from None
+        raise
+    frames = {"rows": (
+        builder.df
+        .withColumn("__keep__", compiled.keep)
+        .filter(F.col("__keep__"))
+        .withColumn("__json__", compiled.out_json())
+        .select("__idx__", "__json__"))}
+    if collect_warnings and compiled.warn_flags:
+        frames["warnings"] = builder.df.agg(*[
+            F.sum(flag.cast("long")).alias(f"w{i}")
+            for i, (_, flag) in enumerate(compiled.warn_flags)])
+    warn_paths = ([path for path, _ in compiled.warn_flags]
+                  if "warnings" in frames else [])
+    return CompiledRule(rule, df, frames, warn_paths, loads), frames
+
+
+def _transform_parsed(spark, key, rule, input_text, input_path, context,
                       base_dir, collect_warnings=False):
     fmt = rule.input.format
     if fmt == "csv" and input_path is None:
@@ -517,8 +585,8 @@ def _transform_parsed(spark, rule, input_text, input_path, context,
                                          delete=False) as tmp:
             tmp.write(input_text)
         try:
-            return _transform_parsed(spark, rule, None, tmp.name, context,
-                                     base_dir, collect_warnings)
+            return _transform_parsed(spark, key, rule, None, tmp.name,
+                                     context, base_dir, collect_warnings)
         finally:
             os.unlink(tmp.name)
     _prepare_session(spark)
@@ -539,27 +607,12 @@ def _transform_parsed(spark, rule, input_text, input_path, context,
         else:
             df = records_from_json_text(spark, input_text, records_path)
 
-    from .compiler.rule import Builder
-    compiler = RuleCompiler(rule, context=context, base_dir=base_dir)
-    builder = Builder(df)
-    try:
-        compiled = compiler.compile(builder, F.col("__record__"))
-    except RuleError as e:
-        # the reference parses v2 mapping exprs at EVAL, so expr-level
-        # parse failures are transform ExprErrors with the V2ParseError
-        # Display wrappers (CLI rc=3), not rule errors (rc=2)
-        from .errors import rule_error_to_transform
-        te = rule_error_to_transform(e)
-        if te is not None:
-            raise te from None
-        raise
+    prog, frames = _program(df, key, lambda: _compile_records(
+        df, rule, context, base_dir, collect_warnings))
     warnings: list[dict] = []
-    if collect_warnings and compiled.warn_flags:
-        agg = builder.df.agg(*[
-            F.sum(flag.cast("long")).alias(f"w{i}")
-            for i, (_, flag) in enumerate(compiled.warn_flags)
-        ]).collect()[0]
-        for i, (path, _) in enumerate(compiled.warn_flags):
+    if prog.warn_paths:
+        agg = frames("warnings").collect()[0]
+        for i, path in enumerate(prog.warn_paths):
             n = agg[f"w{i}"] or 0
             if n:
                 warnings.append({
@@ -567,13 +620,7 @@ def _transform_parsed(spark, rule, input_text, input_path, context,
                     "message": "when/record_when evaluation failed "
                                "(treated as false)",
                     "path": path, "records": int(n)})
-    result = (
-        builder.df
-        .withColumn("__keep__", compiled.keep)
-        .filter(F.col("__keep__"))
-        .withColumn("__json__", compiled.out_json())
-        .select("__idx__", "__json__")
-    )
+    result = frames("rows")
     result, wrap = apply_finalize(result, rule, context)
     rows = result.collect()
     if rule.finalize is None or rule.finalize.sort is None:
@@ -607,24 +654,49 @@ def transform_table(df: DataFrame, rule_text_or_rule,
     are ``return: true`` branches to a target with ``finalize``: that
     target answers with an array or a wrap value, not a row.
     """
-    from .compiler.typed import TypedFallback, TypedRuleCompiler
+    from .compiler.compiled import rule_key
+    from .compiler.typed import TypedFallback
 
-    _prepare_session(df.sparkSession)
+    spark = df.sparkSession
+    _prepare_session(spark)
+    key = rule_key(spark, "table", rule_text_or_rule, context, base_dir,
+                   mode, df.schema.json())
+    prog, frames = _program(df, key, lambda: _compile_table(
+        df, rule_text_or_rule, context, mode, base_dir))
+    if prog.fallback is not None:
+        raise TypedFallback(*prog.fallback.args)
+    return frames("rows")
+
+
+def _compile_table(df: DataFrame, rule_text_or_rule, context, mode: str,
+                   base_dir: str):
+    """→ (the ``transform_table`` program of the rule over ``df``, its
+    ``rows`` over ``df``).  In ``typed`` mode a rule outside the typed
+    subset compiles to a program that raises its ``TypedFallback``."""
+    from .compiler.compiled import CompiledRule
+    from .compiler.typed import TypedFallback, TypedRuleCompiler
+    from .model import recording_loads
+
     rule = (parse_rule_file(rule_text_or_rule)
             if isinstance(rule_text_or_rule, str) else rule_text_or_rule)
     if rule.finalize is not None:
         raise RuleError("invalid_rule",
                         "transform_table does not support finalize; "
                         "use orderBy/limit on the result")
-
-    if mode in ("auto", "typed"):
-        try:
-            return TypedRuleCompiler(rule, context=context,
-                                     base_dir=base_dir).compile(df)
-        except TypedFallback:
-            if mode == "typed":
-                raise
-    return _transform_table_variant(df, rule, context, base_dir)
+    with recording_loads() as loads:
+        out = None
+        if mode in ("auto", "typed"):
+            try:
+                out = TypedRuleCompiler(rule, context=context,
+                                        base_dir=base_dir).compile(df)
+            except TypedFallback as exc:
+                if mode == "typed":
+                    return CompiledRule(rule, df, loads=loads,
+                                        fallback=exc), {}
+        if out is None:
+            out = _transform_table_variant(df, rule, context, base_dir)
+    frames = {"rows": out}
+    return CompiledRule(rule, df, frames, loads=loads), frames
 
 
 def _bridge_needs_rewrite(dt) -> bool:

@@ -7,6 +7,9 @@ Unknown fields are rejected (the reference uses serde ``deny_unknown_fields``).
 
 from __future__ import annotations
 
+import contextlib
+import os
+import threading
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -293,6 +296,27 @@ def parse_rule_file(text: str) -> RuleFile:
     return parse_rule_dict(repair_yaml_surrogates(doc))
 
 
+# this thread's ``recording_loads`` scope: {absolute path: text}
+_loads = threading.local()
+
+
+@contextlib.contextmanager
+def recording_loads():
+    """Record every file ``load_rule_file`` reads on this thread within
+    the scope, as ``{absolute path: text}`` (a compiled rule re-checks
+    them, ``compiler/compiled.py``)."""
+    outer = getattr(_loads, "files", None)
+    files = _loads.files = {}
+    try:
+        yield files
+    finally:
+        _loads.files = outer
+
+
 def load_rule_file(path: str) -> RuleFile:
     with open(path, encoding="utf-8") as fh:
-        return parse_rule_file(fh.read())
+        text = fh.read()
+    files = getattr(_loads, "files", None)
+    if files is not None:
+        files[os.path.abspath(path)] = text
+    return parse_rule_file(text)

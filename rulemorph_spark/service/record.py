@@ -19,13 +19,17 @@ optimizer's ``ConvertToLocalRelation`` cannot fold the plan away. The
 plan is then optimized once; the FIXTURES §F5 rule optimizes to four
 ``Project``s over that leaf.
 
-**The cache.** It is per ``SparkSession`` (weakly keyed), then keyed by
-rule content and ``base_dir``. It keeps the ``_CACHE_SIZE`` (64) most
-recently used plans, Java-serialized (the optimized F5 plan takes
-479 KB). ``@context`` is not part of the key: the plan reads it from its
-row like the record, so calls that differ only in context (a catch
-handler's ``@context.error``, per-step params) share one plan. Compile
-errors are never cached.
+**The cache.** It is the shared per-session LRU,
+``compiler.compiled.SessionLRU`` (weakly keyed by ``SparkSession``),
+keyed by rule content and ``base_dir``. It keeps the ``_CACHE_SIZE``
+(64) most recently used plans, Java-serialized and LZ4-compressed
+(``compiler.compiled.serialize_plan``; the optimized F5 plan takes
+101 KB). ``@context`` is not part of the key: the plan reads it
+from its row like the record, so calls that differ only in context (a
+catch handler's ``@context.error``, per-step params) share one plan.
+Concurrent first calls compile once; compile errors are never cached.
+It caches an optimized plan, not the ``CompiledRule`` program that
+``engine.transform`` and ``transform_table`` replay.
 
 **Evaluators and their pool.** An evaluator is the optimized plan's
 ``Project``/``Filter`` chain bound once, bottom to top, as
@@ -77,6 +81,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..compiler.compiled import CACHE_SIZE as _CACHE_SIZE, SessionLRU
+from ..compiler.compiled import copy_plan, serialize_plan
 from ..errors import TransformEngineError, extract_engine_error
 from ..model import RuleFile, parse_rule_file
 
@@ -92,12 +98,6 @@ _RECORD_SQL = ("SELECT __idx__, parse_json(__raw__) AS __record__, "
 
 # the columns of ``_RECORD_SQL``'s leaf, in order: an evaluator's input row
 _LEAF = ["__idx__", "__raw__", "__ctx__"]
-
-# plans kept per session (least recently used evicted first).  Plans
-# are kept serialized: each evaluator deserializes a copy of its own,
-# and 64 live plans of the FIXTURES §F5 rule would take hundreds of MB
-# of the default 1 GB driver heap.
-_CACHE_SIZE = 64
 
 # evaluators kept per session, idle or busy: one of the F5 rule holds
 # about 3.3 MB of heap, so 16 of them add about 55 MB to a full cache
@@ -168,7 +168,8 @@ class _Pool:
 # eq=False: a plan is its own identity (it keys the pool)
 @dataclass(frozen=True, eq=False)
 class _Plan:
-    # the record projection, Java-serialized (a JVM ByteBuffer):
+    # the record projection, serialized (``serialize_plan``, a JVM
+    # ByteBuffer):
     # optimized over the opaque record leaf, or analyzed over the
     # ``VALUES`` leaf on the Dataset path
     serialized: Any
@@ -183,9 +184,12 @@ class _Plan:
     sources: tuple = ()
 
 
-_lock = threading.Lock()
-_plans: "weakref.WeakKeyDictionary[SparkSession, OrderedDict]" = \
-    weakref.WeakKeyDictionary()
+# plans kept per session (least recently used evicted first).  Plans
+# are kept serialized: each evaluator deserializes a copy of its own,
+# and 64 live plans of the FIXTURES §F5 rule would take hundreds of MB
+# of the default 1 GB driver heap.
+_plans = SessionLRU()
+_pools_lock = threading.Lock()
 _pools: "weakref.WeakKeyDictionary[SparkSession, _Pool]" = \
     weakref.WeakKeyDictionary()
 
@@ -234,22 +238,8 @@ def _record_rows(spark: SparkSession, raw: str, ctx: str | None):
 def _cached_plan(spark: SparkSession, rule: RuleFile, base_dir: str,
                  raw: str, ctx: str | None) -> _Plan:
     # the dataclass repr spells out the whole rule
-    key = (repr(rule), base_dir)
-    with _lock:
-        plans = _plans.setdefault(spark, OrderedDict())
-        plan = plans.get(key)
-        if plan is not None:
-            plans.move_to_end(key)
-            return plan
-    # compiled outside the lock: racing first calls may both compile,
-    # and the last insert wins
-    plan = _compile(spark, rule, base_dir, raw, ctx)
-    with _lock:
-        plans[key] = plan
-        plans.move_to_end(key)
-        while len(plans) > _CACHE_SIZE:
-            plans.popitem(last=False)
-    return plan
+    return _plans.get(spark, (repr(rule), base_dir),
+                      lambda: _compile(spark, rule, base_dir, raw, ctx))
 
 
 def _compile(spark: SparkSession, rule: RuleFile, base_dir: str,
@@ -286,11 +276,11 @@ def _compile(spark: SparkSession, rule: RuleFile, base_dir: str,
     if reason is None:
         # clone(): fresh nodes, without the optimizer's cached
         # constraints (an ExpressionSet, which is not serializable)
-        return _Plan(_serialize(spark, optimized.clone()),
+        return _Plan(serialize_plan(spark, optimized.clone()),
                      spark.sparkContext.defaultParallelism)
-    serialized = _serialize(spark, analyzed)
+    serialized = serialize_plan(spark, analyzed)
     return _Plan(serialized, 0, reason,
-                 tuple(_local_leaves(_copy(spark, serialized), row)))
+                 tuple(_local_leaves(copy_plan(spark, serialized), row)))
 
 
 def _local_leaves(plan, row) -> list:
@@ -370,7 +360,7 @@ class _Evaluator:
         jvm = spark._jvm
         ex = jvm.org.apache.spark.sql.catalyst.expressions
         attrs = getattr(ex, "package$AttributeSeq")
-        plan = _copy(spark, serialized)
+        plan = copy_plan(spark, serialized)
         chain = []
         node = plan
         while not node.children().isEmpty():
@@ -421,7 +411,7 @@ def _evaluate(spark: SparkSession, plan: _Plan, raw: str,
               ctx: str | None) -> str | None:
     """``__json__`` of the request's row, or None when the rule filters
     it out."""
-    with _lock:
+    with _pools_lock:
         pool = _pools.setdefault(spark, _Pool())
     with pool.borrow(plan, lambda: _Evaluator(spark, plan.serialized)) as ev:
         try:
@@ -431,27 +421,6 @@ def _evaluate(spark: SparkSession, plan: _Plan, raw: str,
             if err is not None:
                 raise err from exc
             raise
-
-
-def _serializer(spark: SparkSession):
-    return spark._jvm.org.apache.spark.serializer.JavaSerializer(
-        spark.sparkContext._jsc.sc().conf()).newInstance()
-
-
-def _tag(spark: SparkSession):
-    jvm = spark._jvm
-    return jvm.scala.reflect.ClassTag.apply(
-        jvm.java.lang.Class.forName("java.lang.Object"))
-
-
-def _serialize(spark: SparkSession, plan):
-    return _serializer(spark).serialize(plan, _tag(spark))
-
-
-def _copy(spark: SparkSession, serialized):
-    # duplicate(): a read position of this call's own
-    return _serializer(spark).deserialize(serialized.duplicate(),
-                                          _tag(spark))
 
 
 def _rebound(spark: SparkSession, plan: _Plan, raw: str,
@@ -466,7 +435,7 @@ def _rebound(spark: SparkSession, plan: _Plan, raw: str,
         swap.put(src, local(src.output(), row, False,
                             jvm.scala.Option.empty()))
     # a Scala Map is a PartialFunction: it rewrites the copy's sources
-    rebound = _copy(spark, plan.serialized).transformDown(
+    rebound = copy_plan(spark, plan.serialized).transformDown(
         jvm.org.apache.spark.api.python.PythonUtils.toScalaMap(swap))
     rebound.setAnalyzed()
     return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(

@@ -44,6 +44,7 @@ WEIGHTS = {
     "test_diag.py": 60,
     "test_property_ops.py": 60,
     "test_reference_inline_suites.py": 50,
+    "test_compiled_rule.py": 60,
 }
 
 
@@ -63,6 +64,7 @@ SMOKE_FILES = {
     "test_finalize_filter.py",
     "test_interp_bridge.py",
     "test_string_sqlfn.py",
+    "test_compiled_rule.py",
 }
 
 

@@ -8,7 +8,7 @@ lambda contexts / for step-bearing args.  Every case runs BOTH
 renderings (sqlfn enabled vs disabled) AND the interpreter oracle; all
 three must agree value-for-value — kind-exactly, as JSON text, so
 ``45000`` and ``45000.0`` differ — and error-for-error (kind, message,
-path).  The cases cover every protocol branch: missing short-circuit,
+path), through the shared comparator in ``kind_exact.py``.  The cases cover every protocol branch: missing short-circuit,
 variant-null wording, type errors, the serde/Rust float renderings,
 mode dispatch, and boundary values.
 """
@@ -19,39 +19,21 @@ import json
 
 import pytest
 
-from rulemorph_spark import interp as I
+import kind_exact as K
 from rulemorph_spark.compiler import sqlfn
-from rulemorph_spark.engine import transform
-from rulemorph_spark.errors import TransformEngineError
 
 pytestmark = pytest.mark.smoke
 
 
-def _run(spark, rule, record):
-    try:
-        return ("ok", json.dumps(transform(spark, rule,
-                                           input_text=json.dumps([record]))))
-    except TransformEngineError as e:
-        return ("err", e.kind, e.message, e.path)
-
-
-def _oracle(rule, record):
-    try:
-        return ("ok", json.dumps(I.transform(
-            rule, input_text=json.dumps([record]))))
-    except I.InterpError as e:
-        return ("err", e.kind, e.message, e.path)
-
-
 def _both(spark, rule, record):
-    fast = _run(spark, rule, record)
+    fast = K.engine(spark, rule, [record])
     sqlfn.disable(spark)
     try:
-        slow = _run(spark, rule, record)
+        slow = K.engine(spark, rule, [record])
     finally:
         sqlfn.enable(spark)
     assert fast == slow, (rule, record, fast, slow)
-    oracle = _oracle(rule, record)
+    oracle = K.oracle(rule, [record])
     assert fast == oracle, (rule, record, fast, oracle)
     return fast
 
@@ -128,6 +110,7 @@ V2_CASES = [
     ["@input.f", {"to_base": [16]}],           # value must be integer
     ["@input.num_s", {"to_base": [16]}],       # i64-string accepted
     ["@input.f", {"to_base": ["@input.nul"]}],  # null check first
+    ["@input.nul", {"to_base": ["@input.nope"]}],  # missing before null
     # round: half away from zero, integral results re-emit as ints
     ["@input.f", {"round": []}],               # 3, not 3.0
     ["@input.tiny", {"round": [7]}],
@@ -189,7 +172,7 @@ def test_lambda_scope_falls_back(spark):
     top-level result."""
     rule = _v2([[" x ", "y "],
                 {"map": [{"op": "trim", "args": []}]}])
-    out = _run(spark, rule, REC)
+    out = K.engine(spark, rule, [REC])
     assert out == ("ok", json.dumps([{"out": ["x", "y"]}]))
 
 

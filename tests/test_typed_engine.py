@@ -953,3 +953,38 @@ mappings:
                transform_table(df, rule, mode="variant")
                .select(F.to_json("id").alias("id")).collect())
     assert t == v == [1]
+
+
+@pytest.mark.parametrize("expr", [
+    ["@input.nul", {"to_base": ["@input.nope"]}],
+    ["@input.nul", {"to_base": ["@input.m.b"]}],
+    ["@input.id", {"to_base": ["@input.nope"]}],
+    ["@input.nul", {"to_base": [16]}],
+])
+def test_to_base_missing_base_before_null_value(spark, expr):
+    """``eval_to_base`` checks both operands for missing before either
+    for null: a missing base (static, or per row through a map) makes a
+    null value missing, in both engines as in interp."""
+    from rulemorph_spark import interp as I
+
+    rows = [(1, None, {}), (2, None, {"c": 3})]
+    df = spark.createDataFrame(rows, "id long, nul long, m map<string,long>")
+    rule = ("version: 2\ninput: {format: json}\nmappings:\n"
+            "  - target: id\n    source: id\n"
+            f"  - target: out\n    expr: {json.dumps(expr)}\n")
+    try:
+        want = sorted(json.dumps(r, sort_keys=True) for r in I.transform(
+            rule, input_text=json.dumps([{"id": i, "nul": n, "m": m}
+                                         for i, n, m in rows])))
+    except I.InterpError as e:
+        want = (e.kind, e.message, e.path)
+    for mode in ("typed", "variant"):
+        out = transform_table(df, rule, mode=mode)
+        try:
+            got = sorted(json.dumps(json.loads(r[0]), sort_keys=True)
+                         for r in out.select(F.to_json(F.struct(
+                             *out.columns))).collect())
+        except Exception as exc:
+            err = extract_engine_error(exc)
+            got = (err.kind, err.message, err.path) if err else repr(exc)
+        assert got == want, (mode, got, want)
