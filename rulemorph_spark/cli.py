@@ -144,11 +144,13 @@ def _run_transform(args, *, discard: bool) -> int:
         if not isinstance(output, list):
             print("ndjson output requires an array result", file=sys.stderr)
             return 1
-        lines = "\n".join(json.dumps(r, separators=(",", ":"))
+        lines = "\n".join(json.dumps(r, separators=(",", ":"),
+                                     sort_keys=True)
                           for r in output)
         text = lines + ("\n" if lines else "")
     else:
-        text = json.dumps(output, separators=(",", ":")) + "\n"
+        text = json.dumps(output, separators=(",", ":"),
+                          sort_keys=True) + "\n"
 
     if args.output:
         parent = os.path.dirname(args.output)

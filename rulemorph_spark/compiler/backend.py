@@ -1,9 +1,9 @@
 """Expression backends: one generic builder, several renderings.
 
 Op semantics are written ONCE against this backend protocol — the
-date parse chain (``ops_date.py``), the string/number kernels and
-their variant bodies (``ops_string.py``), the arithmetic body
-(``ops_arith_sql.py``) — and rendered as
+date parse chain (``ops_date.py``), the string, round, to_base and
+arithmetic kernels and their variant bodies (``ops_bodies.py``) — and
+rendered as
 
 - ``ColB`` — the hand-built Column tree (used inside Catalyst lambda
   scopes, where SQL-function call arguments cannot reference the free
@@ -20,9 +20,7 @@ their variant bodies (``ops_string.py``), the arithmetic body
   copies at runtime) which keeps the body lambda-free — lambda-free
   projections stay INSIDE whole-stage codegen.
 
-One builder per op means the renderings cannot drift.  Only the
-arithmetic fold still has a hand-written Column twin
-(``ops_scalar._numeric_fold`` beside ``ops_arith_sql._arith_body``).
+One builder per op means the renderings cannot drift.
 """
 
 from __future__ import annotations
@@ -286,7 +284,7 @@ class SqlB:
     # prediction explodes on deeply-nested parenthesized CASEs), so
     # small bodies beat lambda-free ones.  Evaluation is EAGER (the
     # transform's array argument evaluates before the body) — the
-    # layered arith protocol relies on that (ops_arith_sql.py).
+    # layered arith protocol relies on that (ops_bodies._body_arith).
     # The variable counter is PER BUILDER so identically-shaped bodies
     # render identical text (function sharing keys on the text).
 

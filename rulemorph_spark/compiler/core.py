@@ -295,7 +295,7 @@ V2_NATIVE_STEP_OPS = {
 UDF_OPS = {"pick", "omit", "date_format", "to_unixtime",
            "+", "-", "*", "/",
            # round 9: string/stringify ops with SQL-function fast paths
-           # (ops_string.py) — raw pipe value becomes the function
+           # (ops_bodies.py) — raw pipe value becomes the function
            # argument; the inline fallback V.lets it itself
            "trim", "lowercase", "uppercase", "to_string", "concat",
            "split", "pad_start", "pad_end", "replace", "to_base",

@@ -1,13 +1,14 @@
-"""The string / stringify ops — ``trim/lowercase/uppercase``,
-``to_string``, ``concat``, ``split``, ``pad_start/pad_end``,
-``replace``, ``to_base`` and ``round`` (``transform.rs:1403-2574``) —
-written ONCE and rendered by every engine.
+"""The ops written ONCE and rendered by every engine: the string /
+stringify ops — ``trim/lowercase/uppercase``, ``to_string``,
+``concat``, ``split``, ``pad_start/pad_end``, ``replace``, ``to_base``
+and ``round`` (``transform.rs:1403-2574``) — and the arithmetic ops
+``+ - * /`` (v1 ``transform.rs:2375-2435``, v2 ``v2_eval.rs:1848-1928``).
 
 Three layers, each defined once:
 
 - **Kernels** (``replace``, ``split``, ``pad``, ``to_base``,
-  ``round_half_away`` and their argument checks) hold the op
-  semantics over already-converted values, written against the
+  ``round_half_away``, ``arith_fold`` and their argument checks) hold
+  the op semantics over already-converted values, written against the
   ``backend.py`` protocol.  The variant engine renders them through
   ``SqlB`` / ``ColB``, the typed engine (``typed.py``) through a
   lambda-free ``InlineColB`` whose errors are its ``_terr``, and
@@ -16,10 +17,11 @@ Three layers, each defined once:
   engine: per-operand conversion, the kernel, then the positional
   missing/null/check protocol.  The conversions and the protocol are
   the engine's, reached through an operand adapter: ``_SqlOperands``
-  for ``SqlB`` (calls of the shared helper session functions and the
-  textual ``layers``), ``_ColOperands`` for ``ColB`` (the ``variant``
-  converters and ``ops_scalar.seq_strict``).
-- **One entry** (``string_op``): outside Catalyst lambda scopes the
+  for ``SqlB`` (calls of the shared helper session functions, the
+  number converters' SQL text and the textual ``layers``),
+  ``_ColOperands`` for ``ColB`` (the ``variant`` converters and
+  ``ops_scalar.seq_strict``).
+- **One entry** (``body_op``): outside Catalyst lambda scopes the
   body renders through ``SqlB`` into ONE session SQL function
   ``f(o0 VARIANT, …) RETURNS VARIANT`` (``sqlfn.py``) — the call site
   costs O(1) py4j round trips, the analyzer binds each argument once,
@@ -27,8 +29,8 @@ Three layers, each defined once:
   step-bearing arguments and heavy concats render the same body
   through ``ColB`` into an inline Column tree.
 
-The SQL bodies are **lambda-free** (except ``round``): they sequence
-the protocol textually — per operand, in order, a missing
+The string SQL bodies are **lambda-free** (except ``round``): they
+sequence the protocol textually — per operand, in order, a missing
 short-circuit, the variant-null error, then a zero-length CHECK PROBE
 of the operand's conversion (``substring(<as_nullable(conv)>, 1, 0)``
 — raises the conversion's embedded errors without contributing bytes;
@@ -53,12 +55,25 @@ NULL instead of raising.
 the power/scale math (round sites stay CodegenFallback in the variant
 engine; the typed engine's inline lets keep them lambda-free).
 
-The SQL path engages only when NO argument carries pipe steps (except
-``round``, whose numeric-first protocol reuses the arith ``decided``
-guard) — a step-bearing argument's embedded raises need the Column
-path's absent-guard machinery.  Parity of the two renderings and the
-interpreter is pinned case by case in tests/test_string_sqlfn.py and
-by the three-way fuzzers.
+The arithmetic body (``_body_arith``) keeps EAGER ``b.let`` bindings
+instead of check probes: per operand, in order, missing
+short-circuits the op, variant-null errors, then the operand's number
+conversion binds once through a let (the transform's array argument
+evaluates before the body), so a conversion error for operand i fires
+before operand i+1's missing check, as in the reference loop.  Its
+conversions are inline SQL text, not helper calls, and a probe plus
+the fold would reference each of them twice: the textually duplicated
+conversions of an n-operand fold hit the 70 kB ANTLR limit.
+
+The SQL path engages only in flat rules and when NO argument carries
+pipe steps — a step-bearing argument's embedded raises need the Column
+path's absent-guard machinery.  The numeric-first ops are the
+exceptions: ``round`` and the arithmetic ops guard each step-bearing
+later argument on ``ops_scalar.arith_decided`` of every earlier
+operand instead, and arithmetic also takes the SQL path in composed
+rules.  Parity of the two renderings and the interpreter is pinned
+case by case in tests/test_string_sqlfn.py and by the three-way
+fuzzers.
 """
 
 from __future__ import annotations
@@ -68,8 +83,6 @@ from pyspark.sql import functions as F
 from . import variant as V
 from .backend import ColB, SqlB
 from .core import arg_path, cur_version, lenient_on, register
-from .ops_arith_sql import (_sql_is_number, _sql_num_to_variant,
-                            _sql_to_number_strict)
 from .ops_scalar import (_as_i64, _as_string, _chk, _operands,
                          _operands_bound, arith_decided, seq_strict)
 
@@ -220,6 +233,23 @@ def round_half_away(b, number, scale, finish=lambda x: x):
                              lambda scaled: with_scaled(factor, scaled))))
 
 
+def arith_fold(b, op, nums, divide=None):
+    """The f64 left fold of ``+ - * /`` over converted operands
+    (``transform.rs:2375-2435``, ``v2_eval.rs:1848-1928``);
+    ``divide(i, acc, n)`` replaces the plain division step."""
+    acc = nums[0]
+    for i, n in enumerate(nums[1:], start=1):
+        acc = (divide(i, acc, n) if op == "/" and divide is not None
+               else b.op(op, acc, n))
+    return acc
+
+
+def non_finite(b, x):
+    """NaN or ±inf: serde's ``Number::from_f64`` has no such value."""
+    return b.or_(b.fn("isnan", x),
+                 b.eq(b.fn("abs", x), b.lit(float("inf"))))
+
+
 # --- serde / Rust render chains (helper-body internals) -----------------
 
 
@@ -229,6 +259,13 @@ def _typeof(b, v):
 
 def _is_string(b, v):
     return b.eq(_typeof(b, v), b.lit("STRING"))
+
+
+def _sql_is_number(b, v):
+    """``variant.is_number``."""
+    t = _typeof(b, v)
+    return b.or_(b.isin(t, "BIGINT", "DOUBLE"),
+                 b.fn("startswith", t, b.lit("DECIMAL")))
 
 
 def _sql_serde_int_kind(b, v):
@@ -484,6 +521,62 @@ def _ensure_helpers():
 _UNREACHABLE = "CAST(raise_error('unreachable probe') AS VARIANT)"
 
 
+def _sql_rust_f64_parse(b, s):
+    """``variant.rust_f64_parse``."""
+    low = b.fn("lower", s)
+    special = b.case(
+        [(b.isin(low, "inf", "infinity", "+inf", "+infinity"),
+          b.lit(float("inf"))),
+         (b.isin(low, "-inf", "-infinity"), b.lit(float("-inf"))),
+         (b.isin(low, "nan", "+nan", "-nan"), b.lit(float("nan")))],
+        b.null("double"))
+    return b.case([(b.rlike(s, V.RUST_F64_NUM_RE), b.try_cast(s, "double"))],
+                  special)
+
+
+def _sql_to_number_strict(b, v, path, msg):
+    """``variant.to_number_strict`` (v1 ``value_to_number``)."""
+    err = b.err("expr_error", msg, path, "double")
+    parsed = _sql_rust_f64_parse(b, b.try_cast(v, "string"))
+    finite = b.and_(
+        b.isnotnull(parsed),
+        b.and_(b.not_(b.fn("isnan", parsed)),
+               b.ne(b.fn("abs", parsed), b.lit(float("inf")))))
+    return b.case(
+        [(b.isnull(v), b.null("double")),
+         (_sql_is_number(b, v), b.try_cast(v, "double")),
+         (_is_string(b, v), b.case([(finite, parsed)], err))],
+        err)
+
+
+def _sql_as_number_v2(b, v, path, prefix="expected number, got "):
+    """``variant.as_number_v2`` (``eval_value_as_number``); the error
+    arm embeds the value's Debug rendering (``variant.raise_err_got``)."""
+    from ..errors import encode_engine_error_msg_parts
+    parsed = _sql_rust_f64_parse(b, b.try_cast(v, "string"))
+    arms = [(b.isnull(v), b.null("double")),
+            (_sql_is_number(b, v), b.try_cast(v, "double")),
+            (_is_string(b, v),
+             b.case([(b.isnotnull(parsed), parsed)],
+                    b.err("expr_error", "failed to parse string as number",
+                          path, "double")))]
+    if b.lenient:
+        return b.case(arms, b.null("double"))
+    pre, suf = encode_engine_error_msg_parts("expr_error", prefix, path)
+    return b.case(arms, b.err_raw([b.slot(pre), _dbg(b, v), b.slot(suf)],
+                                  "double"))
+
+
+def _sql_num_to_variant(b, d):
+    """``variant.num_to_variant`` (v1 integral re-emission)."""
+    return b.case(
+        [(b.isnull(d), b.null("variant")),
+         (b.and_(b.eq(d, b.fn("floor", d)),
+                 b.le(b.fn("abs", d), b.lit(float(_I64_MAX) / 2))),
+          b.cast(b.cast(d, "long"), "variant"))],
+        b.cast(d, "variant"))
+
+
 class _SqlOperands:
     """Conversions as calls of the shared helper session functions
     (error payloads as call-site slots) and the textual protocol."""
@@ -535,6 +628,9 @@ class _SqlOperands:
     def to_number(self, v, path, msg):
         return _sql_to_number_strict(self.b, v, path, msg)
 
+    def as_number_v2(self, v, path):
+        return _sql_as_number_v2(self.b, v, path)
+
     def num_to_variant(self, d):
         return _sql_num_to_variant(self.b, d)
 
@@ -582,6 +678,7 @@ class _ColOperands:
     as_string_v2 = staticmethod(V.as_string_v2)
     as_i64 = staticmethod(_as_i64)
     to_number = staticmethod(V.to_number_strict)
+    as_number_v2 = staticmethod(V.as_number_v2)
     num_to_variant = staticmethod(V.num_to_variant)
 
     @staticmethod
@@ -712,42 +809,99 @@ def _body_round(op, b, cv, o, path, version, safe):
                      [number] + ([scale] if len(o) == 2 else []))
 
 
+def _body_arith(op, b, cv, o, path, version, safe):
+    """f64 fold over operands; numeric strings accepted (v1: finite
+    only); v1 re-emits integral results as ints and errors on a
+    non-finite one, v2 emits JSON null for it (serde's
+    ``Number::from_f64``).  The protocol is layered, not probed: per
+    operand in order, missing short-circuits the op, null errors, then
+    the conversion binds through an EAGER let — so a conversion error
+    for operand i fires before operand i+1's missing check, like the
+    reference loop (``v2_eval.rs:1848-1928``; ``op_concat``,
+    ``transform.rs:1403-1432``).  Each conversion appears ONCE."""
+    null_msg = ("expected number, got Null" if version >= 2
+                else "expr arg must not be null")
+
+    def conv(i):
+        p = arg_path(path, i)
+        if version < 2:
+            return cv.to_number(o[i], p, "operand must be a number")
+        c = cv.as_number_v2(o[i], p)
+        if op == "/" and i >= 1:
+            # per-divisor zero check at the divisor's arg path, when
+            # that arg is reached (v2_eval.rs:1919-1925)
+            c = b.let(c, lambda v: b.case(
+                [(b.eq(v, b.lit(0.0)),
+                  b.err("expr_error", "division by zero", p, "double"))],
+                v))
+        return c
+
+    def result(nums):
+        acc = arith_fold(b, op, nums)
+        if version >= 2:
+            return b.case([(non_finite(b, acc),
+                            b.fn("parse_json", b.lit("null")))],
+                          b.cast(acc, "variant"))
+        if op == "/":
+            # IEEE: x/0 → ±inf in Rust; Spark double /0 → NULL
+            acc = b.case(
+                [(b.eq(nums[1], b.lit(0.0)),
+                  b.op("*", b.lit(float("inf")), b.fn("signum", nums[0])))],
+                acc)
+        return b.case(
+            [(b.not_(non_finite(b, acc)), cv.num_to_variant(acc))],
+            b.err("expr_error", "number result is not finite", path,
+                  "variant"))
+
+    def layer(i, nums):
+        if i == len(o):
+            return result(nums)
+        return b.case(
+            [(b.isnull(o[i]), b.null("variant")),
+             (b.fn("coalesce", b.fn("is_variant_null", o[i]), b.lit(False)),
+              b.err("expr_error", null_msg, arg_path(path, i), "variant"))],
+            b.let(conv(i), lambda v: layer(i + 1, nums + [v])))
+
+    return b.cast(layer(0, []), "variant")
+
+
+_ARITH = ("+", "-", "*", "/")
+
 _BODIES = {
     "trim": _body_unary_string, "lowercase": _body_unary_string,
     "uppercase": _body_unary_string, "to_string": _body_to_string,
     "concat": _body_concat, "split": _body_split,
     "pad_start": _body_pad, "pad_end": _body_pad,
     "replace": _body_replace, "to_base": _body_to_base,
-    "round": _body_round,
+    "round": _body_round, **{op: _body_arith for op in _ARITH},
 }
-
-# ops whose numeric first operand lets the arith ``decided`` guard
-# cover step-bearing later args (round's scale arg; the reference
-# converts operand 0 before evaluating arg 1 — eval_round,
-# transform.rs:2437-2476)
-_NUMERIC_GUARDED = {"round"}
 
 _COLB = ColB()
 
 
 def _sqlfn(op, scope, cur, args, path, version, safe):
     """The session-function rendering; None → the inline Column path
-    (lambda scope, composed rule, SQL UDFs unavailable, a heavy
-    concat, or a step-bearing argument needing the Column path's
-    absent-guard machinery)."""
+    (lambda scope, SQL UDFs unavailable, a heavy concat; and, for the
+    ops other than arithmetic, a composed rule or — except round — a
+    step-bearing argument needing the Column path's absent-guard
+    machinery)."""
     from . import sqlfn
     from .core import in_flat_rule
-    if not in_flat_rule():
+    arith = op in _ARITH
+    if not arith and not in_flat_rule():
         # composed rules (steps / record_when / mapping gates): the
         # optimizer multiplies inlined bodies through the @out-chaining
         # projections (see core.flat_rule) — keep the Column path there
         return None
+    # the numeric-first ops (arithmetic, round: the reference converts
+    # operand 0 before evaluating arg 1) guard step-bearing later args
     has_steps = any(a.steps for a in args)
     if V.lambda_depth() > 0 or V.dyn_marker_depth() > 0 \
             or not sqlfn.available() \
-            or (has_steps and op not in _NUMERIC_GUARDED):
+            or (has_steps and not arith and op != "round"):
         return None
-    H = _ensure_helpers()
+    # the arithmetic body's conversions are inline: it calls no helper
+    H = {} if arith else _ensure_helpers()
     if H is None:
         return None
     if op == "concat":
@@ -770,25 +924,28 @@ def _sqlfn(op, scope, cur, args, path, version, safe):
     params = ", ".join(f"o{i} VARIANT" for i in range(n))
     if b.slots:
         params += ", " + b.slot_params()
-    name = sqlfn.ensure_fn(params, "VARIANT", body, "st")
+    name = sqlfn.ensure_fn(params, "VARIANT", body, "ar" if arith else "st")
     if name is None:
         return None
     guarded = list(cols)
     if has_steps:
-        # numeric-first ops: a step-bearing later arg's embedded raises
-        # must not evaluate on rows operand 0 already decides
-        # (missing / null / conversion error) — same machinery as
-        # ops_arith_sql.arith_sqlfn; round is v1-delegated so the v1
-        # finite rule applies
+        # a step-bearing later arg's embedded raises must not evaluate
+        # on rows an earlier operand already decides (missing / null /
+        # conversion error, whose error fires first in the reference's
+        # per-operand order); round is v1-delegated, so the v1 finite
+        # rule applies
+        decided_version = version if arith else 1
         for h in (i for i, a in enumerate(args, start=1) if a.steps):
-            pre = arith_decided(cols[0], 1)
+            pre = arith_decided(cols[0], decided_version)
             for j in range(1, h):
-                pre = pre | arith_decided(cols[j], 1)
+                pre = pre | arith_decided(cols[j], decided_version)
             guarded[h] = F.when(~pre, cols[h])
     return sqlfn.call(name, *guarded, *b.slot_args())
 
 
-def string_op(op, scope, cur, args, path, safe=None):
+def body_op(op, scope, cur, args, path, safe=None):
+    """Compile ``op`` from its ``_BODIES`` body: the session function
+    when ``_sqlfn`` takes it, else the inline Column tree."""
     version = cur_version()
     safe = safe or [False] * (1 + len(args))
     fast = _sqlfn(op, scope, cur, args, path, version, safe)
@@ -796,21 +953,28 @@ def string_op(op, scope, cur, args, path, safe=None):
         return fast
     # these ops skip compile_step's pipe binding (core.UDF_OPS), so the
     # Column path binds the raw pipe itself — every conversion and
-    # protocol piece references it several times
+    # protocol piece references it several times.  A step-bearing arg
+    # binds behind the op's own short-circuit: the arithmetic ops stop
+    # at any operand that decides them (``arith_decided``)
     body = _BODIES[op]
+    short = ((lambda c: arith_decided(c, version)) if op in _ARITH
+             else V.is_absent)
     return V.let(cur, lambda x: _operands_bound(
         scope, x, args, path,
         lambda *ops: body(op, _COLB, _ColOperands, ops, path, version,
-                          safe)))
+                          safe),
+        short=short))
 
 
 def _register(op):
     register(op)(lambda scope, cur, args, path:
-                 string_op(op, scope, cur, args, path))
+                 body_op(op, scope, cur, args, path))
 
 
+# concat marks its literal parts; the arithmetic ops check their v1
+# arity first (ops_scalar._numeric_fold)
 for _op in _BODIES:
-    if _op != "concat":
+    if _op != "concat" and _op not in _ARITH:
         _register(_op)
 
 
@@ -825,4 +989,4 @@ def op_concat(scope, cur, args, path):
         bool(not a.steps and isinstance(a.start, StartLiteral)
              and isinstance(a.start.value, (str, int, float, bool)))
         for a in args]
-    return string_op("concat", scope, cur, args, path, safe)
+    return body_op("concat", scope, cur, args, path, safe)

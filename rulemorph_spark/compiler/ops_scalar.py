@@ -239,102 +239,14 @@ def arith_decided(o: Column, version: int) -> Column:
 
 
 def _numeric_fold(scope, cur, args, path, op, exact_two=False):
-    """f64 fold over operands; numeric strings accepted; integral results
-    re-emitted as ints; non-finite results error (``transform.rs:2375-2435``).
-
-    Operands are let-bound ONCE (``V.let_many``) before the fold: every
-    piece below — ``to_number_strict``'s type dispatch, the finite
-    guard, int re-emission, and ``seq_strict``'s null protocol — refers
-    to an operand several times, and with v1 NESTED ``{op, args}``
-    arguments each reference used to inline the full sub-expression, so
-    a 3-deep arithmetic tree exploded multiplicatively (the t13 `mul`
-    shape executed 5000 rows in ~3 s; ~50× faster bound — round 5)."""
+    """``+ - * /``: v1 ``-`` and ``/`` take exactly two operands; the
+    op body is ``ops_bodies._body_arith``."""
     if exact_two and cur_version() < 2 and len(args) != 1:
         from ..errors import RuleError
         raise RuleError("invalid_args",
                         f"{op} requires exactly two operands", path)
-    version = cur_version()
-
-    # SQL-function fast path (round 8): outside lambda scopes the whole
-    # op registers once as f(o0 VARIANT, …) RETURNS VARIANT — operands
-    # bind via the analyzer's Project, the body inlines at execution
-    from .ops_arith_sql import arith_sqlfn
-    fast = arith_sqlfn(scope, cur, args, path, op, version)
-    if fast is not None:
-        return fast
-
-    def build(*bound) -> Column:
-        if version >= 2:
-            # v2: eval_value_as_number — null/bool/containers →
-            # "expected number, got {:?}", unparseable strings →
-            # "failed to parse string as number" (v2_eval.rs:1278-1304)
-            nums = [V.as_number_v2(o, arg_path(path, i))
-                    for i, o in enumerate(bound)]
-        else:
-            nums = [V.to_number_strict(o, arg_path(path, i),
-                                       "operand must be a number")
-                    for i, o in enumerate(bound)]
-        # per-arg conversion runs inside the reference loop, so a
-        # non-numeric operand errors before a LATER operand's missing
-        checks: list = [_chk(n) for n in nums]
-        acc = nums[0]
-        for i, n in enumerate(nums[1:], start=1):
-            if op == "+":
-                acc = acc + n
-            elif op == "-":
-                acc = acc - n
-            elif op == "*":
-                acc = acc * n
-            else:
-                if version >= 2:
-                    # v2: each divisor's zero check happens when that
-                    # arg is reached (v2_eval.rs:1919-1925):
-                    # divide(x, 0, missing) raises, divide(x, missing,
-                    # 0) is missing; the error carries the DIVISOR's
-                    # arg path (v2_eval.rs:1921)
-                    zerr = rerr("expr_error", "division by zero",
-                                arg_path(path, i))
-                    checks[i] = F.when(n == 0.0, zerr.cast("string")
-                                       ).otherwise(checks[i])
-                acc = acc / n  # Spark double /0 → NULL? guarded below
-        if version >= 2:
-            # v2-native arithmetic: f64 result with NO int re-emission
-            # (v2_eval.rs:1848-1928) — but the reference wraps it with
-            # serde_json::json!(f64), and Number::from_f64 of a
-            # NON-FINITE value is None, so overflow/inf results emit
-            # JSON NULL (round-8 random-bit-pattern double fuzz; the
-            # engines used to return inf).  null wording from
-            # eval_value_as_number's catch-all.
-            result = V.let(acc, lambda a: F.when(
-                F.isnan(a) | (F.abs(a) == F.lit(float("inf"))),
-                V.vnull()).otherwise(a.cast(V.VT)))
-            return seq_strict(list(bound), path, result,
-                              null_msg="expected number, got Null",
-                              checks=checks)
-        if op == "/":
-            # IEEE: x/0 → ±inf in Rust; Spark double /0 → NULL.
-            acc = F.when(nums[1] == 0.0,
-                         F.lit(float("inf")) * F.signum(nums[0])
-                         ).otherwise(acc)
-        # bind the accumulated fold ONCE: the finite guard + integral
-        # re-emission reference it 4× and inlining re-multiplied every
-        # operand's conversion tree (round 8 plan-size audit: t13's
-        # nested `mul` mapping alone was 430 KB of analyzed plan)
-        result = V.let(acc, lambda a: F.when(
-            ~(F.isnan(a) | (F.abs(a) == F.lit(float("inf")))),
-            V.num_to_variant(a)).otherwise(
-            rerr("expr_error", "number result is not finite",
-                 path).cast(V.VT)))
-        return seq_strict(list(bound), path, result, checks=checks)
-
-    # arith ops are UDF_OPS (they manage the pipe binding themselves):
-    # the inline path re-binds the raw pipe value compile_step no
-    # longer wraps.  The absent-guard uses the FULL decided predicate
-    # (missing | null | conversion-error), matching the reference's
-    # per-operand eval order for erroring earlier operands too
-    return V.let(cur, lambda x: _operands_bound(
-        scope, x, args, path, build,
-        short=lambda c: arith_decided(c, version)))
+    from .ops_bodies import body_op
+    return body_op(op, scope, cur, args, path)
 
 
 # --- logical ops ---------------------------------------------------------

@@ -39,7 +39,7 @@ from .core import (Scope, compile_condition, compile_pipe, lenient_errors,
 
 # ensure op modules register themselves
 from . import ops_scalar  # noqa: F401
-from . import ops_string  # noqa: F401
+from . import ops_bodies  # noqa: F401
 from . import ops_array  # noqa: F401
 from . import ops_object  # noqa: F401
 from . import ops_lookup  # noqa: F401

@@ -71,7 +71,7 @@ from ..expr_ir import (CondAll, CondAny, CondCompare, CondExpr, Condition,
                        StartLiteral, StartPipeValue, StartRef)
 from ..paths import Index, Key, parse_path
 from ..registry import OP_ALIASES, OP_ARITY, eval_arity_anomaly
-from . import ops_string as S
+from . import ops_bodies as S
 from . import variant as V
 from .backend import InlineColB
 from .core import (OpPath, V2_NATIVE_STEP_OPS, arg_path, lenient_errors,
@@ -289,7 +289,7 @@ def _terr(dtype, kind: str, message: str, path: str,
 
 
 class _TypedB(InlineColB):
-    """The backend the string kernels (``ops_string``) render through:
+    """The backend the kernels (``ops_bodies``) render through:
     lambda-free lets keep typed projections inside whole-stage codegen,
     and error sites are :func:`_terr`."""
 
@@ -1709,21 +1709,17 @@ def _t_arith(scope, cur, args, path, op):
     checks: list[Column | None] = [
         None if _is_num(o.dtype) or _is_null(o.dtype) else _chk(n)
         for o, n in zip(ops, nums)]
-    acc = nums[0]
-    for i, n in enumerate(nums[1:], start=1):
-        if op == "+":
-            acc = acc + n
-        elif op == "-":
-            acc = acc - n
-        elif op == "*":
-            acc = acc * n
-        else:
-            zerr = _terr_forced(ops[:i + 1], "double", "expr_error",
-                                "division by zero", arg_path(path, i))
-            base = checks[i] if checks[i] is not None else F.lit("")
-            checks[i] = F.when(n == 0.0, zerr.cast("string")
-                               ).otherwise(base)
-            acc = F.when(n == 0.0, zerr).otherwise(acc / n)
+
+    def divide(i, acc, n):
+        # the zero check is forced: it fires after the operands' own
+        # errors (see _terr_forced), at the divisor's arg path
+        zerr = _terr_forced(ops[:i + 1], "double", "expr_error",
+                            "division by zero", arg_path(path, i))
+        base = checks[i] if checks[i] is not None else F.lit("")
+        checks[i] = F.when(n == 0.0, zerr.cast("string")).otherwise(base)
+        return F.when(n == 0.0, zerr).otherwise(acc / n)
+
+    acc = S.arith_fold(_TB, op, nums, divide)
     # serde_json::json!(f64): Number::from_f64 of a NON-FINITE result
     # is None → the reference emits JSON NULL (a runtime NULL in a
     # non-missing TVal IS JSON null) — round-8 double fuzz.  Plain
@@ -1731,8 +1727,7 @@ def _t_arith(scope, cur, args, path, op):
     # let here is a CodegenFallback lambda that kicked the ENTIRE
     # typed projection out of whole-stage codegen (typed anchor exec
     # 0.30 s → 1.05 s before this was caught)
-    acc = F.when(F.isnan(acc) | (F.abs(acc) == F.lit(float("inf"))),
-                 F.lit(None).cast("double")).otherwise(acc)
+    acc = _TB.case([(S.non_finite(_TB, acc), _TB.null("double"))], acc)
     return _seq(ops, path, acc, T.DoubleType(),
                 null_msg="expected number, got Null", checks=checks)
 

@@ -1,7 +1,7 @@
 """Typed-column scalar ops with the reference's edge semantics.
 
 The string/number ops are the rule engines' own kernels
-(``compiler/ops_string.py``) applied to plain typed columns — no
+(``compiler/ops_bodies.py``) applied to plain typed columns — no
 variant wrapping, fully codegen-able.
 """
 
@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..compiler import ops_string as K
+from ..compiler import ops_bodies as K
 from ..compiler.backend import InlineColB
 
 # the compiler's kernels, rendered as lambda-free Column trees

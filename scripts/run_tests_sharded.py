@@ -28,6 +28,7 @@ import time
 WEIGHTS = {
     "test_pipe_fuzz_complex.py": 700,
     "test_pipe_fuzz_threeway.py": 600,
+    "test_string_sqlfn.py": 345,
     "test_golden_reference.py": 320,
     "test_pipe_fuzz.py": 260,
     "test_oracle_parity.py": 250,
@@ -35,13 +36,12 @@ WEIGHTS = {
     "test_retrieval.py": 160,
     "test_cli_and_streaming.py": 150,
     "test_compile_scale.py": 150,
-    "test_sqlfn.py": 110,
-    "test_string_sqlfn.py": 100,
     "test_plan_quality.py": 100,
     "test_trace_graph.py": 80,
     "test_interp_golden.py": 70,
     "test_end_to_end_corpus.py": 70,
     "test_diag.py": 60,
+    "test_sqlfn.py": 60,
     "test_property_ops.py": 60,
     "test_reference_inline_suites.py": 50,
     "test_compiled_rule.py": 60,

@@ -550,6 +550,43 @@ def test_cli_transform_writes_output_file(tmp_path):
     assert json.loads(out_path.read_text()) == expected
 
 
+KEY_ORDER_RULE = """
+version: 2
+input: {format: json}
+mappings:
+  - target: z
+    source: id
+  - target: b.y
+    value: 1
+  - target: b.a
+    expr: ["@input.name", {uppercase: []}]
+  - target: a
+    source: name
+"""
+
+
+@pytest.mark.smoke
+@pytest.mark.parametrize("ndjson", [False, True], ids=["array", "ndjson"])
+def test_cli_transform_writes_keys_sorted(spark, tmp_path, capsys, ndjson):
+    """The reference builds serde_json without ``preserve_order``, so its
+    CLI writes object keys sorted, whatever the target order: the output
+    text equals the interpreter's, byte for byte, in both writers."""
+    from rulemorph_spark import cli, interp
+    records = [{"id": 1, "name": "x"}, {"id": 2, "name": "y"}]
+    args = ["transform",
+            "-r", _write(tmp_path, "rules.yaml", KEY_ORDER_RULE),
+            "-i", _write(tmp_path, "input.json", json.dumps(records))]
+    assert cli.main(args + (["--ndjson"] if ndjson else [])) == 0
+    expected = interp.transform(KEY_ORDER_RULE,
+                                input_text=json.dumps(records))
+    if ndjson:
+        text = "".join(json.dumps(r, separators=(",", ":")) + "\n"
+                       for r in expected)
+    else:
+        text = json.dumps(expected, separators=(",", ":")) + "\n"
+    assert capsys.readouterr().out == text
+
+
 def test_cli_transform_validate_flag_exit_2(tmp_path):
     """``transform_validate_flag_reports_validation_error``
     (cli.rs:201-219): -v validates first and exits 2."""

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import importlib.util
 import itertools
+import json
 import os
 import random
 import sys
@@ -21,6 +22,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
+import kind_exact as K
 from rulemorph_spark import interp
 from rulemorph_spark.errors import TransformEngineError
 from rulemorph_spark.model import parse_rule_file
@@ -70,18 +72,24 @@ def _bodies(seed: int, n: int) -> list[dict]:
     return [gen._f5_record(r) for _ in range(n)]
 
 
+def _kx(call) -> tuple:
+    """The kind-exact outcome of ``call()`` (``kind_exact.outcome``):
+    ``("ok", JSON text)``, so ``3`` and ``3.0`` differ, or ``("err",
+    kind, message, path)``.  Keys are sorted: ``interp`` writes them
+    sorted, the engine in target order."""
+    return K.outcome(call, sort_keys=True)
+
+
 def _on_request_thread(spark, fn):
     """Run ``fn`` on a fresh thread under its own job group →
-    (("ok", value) | ("err", kind, message, path), Spark jobs run)."""
+    (its ``_kx`` outcome, Spark jobs run)."""
     group = f"rm-record-{next(_groups)}"
     out: dict = {}
 
     def body():
         spark.sparkContext.setJobGroup(group, group)
         try:
-            out["res"] = ("ok", fn())
-        except TransformEngineError as e:
-            out["res"] = ("err", e.kind, e.message, e.path)
+            out["res"] = _kx(fn)
         except BaseException as e:  # noqa: BLE001 — re-raised below
             out["exc"] = e
 
@@ -96,11 +104,15 @@ def _on_request_thread(spark, fn):
 
 
 def _oracle(rule, record, context=None):
-    try:
+    def call():
         v = interp.transform_record(rule, record, context=context)
-    except interp.InterpError as e:
-        return ("err", e.kind, e.message, e.path)
-    return ("ok", None if v is interp.MISSING else v)
+        return None if v is interp.MISSING else v
+    return _kx(call)
+
+
+def _ok(value) -> tuple:
+    """The ``_kx`` outcome of a call that returns ``value``."""
+    return _kx(lambda: value)
 
 
 def _entry(spark, rule: str):
@@ -112,7 +124,7 @@ def test_job_counter_sees_a_job(spark):
     """Control: the job-group count used below does see jobs that run
     on the request thread."""
     res, jobs = _on_request_thread(spark, lambda: spark.range(3).count())
-    assert res == ("ok", 3)
+    assert res == ("ok", "3")
     assert jobs >= 1
 
 
@@ -129,7 +141,7 @@ def test_input_expression_rule_runs_no_job(spark):
     res, jobs = _on_request_thread(
         spark, lambda: transform_record(spark, INPUT_RULE, body))
     assert jobs == 0
-    assert res == ("ok", {"v": body}) == _oracle(INPUT_RULE, body)
+    assert res == _ok({"v": body}) == _oracle(INPUT_RULE, body)
 
 
 def _f5(**changes) -> dict:
@@ -175,13 +187,13 @@ def test_missing_csv_drops_parts(spark):
     record = _f5(csv=...)
     res, jobs = _on_request_thread(
         spark, lambda: transform_record(spark, F5_RULE, record))
-    assert res[0] == "ok" and "parts" not in res[1]
+    assert res[0] == "ok" and "parts" not in json.loads(res[1])
     assert jobs == 0
     assert res == _oracle(F5_RULE, record)
 
 
 @pytest.mark.parametrize("record,expected", [
-    ({"keep": True, "n": 1}, {"n": 2}),
+    ({"keep": True, "n": 1}, {"n": 2.0}),
     ({"keep": False, "n": 1}, None),
     # filtered out: the failing mapping never surfaces
     ({"keep": False, "n": "x"}, None),
@@ -189,7 +201,7 @@ def test_missing_csv_drops_parts(spark):
 def test_record_when(spark, record, expected):
     res, jobs = _on_request_thread(
         spark, lambda: transform_record(spark, WHEN_RULE, record))
-    assert res == ("ok", expected) == _oracle(WHEN_RULE, record)
+    assert res == _ok(expected) == _oracle(WHEN_RULE, record)
     assert jobs == 0
 
 
@@ -211,7 +223,7 @@ def test_finalize_sort_limit_and_wrap_run_no_job(spark):
     body = _bodies(seed=10, n=1)[0]
     res, jobs = _on_request_thread(
         spark, lambda: transform_record(spark, FINALIZE_RULE, body))
-    assert res == ("ok", {"items": [{"a": body["text"]}]})
+    assert res == _ok({"items": [{"a": body["text"]}]})
     assert res == _oracle(FINALIZE_RULE, body)
     assert jobs == 0
 
@@ -249,18 +261,47 @@ def test_cached_rule_compiles_once_and_runs_no_job(spark, compiles):
         assert res == _oracle(F5_RULE, body)
 
 
+def _thread_cases() -> list[tuple[str, dict]]:
+    bodies = _bodies(seed=12, n=16)
+    return ([(F5_RULE, b) for b in bodies]
+            + [(INPUT_RULE, {"body": b, "i": i})
+               for i, b in enumerate(bodies)])
+
+
+def _integral_float(value) -> bool:
+    if isinstance(value, dict):
+        return any(_integral_float(v) for v in value.values())
+    return isinstance(value, float) and value.is_integer()
+
+
+# Spark's parse_json reads 10.0 as DECIMAL(2,0) 10, which the engine
+# writes as the int 10 (serde keeps the f64: 10.0)
+_INTEGRAL_FLOAT = pytest.mark.xfail(
+    strict=True, reason="parse_json('10.0') is DECIMAL(2,0) 10, written "
+    "back as 10: an echoed integral float loses its float kind")
+
+
+@pytest.mark.parametrize("rule,record", [
+    pytest.param(rule, rec, id=f"{'f5' if rule is F5_RULE else 'input'}-{i}",
+                 marks=([_INTEGRAL_FLOAT] if rule is INPUT_RULE
+                        and _integral_float(rec) else []))
+    for i, (rule, rec) in enumerate(_thread_cases())])
+def test_reply_matches_interp(spark, rule, record):
+    assert _kx(lambda: transform_record(spark, rule, record)) == \
+        _oracle(rule, record)
+
+
 def test_cached_rules_answer_each_request_thread(spark, monkeypatch):
     """Eight request threads (more than the cores) share one cached plan
-    per rule and its pool: each reply belongs to its own record, and no
-    plan ever has more live evaluators than its bound."""
+    per rule and its pool: each reply is its own record's, kind-exactly
+    as one thread answers it (``test_reply_matches_interp`` holds those
+    answers against ``interp``), and no plan ever has more live
+    evaluators than its bound."""
     record_mod._plans.pop(spark, None)
     record_mod._pools.pop(spark, None)
-    bodies = _bodies(seed=12, n=16)
-    cases = ([(F5_RULE, b) for b in bodies]
-             + [(INPUT_RULE, {"body": b, "i": i})
-                for i, b in enumerate(bodies)])
-    transform_record(spark, F5_RULE, bodies[0])
-    transform_record(spark, INPUT_RULE, {"body": bodies[0]})
+    cases = _thread_cases()
+    expected = [_kx(lambda r=rule, c=rec: transform_record(spark, r, c))
+                for rule, rec in cases]
     plans = [_entry(spark, F5_RULE), _entry(spark, INPUT_RULE)]
     evaluators = record_mod._pools[spark]
     seen = []
@@ -274,10 +315,7 @@ def test_cached_rules_answer_each_request_thread(spark, monkeypatch):
 
     def run(case):
         rule, rec = case
-        try:
-            return ("ok", transform_record(spark, rule, rec))
-        except TransformEngineError as e:
-            return ("err", e.kind, e.message, e.path)
+        return _kx(lambda: transform_record(spark, rule, rec))
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
@@ -286,8 +324,7 @@ def test_cached_rules_answer_each_request_thread(spark, monkeypatch):
             got = list(pool.map(run, cases, timeout=600))
     finally:
         sys.setswitchinterval(interval)
-    for (rule, rec), res in zip(cases, got):
-        assert res == _oracle(rule, rec)
+    assert got == expected
     assert len(seen) == len(cases)
     for plan in plans:
         assert plan.bound == spark.sparkContext.defaultParallelism
@@ -304,8 +341,8 @@ def test_error_leaves_the_cached_plan_intact(spark):
             transform_record(spark, F5_RULE, bad)
         assert (ei.value.kind, ei.value.message, ei.value.path) == \
             expected, name
-        assert ("ok", transform_record(spark, F5_RULE, body)) == \
-            _oracle(F5_RULE, body), name
+        assert _kx(lambda b=body: transform_record(spark, F5_RULE, b)) \
+            == _oracle(F5_RULE, body), name
 
 
 CONTEXT_RULE = """
@@ -348,7 +385,8 @@ def test_context_is_bound_per_call(spark, compiles, rule):
     before = compiles["n"]
     for n, ctx in enumerate(contexts * 2):
         rec = {"n": n, "xs": [{"a": n}, {"a": -n}]}
-        assert ("ok", transform_record(spark, rule, rec, context=ctx)) \
+        assert _kx(lambda: transform_record(spark, rule, rec,
+                                            context=ctx)) \
             == _oracle(rule, rec, ctx), (n, ctx)
     assert compiles["n"] == before
 
@@ -359,7 +397,7 @@ def test_cache_keeps_the_64_most_recent_rules(spark):
              f"  - target: v\n    value: {i}\n"
              for i in range(record_mod._CACHE_SIZE + 1)]
     for i, rule in enumerate(rules):
-        assert transform_record(spark, rule, {}) == {"v": i}
+        assert _ok(transform_record(spark, rule, {})) == _ok({"v": i})
     plans = record_mod._plans[spark]
     assert record_mod._CACHE_SIZE == 64
     assert len(plans) == 64
@@ -395,7 +433,7 @@ def test_bridge_op_rule_is_cached_and_answers_per_record(spark, compiles,
     for i, rec in enumerate(records):
         before = compiles["n"]
         res = transform_record(spark, BRIDGE_RULE, rec)
-        assert ("ok", res) == _oracle(BRIDGE_RULE, rec)
+        assert _ok(res) == _oracle(BRIDGE_RULE, rec)
         if i:
             assert compiles["n"] == before
     entry = _entry(spark, BRIDGE_RULE)
@@ -477,7 +515,7 @@ def test_record_when_false_returns_none_through_the_filter(spark,
     res, _ = _on_request_thread(
         spark, lambda: transform_record(spark, WHEN_RULE,
                                         {"keep": False, "n": 1}))
-    assert res == ("ok", None) == _oracle(WHEN_RULE, {"keep": False, "n": 1})
+    assert res == _ok(None) == _oracle(WHEN_RULE, {"keep": False, "n": 1})
 
 
 FALSE_WHEN_RULE = """
@@ -501,7 +539,7 @@ def test_false_when_skips_a_mapping_that_would_raise(spark, no_dataset):
         res, _ = _on_request_thread(
             spark, lambda r=rec: transform_record(spark, FALSE_WHEN_RULE, r))
         assert res == _oracle(FALSE_WHEN_RULE, rec), rec
-    assert _oracle(FALSE_WHEN_RULE, records[0]) == ("ok", {"b": "x"})
+    assert _oracle(FALSE_WHEN_RULE, records[0]) == _ok({"b": "x"})
     assert _oracle(FALSE_WHEN_RULE, records[2])[0] == "err"
 
 
@@ -527,7 +565,7 @@ def test_evaluator_reads_the_session_settings(spark, no_dataset):
     res, _ = _on_request_thread(
         spark, lambda: transform_record(spark, KEY_BY_RULE, rec))
     assert res == _oracle(KEY_BY_RULE, rec)
-    assert res[1]["by_id"]["a"] == {"id": "a", "v": 3}
+    assert json.loads(res[1])["by_id"]["a"] == {"id": "a", "v": 3}
 
 
 def test_session_cap_drops_the_least_recently_used_evaluator(
@@ -540,8 +578,8 @@ def test_session_cap_drops_the_least_recently_used_evaluator(
              for i in range(3)]
     for n in range(2):
         for i, rule in enumerate(rules):
-            assert transform_record(spark, rule, {"n": n}) == \
-                {"v": float(n + i)}
+            assert _ok(transform_record(spark, rule, {"n": n})) == \
+                _ok({"v": float(n + i)})
             live = record_mod._pools[spark].live
             assert sum(live.values()) <= 2
         # the first rule's evaluator was the least recently used

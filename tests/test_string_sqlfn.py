@@ -1,16 +1,19 @@
-"""String-op parity: the two renderings of one body, and the oracle.
+"""String-op and arithmetic parity: the two renderings of one body,
+the typed engine, and the oracle.
 
 The string/stringify ops (trim/lowercase/uppercase, to_string, concat,
-split, pad_start/pad_end, replace, to_base, round) write each variant
-body once (compiler/ops_string.py) and render it as a session SQL
-function outside lambda scopes or as the inline Column tree inside
-lambda contexts / for step-bearing args.  Every case runs BOTH
-renderings (sqlfn enabled vs disabled) AND the interpreter oracle; all
-three must agree value-for-value — kind-exactly, as JSON text, so
-``45000`` and ``45000.0`` differ — and error-for-error (kind, message,
-path), through the shared comparator in ``kind_exact.py``.  The cases cover every protocol branch: missing short-circuit,
-variant-null wording, type errors, the serde/Rust float renderings,
-mode dispatch, and boundary values.
+split, pad_start/pad_end, replace, to_base, round) and the arithmetic
+ops (+ - * /) write each variant body once (compiler/ops_bodies.py)
+and render it as a session SQL function outside lambda scopes or as
+the inline Column tree inside lambda contexts / for step-bearing args.
+Every case runs BOTH renderings (sqlfn enabled vs disabled) AND the
+interpreter oracle; all three must agree value-for-value —
+kind-exactly, as JSON text, so ``45000`` and ``45000.0`` differ — and
+error-for-error (kind, message, path), through the shared comparator
+in ``kind_exact.py``.  The cases cover every protocol branch: missing
+short-circuit, variant-null wording, type errors, the serde/Rust float
+renderings, mode dispatch, and boundary values.  The v2 arithmetic
+cases also run through the typed engine.
 """
 
 from __future__ import annotations
@@ -164,6 +167,148 @@ def test_v2_cross_path_parity(spark, expr):
                          ids=[f"v1-{i}" for i in range(len(V1_CASES))])
 def test_v1_cross_path_parity(spark, expr):
     _both(spark, _v1(expr), REC)
+
+
+# --- arithmetic ---------------------------------------------------------
+
+ARITH_RECORDS = [
+    {"a": 80.6, "b": "2.5"},
+    {"a": 1, "b": 2},
+    {"a": 1, "b": "x"},           # conversion error
+    {"b": 2},                     # missing → missing
+    {"a": 1, "b": None},          # null protocol error
+    {"a": 1, "b": 0},             # ÷0 paths
+    {"a": "inf", "b": 1},         # rust grammar non-finite → error (v1)
+    {"a": "1e308", "b": "1e308"},  # overflow → not finite (v1 +)
+    {"a": True, "b": 1},          # bool → error
+    {"a": [1], "b": 1},           # container → error
+    {"a": "0.1", "b": "0.2"},
+    {"a": -0.0, "b": 0.0},
+]
+_NZ = len(ARITH_RECORDS) - 1  # the -0.0 record
+
+STEP_REC = {"b": 5, "i": 3, "t": True}
+MAP_REC = {"xs": [1, 2.5, "3"], "ys": [1, "x", None, 0]}
+
+_ARITH_OPS = {"+": "add", "-": "sub", "*": "mul", "/": "div"}
+
+
+def _arith_cases():
+    """(id, version, expr, record) for every arithmetic case."""
+    out = []
+    for op, name in _ARITH_OPS.items():
+        for i, rec in enumerate(ARITH_RECORDS):
+            out += [
+                (f"v1-{name}-{i}", 1, {"op": op, "args": [
+                    {"ref": "input.a"}, {"ref": "input.b"}]}, rec),
+                (f"v2-{name}-{i}", 2, ["@input.a", {op: ["@input.b"]}], rec),
+                (f"v2x3-{name}-{i}", 2,
+                 ["@input.a", {op: ["@input.b", "@input.a"]}], rec)]
+        # the Column rendering inside a lambda scope
+        for arr in ("xs", "ys"):
+            out.append((f"map-{name}-{arr}", 2,
+                        [f"@input.{arr}", {"map": [{op: [2]}]}], MAP_REC))
+        # a step-bearing later arg runs only when no earlier operand
+        # decides the op: numeric → its ÷0 fires; missing → missing;
+        # bool → the bool's conversion error wins
+        for first in ("b", "nope", "t"):
+            out.append((f"step-{name}-{first}", 2,
+                        [f"@input.{first}",
+                         {op: [["@input.i", {"/": [0]}]]}], STEP_REC))
+    # each divisor's zero check fires when that divisor is reached
+    out += [("div-0-missing", 2, ["@input.b", {"/": [0, "@input.nope"]}],
+             STEP_REC),
+            ("div-missing-0", 2, ["@input.b", {"/": ["@input.nope", 0]}],
+             STEP_REC)]
+    return out
+
+
+ARITH_CASES = _arith_cases()
+
+# the -0.0 record: the reader turns -0.0 into 0, so a result whose sign
+# interp keeps ("-0.0") reads "0.0" in the engine
+_ARITH_NZERO = {f"v2-sub-{_NZ}", f"v2-mul-{_NZ}"}
+
+
+@pytest.mark.parametrize(
+    "version,expr,record",
+    [pytest.param(v, e, r, id=cid,
+                  marks=[_NZERO] if cid in _ARITH_NZERO else [])
+     for cid, v, e, r in ARITH_CASES])
+def test_arith_cross_path_parity(spark, version, expr, record):
+    _both(spark, (_v2 if version >= 2 else _v1)(expr), record)
+
+
+# v2 cases the typed engine hands to the variant engine: the map
+# bodies read mixed-type arrays, which no typed column holds
+_TYPED_CASES = [c for c in ARITH_CASES
+                if c[1] >= 2 and not c[0].startswith("map-")]
+# the cases whose rule the typed engine declines (TypedFallback); the
+# list is exact, so a case that stops compiling typed fails the test.
+# A statically missing first operand makes the only target missing:
+# "rule produces no typed targets"
+TYPED_FALLBACKS = {f"{form}-{name}-{miss}"
+                   for name in _ARITH_OPS.values()
+                   for form, miss in (("v2", 3), ("v2x3", 3),
+                                      ("step", "nope"))}
+
+
+def _typed_frame(spark, record):
+    """A one-row typed DataFrame holding ``record``'s fields as columns:
+    ints as bigint, floats as double, None as a void column, lists of
+    ints as array<bigint>."""
+    from pyspark.sql import functions as F
+
+    def col(v):
+        if isinstance(v, list):
+            return F.array(*[col(x) for x in v])
+        if isinstance(v, int) and not isinstance(v, bool):
+            return F.lit(v).cast("bigint")
+        return F.lit(v)
+    return spark.range(1).select(*[col(v).alias(k)
+                                   for k, v in record.items()])
+
+
+def _typed_outcome(spark, rule, record):
+    """Kind-exact outcome of ``mode="typed"``: each row re-rendered by
+    Python's JSON writer (Spark writes ``1.0E308``, Python ``1e+308``;
+    both keep ``3`` and ``3.0`` apart).  A table row cannot tell a
+    missing target from a null one: both render absent."""
+    from rulemorph_spark.engine import transform_table
+    from rulemorph_spark.errors import extract_engine_error
+    df = transform_table(_typed_frame(spark, record), rule, mode="typed")
+    try:
+        rows = K.table_rows(df)
+    except Exception as exc:  # noqa: BLE001 — a rule error, re-raised if not
+        err = extract_engine_error(exc)
+        if err is None:
+            raise
+        return ("err", err.kind, err.message, err.path)
+    return ("ok", [json.dumps(json.loads(r)) for r in rows])
+
+
+def _oracle_rows(rule, record):
+    """``interp``'s outcome as ``_typed_outcome`` renders it."""
+    from rulemorph_spark import interp as I
+    try:
+        out = I.transform(rule, input_text=json.dumps([record]))
+    except I.InterpError as e:
+        return ("err", e.kind, e.message, e.path)
+    return ("ok", [json.dumps({k: v for k, v in o.items() if v is not None})
+                   for o in out])
+
+
+@pytest.mark.parametrize("expr,record",
+                         [pytest.param(e, r, id=cid)
+                          for cid, _, e, r in _TYPED_CASES])
+def test_arith_typed_matches_oracle(spark, request, expr, record):
+    from rulemorph_spark.compiler.typed import TypedFallback
+    rule = _v2(expr)
+    if request.node.callspec.id in TYPED_FALLBACKS:
+        with pytest.raises(TypedFallback):
+            _typed_outcome(spark, rule, record)
+        return
+    assert _typed_outcome(spark, rule, record) == _oracle_rows(rule, record)
 
 
 def test_lambda_scope_falls_back(spark):
