@@ -1,9 +1,11 @@
 """Interpreter-backed evaluation for the ops Spark cannot express.
 
 ``deep_merge``, ``object_flatten`` and ``object_unflatten`` recurse
-over data-dependent shapes, and a ``pick``/``omit`` whose paths are not
-plain object keys known at compile time reads them from data; no Column
-expression covers them.  They have one Python implementation, the
+over data-dependent shapes, a ``pick``/``omit`` whose paths are not
+plain object keys known at compile time reads them from data, and so
+does a ``flatten`` whose depth is not a literal 0-32 or a ``sort_by``
+whose order is not a literal ``asc``/``desc``; no Column expression
+covers them.  They have one Python implementation, the
 standalone interpreter (``interp.py``, the engine's oracle).  When any
 of them appears anywhere in a mapping's expression — a direct step,
 an array-op body, a ``{map:}`` step body, an if-branch or an operand
@@ -38,6 +40,7 @@ from ..expr_ir import (CondAll, CondAny, CondCompare, CondExpr, IfStep,
                        LetStep, MapStep, OpStep, Pipe, RefStep,
                        StartLiteral, StartRef)
 from ..registry import OP_ALIASES
+from .ops_array import literal_depth, literal_order
 from .ops_object import literal_key_paths
 
 _INTERP_OPS = frozenset({"deep_merge", "object_flatten",
@@ -55,6 +58,10 @@ def _op_needs_interp(step: OpStep) -> bool:
     op = OP_ALIASES.get(step.op, step.op)
     if op in ("pick", "omit"):
         return literal_key_paths(step.args) is None
+    if op == "flatten" and len(step.args) == 1:
+        return literal_depth(step.args[0]) is None
+    if op == "sort_by" and len(step.args) == 2:
+        return literal_order(step.args[1]) is None
     return op in _INTERP_OPS
 
 

@@ -10,23 +10,158 @@ Input coercion (``eval_v2_array_from_eval_value``, ``v2_eval.rs:1536-1553``;
 v1 ``eval_array_arg`` ``transform.rs:2894-2922``): missing/null → empty
 array, non-array → error.  Exception: v2 ``map`` propagates missing and
 errors on null (``v2_eval.rs:1938-1950``).
+
+The array algorithms are kernels, shared with the typed engine
+(``typed.py`` calls them on native ``array<T>`` columns): the count
+clamp and slice arithmetic of ``take``/``drop``/``slice``
+(:func:`arr_take`, :func:`arr_drop`, :func:`arr_slice`), the first-wins keep-by-key filter of ``unique`` and
+``distinct_by`` (:func:`keep_first`), the first-match search of
+``find``/``find_index`` (:func:`first_match`, :func:`match_index`), the
+numeric fold of ``sum``/``min``/``max``/``avg`` (:func:`numeric_fold`)
+and the element pick of ``first``/``last`` (:func:`end_element`).  Each
+takes an already-converted array column and returns a Column; the
+conversions, operand protocols and result wrapping (``V.arr_to_variant``
+here, ``TVal`` there) stay with each engine.
+
+A ``flatten`` depth other than a literal 0-32 and a ``sort_by`` order
+other than a literal ``asc``/``desc`` evaluate through the interpreter
+(``interp_bridge.needs_interp``), which raises the reference's errors
+per record.
 """
 
 from __future__ import annotations
 
+import inspect
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..errors import RuleError
-from ..expr_ir import MapStep, Pipe, StartLiteral
+from ..expr_ir import MapStep, Pipe
 from . import variant as V
 from .core import (Scope, arg_path, compile_pipe, compile_step, cur_version,
                    raw_path, register, rerr, sub_path)
+from .ops_object import _literal_or_none
 from .ops_scalar import _as_i64, _chk, _operands, seq_strict
 
-import re as _re
+# ``flatten`` unrolls one fold per level, up to this literal depth
+MAX_FLATTEN_DEPTH = 32
 
-_I64_RE = _re.compile(r"^[+-]?[0-9]+$")
+
+# --- kernels (shared with typed.py) -------------------------------------
+
+
+def _clamp_count(n: Column, size: Column) -> Column:
+    """saturate n to [-size, size] — overflow-safe like the reference's
+    take/drop (``tests/array_ops_overflow_32bit.rs``); avoids ANSI
+    abs(i64::MIN) overflow."""
+    return F.greatest(F.least(n, size), -size)
+
+
+def arr_take(arr: Column, n: Column) -> Column:
+    """take n from the head; negative n takes from the tail
+    (``eval_array_take``, ``transform.rs:3272-3326``)."""
+    size = F.size(arr).cast("long")
+    nc = _clamp_count(n, size)
+    head = F.slice(arr, F.lit(1), nc.cast("int"))
+    tail = F.slice(arr, (size + nc + 1).cast("int"), (-nc).cast("int"))
+    return F.when(n >= 0, head).otherwise(tail)
+
+
+def arr_drop(arr: Column, n: Column) -> Column:
+    """drop n from the head; negative n drops from the tail."""
+    size = F.size(arr).cast("long")
+    nc = _clamp_count(n, size)
+    head_dropped = F.slice(arr, (nc + 1).cast("int"),
+                           (size - nc).cast("int"))
+    tail_dropped = F.slice(arr, F.lit(1), (size + nc).cast("int"))
+    return F.when(n >= 0, head_dropped).otherwise(tail_dropped)
+
+
+def arr_slice(arr: Column, start: Column, end: "Column | None") -> Column:
+    """[start, end) with negatives from the end, clamped to the array
+    (``eval_array_slice``, ``transform.rs:3376-3443``); no ``end``
+    slices to the end."""
+    size = F.size(arr).cast("long")
+
+    def bound(k: Column) -> Column:
+        return F.when(k < 0, F.greatest(size + k, F.lit(0).cast("long"))) \
+                .otherwise(F.least(k, size))
+    start = bound(start)
+    end = size if end is None else bound(end)
+    length = F.greatest(end - start, F.lit(0).cast("long"))
+    return F.slice(arr, (start + 1).cast("int"), length.cast("int"))
+
+
+def keep_first(arr: Column, key) -> Column:
+    """first-wins dedupe: keep each element whose key first occurs at
+    its own index (``transform.rs:3791-3828``, ``v2_eval.rs:2122-2152``).
+    ``key`` takes the element, or the element and its index, as a
+    ``F.transform`` function does."""
+    keys = F.transform(arr, key)
+    by_index = len(inspect.signature(key).parameters) == 2
+    return F.filter(arr, lambda x, i: F.array_position(
+        keys, key(x, i) if by_index else key(x)) - 1 == i.cast("long"))
+
+
+def _with_index(arr: Column) -> Column:
+    """array<T> → array<struct<v:T, i:int>>."""
+    return F.transform(arr, lambda v, i: F.struct(v.alias("v"), i.alias("i")))
+
+
+def first_match(arr: Column, pred) -> Column:
+    """the first element for which ``pred(x, i)`` holds, as a
+    ``struct<v, i>`` with its index; NULL when none does
+    (``transform.rs:3969-4045``)."""
+    return F.get(F.filter(_with_index(arr), lambda p: pred(p["v"], p["i"])),
+                 0)
+
+
+def match_index(arr: Column, pred) -> Column:
+    """index of the first match, -1 when none."""
+    return F.coalesce(first_match(arr, pred)["i"].cast("long"),
+                      F.lit(-1).cast("long"))
+
+
+def numeric_fold(arr: Column, nums: Column, agg: str) -> Column:
+    """sum/avg/min/max of ``nums`` (``arr``'s elements as doubles), an
+    f64 fold like the reference's (``transform.rs:4117-4260``); the
+    caller decides the empty array."""
+    if agg == "min":
+        return F.array_min(nums)
+    if agg == "max":
+        return F.array_max(nums)
+    total = F.aggregate(nums, F.lit(0.0), lambda a, x: a + x)
+    return total if agg == "sum" else total / F.size(arr).cast("double")
+
+
+def end_element(arr: Column, op_name: str) -> Column:
+    """the element ``first`` or ``last`` picks (``v2_eval.rs:2416-2445``);
+    NULL for an empty array."""
+    return F.try_element_at(
+        arr, F.lit(1) if op_name == "first" else F.size(arr))
+
+
+# --- literal operands the Column bodies take -----------------------------
+
+
+def literal_depth(arg: Pipe) -> "int | None":
+    """A ``flatten`` depth the Column body unrolls: a literal integer
+    0-32.  Else None: that flatten evaluates through the interpreter."""
+    v = _literal_or_none(arg)
+    if isinstance(v, int) and not isinstance(v, bool) \
+            and 0 <= v <= MAX_FLATTEN_DEPTH:
+        return v
+    return None
+
+
+def literal_order(arg: Pipe) -> "str | None":
+    """A ``sort_by`` order the Column body takes: literal ``asc`` or
+    ``desc``.  Else None: that sort evaluates through the interpreter."""
+    v = _literal_or_none(arg)
+    return v if v in ("asc", "desc") else None
+
+
+# --- ops -----------------------------------------------------------------
 
 
 def EMPTY() -> Column:
@@ -77,11 +212,6 @@ def _key_string(scope: Scope, expr: Pipe, path: str):
             .otherwise(V.to_string_strict(
                 value, path, "value must be string/number/bool")))
     return key
-
-
-def _with_index(arr: Column) -> Column:
-    """array<variant> → array<struct<v:variant, i:int>>."""
-    return F.transform(arr, lambda v, i: F.struct(v.alias("v"), i.alias("i")))
 
 
 @register("map")
@@ -139,8 +269,7 @@ def compile_map_step(step: MapStep, cur: Column, scope: Scope, path: str):
 def op_filter(scope, cur, args, path):
     arr = _coerce_array(cur, arg_path(path, 0))
     pred = _predicate(scope, args[0], raw_path(path, 0))
-    kept = F.filter(_with_index(arr), lambda p: pred(p["v"], p["i"]))
-    return V.arr_to_variant(F.transform(kept, lambda p: p["v"]))
+    return V.arr_to_variant(F.filter(arr, pred))
 
 
 @register("flat_map")
@@ -162,51 +291,13 @@ def op_flat_map(scope, cur, args, path):
 @register("flatten")
 def op_flatten(scope, cur, args, path):
     arr = _coerce_array(cur, arg_path(path, 0))
-    depth = 1
-    if len(args) == 1:
-        dp = arg_path(path, 1)
-        lit = args[0].start
-        if not (isinstance(lit, StartLiteral) and not args[0].steps):
-            raise RuleError("expr_error", "flatten depth must be a literal "
-                            "integer for the Spark compiler", path)
-        # mirror _op_flatten's depth protocol (null → the generic null
-        # error, value_to_i64 conversion, negative check — all at the
-        # depth operand's path).  The array converts FIRST, so a
-        # constant depth error still weaves behind the array probe.
-        v = lit.value
-        err = None
-        if v is None:
-            err = rerr("expr_error", "expr arg must not be null", dp)
-        elif isinstance(v, bool) or not isinstance(v, int):
-            if isinstance(v, float) and v == int(v):
-                v = int(v)
-            elif isinstance(v, str) and _I64_RE.match(v):
-                v = int(v)
-            else:
-                err = rerr("expr_error",
-                           "depth must be a non-negative integer", dp)
-        if err is None and isinstance(v, int) and v < 0:
-            err = rerr("expr_error",
-                       "depth must be a non-negative integer", dp)
-        if err is not None:
-            return F.when(F.length(_arr_probe(arr)) >= 1,
-                          F.raise_error(F.lit("unreachable probe"))
-                          .cast(V.VT)).otherwise(err.cast(V.VT))
-        depth = v
-    for _ in range(min(depth, 32)):
+    for _ in range(literal_depth(args[0]) if args else 1):
         arr = F.aggregate(
             arr, EMPTY(),
             lambda acc, x: F.concat(
                 acc, F.when(V.is_array(x), x.try_cast(V.ARR_T))
                       .otherwise(F.array(x))))
     return V.arr_to_variant(arr)
-
-
-def _clamped_count(n: Column, size: Column) -> Column:
-    """saturate n to [-size, size] — overflow-safe like the reference's
-    take/drop (``tests/array_ops_overflow_32bit.rs``); avoids ANSI
-    abs(i64::MIN) overflow."""
-    return F.greatest(F.least(n, size), -size)
 
 
 def _arr_probe(arr: Column) -> Column:
@@ -219,22 +310,15 @@ def _arr_probe(arr: Column) -> Column:
 
 @register("take")
 def op_take(scope, cur, args, path):
-    """take n from head; negative n takes from tail
-    (``eval_array_take``, ``transform.rs:3272-3326``).  Positional
-    protocol: the array arg converts first (missing/null → [],
-    non-array errors), then the count (missing → op missing, null →
-    "expr arg must not be null", non-int → "count must be an
+    """Positional protocol: the array arg converts first (missing/null
+    → [], non-array errors), then the count (missing → op missing,
+    null → "expr arg must not be null", non-int → "count must be an
     integer")."""
     ops = _operands(scope, cur, args, path)
     arr = _coerce_array(ops[0], arg_path(path, 0))
     n = _as_i64(ops[1], arg_path(path, 1), "count must be an integer")
-    size = F.size(arr).cast("long")
-    nc = _clamped_count(n, size)
-    head = F.slice(arr, F.lit(1), nc.cast("int"))
-    tail = F.slice(arr, (size + nc + 1).cast("int"), (-nc).cast("int"))
-    result = V.arr_to_variant(F.when(n >= 0, head).otherwise(tail))
-    return seq_strict(ops, path, result, skip={0},
-                      checks=[_arr_probe(arr), _chk(n)])
+    return seq_strict(ops, path, V.arr_to_variant(arr_take(arr, n)),
+                      skip={0}, checks=[_arr_probe(arr), _chk(n)])
 
 
 @register("drop")
@@ -242,38 +326,21 @@ def op_drop(scope, cur, args, path):
     ops = _operands(scope, cur, args, path)
     arr = _coerce_array(ops[0], arg_path(path, 0))
     n = _as_i64(ops[1], arg_path(path, 1), "count must be an integer")
-    size = F.size(arr).cast("long")
-    nc = _clamped_count(n, size)
-    head_dropped = F.slice(arr, (nc + 1).cast("int"),
-                           (size - nc).cast("int"))
-    tail_dropped = F.slice(arr, F.lit(1), (size + nc).cast("int"))
-    result = V.arr_to_variant(
-        F.when(n >= 0, head_dropped).otherwise(tail_dropped))
-    return seq_strict(ops, path, result, skip={0},
-                      checks=[_arr_probe(arr), _chk(n)])
+    return seq_strict(ops, path, V.arr_to_variant(arr_drop(arr, n)),
+                      skip={0}, checks=[_arr_probe(arr), _chk(n)])
 
 
 @register("slice")
 def op_slice(scope, cur, args, path):
-    """[start, end) with negatives from the end
-    (``eval_array_slice``, ``transform.rs:3376-3443``)."""
     ops = _operands(scope, cur, args, path)
     arr = _coerce_array(ops[0], arg_path(path, 0))
-    size = F.size(arr).cast("long")
     start = _as_i64(ops[1], arg_path(path, 1), "start must be an integer")
     checks = [_arr_probe(arr), _chk(start)]
-    start = F.when(start < 0, F.greatest(size + start, F.lit(0).cast("long"))) \
-             .otherwise(F.least(start, size))
+    end = None
     if len(args) == 2:
         end = _as_i64(ops[2], arg_path(path, 2), "end must be an integer")
         checks.append(_chk(end))
-        end = F.when(end < 0, F.greatest(size + end, F.lit(0).cast("long"))) \
-               .otherwise(F.least(end, size))
-    else:
-        end = size
-    length = F.greatest(end - start, F.lit(0).cast("long"))
-    result = V.arr_to_variant(
-        F.slice(arr, (start + 1).cast("int"), length.cast("int")))
+    result = V.arr_to_variant(arr_slice(arr, start, end))
     return seq_strict(ops, path, result, skip={0}, checks=checks)
 
 
@@ -297,10 +364,12 @@ def op_chunk(scope, cur, args, path):
     def body(arr: Column, nc: Column) -> Column:
         size = F.size(arr).cast("long")
         n_chunks = F.ceil(size.cast("double") / nc.cast("double")).cast("int")
+        # a size past the array's length takes it whole: clamped
+        # first, it never overflows the int cast
         chunks = F.transform(
             F.sequence(F.lit(0), n_chunks - 1),
             lambda i: F.slice(arr, (i.cast("long") * nc + 1).cast("int"),
-                              nc.cast("int")).cast(V.VT))
+                              F.least(nc, size).cast("int")).cast(V.VT))
         result = V.arr_to_variant(
             F.when(size == 0, EMPTY()).otherwise(chunks))
         return seq_strict(ops, path, result, skip={0},
@@ -403,9 +472,8 @@ def op_group_by(scope, cur, args, path):
     Note: variant objects enumerate keys sorted, not first-seen."""
     arr = _coerce_array(cur, arg_path(path, 0))
     key = _key_string(scope, args[0], raw_path(path, 0))
-    pairs = F.transform(_with_index(arr),
-                        lambda p: F.struct(key(p["v"], p["i"]).alias("k"),
-                                           p["v"].alias("v")))
+    pairs = F.transform(arr, lambda x, i: F.struct(key(x, i).alias("k"),
+                                                   x.alias("v")))
     distinct_keys = F.array_distinct(F.transform(pairs, lambda p: p["k"]))
     m = F.map_from_entries(F.transform(
         distinct_keys,
@@ -421,9 +489,8 @@ def op_key_by(scope, cur, args, path):
     """{key: item}, last wins (``transform.rs:3706-3743``)."""
     arr = _coerce_array(cur, arg_path(path, 0))
     key = _key_string(scope, args[0], raw_path(path, 0))
-    pairs = F.transform(_with_index(arr),
-                        lambda p: F.struct(key(p["v"], p["i"]).alias("key"),
-                                           p["v"].alias("value")))
+    pairs = F.transform(arr, lambda x, i: F.struct(key(x, i).alias("key"),
+                                                   x.alias("value")))
     # map_from_entries + LAST_WIN dedup policy = last wins
     return V.map_to_variant(F.map_from_entries(pairs))
 
@@ -432,9 +499,8 @@ def op_key_by(scope, cur, args, path):
 def op_partition(scope, cur, args, path):
     arr = _coerce_array(cur, arg_path(path, 0))
     pred = _predicate(scope, args[0], raw_path(path, 0))
-    decorated = F.transform(_with_index(arr),
-                            lambda p: F.struct(p["v"].alias("v"),
-                                               pred(p["v"], p["i"]).alias("m")))
+    decorated = F.transform(arr, lambda x, i: F.struct(
+        x.alias("v"), pred(x, i).alias("m")))
     matched = F.transform(F.filter(decorated, lambda d: d["m"]),
                           lambda d: d["v"])
     unmatched = F.transform(F.filter(decorated, lambda d: ~d["m"]),
@@ -455,11 +521,7 @@ def op_unique(scope, cur, args, path):
                        item_path).cast("string"))
             .otherwise(V.to_string_strict(x, item_path))
         )
-    keys = F.transform(arr, ukey)
-    kept = F.filter(
-        _with_index(arr),
-        lambda p: F.array_position(keys, ukey(p["v"])) - 1 == p["i"].cast("long"))
-    return V.arr_to_variant(F.transform(kept, lambda p: p["v"]))
+    return V.arr_to_variant(keep_first(arr, ukey))
 
 
 @register("distinct_by")
@@ -467,12 +529,7 @@ def op_distinct_by(scope, cur, args, path):
     """dedupe by key expr, first wins (``v2_eval.rs:2122-2152``)."""
     arr = _coerce_array(cur, arg_path(path, 0))
     key = _key_string(scope, args[0], raw_path(path, 0))
-    keys = F.transform(_with_index(arr), lambda p: key(p["v"], p["i"]))
-    kept = F.filter(
-        _with_index(arr),
-        lambda p: F.array_position(keys, key(p["v"], p["i"])) - 1
-        == p["i"].cast("long"))
-    return V.arr_to_variant(F.transform(kept, lambda p: p["v"]))
+    return V.arr_to_variant(keep_first(arr, key))
 
 
 @register("sort_by")
@@ -482,38 +539,7 @@ def op_sort_by(scope, cur, args, path):
     arr = _coerce_array(cur, arg_path(path, 0))
     key_fn_expr = args[0]
     key_path = raw_path(path, 0)
-    order = "asc"
-    if len(args) == 2:
-        lit = args[1].start
-        op_ = arg_path(path, 2)
-        if not (isinstance(lit, StartLiteral) and not args[1].steps):
-            raise RuleError("expr_error", "order must be asc or desc",
-                            path)
-        v = lit.value
-        msg = None
-        if v in ("asc", "desc") and isinstance(v, str):
-            order = v
-        elif cur_version() >= 2:
-            # v2 stringifies the order via v1_value_to_string
-            # (eval_v2 sort_by): containers/null fail the stringify,
-            # any other scalar renders and fails the asc/desc check
-            msg = ("value must be string/number/bool"
-                   if v is None or isinstance(v, (list, dict))
-                   else "order must be asc or desc")
-        else:
-            # v1 _eval_string_at: null → generic null error, non-string
-            # → "value must be a string"
-            msg = ("expr arg must not be null" if v is None
-                   else "value must be a string"
-                   if not isinstance(v, str) or isinstance(v, bool)
-                   else "order must be asc or desc")
-        if msg is not None:
-            # order (arg 2) converts AFTER the array coercion and the
-            # empty-array early return ([] sorts to [] without touching
-            # the order), BEFORE any key evaluates
-            return F.when(F.size(arr) == 0,
-                          V.arr_to_variant(EMPTY())).otherwise(
-                rerr("expr_error", msg, op_).cast(V.VT))
+    order = literal_order(args[1]) if len(args) == 2 else "asc"
 
     def key(x, i):
         value = compile_pipe(key_fn_expr, _item_scope(scope, x, i),
@@ -542,11 +568,8 @@ def op_sort_by(scope, cur, args, path):
                                 "sort_by key must be string/number/bool",
                                 key_path).cast(V.VT)))
 
-    decorated = F.transform(
-        _with_index(arr),
-        lambda p: F.struct(
-            p["v"].alias("v"), p["i"].alias("i"),
-            key(p["v"], p["i"]).alias("k")))
+    decorated = F.transform(arr, lambda x, i: F.struct(
+        x.alias("v"), i.alias("i"), key(x, i).alias("k")))
 
     sign = 1 if order == "asc" else -1
 
@@ -586,9 +609,7 @@ def op_sort_by(scope, cur, args, path):
 def op_find(scope, cur, args, path):
     """first match, JSON null if none (``transform.rs:3969-4006``)."""
     arr = _coerce_array(cur, arg_path(path, 0))
-    pred = _predicate(scope, args[0], raw_path(path, 0))
-    found = F.filter(_with_index(arr), lambda p: pred(p["v"], p["i"]))
-    first = F.try_element_at(found, F.lit(1))
+    first = first_match(arr, _predicate(scope, args[0], raw_path(path, 0)))
     return F.when(first.isNull(), V.vnull()).otherwise(
         F.coalesce(first["v"], V.vnull()))
 
@@ -598,9 +619,7 @@ def op_find_index(scope, cur, args, path):
     """index of first match, -1 if none (``transform.rs:4008-4045``)."""
     arr = _coerce_array(cur, arg_path(path, 0))
     pred = _predicate(scope, args[0], raw_path(path, 0))
-    found = F.filter(_with_index(arr), lambda p: pred(p["v"], p["i"]))
-    first = F.try_element_at(found, F.lit(1))
-    return F.coalesce(first["i"].cast("long"), F.lit(-1).cast("long")).cast(V.VT)
+    return match_index(arr, pred).cast(V.VT)
 
 
 def _eq_proxy(x: Column, path: str) -> Column:
@@ -636,17 +655,8 @@ def _numeric_agg(scope, cur, args, path, agg: str):
     arr = _coerce_array(cur, arg_path(path, 0))
     nums = F.transform(arr, lambda x: V.to_number_strict(
         x, arg_path(path, 0), "array item must be a number"))
-    total = F.aggregate(nums, F.lit(0.0), lambda acc, x: acc + x)
-    if agg == "sum":
-        result = total
-    elif agg == "avg":
-        result = total / F.size(arr).cast("double")
-    elif agg == "min":
-        result = F.array_min(nums)
-    else:
-        result = F.array_max(nums)
     return F.when(F.size(arr) == 0, V.vnull()).otherwise(
-        V.num_to_variant(result))
+        V.num_to_variant(numeric_fold(arr, nums, agg)))
 
 
 @register("sum")
@@ -734,21 +744,20 @@ def _strict_array(o: Column, op_name: str, path: str) -> Column:
     )
 
 
-@register("first")
-def op_first(scope, cur, args, path):
-    """first element, missing on empty/missing input
-    (``v2_eval.rs:2416-2430``)."""
-    arr = _strict_array(cur, "first", path)
-    el = F.try_element_at(arr, F.lit(1))
+def _first_last(cur: Column, path: str, op_name: str) -> Column:
+    """first/last element, missing on empty/missing input
+    (``v2_eval.rs:2416-2445``)."""
+    arr = _strict_array(cur, op_name, path)
     return (F.when(cur.isNull(), F.lit(None).cast(V.VT))
             .when(F.size(arr) == 0, F.lit(None).cast(V.VT))
-            .otherwise(F.coalesce(el, V.vnull())))
+            .otherwise(F.coalesce(end_element(arr, op_name), V.vnull())))
+
+
+@register("first")
+def op_first(scope, cur, args, path):
+    return _first_last(cur, path, "first")
 
 
 @register("last")
 def op_last(scope, cur, args, path):
-    arr = _strict_array(cur, "last", path)
-    el = F.try_element_at(arr, F.size(arr))
-    return (F.when(cur.isNull(), F.lit(None).cast(V.VT))
-            .when(F.size(arr) == 0, F.lit(None).cast(V.VT))
-            .otherwise(F.coalesce(el, V.vnull())))
+    return _first_last(cur, path, "last")

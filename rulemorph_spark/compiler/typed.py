@@ -71,6 +71,7 @@ from ..expr_ir import (CondAll, CondAny, CondCompare, CondExpr, Condition,
                        StartLiteral, StartPipeValue, StartRef)
 from ..paths import Index, Key, parse_path
 from ..registry import OP_ALIASES, OP_ARITY, eval_arity_anomaly
+from . import ops_array as A
 from . import ops_bodies as S
 from . import variant as V
 from .backend import InlineColB
@@ -2747,9 +2748,12 @@ _t_v1_cmp("~=")
 
 # --- array ops on native array<T> columns ------------------------------
 #
-# Typed arrays only arise from ``split`` / ``lookup`` (input array
-# columns fall back at the ref level), so elements are always scalar.
-# Ops whose result's JSON number type is runtime-dependent stay on the
+# Typed arrays come from input ``array<T>`` columns (nested ones such as
+# ``array<array<long>>`` included) and from ``split`` / ``lookup``.  The
+# array algorithms are the variant engine's kernels (``ops_array``);
+# the conversions around them are typed's own.  Ops whose elements are
+# not scalars fall back where a kernel needs an equality proxy, and ops
+# whose result's JSON number type is runtime-dependent stay on the
 # variant path (``avg`` always; ``sum``/``min``/``max`` over float or
 # string elements).  Integer-element aggregates compile typed below —
 # their integral re-emission is static (always a long).
@@ -2822,58 +2826,30 @@ def _t_count_arg(scope, cur: TVal, arg, path: str,
     return t_i64(v, path, msg)
 
 
-def _t_clamped(n: Column, size: Column) -> Column:
-    """saturate to [-size, size] (overflow-safe take/drop —
-    ``tests/array_ops_overflow_32bit.rs``)."""
-    return F.greatest(F.least(n, size), -size)
-
-
 @_treg("take")
 def t_take(scope, cur, args, path):
-    """head-take; negative n takes from the tail (``transform.rs:3272``)."""
     arr, et = _t_arr_in(cur, path, null_to_empty=True)
     n = _t_count_arg(scope, cur, args[0], arg_path(path, 1))
-    size = F.size(arr).cast("long")
-    nc = _t_clamped(n, size)
-    head = F.slice(arr, F.lit(1), nc.cast("int"))
-    tail = F.slice(arr, (size + nc + 1).cast("int"), (-nc).cast("int"))
-    return TVal(F.when(n >= 0, head).otherwise(tail), T.ArrayType(et))
+    return TVal(A.arr_take(arr, n), T.ArrayType(et))
 
 
 @_treg("drop")
 def t_drop(scope, cur, args, path):
     arr, et = _t_arr_in(cur, path, null_to_empty=True)
     n = _t_count_arg(scope, cur, args[0], arg_path(path, 1))
-    size = F.size(arr).cast("long")
-    nc = _t_clamped(n, size)
-    head_dropped = F.slice(arr, (nc + 1).cast("int"),
-                           (size - nc).cast("int"))
-    tail_dropped = F.slice(arr, F.lit(1), (size + nc).cast("int"))
-    return TVal(F.when(n >= 0, head_dropped).otherwise(tail_dropped),
-                T.ArrayType(et))
+    return TVal(A.arr_drop(arr, n), T.ArrayType(et))
 
 
 @_treg("slice")
 def t_slice(scope, cur, args, path):
-    """[start, end) with negatives from the end (``transform.rs:3376``)."""
     arr, et = _t_arr_in(cur, path, null_to_empty=True)
-    size = F.size(arr).cast("long")
     start = _t_count_arg(scope, cur, args[0], arg_path(path, 1),
                          "start must be an integer")
-    start = F.when(start < 0,
-                   F.greatest(size + start, F.lit(0).cast("long"))) \
-             .otherwise(F.least(start, size))
+    end = None
     if len(args) == 2:
         end = _t_count_arg(scope, cur, args[1], arg_path(path, 2),
                            "end must be an integer")
-        end = F.when(end < 0,
-                     F.greatest(size + end, F.lit(0).cast("long"))) \
-               .otherwise(F.least(end, size))
-    else:
-        end = size
-    length = F.greatest(end - start, F.lit(0).cast("long"))
-    return TVal(F.slice(arr, (start + 1).cast("int"), length.cast("int")),
-                T.ArrayType(et))
+    return TVal(A.arr_slice(arr, start, end), T.ArrayType(et))
 
 
 def _t_eq_proxy(x: Column, et: T.DataType, path: str) -> Column:
@@ -2890,12 +2866,8 @@ def t_unique(scope, cur, args, path):
     (``transform.rs:3791-3828``)."""
     arr, et = _t_arr_in(cur, path, null_to_empty=True)
     ip = arg_path(path, 0)
-    keys = F.transform(arr, lambda x: _t_eq_proxy(x, et, ip))
-    kept = F.filter(
-        arr,
-        lambda x, i: F.array_position(keys, _t_eq_proxy(x, et, ip)) - 1
-        == i.cast("long"))
-    return TVal(kept, T.ArrayType(et))
+    return TVal(A.keep_first(arr, lambda x: _t_eq_proxy(x, et, ip)),
+                T.ArrayType(et))
 
 
 @_treg("contains")
@@ -2936,12 +2908,7 @@ def t_find_index(scope, cur, args, path):
     (``transform.rs:4008-4045``)."""
     arr, et = _t_arr_in(cur, path, null_to_empty=True)
     pred = _t_pred(scope, args[0], et, raw_path(path, 0))
-    withi = F.transform(arr, lambda x, i: F.struct(x.alias("v"),
-                                                  i.alias("i")))
-    found = F.filter(withi, lambda p: pred(p["v"], p["i"]))
-    first = F.get(found, 0)
-    return TVal(F.coalesce(first["i"].cast("long"),
-                           F.lit(-1).cast("long")), T.LongType())
+    return TVal(A.match_index(arr, pred), T.LongType())
 
 
 def _t_int_elems(arr: Column, et: T.DataType, path: str) -> Column:
@@ -2959,43 +2926,27 @@ def _t_int_elems(arr: Column, et: T.DataType, path: str) -> Column:
               path)).otherwise(x.cast("double")))
 
 
-@_treg("sum")
-def t_sum(scope, cur, args, path):
-    """f64 fold like the variant path (same precision behavior), then
-    the statically-integral re-emission as long; empty → null
-    (``transform.rs:4117-4166``).  Matches ``num_to_variant`` for
-    |sum| ≤ 2^62 (beyond, the reference itself degrades to f64)."""
-    arr, et = _t_arr_in(cur, path, null_to_empty=True)
-    nums = _t_int_elems(arr, et, arg_path(path, 0))
-    total = F.aggregate(nums, F.lit(0.0), lambda a, x: a + x)
-    res = F.when(F.size(arr) == 0, F.lit(None).cast("long")) \
-           .otherwise(total.cast("long"))
-    return TVal(res, T.LongType())
+def _t_fold(agg: str):
+    """sum/min/max: the shared f64 fold, then the statically-integral
+    re-emission as long; empty → null (``transform.rs:4117-4260``).
+    Matches ``num_to_variant`` for |sum| ≤ 2^62 (beyond, the reference
+    itself degrades to f64).  No typed ``avg``: its JSON number type
+    (int vs float) is per-row runtime-dependent even for integer
+    inputs — variant path only."""
+    def op(scope, cur, args, path):
+        arr, et = _t_arr_in(cur, path, null_to_empty=True)
+        nums = _t_int_elems(arr, et, arg_path(path, 0))
+        res = F.when(F.size(arr) == 0, F.lit(None).cast("long")) \
+               .otherwise(A.numeric_fold(arr, nums, agg).cast("long"))
+        return TVal(res, T.LongType())
+    T_OPS[agg] = op
 
 
-# no typed ``avg``: the result's JSON number type (int vs float) is
-# per-row runtime-dependent even for integer inputs — variant path only
+for _agg in ("sum", "min", "max"):
+    _t_fold(_agg)
 
 
-@_treg("min")
-def t_min(scope, cur, args, path):
-    arr, et = _t_arr_in(cur, path, null_to_empty=True)
-    nums = _t_int_elems(arr, et, arg_path(path, 0))  # null-element error parity
-    res = F.when(F.size(arr) == 0, F.lit(None).cast("long")) \
-           .otherwise(F.array_min(nums).cast("long"))
-    return TVal(res, T.LongType())
-
-
-@_treg("max")
-def t_max(scope, cur, args, path):
-    arr, et = _t_arr_in(cur, path, null_to_empty=True)
-    nums = _t_int_elems(arr, et, arg_path(path, 0))
-    res = F.when(F.size(arr) == 0, F.lit(None).cast("long")) \
-           .otherwise(F.array_max(nums).cast("long"))
-    return TVal(res, T.LongType())
-
-
-def _t_first_last(cur: TVal, path: str, op_name: str, pick) -> TVal:
+def _t_first_last(cur: TVal, path: str, op_name: str) -> TVal:
     """v2 first/last (``v2_eval.rs:2416-2445``): empty → missing;
     a runtime JSON null is NOT folded to empty — it errors with the
     rendered value ("first requires array, got Null").  Both the
@@ -3006,7 +2957,7 @@ def _t_first_last(cur: TVal, path: str, op_name: str, pick) -> TVal:
     if cur.missing_when is not None:
         isn = isn & ~_mw(cur)
     nerr = f"{op_name} requires array, got Null"
-    el = pick(arr)
+    el = A.end_element(arr, op_name)
     empty = F.size(arr) == 0
     col = (F.when(isn, _terr(et, "expr_error", nerr, path))
            .when(empty, F.lit(None).cast(et))
@@ -3025,14 +2976,12 @@ def t_first(scope, cur, args, path):
     runtime-missing exactly when the array is empty, tracked as the
     ``missing_when`` predicate (strict consumers then propagate
     missing in-plan instead of falling back)."""
-    return _t_first_last(cur, path, "first",
-                         lambda arr: F.try_element_at(arr, F.lit(1)))
+    return _t_first_last(cur, path, "first")
 
 
 @_treg("last")
 def t_last(scope, cur, args, path):
-    return _t_first_last(cur, path, "last",
-                         lambda arr: F.try_element_at(arr, F.size(arr)))
+    return _t_first_last(cur, path, "last")
 
 
 @_treg("flatten")
@@ -3044,10 +2993,8 @@ def t_flatten(scope, cur, args, path):
     JSON-null element passes through as a single null item — mirrored
     with a per-element wrap.  Deeper literal depths change the static
     element type per level → variant path."""
-    if args:
-        lit = args[0].start
-        if not (isinstance(lit, StartLiteral) and lit.value == 1):
-            raise TypedFallback("flatten depth != 1 in typed mode")
+    if args and A.literal_depth(args[0]) != 1:
+        raise TypedFallback("flatten depth != 1 in typed mode")
     arr, et = _t_arr_in(cur, path, null_to_empty=True)
     if not isinstance(et, T.ArrayType):
         raise TypedFallback("flatten over non-nested typed array")

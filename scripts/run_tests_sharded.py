@@ -28,7 +28,7 @@ import time
 WEIGHTS = {
     "test_pipe_fuzz_complex.py": 700,
     "test_pipe_fuzz_threeway.py": 600,
-    "test_string_sqlfn.py": 345,
+    "test_string_sqlfn.py": 490,
     "test_golden_reference.py": 320,
     "test_pipe_fuzz.py": 260,
     "test_oracle_parity.py": 250,

@@ -1,7 +1,9 @@
 """The ops Spark cannot express evaluate through the interpreter
 (compiler/interp_bridge.py) in every position: deep_merge,
-object_(un)flatten, and pick/omit whose paths are dynamic, indexed or
-malformed — as a mapping's direct step, inside array-op bodies,
+object_(un)flatten, pick/omit whose paths are dynamic, indexed or
+malformed, a flatten depth other than a literal 0-32 and a sort_by
+order other than a literal asc/desc — as a mapping's direct step,
+inside array-op bodies,
 {map:} step bodies, if-branches, operand args, when-conditions and
 finalize.wrap leaves.  Every case compares the ENGINE against the
 INTERPRETER oracle — results and error {kind, message, path} alike."""
@@ -175,6 +177,55 @@ finalize:
 ]
 
 
+_DEEP = [1]
+for _ in range(35):
+    _DEEP = [_DEEP]
+
+CASES += [
+    # a flatten depth read from data, v2 and v1
+    (_TOP_LEVEL % 'flatten: ["@input.d"]',
+     [{"doc": [[1, 2], [3]], "d": 1}, {"doc": [[1, [2]]], "d": 5}]),
+    ("""
+version: 1
+input: {format: json, json: {}}
+mappings:
+  - target: out
+    expr: {op: flatten, args: [{ref: input.doc}, {ref: input.d}]}
+""", [{"doc": [[1, 2], [3]], "d": 1}]),
+    # a depth from data the reference rejects: negative, null, a float
+    (_TOP_LEVEL % 'flatten: ["@input.d"]', [{"doc": [[1]], "d": -1}]),
+    (_TOP_LEVEL % 'flatten: ["@input.d"]', [{"doc": [[1]], "d": None}]),
+    (_TOP_LEVEL % 'flatten: ["@input.d"]', [{"doc": [[1]], "d": 1.5}]),
+    # a literal depth beyond the unrolled 32 levels: a 36-deep array
+    (_TOP_LEVEL % "flatten: [40]", [{"doc": _DEEP}]),
+    # literal depths the reference rejects, after the array converts
+    (_TOP_LEVEL % "flatten: [-1]", [{"doc": [[1]]}]),
+    (_TOP_LEVEL % "flatten: [-1]", [{"doc": 5}]),
+    (_TOP_LEVEL % "flatten: [null]", [{"doc": [[1]]}]),
+    (_TOP_LEVEL % 'flatten: ["x"]', [{"doc": [[1]]}]),
+    # a sort_by order read from data; [] sorts without reading it
+    (_TOP_LEVEL % 'sort_by: [["@item"], "@input.o"]',
+     [{"doc": [2, 3, 1], "o": "desc"}, {"doc": [2, 1], "o": "asc"}]),
+    (_TOP_LEVEL % 'sort_by: [["@item"], "@input.o"]',
+     [{"doc": [2, 1], "o": "up"}]),
+    (_TOP_LEVEL % 'sort_by: [["@item"], "@input.o"]',
+     [{"doc": [], "o": 5}]),
+    # literal orders the reference rejects, v2 and v1
+    (_TOP_LEVEL % "sort_by: [[\"@item\"], 5]", [{"doc": [2, 1]}]),
+    (_TOP_LEVEL % "sort_by: [[\"@item\"], null]", [{"doc": [2, 1]}]),
+    ("""
+version: 1
+input: {format: json, json: {}}
+mappings:
+  - target: out
+    expr: {op: sort_by, args: [{ref: input.doc}, {ref: item}, null]}
+""", [{"doc": [2, 1]}]),
+    # a dynamic order inside a map body: per-item paths
+    (_IN_MAP % 'sort_by: [["@item"], "@input.o"]',
+     [{"xs": [[2, 1], [3]], "o": "desc"}]),
+]
+
+
 @pytest.mark.parametrize("rule,records", CASES)
 def test_engine_matches_interp(spark, rule, records):
     assert _engine(spark, rule, records) == _oracle(rule, records)
@@ -191,6 +242,14 @@ def test_direct_steps_need_interp():
         parse_expr(["@input.xs", {"map": [{"deep_merge": [{"z": 1}]}]}]))
     assert needs_interp(parse_expr(["@input.a", {"pick": ["b[0]"]}]))
     assert not needs_interp(parse_expr(["@input.a", {"pick": ["b.c"]}]))
+    assert needs_interp(parse_expr(["@input.a", {"flatten": ["@input.d"]}]))
+    assert needs_interp(parse_expr(["@input.a", {"flatten": [33]}]))
+    assert not needs_interp(parse_expr(["@input.a", {"flatten": [32]}]))
+    assert not needs_interp(parse_expr(["@input.a", {"flatten": []}]))
+    assert needs_interp(
+        parse_expr(["@input.a", {"sort_by": [["@item"], "@input.o"]}]))
+    assert not needs_interp(
+        parse_expr(["@input.a", {"sort_by": [["@item"], "desc"]}]))
 
 
 def test_analysis_error_is_not_an_engine_error(spark):

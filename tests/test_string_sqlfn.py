@@ -1,5 +1,5 @@
-"""String-op and arithmetic parity: the two renderings of one body,
-the typed engine, and the oracle.
+"""String-op, arithmetic and array-op parity: the two renderings of
+one body, the typed engine, and the oracle.
 
 The string/stringify ops (trim/lowercase/uppercase, to_string, concat,
 split, pad_start/pad_end, replace, to_base, round) and the arithmetic
@@ -13,12 +13,17 @@ error-for-error (kind, message, path), through the shared comparator
 in ``kind_exact.py``.  The cases cover every protocol branch: missing
 short-circuit, variant-null wording, type errors, the serde/Rust float
 renderings, mode dispatch, and boundary values.  The v2 arithmetic
-cases also run through the typed engine.
+cases also run through the typed engine.  The array ops (one kernel
+each in compiler/ops_array.py, shared by the variant and typed
+engines) render no SQL function: each array case runs once through the
+engine and, where its columns are natively typed, through the typed
+engine, both against the oracle.
 """
 
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 
@@ -269,14 +274,14 @@ def _typed_frame(spark, record):
                                    for k, v in record.items()])
 
 
-def _typed_outcome(spark, rule, record):
-    """Kind-exact outcome of ``mode="typed"``: each row re-rendered by
-    Python's JSON writer (Spark writes ``1.0E308``, Python ``1e+308``;
-    both keep ``3`` and ``3.0`` apart).  A table row cannot tell a
+def _typed_outcome(frame, rule):
+    """Kind-exact outcome of ``mode="typed"`` over ``frame``: each row
+    re-rendered by Python's JSON writer (Spark writes ``1.0E308``,
+    Python ``1e+308``; both keep ``3`` and ``3.0`` apart).  A table row cannot tell a
     missing target from a null one: both render absent."""
     from rulemorph_spark.engine import transform_table
     from rulemorph_spark.errors import extract_engine_error
-    df = transform_table(_typed_frame(spark, record), rule, mode="typed")
+    df = transform_table(frame, rule, mode="typed")
     try:
         rows = K.table_rows(df)
     except Exception as exc:  # noqa: BLE001 — a rule error, re-raised if not
@@ -306,9 +311,10 @@ def test_arith_typed_matches_oracle(spark, request, expr, record):
     rule = _v2(expr)
     if request.node.callspec.id in TYPED_FALLBACKS:
         with pytest.raises(TypedFallback):
-            _typed_outcome(spark, rule, record)
+            _typed_outcome(_typed_frame(spark, record), rule)
         return
-    assert _typed_outcome(spark, rule, record) == _oracle_rows(rule, record)
+    assert (_typed_outcome(_typed_frame(spark, record), rule)
+            == _oracle_rows(rule, record))
 
 
 def test_lambda_scope_falls_back(spark):
@@ -371,3 +377,162 @@ mappings:
     st = codegen_state(out)
     assert not st["nodes_interpreted"], st
     assert any("Project" in n for n in st["nodes_in_codegen"]), st
+
+
+# --- arrays ---------------------------------------------------------------
+#
+# Array ops register no SQL function, so each case runs once through the
+# engine (no second rendering) and once through the oracle.  The typed
+# leg runs the cases that read only natively typed columns.
+
+_I64_MAX, _I64_MIN = 2 ** 63 - 1, -2 ** 63
+
+ARR_REC = {"xs": [3, 1, 3, 2], "e": [], "nul": None, "n": 5,
+           "sn": [1, None, 2], "ds": [1.5, 2.25, -3.5],
+           "strs": ["b", "a", "b"], "nested": [[1, 2], [3], []],
+           "mixed": [1, "1", True, "true", None], "deep": [[1]],
+           "objs": [{"k": 1, "v": "a"}, {"k": "1", "v": "b"},
+                    {"k": 2, "v": "c"}],
+           "cnull": None, "nz": [-0.0]}
+
+# the count operand of take/drop/slice: ints of both signs, zero, an
+# i64 string, integral and fractional floats, null, missing, and the
+# i64 extremes (the clamp must saturate, never overflow)
+COUNTS = [2, -2, 0, "2", 2.0, 2.5, None, "@input.nope", _I64_MAX, _I64_MIN]
+
+_GT2 = ["@item", {"gt": [2]}]
+
+
+def _array_cases():
+    """(id, version, expr) for every array case."""
+    out = []
+    for op in ("take", "drop", "slice"):
+        out += [(f"{op}-{i}", 2, ["@input.xs", {op: [c]}])
+                for i, c in enumerate(COUNTS)]
+    out += [(f"slice-end-{i}", 2, ["@input.xs", {"slice": [1, c]}])
+            for i, c in enumerate([-1, None, "@input.nope", _I64_MAX,
+                                   _I64_MIN])]
+    # empty, null, missing and non-array arrays
+    for src in ("e", "nul", "nope", "n"):
+        out += [(f"take-{src}", 2, [f"@input.{src}", {"take": [2]}]),
+                (f"drop-{src}", 2, [f"@input.{src}", {"drop": [-2]}]),
+                (f"slice-{src}", 2, [f"@input.{src}", {"slice": [1]}])]
+    out += [(f"chunk-{i}", 2, ["@input.xs", {"chunk": [c]}])
+            for i, c in enumerate([2, _I64_MAX, 2 ** 31, 0,
+                                   "@input.nope"])]
+    out.append(("chunk-e", 2, ["@input.e", {"chunk": [_I64_MAX]}]))
+    # first-wins dedupe: mixed kinds stringify to colliding keys
+    out += [(f"unique-{src}", 2, [f"@input.{src}", {"unique": []}])
+            for src in ("xs", "mixed", "strs", "e", "nul", "deep")]
+    out += [(f"distinct_by-{i}", 2, ["@input.objs", {"distinct_by": [k]}])
+            for i, k in enumerate(["@item.k", "@item.v", "@item.nope",
+                                   ["@item.index", {"gt": [0]}]])]
+    # first-match search; a null element reaches the predicate
+    for op in ("find", "find_index"):
+        out += [(f"{op}-{src}-{i}", 2, [f"@input.{src}", {op: [p]}])
+                for src in ("xs", "e", "nul", "sn")
+                for i, p in enumerate([_GT2, ["@item", {"gt": [5]}]])]
+        out += [(f"{op}-index", 2, ["@input.xs", {op: [
+                    ["@item.index", {"gte": [2]}]]}]),
+                (f"{op}-nonbool", 2, ["@input.xs", {op: [["@item"]]}])]
+    out += [("filter-xs", 2, ["@input.xs", {"filter": [_GT2]}]),
+            ("filter-index", 2, ["@input.xs", {"filter": [
+                ["@item.index", {"gte": [1]}]]}]),
+            ("filter-nul", 2, ["@input.nul", {"filter": [_GT2]}])]
+    # the numeric fold: empty → null, null and string elements error
+    out += [(f"{op}-{src}", 2, [f"@input.{src}", {op: []}])
+            for op in ("sum", "min", "max", "avg")
+            for src in ("xs", "e", "nul", "ds", "sn", "strs")]
+    out += [(f"{op}-{src}", 2, [f"@input.{src}", {op: []}])
+            for op in ("first", "last")
+            for src in ("xs", "e", "nul", "n", "nope", "nested")]
+    # string-coerced equality: "3" finds 3, null finds null
+    out += [(f"{op}-{i}", 2, [f"@input.{src}", {op: [t]}])
+            for op in ("contains", "index_of")
+            for i, (src, t) in enumerate([
+                ("xs", 3), ("xs", "3"), ("xs", 7), ("mixed", None),
+                ("xs", "@input.nope"), ("xs", "@input.cnull"),
+                ("strs", "b"), ("nul", 1), ("deep", 1)])]
+    # flatten's depth: true is no integer, the reference rejects it
+    out += [("flatten-nested", 2, ["@input.nested", {"flatten": []}]),
+            ("flatten-1", 2, ["@input.nested", {"flatten": [1]}]),
+            ("flatten-true", 2, ["@input.nested", {"flatten": [True]}]),
+            ("first-nz", 2, ["@input.nz", {"first": []}])]
+    # v1 {op, args}: the array is the first arg
+    out += [("v1-take", 1, {"op": "take", "args": [{"ref": "input.xs"},
+                                                   -2]}),
+            ("v1-slice", 1, {"op": "slice", "args": [{"ref": "input.xs"},
+                                                     1, -1]}),
+            ("v1-unique", 1, {"op": "unique", "args": [
+                {"ref": "input.mixed"}]}),
+            ("v1-sum", 1, {"op": "sum", "args": [{"ref": "input.xs"}]}),
+            ("v1-chunk", 1, {"op": "chunk", "args": [{"ref": "input.xs"},
+                                                     _I64_MAX]})]
+    return out
+
+
+ARRAY_CASES = _array_cases()
+
+# the reader turns -0.0 into 0 (see _NZERO)
+_ARRAY_NZERO = {"first-nz"}
+
+
+@pytest.mark.parametrize(
+    "version,expr",
+    [pytest.param(v, e, id=cid,
+                  marks=[_NZERO] if cid in _ARRAY_NZERO else [])
+     for cid, v, e in ARRAY_CASES])
+def test_array_engine_matches_oracle(spark, version, expr):
+    rule = (_v2 if version >= 2 else _v1)(expr)
+    engine = K.engine(spark, rule, [ARR_REC])
+    assert engine == K.oracle(rule, [ARR_REC]), (expr, engine)
+
+
+# the fields a typed frame holds natively; a case reading any other
+# field (besides the absent ``nope``) has no typed leg
+_TYPED_ARR_DDL = ("xs array<bigint>, e array<bigint>, nul array<bigint>, "
+                  "n bigint, sn array<bigint>, ds array<double>, "
+                  "strs array<string>, nested array<array<bigint>>, "
+                  "cnull bigint")
+_TYPED_ARR_FIELDS = [f.split()[0] for f in _TYPED_ARR_DDL.split(", ")]
+
+
+def _typed_refs_ok(expr) -> bool:
+    refs = re.findall(r"@input\.(\w+)", json.dumps(expr))
+    return all(r in _TYPED_ARR_FIELDS or r == "nope" for r in refs)
+
+
+_TYPED_ARRAY_CASES = [c for c in ARRAY_CASES
+                      if c[1] >= 2 and _typed_refs_ok(c[2])]
+# the cases the typed engine declines (TypedFallback), exactly: a
+# non-literal or null count, a missing target, a statically missing or
+# non-array input, avg (its number kind is per row), folds over float
+# or string elements, chunk, find, and a non-boolean predicate
+TYPED_ARRAY_FALLBACKS = {
+    *[f"{op}-{i}" for op in ("take", "drop", "slice") for i in (6, 7)],
+    "slice-end-1", "slice-end-2",
+    *[f"{op}-{src}" for op in ("take", "drop", "slice", "first", "last")
+      for src in ("nope", "n")],
+    *[f"chunk-{i}" for i in range(5)], "chunk-e",
+    *[f"avg-{src}" for src in ("xs", "e", "nul", "ds", "sn", "strs")],
+    *[f"{op}-{src}" for op in ("sum", "min", "max")
+      for src in ("ds", "strs")],
+    *[c[0] for c in ARRAY_CASES if c[0].startswith("find-")],
+    "find_index-nonbool",
+    "contains-4", "index_of-4", "flatten-true",
+}
+
+
+@pytest.mark.parametrize("expr",
+                         [pytest.param(e, id=cid)
+                          for cid, _, e in _TYPED_ARRAY_CASES])
+def test_array_typed_matches_oracle(spark, request, expr):
+    from rulemorph_spark.compiler.typed import TypedFallback
+    rule = _v2(expr)
+    record = {k: ARR_REC[k] for k in _TYPED_ARR_FIELDS}
+    df = spark.createDataFrame([tuple(record.values())], _TYPED_ARR_DDL)
+    if request.node.callspec.id in TYPED_ARRAY_FALLBACKS:
+        with pytest.raises(TypedFallback):
+            _typed_outcome(df, rule)
+        return
+    assert _typed_outcome(df, rule) == _oracle_rows(rule, record)

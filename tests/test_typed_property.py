@@ -2,8 +2,10 @@
 through the same rule on both engine paths must agree exactly.
 
 Covers the extended typed op subset (replace modes, pads, split+len,
-to_base, arithmetic+round, date ops) over generated strings (including
-regex-special characters), integers, floats, and datetimes.
+to_base, arithmetic+round, date ops, and the array ops over a split:
+take/drop/slice, unique, contains, index_of, find_index) over
+generated strings (including regex-special characters), integers,
+floats, and datetimes.
 """
 
 from __future__ import annotations
@@ -43,10 +45,35 @@ mappings:
     expr: ["@input.d", {date_format: ["%d/%m/%Y %H:%M"]}]
   - target: epoch_ms
     expr: ["@input.d", {to_unixtime: ["ms"]}]
+  - target: head2
+    expr: ["@input.s", {split: [","]}, {take: [2]}]
+  - target: tail2
+    expr: ["@input.s", {split: [","]}, {take: [-2]}]
+  - target: dropped
+    expr: ["@input.s", {split: [","]}, {drop: [1]}]
+  - target: dropped_tail
+    expr: ["@input.s", {split: [","]}, {drop: [-1]}]
+  - target: sliced
+    expr: ["@input.s", {split: [","]}, {slice: [1, -1]}]
+  - target: sliced_tail
+    expr: ["@input.s", {split: [","]}, {slice: [-2]}]
+  - target: uniq
+    expr: ["@input.s", {split: [","]}, {unique: []}]
+  - target: has_a
+    expr: ["@input.s", {split: [","]}, {contains: ["a"]}]
+  - target: idx_a
+    expr: ["@input.s", {split: [","]}, {index_of: ["a"]}]
+  - target: first_long
+    expr:
+      - "@input.s"
+      - split: [","]
+      - find_index: [["@item", {len: []}, {gt: [1]}]]
 """
 
 ROW = st.tuples(
-    st.text(max_size=12),
+    # a comma-rich alphabet so the split arrays repeat and vary in length
+    st.one_of(st.text(max_size=12),
+              st.text(alphabet="a,b", max_size=12)),
     st.integers(min_value=-10**12, max_value=10**12),
     st.floats(allow_nan=False, allow_infinity=False,
               min_value=-1e9, max_value=1e9),
