@@ -232,11 +232,15 @@ def make_http_server(engine, host: str = "127.0.0.1", port: int = 0,
     ``/ui/api/*`` routes expose traces, the API dependency graph, and
     a long-poll trace version (the reference's trace watcher push,
     ``trace_watch.rs:9`` — here a :class:`TraceWatcher` poll thread).
-    Returns an unstarted ``ThreadingHTTPServer`` (call serve_forever);
+    Returns an unstarted :class:`~.service.httpd.WorkerHTTPServer`
+    (call serve_forever), which serves each connection on a reused
+    worker thread: unbounded, and retired after 60 s idle;
     ``server.trace_watcher`` is the running watcher (None without a
-    trace dir)."""
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+    trace dir), stopped by ``server_close``."""
+    from http.server import BaseHTTPRequestHandler
     from urllib.parse import parse_qsl, urlsplit
+
+    from .service.httpd import WorkerHTTPServer
 
     watcher = None
     if getattr(engine, "trace_store", None) is not None:
@@ -437,7 +441,13 @@ def make_http_server(engine, host: str = "127.0.0.1", port: int = 0,
                                           keep_blank_values=True)):
                     return
             query = parse_qsl(parts.query, keep_blank_values=True)
-            length = int(self.headers.get("content-length") or 0)
+            raw_length = (self.headers.get("content-length")
+                          or "0").strip()
+            # -1 would read until the client hangs up; text would raise
+            if not (raw_length.isascii() and raw_length.isdigit()):
+                self._send_error(400, "invalid content-length")
+                return
+            length = int(raw_length)
             body = (self.rfile.read(length).decode("utf-8")
                     if length else None)
             if parts.path.startswith("/internal/"):
@@ -485,7 +495,9 @@ def make_http_server(engine, host: str = "127.0.0.1", port: int = 0,
         def log_message(self, *args):  # quiet; engine traces instead
             pass
 
-    return ThreadingHTTPServer((host, port), Handler)
+    httpd = WorkerHTTPServer((host, port), Handler)
+    httpd.trace_watcher = watcher
+    return httpd
 
 
 def cmd_validate_rules_dir(args) -> int:
@@ -736,8 +748,11 @@ def cmd_search(args) -> int:
         print("search needs -q/--query (or --build-index)",
               file=sys.stderr)
         return 2
-    qdf = spark.createDataFrame([(0, args.query)],
-                                "query_id int, query string")
+    import pyarrow as pa
+    # an Arrow table plans as a JVM-side scan: no Python workers
+    qdf = spark.createDataFrame(pa.table({
+        "query_id": pa.array([0], pa.int32()),
+        "query": pa.array([args.query], pa.string())}))
     if args.index:
         hits = bm25_topk_indexed(spark, args.index, qdf, k=args.k)
     else:

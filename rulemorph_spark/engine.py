@@ -231,10 +231,14 @@ def _zip_with_index(df: DataFrame, out_col: str = "__idx__") -> DataFrame:
     for row in sorted(counts, key=lambda r: r["__pid__"]):
         offsets[row["__pid__"]] = acc
         acc += row["__n__"]
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        [(p, o) for p, o in offsets.items()] or [(0, 0)],
-        "__pid__ long, __off__ long")
+    # from an Arrow table the offsets are a JVM-side LocalTableScan; a
+    # list gives a scan over a Python RDD, which starts Python workers
+    # on every scan of the zipped records
+    import pyarrow as pa
+    offsets = offsets or {0: 0}
+    off_df = df.sparkSession.createDataFrame(pa.table({
+        "__pid__": pa.array(list(offsets), pa.int64()),
+        "__off__": pa.array(list(offsets.values()), pa.int64())}))
     return (with_mid.withColumn("__pid__", pid)
             .join(F.broadcast(off_df), "__pid__")
             .withColumn(out_col, F.col("__off__") + seq)

@@ -216,6 +216,7 @@ def test_csv_text_transform_leaves_no_temp_file(spark, tmp_path,
     assert list(tmp_path.glob("*.csv")) == []
 
 
+@pytest.mark.smoke
 def test_zip_with_index_multi_partition(spark):
     """dense 0-based index across MANY partitions: every index appears
     exactly once and follows partition order (the per-partition offset
@@ -234,6 +235,23 @@ def test_zip_with_index_multi_partition(spark):
     by_mid = sorted(rows, key=lambda r: r["__mid__"])
     assert [r["__idx__"] for r in by_mid] == sorted(
         r["__idx__"] for r in rows)
+
+
+@pytest.mark.smoke
+def test_ndjson_records_scan_starts_no_python_workers(spark, tmp_path):
+    """The zip index's partition offsets are a JVM-side local scan: a
+    scan over a Python RDD (``ExistingRDD``) would start Python
+    workers on every scan of the records."""
+    from rulemorph_spark.engine import records_from_json_file
+
+    p = tmp_path / "in.ndjson"
+    p.write_text("\n".join(json.dumps({"id": i}) for i in range(20)))
+    df = records_from_json_file(spark, str(p), None)
+    assert [r["__idx__"] for r in df.orderBy("__idx__").collect()] \
+        == list(range(20))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
 
 
 def test_ndjson_preserves_null_vs_missing(spark, tmp_path):

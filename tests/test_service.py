@@ -283,6 +283,7 @@ def test_target_leaf_surfaces_a_non_path_error(broken_parse_path):
         mcp_tools._leaf_from_path("a.b")
 
 
+@pytest.mark.smoke
 def test_http_server_round_trip(spark, engine_dir):
     """cli.make_http_server: real HTTP requests through the stdlib
     front end hit the same engine (serve command surface)."""

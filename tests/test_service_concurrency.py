@@ -10,9 +10,14 @@ coherent under racing first-loads.
 
 from __future__ import annotations
 
+import contextlib
+import http.client
+import json
 import os
 import tempfile
 import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -174,3 +179,179 @@ def test_concurrent_requests_no_bleed(spark, svc_dir):
             assert step_names == ["echo.yaml", "branchy.yaml", "reply"]
             out = tr["steps"][0]["output"]
             assert out["id"] == rid and out["doubled"] == 2 * rid, tr
+
+
+# --- the HTTP front end (cli.make_http_server) ---------------------------
+
+
+class _ThreadRecorder:
+    """An engine that records the thread serving each request."""
+
+    def __init__(self, engine):
+        self._engine = engine
+        self.threads: list[threading.Thread] = []
+
+    def __getattr__(self, name):
+        return getattr(self._engine, name)
+
+    def handle_request(self, *args, **kwargs):
+        self.threads.append(threading.current_thread())
+        return self._engine.handle_request(*args, **kwargs)
+
+
+@contextlib.contextmanager
+def _serving(engine):
+    from rulemorph_spark.cli import make_http_server
+
+    httpd = make_http_server(engine, port=0)
+    loop = threading.Thread(target=httpd.serve_forever, daemon=True)
+    loop.start()
+    try:
+        yield httpd, httpd.server_address[1]
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+        loop.join(timeout=30)
+
+
+def _get(port: int, path: str) -> tuple[int, dict]:
+    conn = http.client.HTTPConnection("127.0.0.1", port, timeout=120)
+    try:
+        conn.request("GET", path)
+        resp = conn.getresponse()
+        return resp.status, json.loads(resp.read())
+    finally:
+        conn.close()
+
+
+def test_http_workers_are_reused(spark, svc_dir):
+    """Sequential requests, a catch-handled failure among them, reuse
+    the server's worker threads; each reply is its own request's and
+    the trace store holds one trace per request."""
+    n = 40
+    with tempfile.TemporaryDirectory() as trace_dir:
+        eng = _ThreadRecorder(EndpointEngine(
+            spark, f"{svc_dir}/endpoint.yaml", trace_dir=trace_dir))
+        with _serving(eng) as (_, port):
+            for i in range(n):
+                if i % 5 == 2:
+                    status, body = _get(port, f"/boom/{i}")
+                    assert (status, body) == (200, {"handled": True})
+                else:
+                    status, body = _get(port, f"/items/{i}")
+                    assert status == 200, body
+                    assert (body["id"], body["doubled"]) == (i, 2 * i)
+        assert len(eng.threads) == n
+        assert len({id(t) for t in eng.threads}) < n
+        assert len(eng.trace_store.list()) == n
+
+
+def test_http_request_answers_past_held_streams(spark, svc_dir):
+    """More held ``/internal/stream`` feeds than cores do not starve a
+    normal request: the workers are not bounded."""
+    with tempfile.TemporaryDirectory() as trace_dir:
+        eng = EndpointEngine(spark, f"{svc_dir}/endpoint.yaml",
+                             trace_dir=trace_dir)
+        streams = []
+        with _serving(eng) as (_, port):
+            try:
+                for _ in range(len(os.sched_getaffinity(0)) + 2):
+                    conn = http.client.HTTPConnection("127.0.0.1", port,
+                                                      timeout=60)
+                    conn.request("GET", "/internal/stream")
+                    resp = conn.getresponse()
+                    assert resp.status == 200
+                    assert resp.getheader("content-type") \
+                        == "text/event-stream"
+                    streams.append(conn)
+                status, body = _get(port, "/items/5")
+                assert status == 200 and body["id"] == 5, body
+            finally:
+                for conn in streams:
+                    conn.close()
+
+
+def test_http_workers_exit_on_close(spark, svc_dir):
+    """After shutdown() and server_close(), no worker of the server is
+    left alive, including the ones that served concurrent requests."""
+    eng = _ThreadRecorder(EndpointEngine(spark,
+                                         f"{svc_dir}/endpoint.yaml"))
+    with _serving(eng) as (_, port):
+        with ThreadPoolExecutor(4) as pool:
+            replies = list(pool.map(lambda i: _get(port, f"/items/{i}"),
+                                    range(12)))
+        assert [b["id"] for _, b in replies] == list(range(12))
+    deadline = time.monotonic() + 5
+    while any(t.is_alive() for t in eng.threads) \
+            and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert not [t for t in eng.threads if t.is_alive()]
+
+
+@pytest.mark.parametrize("length", ["-1", "abc"])
+def test_http_malformed_content_length_is_400(spark, svc_dir, length):
+    """A content-length that is not a non-negative integer gets the
+    ApiError 400 reply; it neither reads until the client hangs up
+    (-1) nor drops the connection without a reply (abc)."""
+    eng = EndpointEngine(spark, f"{svc_dir}/endpoint.yaml")
+    with _serving(eng) as (_, port):
+        conn = http.client.HTTPConnection("127.0.0.1", port, timeout=20)
+        try:
+            conn.putrequest("POST", "/items/1")
+            conn.putheader("content-length", length)
+            conn.endheaders()
+            resp = conn.getresponse()
+            assert resp.status == 400
+            assert json.loads(resp.read()) == {
+                "error": "invalid content-length"}
+        finally:
+            conn.close()
+        # the server still answers afterwards
+        assert _get(port, "/items/2")[0] == 200
+
+
+class _EchoEngine:
+    """A Spark-free engine: replies with the request path."""
+
+    trace_store = None
+
+    def handle_request(self, method, path, query, headers, body):
+        return 200, {}, {"path": path}
+
+
+def test_http_idle_workers_retire_and_restart(monkeypatch):
+    """A worker idle past the timeout exits; the next request starts a
+    new one."""
+    from rulemorph_spark.service import httpd
+
+    monkeypatch.setattr(httpd, "IDLE_TIMEOUT", 0.2)
+    eng = _ThreadRecorder(_EchoEngine())
+    with _serving(eng) as (_, port):
+        assert _get(port, "/a") == (200, {"path": "/a"})
+        first = eng.threads[0]
+        first.join(timeout=10)
+        assert not first.is_alive()
+        assert _get(port, "/b") == (200, {"path": "/b"})
+        assert eng.threads[1] is not first
+
+
+def test_http_handoff_loses_no_request(monkeypatch):
+    """Under an idle timeout shorter than the gaps between requests,
+    workers retire and start all the time, and every request of
+    several clients is still answered with its own reply."""
+    from rulemorph_spark.service import httpd
+
+    monkeypatch.setattr(httpd, "IDLE_TIMEOUT", 0.002)
+    with _serving(_EchoEngine()) as (_, port):
+        def client(c):
+            out = []
+            for i in range(40):
+                out.append(_get(port, f"/c{c}/{i}"))
+                time.sleep(0.002 * (i % 3))
+            return out
+
+        with ThreadPoolExecutor(8) as pool:
+            results = list(pool.map(client, range(8)))
+    for c, replies in enumerate(results):
+        assert replies == [(200, {"path": f"/c{c}/{i}"})
+                           for i in range(40)]
